@@ -27,8 +27,10 @@ class Stage:
     run_s: float
     cpu_s: float
     gc_s: float
+    input_records: int
     shuffle_write_bytes: int
     spill_bytes: int
+    scopes: frozenset[str]  # the operator scopes of the stage's RDD graph
 
 
 @dataclass(frozen=True)
@@ -57,7 +59,7 @@ def harvest_jobs(spark) -> list[Job]:
         stages = []
         for sid in conv.asJava(j.stageIds()):
             if sid not in stage_cache:
-                stage_cache[sid] = _stage(store, sid)
+                stage_cache[sid] = _stage(store, conv, sid)
             if stage_cache[sid] is not None:
                 stages.append(stage_cache[sid])
         desc = _opt(j.description()) or ""
@@ -75,13 +77,19 @@ def harvest_jobs(spark) -> list[Job]:
     return sorted(jobs, key=lambda job: job.job_id)
 
 
-def _stage(store, sid: int) -> Stage | None:
+def _stage(store, conv, sid: int) -> Stage | None:
     try:
         st = store.lastStageAttempt(sid)
+        graph = store.operationGraphForStage(sid).rootCluster()
     except Exception:  # py4j: evicted from the store, nothing to report
         return None
     if st.status().toString() != "COMPLETE":
         return None
+    scopes, todo = set(), list(conv.asJava(graph.childClusters()))
+    while todo:
+        cluster = todo.pop()
+        scopes.add(cluster.name())
+        todo.extend(conv.asJava(cluster.childClusters()))
     return Stage(
         stage_id=sid,
         tasks=st.numTasks(),
@@ -90,8 +98,10 @@ def _stage(store, sid: int) -> Stage | None:
         run_s=st.executorRunTime() / 1e3,
         cpu_s=st.executorCpuTime() / 1e9,
         gc_s=st.jvmGcTime() / 1e3,
+        input_records=st.inputRecords(),
         shuffle_write_bytes=st.shuffleWriteBytes(),
         spill_bytes=st.memoryBytesSpilled() + st.diskBytesSpilled(),
+        scopes=frozenset(scopes),
     )
 
 
@@ -115,19 +125,30 @@ def stage_totals(stages: list[Stage]) -> dict[str, float]:
     }
 
 
-def sink_stage_split(stages: list[Stage], cut_stages: int) -> dict[str, float]:
-    """Split one produce call's stages into the sink's three steps, in
-    stage order: ``cut_stages`` stages before the puts (1 on the stamped
-    and the repartition paths, 0 on the ``coalesce(1)`` path, whose put
-    stage also reads and frames), then the put stage, then the stages that
-    sort or aggregate the acks."""
+def duration(stages: list[Stage]) -> float:
+    """Summed wall time of ``stages`` (overlapping stages count twice)."""
+    return sum(s.end - s.start for s in stages)
+
+
+def scans(stage: Stage, source: str) -> bool:
+    """Whether ``stage`` reads the data source registered as ``source``."""
+    return any(name.startswith(f"BatchScan {source}") for name in stage.scopes)
+
+
+def sink_stages(stages: list[Stage], own_cut: bool) -> tuple[list[Stage], list[Stage], list[Stage]]:
+    """Split one produce call's stages into the sink's three steps.  The
+    put stage is the last one that runs a ``MapInPandas``; the stages after
+    it sort or aggregate the acks.  With ``own_cut`` the stages before the
+    put are the sink's own cut (the stamped path cuts requests, the
+    unordered path reads, frames and repartitions); without it (the
+    ``coalesce(1)`` path, whose put stage reads its input itself) they
+    belong to the layers upstream of the sink and are left out."""
     ordered = sorted(stages, key=lambda s: s.stage_id)
-    dur = lambda ss: sum(s.end - s.start for s in ss)  # noqa: E731
-    return {
-        "cut_stage_s": dur(ordered[:cut_stages]),
-        "put_stage_s": dur(ordered[cut_stages : cut_stages + 1]),
-        "ack_stage_s": dur(ordered[cut_stages + 1 :]),
-    }
+    puts = [i for i, s in enumerate(ordered) if "MapInPandas" in s.scopes]
+    if not puts:
+        return [], [], []
+    i = puts[-1]
+    return (ordered[:i] if own_cut else []), ordered[i : i + 1], ordered[i + 1 :]
 
 
 def python_worker_rss_mb(jvm_pid: int) -> float:

@@ -33,11 +33,11 @@ class Span:
 
 
 class Tracer:
-    def __init__(self, spark_context=None) -> None:
+    def __init__(self) -> None:
         self.spans: list[Span] = []
         self._ids = itertools.count(1)
         self._stack: list[Span] = []
-        self.sc = spark_context
+        self.sc = None  # the SparkContext of the traced repetition
         self.rep = 0
 
     @contextlib.contextmanager

@@ -15,12 +15,14 @@ a traced repetition.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
 import re
 import subprocess
 import sys
+import tempfile
 import time
 import tracemalloc
 from dataclasses import dataclass, field
@@ -30,6 +32,7 @@ import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark import queries
 from fs2_kinesis_firehose_spark.firehose import (
     FakeFirehose,
     ProducerSettings,
@@ -46,10 +49,8 @@ from fs2_kinesis_firehose_spark.firehose.settings import (
     MAX_RECORD_BYTES,
     RetryPolicy,
 )
-from fs2_kinesis_firehose_spark.operators.dedup import exact_dedup
 from fs2_kinesis_firehose_spark.oracle import canonical_rows
-from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
-from fs2_kinesis_firehose_spark.tables import load_table, table_path
+from fs2_kinesis_firehose_spark.tables import table_path
 from perfbench import inputs, sparkstats
 from perfbench.faults import FAIL_MODULUS, fail_first_attempt
 from perfbench.metrics import PIPELINE, median
@@ -72,21 +73,20 @@ def _span_jobs(jobs, span_id: int | None) -> list:
     return [j for j in jobs if span_id is not None and j.group == f"span-{span_id}"]
 
 
-def _sink_layers(calls: list[tuple[list, int]]) -> dict[str, float]:
+def _sink_layers(calls: list[tuple[list, bool]]) -> dict[str, float]:
     """``sink.*`` over the produce calls of one repetition, each given as
-    (its jobs, its number of cut stages); each call's stages are split into
-    cut / put / ack separately, then summed."""
+    (its jobs, whether the call cuts its own requests); each call's stages
+    are split into cut / put / ack separately, then summed."""
     out = dict.fromkeys(
         ("sink.stages", "sink.tasks", "sink.cut_stage_s", "sink.put_stage_s",
          "sink.ack_stage_s", "sink.shuffle_write_bytes", "sink.executor_cpu_s",
          "sink.executor_run_s"), 0.0)
-    for jobs, cut_stages in calls:
-        stages = sparkstats.unique_stages(jobs)
-        if not stages:
-            continue
-        tot = sparkstats.stage_totals(stages)
-        for k, v in sparkstats.sink_stage_split(stages, cut_stages).items():
-            out[f"sink.{k}"] += v
+    for jobs, own_cut in calls:
+        cut, put, ack = sparkstats.sink_stages(sparkstats.unique_stages(jobs), own_cut)
+        tot = sparkstats.stage_totals(cut + put + ack)
+        out["sink.cut_stage_s"] += sparkstats.duration(cut)
+        out["sink.put_stage_s"] += sparkstats.duration(put)
+        out["sink.ack_stage_s"] += sparkstats.duration(ack)
         out["sink.stages"] += tot["stages"]
         out["sink.tasks"] += tot["tasks"]
         out["sink.shuffle_write_bytes"] += tot["shuffle_write_bytes"]
@@ -155,24 +155,32 @@ class DeliverBatch:
     1. stamped: seeded binary records, JSON-framed, delivered by the
        exact-order stamped path at parallelism 4; ~10% of records fail once;
     2. pipeline: the registry line ``pipeline_dedup_delivery_accounting``
-       over a seeded events table (``ReplayPipeline``).
+       over a seeded events table, called through ``QUERIES``.  The call
+       itself runs the line's eager ingest (frame, put into a spool); the
+       ``collect`` of the DataFrame it returns runs the rest (read the spool
+       twice, ``exact_dedup``, deliver on the ordered ``coalesce(1)`` path).
     """
 
     name = "deliver_batch"
-    nominal_rep_s = 6.5
+    nominal_rep_s = 6.0
 
     def __init__(self, records: int, events: int) -> None:
         self.n, self.m = records, events
         self.settings = ProducerSettings("deliver", parallelism=PUT_PARALLELISM, retry=NO_BACKOFF)
         self.factory = fake_client_factory(record_should_fail=fail_first_attempt)
-        self.pipeline = ReplayPipeline()
+        queries.load_all()
 
     def setup(self, ctx, rep: int) -> dict:
         path = os.path.join(ctx.rep_dir, "records")
         inputs.write_records(path, self.n, ctx.seed, rep)
         sf_dir = os.path.join(ctx.rep_dir, "tables")
         inputs.write_events(table_path(sf_dir, "events"), self.m, ctx.seed, rep)
-        return {"path": path, "pipeline": self.pipeline.setup(ctx, sf_dir)}
+        events = pd.read_parquet(table_path(sf_dir, "events"), columns=["event_id", "event_type"])
+        expected = {
+            f'{{"event_id":{i},"event_type":"{t}"}}\n'.encode()
+            for i, t in zip(events["event_id"], events["event_type"])
+        }
+        return {"path": path, "sf_dir": sf_dir, "expected": expected}
 
     def run(self, ctx, st: dict, span) -> Rep:
         spans: dict[str, int | None] = {}
@@ -188,11 +196,15 @@ class DeliverBatch:
             acks = produce_acks(framed, self.settings, self.factory, ordered=True).collect()
             spans["stamped.sink"] = sp.id if sp is not None else None
         with span(f"q.{PIPELINE}") as sp:
-            totals = self.pipeline.run(ctx, st["pipeline"], span, spans)
-            spans[PIPELINE] = sp.id if sp is not None else None
+            with span(f"q.{PIPELINE}.ingest") as ingest:
+                line = queries.QUERIES[PIPELINE](ctx.spark, st["sf_dir"])
+            with span(f"q.{PIPELINE}.deliver") as deliver:
+                totals = line.collect()
+            if sp is not None:
+                spans.update({PIPELINE: sp.id, "line.ingest": ingest.id, "line.deliver": deliver.id})
         wall = time.perf_counter() - t0
         st["framed"] = framed
-        records = self.n + len(st["pipeline"]["expected"])
+        records = self.n + len(st["expected"])
         return Rep(wall, records, [wall], records, out={"acks": acks, "totals": totals},
                    spans=spans)
 
@@ -220,39 +232,93 @@ class DeliverBatch:
             and sum(a.request_bytes for a in acks) == exp["bytes"]
         )
         failed = max(0, self.n - delivered) if ok else self.n
-        if not self.pipeline.ok(st["pipeline"], rep.out["totals"]):
+        if not self._line_ok(st, rep.out["totals"]):
             print(f"[{self.name}] {PIPELINE} failed its checks", file=sys.stderr)
-            failed += len(st["pipeline"]["expected"])
+            failed += len(st["expected"])
         return failed
 
+    @staticmethod
+    def _spools(sf_dir: str) -> tuple[str, str]:
+        """The ingest and delivery spool directories the line writes for
+        ``sf_dir`` (its per-``sf_dir`` root under the temporary directory)."""
+        digest = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
+        root = os.path.join(tempfile.gettempdir(), "fs2spark-spools", f"pipeline-{digest}")
+        return os.path.join(root, "ingest"), os.path.join(root, "deliver")
+
+    def _line_ok(self, st: dict, totals: list) -> bool:
+        """The line's result equals its DuckDB oracle on the same events,
+        the set it delivered into its spool equals the distinct input set,
+        and the request count is ``ceil(n / 500)``."""
+        con = duckdb.connect()
+        try:
+            path = table_path(st["sf_dir"], "events")
+            con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+            oracle = con.execute(queries.ORACLES[PIPELINE]).fetch_df()
+        finally:
+            con.close()
+        got = pd.DataFrame([r.asDict() for r in totals])
+        if len(totals) != 1 or list(got.columns) != list(oracle.columns):
+            return False
+        expected = st["expected"]
+        deliver_spool = self._spools(st["sf_dir"])[1]
+        delivered = read_spool(deliver_spool, "delivered") if os.path.isdir(deliver_spool) else []
+        return (
+            canonical_rows(got) == canonical_rows(oracle)
+            and set(delivered) == expected
+            and totals[0].n_records == len(expected) == len(delivered)
+            and totals[0].n_requests == math.ceil(len(expected) / MAX_BATCH_SIZE)
+        )
+
     def layers(self, ctx, st: dict, rep: Rep, tracer, jobs) -> dict[str, float]:
-        framed, acks, pipe = st["framed"], rep.out["acks"], st["pipeline"]
-        ingest, totals = pipe["ingest_acks"], pipe["totals"]
+        framed, acks, totals = st["framed"], rep.out["acks"], rep.out["totals"][0]
         sample = [bytes(r.value) for r in framed.limit(5000).collect()]
         framed.unpersist()
-        requests = len(acks) + ingest.n + totals.n_requests
-        records = sum(a.n_records for a in acks) + ingest.records + totals.n_records
-        attempts = sum(a.attempts for a in acks) + ingest.attempts + totals.attempts
-        spool = probe_client(sorted(pipe["expected"])[:5000], 2 * len(pipe["expected"]),
+        requests = len(acks) + totals.n_requests
+        records = sum(a.n_records for a in acks) + totals.n_records
+        spool = probe_client(sorted(st["expected"])[:5000], 2 * len(st["expected"]),
                              os.path.join(ctx.rep_dir, "probe"))
+        ingest_jobs = _span_jobs(jobs, rep.spans["line.ingest"])
+        deliver_jobs = _span_jobs(jobs, rep.spans["line.deliver"])
         out = {
             **probe_client(sample, self.n, None, fail_first_attempt),
-            **_sink_layers([(_span_jobs(jobs, rep.spans[k]), cut)
-                            for k, cut in (("stamped.sink", 1), ("pipeline.ingest", 1),
-                                           ("pipeline.deliver", 0))]),
-            **self.pipeline.layers(pipe, rep.spans, tracer, jobs),
+            **_sink_layers([(_span_jobs(jobs, rep.spans["stamped.sink"]), True),
+                            (ingest_jobs, True), (deliver_jobs, False)]),
+            **self._read_and_dedup(st, totals, deliver_jobs),
             **_line_layers(PIPELINE, tracer, rep.spans[PIPELINE], jobs),
-            "serializers.frame_s": tracer.duration(rep.spans["stamped.frame"])
-            + tracer.duration(rep.spans["pipeline.frame"]),
-            "serializers.frame_bytes": st["frame_bytes"] + sum(len(p) for p in pipe["expected"]),
+            "serializers.frame_s": tracer.duration(rep.spans["stamped.frame"]),
+            "serializers.frame_bytes": st["frame_bytes"] + sum(len(p) for p in st["expected"]),
             "batching.requests": requests,
             "batching.fill": records / (requests * MAX_BATCH_SIZE),
-            "retry.attempts_per_request": attempts / requests,
+            "retry.attempts_per_request": sum(a.attempts for a in acks) / len(acks),
             "retry.records_resent": st["resent"],
             "client.spool_us_per_record": spool["client.spool_us_per_record"],
         }
         out["client.retained_mb_per_rep"] += spool["client.retained_mb_per_rep"]
         return out
+
+    def _read_and_dedup(self, st: dict, totals, deliver_jobs) -> dict[str, float]:
+        """``source.*`` and ``dedup.*`` from the stage records of the line's
+        delivery leg: the stages that scan ``kinesis_spool`` are the source
+        (they also write the dedup's exchanges); the stages after them and
+        before the put stage are the dedup."""
+        stages = sparkstats.unique_stages(deliver_jobs)
+        _, put, ack = sparkstats.sink_stages(stages, own_cut=False)
+        sink_ids = {s.stage_id for s in put + ack}
+        source = [s for s in stages if sparkstats.scans(s, "kinesis_spool")]
+        dedup = [s for s in stages if s.stage_id not in sink_ids and s not in source]
+        ingest_spool = self._spools(st["sf_dir"])[0]
+        shards = [f for f in os.listdir(ingest_spool) if f.endswith(".spool")]
+        spooled = sum(len(read_spool(ingest_spool, f[: -len(".spool")])) for f in shards)
+        return {
+            "source.read_s": sparkstats.duration(source),
+            "source.records": sum(s.input_records for s in source),
+            "source.shards": len(shards),
+            "dedup.s": sparkstats.duration(dedup),
+            "dedup.in_records": 2 * spooled,  # the line reads the spool twice
+            "dedup.out_records": totals.n_records,
+            "dedup.shuffle_write_bytes": sparkstats.stage_totals(source + dedup)[
+                "shuffle_write_bytes"],
+        }
 
 
 def _line_layers(line: str, tracer, span_id: int, jobs) -> dict[str, float]:
@@ -266,125 +332,6 @@ def _line_layers(line: str, tracer, span_id: int, jobs) -> dict[str, float]:
     for k in ("stages", "tasks", "shuffle_write_bytes", "spill_bytes", "gc_s", "cpu_s"):
         out[f"q.{line}.{k}"] = tot[k]
     return out
-
-
-# ---------------------------------------------------------------------------
-class ReplayPipeline:
-    """The registry line ``pipeline_dedup_delivery_accounting`` composed
-    from public functions, so a traced repetition can span each layer:
-    ingest at p=8 into a spool, read it twice through ``kinesis_spool``,
-    ``exact_dedup``, deliver at p=1 on the ordered ``coalesce(1)`` path
-    into a second spool.  No faults."""
-
-    def setup(self, ctx, sf_dir: str) -> dict:
-        events = pd.read_parquet(table_path(sf_dir, "events"), columns=["event_id", "event_type"])
-        expected = {
-            f'{{"event_id":{i},"event_type":"{t}"}}\n'.encode()
-            for i, t in zip(events["event_id"], events["event_type"])
-        }
-        ingest, deliver = os.path.join(ctx.rep_dir, "ingest"), os.path.join(ctx.rep_dir, "deliver")
-        os.makedirs(ingest)
-        os.makedirs(deliver)
-        register_kinesis_spool_source(ctx.spark)
-        return {"sf_dir": sf_dir, "expected": expected, "ingest": ingest, "deliver": deliver}
-
-    def run(self, ctx, st: dict, span, spans: dict):
-        spark = ctx.spark
-        events = load_table(spark, st["sf_dir"], "events")
-        with span("serializers.frame") as sp:
-            framed = serialize_and_frame(events.select("event_id", "event_type"), "json", b"\n")
-            if sp is not None:
-                framed = framed.persist()
-                framed.count()
-                spans["pipeline.frame"] = sp.id
-        with span("sink.ingest") as sp:
-            st["ingest_acks"] = produce_acks(
-                framed,
-                ProducerSettings("ingest", parallelism=8),
-                fake_client_factory(spool_dir=st["ingest"]),
-            ).agg(F.count(F.lit(1)).alias("n"), F.sum("attempts").alias("attempts"),
-                  F.sum("n_records").alias("records")).collect()[0]
-            spans["pipeline.ingest"] = sp.id if sp is not None else None
-
-        def attempt(n: int):
-            return (
-                spark.read.format("kinesis_spool").option("spoolDir", st["ingest"]).load()
-                .select(F.concat_ws(":", F.lit(n), F.col("shard"), F.col("seq")).alias("row_key"),
-                        F.col("value"))
-            )
-
-        replayed = attempt(1).unionByName(attempt(2))
-        with span("source.read") as sp:
-            if sp is not None:
-                replayed = replayed.persist()
-                st["source_records"] = replayed.count()
-                spans["pipeline.read"] = sp.id
-        with span("dedup") as sp:
-            deduped = exact_dedup(
-                replayed.withColumn("payload_str", F.col("value").cast("string")),
-                text_col="payload_str",
-                key_col="row_key",
-            )
-            if sp is not None:
-                deduped = deduped.persist()
-                st["dedup_out"] = deduped.count()
-                spans["pipeline.dedup"] = sp.id
-        with span("sink.deliver") as sp:
-            totals = produce_acks(
-                deduped.select("value"),
-                ProducerSettings("delivered", parallelism=1),
-                fake_client_factory(spool_dir=st["deliver"]),
-                ordered=True,
-            ).agg(
-                F.count(F.lit(1)).alias("n_requests"),
-                F.sum("n_records").alias("n_records"),
-                F.sum("request_bytes").alias("delivered_bytes"),
-                F.sum("failed_records").alias("failed_records"),
-                F.sum("attempts").alias("attempts"),
-            ).collect()[0]
-            spans["pipeline.deliver"] = sp.id if sp is not None else None
-        for df in (framed, replayed, deduped):
-            df.unpersist()
-        st["totals"] = totals
-        return totals
-
-    def ok(self, st: dict, totals) -> bool:
-        """The totals equal the line's DuckDB oracle on the same events,
-        the delivered set equals the distinct input set, and the request
-        count is ``ceil(n / 500)``."""
-        from fs2_kinesis_firehose_spark import queries
-
-        queries.load_all()
-        con = duckdb.connect()
-        try:
-            path = table_path(st["sf_dir"], "events")
-            con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
-            oracle = con.execute(queries.ORACLES[PIPELINE]).fetch_df()
-        finally:
-            con.close()
-        got = pd.DataFrame([totals.asDict()])[list(oracle.columns)]
-        expected = st["expected"]
-        delivered = read_spool(st["deliver"], "delivered")
-        return (
-            canonical_rows(got) == canonical_rows(oracle)
-            and set(delivered) == expected
-            and totals.n_records == len(expected) == len(delivered)
-            and totals.n_requests == math.ceil(len(expected) / MAX_BATCH_SIZE)
-        )
-
-    def layers(self, st: dict, spans: dict, tracer, jobs) -> dict[str, float]:
-        shards = [f for f in os.listdir(st["ingest"]) if f.endswith(".spool")]
-        dedup_jobs = _span_jobs(jobs, spans["pipeline.dedup"])
-        return {
-            "source.read_s": tracer.duration(spans["pipeline.read"]),
-            "source.records": st["source_records"],
-            "source.shards": len(shards),
-            "dedup.s": tracer.duration(spans["pipeline.dedup"]),
-            "dedup.in_records": st["source_records"],
-            "dedup.out_records": st["dedup_out"],
-            "dedup.shuffle_write_bytes": sparkstats.stage_totals(
-                sparkstats.unique_stages(dedup_jobs))["shuffle_write_bytes"],
-        }
 
 
 # ---------------------------------------------------------------------------
@@ -513,7 +460,7 @@ class StreamDeliver:
         sample = read_spool(st["spool"], "stream")[:5000]
         return {
             **probe_client(sample, st["total"], os.path.join(ctx.rep_dir, "probe")),
-            **_sink_layers([(batch, 0) for batch in by_batch.values()]),
+            **_sink_layers([(batch, False) for batch in by_batch.values()]),
             "stream.batches": len(prog),
             "stream.add_batch_ms_p50": dur("addBatch"),
             "stream.trigger_ms_p50": dur("triggerExecution"),
@@ -527,10 +474,7 @@ class StreamDeliver:
 def make(name: str, tiny: bool):
     """The workload ``name`` at benchmark scale, or at self-check scale."""
     if name == "deliver_batch":
-        return DeliverBatch(3_000, 1_000) if tiny else DeliverBatch(60_000, 10_000)
+        return DeliverBatch(3_000, 1_000) if tiny else DeliverBatch(40_000, 10_000)
     if name == "stream_deliver":
         return StreamDeliver(2_000, 2.0) if tiny else StreamDeliver(5_000, 4.0)
     raise KeyError(name)
-
-
-WORKLOADS = ("deliver_batch", "stream_deliver")
