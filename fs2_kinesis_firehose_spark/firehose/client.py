@@ -105,11 +105,13 @@ class FakeFirehose:
             raise ResourceNotFoundError(f"delivery stream not found: {name}")
         return self.streams[name]
 
-    def _spool(self, stream: str, payload: bytes) -> None:
-        if self._spool_dir:
+    def _spool(self, stream: str, payloads: list[bytes]) -> None:
+        """Append ``payloads`` to the stream's spool in one open and one
+        write, before the call that delivered them returns."""
+        if self._spool_dir and payloads:
             path = os.path.join(self._spool_dir, f"{stream}.spool")
             with open(path, "ab") as f:
-                f.write(len(payload).to_bytes(4, "big") + payload)
+                f.write(b"".join(len(p).to_bytes(4, "big") + p for p in payloads))
 
     def _record_fails(self, payload: bytes) -> bool:
         attempt = self._record_attempts[payload]
@@ -121,11 +123,9 @@ class FakeFirehose:
     # -- data plane (boto3 shape) --------------------------------------------
     def put_record(self, DeliveryStreamName: str, Record: dict[str, bytes]) -> dict[str, Any]:
         with self._lock:
-            if DeliveryStreamName in self.streams:
-                self._require_stream(DeliveryStreamName)
             payload = bytes(Record["Data"])
             self.delivered[DeliveryStreamName].append(payload)
-            self._spool(DeliveryStreamName, payload)
+            self._spool(DeliveryStreamName, [payload])
             return {"RecordId": uuid.uuid4().hex, "Encrypted": False}
 
     def put_record_batch(
@@ -138,19 +138,19 @@ class FakeFirehose:
             if self.put_batch_calls <= self._raise_call_times:
                 raise ConnectionError("injected transport failure")
             responses: list[dict[str, Any]] = []
-            failed = 0
+            ok: list[bytes] = []
             for rec in Records:
                 payload = bytes(rec["Data"])
                 if self._record_fails(payload):
-                    failed += 1
                     responses.append(
                         {"ErrorCode": "ServiceUnavailableException", "ErrorMessage": "injected"}
                     )
                 else:
-                    self.delivered[DeliveryStreamName].append(payload)
-                    self._spool(DeliveryStreamName, payload)
+                    ok.append(payload)
                     responses.append({"RecordId": uuid.uuid4().hex})
-            return {"FailedPutCount": failed, "RequestResponses": responses}
+            self.delivered[DeliveryStreamName].extend(ok)
+            self._spool(DeliveryStreamName, ok)
+            return {"FailedPutCount": len(Records) - len(ok), "RequestResponses": responses}
 
     # -- control plane (boto3 shape; 404 contract per Firehose.scala:36-56) ---
     def create_delivery_stream(self, **kwargs: Any) -> dict[str, Any]:

@@ -7,12 +7,12 @@ Execution-model mapping (SURVEY.md §1.3, §3 EP1):
   TIME bound; the 500-record COUNT bound is re-imposed inside the sink by
   slicing each partition iterator (Spark triggers are time-only — SURVEY.md §7
   hard-part 1).
-- ``mapAsync(parallelism)``                   → the put-stage task count
-  bounds in-flight requests; ordered mode (the default at the reference's
-  parallelism=1, available at ANY parallelism) reproduces mapAsync's
-  order-preserving ack stream exactly — coalesce(1) at parallelism 1,
-  pre-shuffle (src_part, req_idx) request stamps + a stamp sort at
-  parallelism > 1.  ``ordered=False`` keeps only within-partition order.
+- ``mapAsync(parallelism)(putWithRetry)``    → ``put(cut(...))``, one
+  delivery loop for every plan; the put-stage task count bounds in-flight
+  requests.  At parallelism 1 cut and put share one coalesced task and the
+  acks come out in request order; at parallelism > 1 ``ordered=True``
+  sorts the acks by their pre-shuffle ``(src_part, req_idx)`` stamps,
+  reproducing mapAsync's order-preserving ack stream exactly.
 - blocking-pool isolation (Firehose.scala:65) → puts run inside partition
   functions on executors; the driver never blocks on AWS I/O.
 - ack stream (``Pipe[F, T, PutRecordBatchResult]``) → ``produce_acks`` returns
@@ -20,13 +20,14 @@ Execution-model mapping (SURVEY.md §1.3, §3 EP1):
   like pulling the fs2 stream).
 
 At 100 TB scale the sink is embarrassingly parallel: no shuffle other than the
-optional ``repartition(parallelism)``, no driver collect, per-executor client
-singletons, and per-partition batching keeps memory at O(batch_size).
+request ``repartition(parallelism)`` at parallelism > 1, no driver collect,
+per-executor client singletons, and per-partition batching keeps memory at
+O(batch_size).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -55,6 +56,16 @@ ACK_SCHEMA = StructType(
         StructField("attempts", LongType(), False),
         StructField("request_bytes", LongType(), False),
         StructField("stream_name", StringType(), False),
+    ]
+)
+
+# request rows between the cut stage and the put stage at parallelism > 1
+_REQUEST_SCHEMA = StructType(
+    [
+        StructField("src_part", IntegerType(), False),
+        StructField("req_idx", LongType(), False),
+        StructField("payloads", ArrayType(BinaryType(), False), False),
+        StructField("request_bytes", LongType(), False),
     ]
 )
 
@@ -100,120 +111,138 @@ def _executor_client(factory: ClientFactory) -> Any:
     return client
 
 
+def cut(
+    payloads: Iterable[bytes], settings: ProducerSettings, src_part: int
+) -> Iterator[tuple[int, int, list[bytes], int]]:
+    """Cut a payload stream into requests (A2's count bound + the AWS byte
+    quotas, see ``slice_requests``), each stamped with its source partition
+    and its index within that partition:
+    ``(src_part, req_idx, payloads, request_bytes)``."""
+    for req_idx, (buf, buf_bytes) in enumerate(
+        slice_requests(
+            payloads,
+            batch_size=settings.batch_size,
+            max_batch_bytes=settings.max_batch_bytes,
+            max_record_bytes=settings.max_record_bytes,
+        )
+    ):
+        yield src_part, req_idx, buf, buf_bytes
+
+
+def put(
+    client: Any,
+    settings: ProducerSettings,
+    requests: Iterable[tuple[int, int, list[bytes], int]],
+) -> Iterator[dict[str, Any]]:
+    """Put each request with shrink-to-failed retry (Firehose.scala:70-105)
+    and yield one ack dict per request, in request order."""
+    for src_part, req_idx, buf, buf_bytes in requests:
+        resp = put_batch_with_retry(
+            client, settings.stream_name, [{"Data": p} for p in buf], settings.retry
+        )
+        yield {
+            "partition_id": src_part,
+            "request_index": req_idx,
+            "n_records": len(buf),
+            "failed_records": int(resp.get("FailedPutCount", 0)),
+            "attempts": int(resp.get("Attempts", 1)),
+            "request_bytes": buf_bytes,
+            "stream_name": settings.stream_name,
+        }
+
+
+def _partition_id() -> int:
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else -1
+
+
+def _payloads(batches: "Iterator[pd.DataFrame]") -> Iterator[bytes]:
+    return (bytes(v) for pdf in batches for v in pdf["value"])
+
+
 def produce_acks(
     framed: DataFrame,
     settings: ProducerSettings,
     client_factory: ClientFactory,
     *,
-    ordered: bool | None = None,
+    ordered: bool = False,
 ) -> DataFrame:
     """Batch-mode produce over a ``value: binary`` DataFrame → ack DataFrame.
 
     The returned DataFrame is lazy; an action on it performs the puts — the
     direct analog of the reference's ack ``Pipe`` output (firehose.scala:69).
+    Every plan is ``put(cut(...))`` — the reference's one delivery loop,
+    ``mapAsync(parallelism)(putWithRetry)`` (firehose.scala:41) — run in
+    Arrow-batched ``mapInPandas`` so payload bytes cross the JVM→Python
+    boundary as Arrow buffers.  Requests hold ≤ ``batch_size`` records and
+    ≤ ``max_batch_bytes`` bytes; a single record over ``max_record_bytes``
+    raises on the executor (the real service would reject it on every
+    retry).
 
-    Arrow-batched ``mapInPandas`` (not an RDD map): payload bytes cross the
-    JVM→Python boundary as Arrow buffers instead of per-row pickles (~10×
-    on wide batches); the slicing carries a remainder buffer across Arrow
-    batches so request boundaries are exact within a partition.
+    The plan follows ``settings.parallelism`` (the in-flight bound):
 
-    Request slicing enforces BOTH AWS quota axes (A2's count bound + the byte
-    bounds): ≤ ``batch_size`` records AND ≤ ``max_batch_bytes`` per request —
-    a record that would overflow the byte bound flushes the buffer first; a
-    single record over ``max_record_bytes`` raises (the real service would
-    reject it on every retry, so failing fast on the executor is strictly
-    better).
+    - ``parallelism == 1`` (the reference's default, ProducerSettings.scala:80):
+      an order-preserving ``coalesce(1)`` runs cut and put in ONE task, which
+      consumes input partitions in source order.  Requests are cut from the
+      globally sequential record stream — ``n_requests == ceil(n /
+      batch_size)`` — and the acks come out in request order with no
+      shuffle, so ``ordered`` changes nothing here.
+    - ``parallelism > 1``: each SOURCE partition is cut into requests at
+      source parallelism, the request rows round-robin into exactly
+      ``parallelism`` put tasks, and each put task acks its requests.
+      Request boundaries never span source partitions (each flushes its
+      remainder as a partial request, like ``groupWithin``'s time bound),
+      so ``n_requests`` is Σ_p ceil(rows_p / batch_size).  With
+      ``ordered=True`` the acks are sorted by ``(partition_id,
+      request_index)`` — request-formation order, as ``mapAsync(n)``
+      returns it while its puts complete concurrently.
 
-    ``ordered`` mirrors the reference's order-preserving ``mapAsync``
-    (firehose.scala:41).  Default (``None``): ordered exactly when
-    ``parallelism == 1`` — the reference's default configuration
-    (ProducerSettings.scala:80 sets parallelism 1, and mapAsync at 1 is
-    globally sequential and order-preserving), so a user porting default
-    settings gets identical ack ordering with zero extra cost (the
-    unordered path would funnel through one partition anyway; the ordered
-    path does the same WITHOUT a shuffle).
-
-    Ordered at ``parallelism == 1`` uses an order-preserving
-    ``coalesce(1)``: the single task consumes input partitions in
-    source-index order, so requests are cut from the globally sequential
-    record stream exactly as the reference's ``groupWithin`` does, and the
-    ack rows come out already ordered.  (At parallelism=1 the upstream
-    projection — serialization/framing — runs inside that single task
-    rather than parallel behind a repartition shuffle; measured NET-FASTER
-    here (sf1: 5.2 s → 4.0 s — skipping the payload-bytes shuffle outweighs
-    the lost framing parallelism), but CPU-heavy serializers on
-    many-partition inputs may prefer ``ordered=False``.)
-
-    Ordered at ``parallelism > 1`` (exact at ANY parallelism, matching
-    ``mapAsync(n)``): requests are cut PER SOURCE PARTITION at framing
-    time — a first ``mapInPandas`` over the un-shuffled input slices each
-    source partition into requests and stamps every request with
-    ``(source_partition_id, request_index)`` — then the request rows
-    round-robin-shuffle into exactly ``parallelism`` put tasks (the
-    in-flight bound), and the ack DataFrame is globally sorted by the
-    stamp.  Because the stamp is captured BEFORE any shuffle, the ack
-    sequence equals request-formation order regardless of how the
-    scheduler groups or scrambles partitions — no reliance on coalesce
-    contiguity (the r9 locality caveat is gone).  Like ``mapAsync``, puts
-    COMPLETE concurrently; it is the ack STREAM that is ordered.  Framing
-    runs at full source parallelism.  Semantic note: request boundaries
-    never span source partitions (each source partition flushes its
-    remainder as a partial request — the same partial batches
-    ``groupWithin``'s time bound produces), so ``n_requests`` is
-    Σ_p ceil(rows_p / batch_size) rather than the single-stream
-    ceil(Σ rows / batch_size); at parallelism=1 the single-stream cut is
-    preserved exactly.
+    An ack's ``partition_id`` is the source partition its request was cut
+    from (0 at ``parallelism == 1``, the one coalesced partition), and
+    ``request_index`` counts requests within that partition from 0.
     """
     if "value" not in framed.columns:
         raise ValueError("produce expects a framed DataFrame with a 'value' column")
-    if ordered is None:
-        ordered = settings.parallelism == 1  # ProducerSettings.scala:80 default
-    if ordered and settings.parallelism > 1:
-        return _produce_acks_stamped(framed, settings, client_factory)
-    if ordered:
-        # order-preserving concurrency bound: coalesce merges whole input
-        # partitions in index order, never splits or interleaves them
-        partitioned = framed.select("value").coalesce(settings.parallelism)
-    else:
-        partitioned = framed.select("value").repartition(settings.parallelism)
+    values = framed.select("value")
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+    if settings.parallelism == 1:
+
+        def cut_put(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+            import pandas as pd
+
+            requests = cut(_payloads(batches), settings, _partition_id())
+            acks = put(_executor_client(client_factory), settings, requests)
+            yield pd.DataFrame(list(acks), columns=ACK_SCHEMA.fieldNames())
+
+        return values.coalesce(1).mapInPandas(cut_put, ACK_SCHEMA)
+
+    def cut_rows(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         import pandas as pd
-        from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        partition_id = ctx.partitionId() if ctx is not None else -1
-        client = _executor_client(client_factory)
-        acks: list[dict] = []
+        # ONE frame per request: peak task memory stays proportional to
+        # max_batch_bytes, never to the source partition size
+        for request in cut(_payloads(batches), settings, _partition_id()):
+            yield pd.DataFrame([request], columns=_REQUEST_SCHEMA.fieldNames())
 
-        payloads = (bytes(v) for pdf in batches for v in pdf["value"])
-        for request_index, (buf, buf_bytes) in enumerate(
-            slice_requests(
-                payloads,
-                batch_size=settings.batch_size,
-                max_batch_bytes=settings.max_batch_bytes,
-                max_record_bytes=settings.max_record_bytes,
-            )
-        ):
-            records = [{"Data": p} for p in buf]
-            resp = put_batch_with_retry(client, settings.stream_name, records, settings.retry)
-            acks.append(
-                {
-                    "partition_id": partition_id,
-                    "request_index": request_index,
-                    "n_records": len(records),
-                    "failed_records": int(resp.get("FailedPutCount", 0)),
-                    "attempts": int(resp.get("Attempts", 1)),
-                    "request_bytes": buf_bytes,
-                    "stream_name": settings.stream_name,
-                }
-            )
-        yield pd.DataFrame(
-            acks,
-            columns=[f.name for f in ACK_SCHEMA.fields],
+    def put_rows(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        import pandas as pd
+
+        requests = (
+            (int(r.src_part), int(r.req_idx), [bytes(p) for p in r.payloads],
+             int(r.request_bytes))
+            for pdf in batches
+            for r in pdf.itertuples(index=False)
         )
+        acks = put(_executor_client(client_factory), settings, requests)
+        yield pd.DataFrame(list(acks), columns=ACK_SCHEMA.fieldNames())
 
-    acks_df = partitioned.mapInPandas(run, ACK_SCHEMA)
+    acks_df = (
+        values.mapInPandas(cut_rows, _REQUEST_SCHEMA)
+        .repartition(settings.parallelism)
+        .mapInPandas(put_rows, ACK_SCHEMA)
+    )
     if ordered:
         # NOT orderBy: a global sort range-samples its input, which would
         # execute the put pipeline a second time (duplicate delivery!).
@@ -223,103 +252,6 @@ def produce_acks(
             "partition_id", "request_index"
         )
     return acks_df
-
-
-# request rows between the cut stage and the put stage of the stamped path
-_REQUEST_SCHEMA = StructType(
-    [
-        StructField("src_part", IntegerType(), False),
-        StructField("req_idx", LongType(), False),
-        StructField("payloads", ArrayType(BinaryType(), False), False),
-        StructField("request_bytes", LongType(), False),
-    ]
-)
-
-
-def _produce_acks_stamped(
-    framed: DataFrame,
-    settings: ProducerSettings,
-    client_factory: ClientFactory,
-) -> DataFrame:
-    """Exact-order produce at parallelism > 1 (see ``produce_acks``).
-
-    Stage 1 (source parallelism): slice each SOURCE partition into
-    requests, stamping ``(src_part, req_idx)`` — the stamp is captured in
-    the pre-shuffle stage, so it reflects true source order no matter how
-    later stages schedule.  Stage 2 (``parallelism`` tasks, the in-flight
-    bound): round-robin shuffle of the request rows, then the actual puts.
-    Stage 3: one request-count-sized shuffle to sort acks by stamp.  The
-    payload bytes cross one shuffle (same as the unordered repartition
-    path); framing stays fully parallel."""
-
-    def cut(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        src_part = ctx.partitionId() if ctx is not None else -1
-        cols = [f.name for f in _REQUEST_SCHEMA.fields]
-        payloads = (bytes(v) for pdf in batches for v in pdf["value"])
-        # yield ONE frame per request: peak task memory stays proportional
-        # to max_batch_bytes, never to the source partition size (the
-        # streaming contract slice_requests gives the other paths)
-        for req_idx, (buf, buf_bytes) in enumerate(
-            slice_requests(
-                payloads,
-                batch_size=settings.batch_size,
-                max_batch_bytes=settings.max_batch_bytes,
-                max_record_bytes=settings.max_record_bytes,
-            )
-        ):
-            yield pd.DataFrame(
-                [
-                    {
-                        "src_part": src_part,
-                        "req_idx": req_idx,
-                        "payloads": list(buf),
-                        "request_bytes": buf_bytes,
-                    }
-                ],
-                columns=cols,
-            )
-
-    requests = (
-        framed.select("value")
-        .mapInPandas(cut, _REQUEST_SCHEMA)
-        .repartition(settings.parallelism)
-    )
-
-    def put(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-
-        client = _executor_client(client_factory)
-        acks: list[dict] = []
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                records = [{"Data": bytes(p)} for p in row.payloads]
-                resp = put_batch_with_retry(
-                    client, settings.stream_name, records, settings.retry
-                )
-                acks.append(
-                    {
-                        "partition_id": int(row.src_part),
-                        "request_index": int(row.req_idx),
-                        "n_records": len(records),
-                        "failed_records": int(resp.get("FailedPutCount", 0)),
-                        "attempts": int(resp.get("Attempts", 1)),
-                        "request_bytes": int(row.request_bytes),
-                        "stream_name": settings.stream_name,
-                    }
-                )
-        yield pd.DataFrame(acks, columns=[f.name for f in ACK_SCHEMA.fields])
-
-    # same no-orderBy rationale as produce_acks: a global sort would
-    # range-sample (and so re-run) the put pipeline
-    return (
-        requests.mapInPandas(put, ACK_SCHEMA)
-        .repartition(1)
-        .sortWithinPartitions("partition_id", "request_index")
-    )
 
 
 def write_batch(

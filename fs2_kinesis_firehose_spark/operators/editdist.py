@@ -482,8 +482,8 @@ def editdist_pair_counts(
     # checkpointed value table (which the fold also materializes for the
     # three legs that reuse it) estimates the probe exchange's bytes from
     # the STATIC per-value explode width; when that lands under
-    # defaultParallelism 128 MB-target partitions, the probe side is
-    # pinned to defaultParallelism on the JOIN KEYS — REPARTITION_BY_NUM
+    # max(defaultParallelism, shuffle partitions) 128 MB-target partitions,
+    # the probe side is pinned to that width on the JOIN KEYS — REPARTITION_BY_NUM
     # is AQE-stable, and under a sort-merge fallback (index side too big
     # to broadcast) it IS the join's own exchange, so the floor re-sizes
     # an exchange that exists anyway rather than adding one.  At scale the
@@ -497,9 +497,14 @@ def editdist_pair_counts(
     if n_vals:
         per_row = float(stats["_len"] or 0.0) * (1.0 + 1.0 / (k + 1)) + 48.0
         est_bytes = n_vals * _probe_row_factor(k, boundaries) * per_row
-        dp = df.sparkSession.sparkContext.defaultParallelism
-        if -(-int(est_bytes) // _PROBE_FLOOR_TARGET_BYTES) < dp:
-            probe = probe.repartition(dp, "seg_idx", "seg")
+        # the width a sort-merge join's EnsureRequirements raises it to anyway
+        spark = df.sparkSession
+        floor = max(
+            spark.sparkContext.defaultParallelism,
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+        )
+        if -(-int(est_bytes) // _PROBE_FLOOR_TARGET_BYTES) < floor:
+            probe = probe.repartition(floor, "seg_idx", "seg")
     ed = F.levenshtein(F.col("txt1"), F.col("txt2"), k)
     keep = _first_match_keep(k, boundaries)
     w = (F.col("key1")["c"] * F.col("key2")["c"]).cast("long")

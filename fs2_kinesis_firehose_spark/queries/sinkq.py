@@ -18,18 +18,6 @@ from fs2_kinesis_firehose_spark.firehose.sink import produce_acks
 from fs2_kinesis_firehose_spark.queries import query
 from fs2_kinesis_firehose_spark.tables import load_table
 
-# pipeline_dedup_delivery_accounting delivery-leg mode; module-level so the
-# A/B harness (scripts/ab_pipeline_funnel.py) can flip it without duplicating
-# the query body.  r12 Audit B (PLANS.md): the controlled alternating A/B
-# found ordered wins slightly but consistently at BOTH scales (sf0.1 median
-# 3.35 s vs 3.49 s; sf1 median 19.15 s vs 19.27 s, min 18.63 s vs 19.07 s),
-# agreeing with the recorded r10->r11 driver/sf1 regressions and NOT with the
-# r10 quiet-box A/B — so the r10 `ordered=False` change is reverted and the
-# delivery leg matches the reference's order-preserving default again
-# (ProducerSettings.scala:80 ordered-at-parallelism-1).
-_PIPELINE_DELIVERY_ORDERED = True
-
-
 @query(
     "firehose_delivery_accounting",
     oracle="""
@@ -67,8 +55,8 @@ def firehose_delivery_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def firehose_ordered_delivery_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact-order ack contract at parallelism > 1 (the stamped path,
-    ``_produce_acks_stamped`` — firehose.scala:41's order-preserving
+    """The exact-order ack contract at parallelism > 1 (``produce_acks``
+    with ``ordered=True`` — firehose.scala:41's order-preserving
     ``mapAsync(n)``) under oracle check.
 
     ``ordered=True`` at parallelism=3 cuts requests per SOURCE partition
@@ -277,18 +265,10 @@ def pipeline_dedup_delivery_accounting(spark: SparkSession, sf_dir: str) -> Data
         text_col="payload_str",
         key_col="row_key",
     )
-    # Delivery-leg funnel mode.  r10 Audit A's quiet-box A/B favored the
-    # unordered repartition(1) funnel (sf1 17.7 s -> 15.2 s), but BOTH
-    # recorded benches moved the other way after it was applied (driver
-    # 2.61 -> 3.46 s, sf1 smoke 18.8 -> 19.7 s) — see PLANS.md r12 Audit B
-    # for the controlled re-run that settled it.  Accounting is
-    # order-invariant (counts/bytes; the byte bound never splits these tiny
-    # records), so n_requests stays exactly ceil(n/500) either way.
     acks = produce_acks(
         deduped.select("value"),
         ProducerSettings(stream_name="delivered", parallelism=1),
         fake_client_factory(spool_dir=deliver_spool),
-        ordered=_PIPELINE_DELIVERY_ORDERED,
     )
     return acks.agg(
         F.count(F.lit(1)).alias("n_requests"),

@@ -32,12 +32,23 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from fs2_kinesis_firehose_spark.firehose.retry import put_batch_with_retry
+from fs2_kinesis_firehose_spark.firehose.client import (
+    ClientFactory,
+    boto3_client_factory,
+    fake_client_factory,
+)
 from fs2_kinesis_firehose_spark.firehose.settings import (
     MAX_BATCH_BYTES,
     MAX_BATCH_SIZE,
     MAX_RECORD_BYTES,
+    ProducerSettings,
     RetryPolicy,
+)
+from fs2_kinesis_firehose_spark.firehose.sink import (
+    _executor_client,
+    _partition_id,
+    cut,
+    put,
 )
 
 
@@ -49,82 +60,51 @@ class FirehoseCommitMessage(WriterCommitMessage):
     failed_records: int
 
 
-def _build_client(options: dict[str, str]) -> Any:
+def _client_factory(options: dict[str, str]) -> ClientFactory:
     if options.get("spooldir"):
-        from fs2_kinesis_firehose_spark.firehose.client import FakeFirehose
-
-        return FakeFirehose(spool_dir=options["spooldir"])
-    try:  # pragma: no cover - boto3 absent in CI
-        import boto3  # type: ignore[import-not-found]
-    except ImportError as e:
-        raise RuntimeError(
-            "boto3 not installed; pass .option('spoolDir', ...) to use the fake client"
-        ) from e
+        return fake_client_factory(spool_dir=options["spooldir"])
     kwargs: dict[str, Any] = {}
-    if options.get("region"):
-        kwargs["region_name"] = options["region"]
     if options.get("endpoint"):
         kwargs["endpoint_url"] = options["endpoint"]
-    return boto3.client("firehose", **kwargs)  # pragma: no cover
+    return boto3_client_factory(options.get("region"), **kwargs)
 
 
 class _WriterCore:
-    """Shared executor-side write loop for batch and streaming writers."""
+    """Shared executor-side write for batch and streaming writers: the
+    produce pipe's own ``put(cut(...))`` over one partition."""
 
     def __init__(self, options: dict[str, str]) -> None:
         # normalize option keys (Spark lowercases DataSource option names)
-        self.options = {k.lower(): v for k, v in options.items()}
-        if not self.options.get("streamname"):
+        options = {k.lower(): v for k, v in options.items()}
+        if not options.get("streamname"):
             raise ValueError("firehose source requires .option('streamName', ...)")
-        self.stream_name = self.options["streamname"]
-        self.batch_size = int(self.options.get("batchsize", MAX_BATCH_SIZE))
-        if not (0 < self.batch_size <= MAX_BATCH_SIZE):
-            raise ValueError(f"batchSize must be in (0, {MAX_BATCH_SIZE}]")
-        # AWS byte quotas (lowerable for tests, never raisable past AWS)
-        self.max_batch_bytes = int(self.options.get("maxbatchbytes", MAX_BATCH_BYTES))
-        self.max_record_bytes = int(self.options.get("maxrecordbytes", MAX_RECORD_BYTES))
-        if not (0 < self.max_batch_bytes <= MAX_BATCH_BYTES):
-            raise ValueError(f"maxBatchBytes must be in (0, {MAX_BATCH_BYTES}]")
-        if not (0 < self.max_record_bytes <= MAX_RECORD_BYTES):
-            raise ValueError(f"maxRecordBytes must be in (0, {MAX_RECORD_BYTES}]")
-        # a single accepted record must never overflow a request
-        self.max_record_bytes = min(self.max_record_bytes, self.max_batch_bytes)
-        self.retry = RetryPolicy(
-            max_retries=int(self.options.get("maxretries", 6)),
-            base_backoff_s=float(self.options.get("basebackoffms", 500)) / 1000.0,
+        # ProducerSettings validates the count and AWS byte quotas
+        self.settings = ProducerSettings(
+            stream_name=options["streamname"],
+            batch_size=int(options.get("batchsize", MAX_BATCH_SIZE)),
+            separator=options.get("separator", "").encode(),
+            retry=RetryPolicy(
+                max_retries=int(options.get("maxretries", 6)),
+                base_backoff_s=float(options.get("basebackoffms", 500)) / 1000.0,
+            ),
+            max_batch_bytes=int(options.get("maxbatchbytes", MAX_BATCH_BYTES)),
+            max_record_bytes=int(options.get("maxrecordbytes", MAX_RECORD_BYTES)),
         )
-        self.separator = self.options.get("separator", "").encode()
+        self.client_factory = _client_factory(options)
 
     def write(self, iterator: Iterator[Any]) -> FirehoseCommitMessage:
-        from pyspark import TaskContext
-
-        from fs2_kinesis_firehose_spark.firehose.batching import slice_requests
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        client = _build_client(self.options)
+        sep = self.settings.separator
+        payloads = (
+            (v.encode() if isinstance(v, str) else bytes(v)) + sep
+            for v in (row["value"] for row in iterator)
+        )
+        pid = _partition_id()
+        client = _executor_client(self.client_factory)
         n_requests = n_records = failed = 0
-
-        def payloads() -> Iterator[bytes]:
-            for row in iterator:
-                v = row["value"]
-                payload = v.encode() if isinstance(v, str) else bytes(v)
-                if self.separator:
-                    payload += self.separator
-                yield payload
-
-        for buf, _bytes in slice_requests(
-            payloads(),
-            batch_size=self.batch_size,
-            max_batch_bytes=self.max_batch_bytes,
-            max_record_bytes=self.max_record_bytes,
-        ):
-            resp = put_batch_with_retry(
-                client, self.stream_name, [{"Data": p} for p in buf], self.retry
-            )
+        for ack in put(client, self.settings, cut(payloads, self.settings, pid)):
             n_requests += 1
-            n_records += len(buf)
-            failed += int(resp.get("FailedPutCount", 0))
+            n_records += ack["n_records"]
+            failed += ack["failed_records"]
         return FirehoseCommitMessage(
             partition_id=pid, n_requests=n_requests, n_records=n_records, failed_records=failed
         )

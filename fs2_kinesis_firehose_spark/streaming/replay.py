@@ -219,9 +219,19 @@ def run_to_memory_with_progress(
     output_mode: str = "append",
     state_partitions: int | None = None,
 ) -> tuple[DataFrame, list]:
-    """Like :func:`run_to_memory`, but also returns the query's recorded
-    progress objects so callers can account for engine-side observability
-    metrics (e.g. ``stateOperators[].numRowsDroppedByWatermark``)."""
+    """Run a streaming DataFrame to completion (availableNow) into a memory
+    sink; return the materialized result as a batch DataFrame, with the
+    query's recorded progress objects so callers can account for
+    engine-side observability metrics (e.g.
+    ``stateOperators[].numRowsDroppedByWatermark``).
+
+    availableNow processes everything currently in the source then stops —
+    the deterministic way to exercise real streaming operators in tests and
+    the correctness harness.
+
+    ``state_partitions``: pins the stateful operator's state-store count
+    for this run (see ``sized_state_partitions``); the session conf is
+    restored afterwards."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
     with scoped_state_partitions(spark, state_partitions):
@@ -248,30 +258,7 @@ def run_to_memory(
     output_mode: str = "append",
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion (availableNow) into a memory
-    sink; return the materialized result as a batch DataFrame.
-
-    availableNow processes everything currently in the source then stops —
-    the deterministic way to exercise real streaming operators in tests and
-    the correctness harness.
-
-    ``state_partitions``: pins the stateful operator's state-store count
-    for this run (see ``sized_state_partitions``); the session conf is
-    restored afterwards."""
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    spark = stream_df.sparkSession
-    with scoped_state_partitions(spark, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            if q.isActive:
-                q.stop()
-            _drain_ephemeral_staging()
-    return spark.table(name)
+    """:func:`run_to_memory_with_progress` without the progress objects."""
+    return run_to_memory_with_progress(
+        stream_df, output_mode=output_mode, state_partitions=state_partitions
+    )[0]

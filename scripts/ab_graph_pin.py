@@ -1,10 +1,9 @@
 #!/usr/bin/env python
 """Same-box alternating A/B of the iterative-graph exchange-reuse pin
 (operators/graph.py `_pinned_by_key` / `_EXCHANGE_REUSE`) — r11 verdict ask
-#4 adjudication.  Protocol mirrors scripts/ab_pipeline_funnel.py: one
-bench-like session, warm both variants at sf0.001, then alternate variants
-for --reps timed runs per query at the target sf (cache cleared each run);
-report per-variant min/median.
+#4 adjudication.  Protocol: one bench-like session, warm both variants at
+sf0.001, then alternate variants for --reps timed runs per query at the
+target sf (cache cleared each run); report per-variant min/median.
 
 Usage:
   PYTHONPATH=/root/repo python scripts/ab_graph_pin.py \

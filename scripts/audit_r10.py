@@ -1,14 +1,7 @@
 #!/usr/bin/env python
-"""Round-10 one-off cost audits (r9 verdict asks #5 and #8), recorded in
+"""Round-10 one-off cost audit (r9 verdict ask #8), recorded in
 PLANS.md.  Run on a QUIET box: `PYTHONPATH=. python scripts/audit_r10.py
 [sf_dir]` (default /tmp/sf1 — the 10x diagnostic replica).
-
-Audit A — pipeline_dedup_delivery_accounting stage split: times the
-cumulative prefixes (ingest → +double spool read → +dedup → full sink) so
-stage costs fall out by subtraction, then times the full query with the
-deliver stage's dedup output materialized (localCheckpoint) before the
-ordered coalesce(1), and with ordered=False (repartition funnel) — the two
-candidate fixes for the serial-dedup-in-the-coalesced-task hypothesis.
 
 Audit B — streaming_upsert_accounting join-vs-write split: per batch,
 times the MERGE compute (count() of the upsert output — join only, no
@@ -17,7 +10,6 @@ PLANS.md write-amplification claim into measurement.
 """
 from __future__ import annotations
 
-import hashlib
 import shutil
 import sys
 import tempfile
@@ -27,87 +19,9 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from fs2_kinesis_firehose_spark.session import get_spark
-from fs2_kinesis_firehose_spark.firehose.client import fake_client_factory
-from fs2_kinesis_firehose_spark.firehose.serializers import serialize_and_frame
-from fs2_kinesis_firehose_spark.firehose.settings import ProducerSettings
-from fs2_kinesis_firehose_spark.firehose.sink import produce_acks
-from fs2_kinesis_firehose_spark.operators.dedup import exact_dedup
-from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
 from fs2_kinesis_firehose_spark.tables import load_table
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
-
-
-def t(fn):
-    t0 = time.monotonic()
-    fn()
-    return round(time.monotonic() - t0, 2)
-
-
-def audit_pipeline(spark):
-    root = Path(tempfile.gettempdir()) / "fs2spark-audit" / hashlib.sha256(SF.encode()).hexdigest()[:8]
-
-    def fresh():
-        if root.exists():
-            shutil.rmtree(root)
-        (root / "ingest").mkdir(parents=True)
-        (root / "deliver").mkdir(parents=True)
-
-    events = load_table(spark, SF, "events")
-    framed = serialize_and_frame(events.select("event_id", "event_type"), "json", b"\n")
-
-    def ingest():
-        produce_acks(
-            framed, ProducerSettings(stream_name="ingest", parallelism=8),
-            fake_client_factory(spool_dir=str(root / "ingest")),
-        ).count()
-
-    register_kinesis_spool_source(spark)
-
-    def attempt(n):
-        return (
-            spark.read.format("kinesis_spool")
-            .option("spoolDir", str(root / "ingest")).load()
-            .select(
-                F.concat_ws(":", F.lit(n), F.col("shard"), F.col("seq")).alias("row_key"),
-                F.col("value"),
-            )
-        )
-
-    def replayed():
-        return attempt(1).unionByName(attempt(2))
-
-    def deduped():
-        return exact_dedup(
-            replayed().withColumn("payload_str", F.col("value").cast("string")),
-            text_col="payload_str", key_col="row_key",
-        )
-
-    def deliver(src):
-        return produce_acks(
-            src.select("value"), ProducerSettings(stream_name="delivered", parallelism=1),
-            fake_client_factory(spool_dir=str(root / "deliver")),
-        ).agg(F.count(F.lit(1)), F.sum("n_records")).collect()
-
-    fresh(); t_ingest = t(ingest)
-    t_read = t(lambda: replayed().count())
-    t_dedup = t(lambda: deduped().count())
-    t_full = t(lambda: deliver(deduped()))
-    fresh(); ingest()
-    t_full_ckpt = t(lambda: deliver(deduped().localCheckpoint(eager=True)))
-    fresh(); ingest()
-    t_full_unord = t(
-        lambda: produce_acks(
-            deduped().select("value"),
-            ProducerSettings(stream_name="delivered", parallelism=1),
-            fake_client_factory(spool_dir=str(root / "deliver")),
-            ordered=False,
-        ).agg(F.count(F.lit(1)), F.sum("n_records")).collect()
-    )
-    print(
-        f"AUDIT_A ingest={t_ingest}s read2x={t_read}s dedup_count={t_dedup}s "
-        f"full_sink={t_full}s full_ckpt={t_full_ckpt}s full_unordered={t_full_unord}s"
-    )
 
 
 def audit_upsert(spark):
@@ -160,5 +74,4 @@ def audit_upsert(spark):
 
 if __name__ == "__main__":
     spark = get_spark("audit-r10", shuffle_partitions=32)
-    audit_pipeline(spark)
     audit_upsert(spark)

@@ -295,8 +295,8 @@ def test_counts_null_key_also_fails_loudly(spark):
 def test_probe_parallelism_floor_gates_both_directions(spark, monkeypatch):
     """r14: the segment join EXPANDS (verify CPU ~ candidate pairs, not
     input bytes), so when the byte-estimated probe exchange lands under
-    defaultParallelism 128 MB-target partitions the probe side is pinned
-    to defaultParallelism on the join keys (REPARTITION_BY_NUM — AQE
+    max(defaultParallelism, shuffle partitions) 128 MB-target partitions
+    the probe side is pinned to that width on the join keys (REPARTITION_BY_NUM — AQE
     cannot re-coalesce it); when the estimate clears the gate (the
     at-scale regime) the plan is untouched.  Counts are identical in both
     gate states."""
@@ -305,7 +305,11 @@ def test_probe_parallelism_floor_gates_both_directions(spark, monkeypatch):
     from fs2_kinesis_firehose_spark.operators import editdist as E
 
     df = spark.createDataFrame([Row(key=i, s=f"unit#{i:09d}") for i in range(80)])
-    dp = spark.sparkContext.defaultParallelism
+    # the width a sort-merge join's EnsureRequirements raises the pin to
+    floor = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
 
     def plan(frame):
         return frame._jdf.queryExecution().executedPlan().toString()
@@ -317,7 +321,7 @@ def test_probe_parallelism_floor_gates_both_directions(spark, monkeypatch):
         floored_plan,
     )
     assert m is not None, "probe floor exchange missing on a tiny corpus"
-    assert int(m.group(1)) == dp
+    assert int(m.group(1)) == floor
     floored_rows = {(r.edit_dist, r.n_pairs) for r in small.collect()}
 
     # force the estimate over the gate (as if the probe side were huge):

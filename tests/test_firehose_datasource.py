@@ -59,6 +59,14 @@ def test_batch_write_rejects_oversized_record(spark, tmp_path):
         )
 
 
+def test_writer_rejects_batch_size_past_aws_cap():
+    from fs2_kinesis_firehose_spark.sources.firehose_datasource import _WriterCore
+
+    # validated by ProducerSettings, the one home of the quota checks
+    with pytest.raises(ValueError, match="batch_size"):
+        _WriterCore({"streamName": "t", "batchSize": "501"})
+
+
 def test_rejects_wrong_schema(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "id int, s string")
     with pytest.raises(Exception, match="value"):

@@ -48,12 +48,32 @@ def test_batch_slicing_500_cap(spark, tmp_path):
     assert len(read_spool(spool, "t")) == 1234
 
 
+def _put_stage_tasks(spark, group, action):
+    """Run ``action`` under a job group; return its result and the task
+    count of the put stage — the last stage of the group's last job, since
+    unordered acks are collected straight from it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, "put-stage task count")
+    try:
+        result = action()
+    finally:
+        sc.setJobGroup(None, None)
+    last_job = max(tracker.getJobIdsForGroup(group))
+    put_stage = max(tracker.getJobInfo(last_job).stageIds)
+    return result, tracker.getStageInfo(put_stage).numTasks
+
+
 def test_bounded_parallelism_partition_count(spark, tmp_path):
     spool = str(tmp_path / "spool")
     df = spark.range(1000).selectExpr("CAST(string(id) AS BINARY) AS value")
     settings = ProducerSettings(stream_name="t", parallelism=4, batch_size=100)
-    acks = produce_acks(df, settings, fake_client_factory(spool_dir=spool)).collect()
-    assert {a.partition_id for a in acks} <= set(range(4))
+    acks, put_tasks = _put_stage_tasks(
+        spark,
+        "bounded-parallelism",
+        produce_acks(df, settings, fake_client_factory(spool_dir=spool)).collect,
+    )
+    assert put_tasks == 4  # the in-flight bound
     assert sum(a.n_records for a in acks) == 1000
     assert len(read_spool(spool, "t")) == 1000
 
@@ -152,28 +172,28 @@ def test_streaming_produce_delivers_all_events(spark, sf_smoke, tmp_path):
     assert ids == sorted(r.event_id for r in events.select("event_id").collect())
 
 
-def test_ordered_acks_follow_input_order(spark, tmp_path):
-    """ordered=True at parallelism > 1 (A5 exact closure, r9 verdict ask
-    #2): the ack sequence must equal request-formation order at ANY
-    parallelism, like the reference's order-preserving ``mapAsync``
-    (firehose.scala:41).  Requests are cut per SOURCE partition and
-    stamped (src_part, req_idx) BEFORE any shuffle, so the sorted ack
-    stream is exact source order regardless of scheduler grouping: 4
-    source partitions of 300 ids → 3 requests each → 12 stamped acks."""
+@pytest.mark.parametrize("ordered", [True, False])
+def test_ordered_acks_follow_input_order(spark, tmp_path, ordered):
+    """At parallelism > 1 requests are cut per SOURCE partition and stamped
+    (src_part, req_idx) BEFORE any shuffle: 4 source partitions of 300 ids
+    → 3 requests each → 12 dense stamps, whichever way the acks come back.
+    ``ordered=True`` adds the stamp sort, so the ack sequence equals
+    request-formation order at ANY parallelism, like the reference's
+    order-preserving ``mapAsync`` (firehose.scala:41)."""
     spool = str(tmp_path / "spool")
     df = spark.range(0, 1200, 1, 4).selectExpr(
         "CAST(lpad(string(id), 6, '0') AS BINARY) AS value"
     )
     settings = ProducerSettings(stream_name="t", parallelism=2, batch_size=100)
     acks = produce_acks(
-        df, settings, fake_client_factory(spool_dir=spool), ordered=True
+        df, settings, fake_client_factory(spool_dir=spool), ordered=ordered
     ).collect()
     order = [(a.partition_id, a.request_index) for a in acks]
-    # exact: source partitions 0..3, requests 0..2 within each — source
-    # order, NOT put-task order (puts complete concurrently, like mapAsync)
-    assert order == [(p, i) for p in range(4) for i in range(3)]
+    expect = [(p, i) for p in range(4) for i in range(3)]
+    # exact when ordered: source order, NOT put-task order (puts complete
+    # concurrently, like mapAsync)
+    assert (order if ordered else sorted(order)) == expect
     assert all(a.n_records == 100 for a in acks)
-    assert len(read_spool(spool, "t")) == 1200
     # every payload delivered exactly once
     delivered = sorted(p.decode() for p in read_spool(spool, "t"))
     assert delivered == [f"{i:06d}" for i in range(1200)]
@@ -217,7 +237,7 @@ def test_ordered_acks_exact_under_noncontiguous_grouping(spark, tmp_path):
 
 
 def test_default_is_ordered_at_parallelism_1(spark, tmp_path):
-    """Missing #2 closure: the DEFAULT (ordered=None) matches the
+    """Missing #2 closure: the DEFAULT plan matches the
     reference's defaults — parallelism=1 (ProducerSettings.scala:80) +
     order-preserving mapAsync (firehose.scala:41) means globally
     sequential, globally ordered delivery.  Records must land in the spool
@@ -232,7 +252,8 @@ def test_default_is_ordered_at_parallelism_1(spark, tmp_path):
     assert order == [(0, i) for i in range(9)]  # one task, source order
     delivered = [p.decode() for p in read_spool(spool, "t")]
     assert delivered == sorted(delivered), "delivery not in source order"
-    # explicit opt-out restores the repartition funnel (still 1 partition)
+    # at parallelism 1 the one coalesced task is already in order, so
+    # ordered=False plans the same single task
     spool2 = str(tmp_path / "spool2")
     acks2 = produce_acks(
         df, settings, fake_client_factory(spool_dir=spool2), ordered=False
@@ -245,6 +266,11 @@ def test_unordered_acks_still_repartition(spark, tmp_path):
     spool = str(tmp_path / "spool")
     df = spark.range(0, 1200, 1, 4).selectExpr("CAST(string(id) AS BINARY) AS value")
     settings = ProducerSettings(stream_name="t", parallelism=2, batch_size=200)
-    acks = produce_acks(df, settings, fake_client_factory(spool_dir=spool)).collect()
-    assert {a.partition_id for a in acks} <= {0, 1}
+    acks, put_tasks = _put_stage_tasks(
+        spark,
+        "unordered-repartition",
+        produce_acks(df, settings, fake_client_factory(spool_dir=spool)).collect,
+    )
+    assert put_tasks == 2
+    assert {a.partition_id for a in acks} == set(range(4))  # source partitions
     assert len(read_spool(spool, "t")) == 1200
