@@ -335,12 +335,6 @@ _SERVE_STATE: dict[str, tuple] = {}
 def _ensure_pq_index(spark, sf_dir: str):
     if sf_dir in _SERVE_STATE:
         return _SERVE_STATE[sf_dir]
-    import hashlib
-    import os as _os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators import pq as PQ
     from fs2_kinesis_firehose_spark.operators import similarity as S
     from fs2_kinesis_firehose_spark.queries.cluster_q import (
@@ -350,15 +344,9 @@ def _ensure_pq_index(spark, sf_dir: str):
         _PQ_K,
         _PQ_M,
     )
-    from fs2_kinesis_firehose_spark.tables import load_table
+    from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-bench-serve"
-        / f"{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{_os.getpid()}"
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-bench-serve", "{h}-{pid}", sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
     head_rows = (

@@ -1,5 +1,5 @@
 """Firehose client abstraction: boto3-shaped duck type + a failure-injecting
-in-memory fake.
+fake.
 
 The reference wraps the AWS SDK client behind an algebra (Firehose.scala:28-63)
 and manages its lifecycle as a Resource (Firehose.scala:143-151).  Here the
@@ -11,6 +11,10 @@ the reference's client Resource, SURVEY.md §2 A22).
 "notably untested"): it injects per-record partial failures and whole-call
 faults deterministically, and can spool delivered records to a directory so
 Spark executor processes and the driver-side test can share observations.
+
+This module owns the spool format: ``FakeFirehose._spool`` is its one
+writer and ``spool_frames`` its one parser, shared by ``read_spool`` and
+the ``kinesis_spool`` source (sources/kinesis_spool_source.py).
 """
 
 from __future__ import annotations
@@ -19,7 +23,7 @@ import os
 import threading
 import uuid
 from collections import defaultdict
-from typing import Any, Callable
+from typing import Any, BinaryIO, Callable, Iterator
 
 ClientFactory = Callable[[], Any]
 
@@ -64,7 +68,7 @@ class _Boto3Factory:
 
 
 class FakeFirehose:
-    """In-memory boto3-firehose-shaped fake with deterministic fault injection.
+    """boto3-firehose-shaped fake with deterministic fault injection.
 
     Failure injection:
     - ``fail_record_times``: a record payload fails (RecordId omitted in the
@@ -74,9 +78,10 @@ class FakeFirehose:
       exercises the whole-call retry path (Firehose.scala:99-103).
     - ``record_should_fail``: arbitrary predicate ``(payload, attempt) -> bool``.
 
-    ``spool_dir`` persists each successful record as a line in a per-stream
-    spool file so delivery is observable across process boundaries (Spark
-    executors run in separate Python workers).
+    ``spool_dir`` persists each successful record as a length-prefixed frame
+    in a per-stream spool file, the fake's one record of delivery, so it is
+    observable across process boundaries (Spark executors run in separate
+    Python workers); ``read_spool`` reads it back.
     """
 
     def __init__(
@@ -89,7 +94,6 @@ class FakeFirehose:
     ) -> None:
         self._lock = threading.Lock()
         self.streams: dict[str, dict[str, Any]] = {}
-        self.delivered: dict[str, list[bytes]] = defaultdict(list)
         self.put_batch_calls = 0
         self._record_attempts: dict[bytes, int] = defaultdict(int)
         self._fail_record_times = fail_record_times
@@ -123,9 +127,7 @@ class FakeFirehose:
     # -- data plane (boto3 shape) --------------------------------------------
     def put_record(self, DeliveryStreamName: str, Record: dict[str, bytes]) -> dict[str, Any]:
         with self._lock:
-            payload = bytes(Record["Data"])
-            self.delivered[DeliveryStreamName].append(payload)
-            self._spool(DeliveryStreamName, [payload])
+            self._spool(DeliveryStreamName, [bytes(Record["Data"])])
             return {"RecordId": uuid.uuid4().hex, "Encrypted": False}
 
     def put_record_batch(
@@ -148,7 +150,6 @@ class FakeFirehose:
                 else:
                     ok.append(payload)
                     responses.append({"RecordId": uuid.uuid4().hex})
-            self.delivered[DeliveryStreamName].extend(ok)
             self._spool(DeliveryStreamName, ok)
             return {"FailedPutCount": len(Records) - len(ok), "RequestResponses": responses}
 
@@ -226,20 +227,39 @@ class FakeFirehose:
             return {}
 
 
+def spool_frames(
+    f: BinaryIO, start: int = 0, end: int | None = None
+) -> Iterator[tuple[int, int]]:
+    """Walk the whole frames of the open spool file ``f`` in ``[start, end)``
+    and yield each one's ``(offset, length)``: the byte offset of its 4-byte
+    big-endian length header and the length of its payload.  ``end``
+    defaults to, and is capped at, the file's size; ``start`` must be a
+    frame boundary.
+
+    Each yield leaves ``f`` just past the frame's header, so a reader takes
+    the payload with ``f.read(length)``, one record at a time; a walk that
+    only plans offsets reads headers and seeks past payloads.  A short
+    header or a frame running past ``end`` (a producer's half-written
+    append) stops the walk."""
+    size = os.fstat(f.fileno()).st_size
+    end = size if end is None else min(end, size)
+    pos = start
+    while pos + 4 <= end:
+        f.seek(pos)
+        n = int.from_bytes(f.read(4), "big")
+        if pos + 4 + n > end:
+            return
+        yield pos, n
+        pos += 4 + n
+
+
 def read_spool(spool_dir: str, stream: str) -> list[bytes]:
-    """Read back records spooled by FakeFirehose (length-prefixed framing)."""
+    """Read back the whole records FakeFirehose spooled for ``stream``."""
     path = os.path.join(spool_dir, f"{stream}.spool")
     if not os.path.exists(path):
         return []
-    out: list[bytes] = []
     with open(path, "rb") as f:
-        data = f.read()
-    i = 0
-    while i < len(data):
-        n = int.from_bytes(data[i : i + 4], "big")
-        out.append(data[i + 4 : i + 4 + n])
-        i += 4 + n
-    return out
+        return [f.read(n) for _, n in spool_frames(f)]
 
 
 def fake_client_factory(**kwargs: Any) -> ClientFactory:

@@ -39,12 +39,6 @@ __all__ = [
 ]
 
 
-# superstep exchange-reuse global override (A/B harness:
-# scripts/ab_graph_pin.py); False degrades every _pinned_by_key to the
-# plain lazy checkpoint (pre-r12 behavior: the superstep join replans the
-# edge side each iteration)
-_EXCHANGE_REUSE = True
-
 # Row quantum for the scale-adaptive pin sizing below.  Fixed-cost-vs-
 # divisible-compute optimum, same derivation as the streaming state-store
 # sizing (streaming/replay.py): every superstep stage over a pinned frame
@@ -82,9 +76,7 @@ def _sized_pin_partitions(df: DataFrame) -> int:
     return max(1, min(cap, derived))
 
 
-def _pinned_by_key(
-    df: DataFrame, key: str, enabled: bool = True, partitions: int | None = None
-) -> DataFrame:
+def _pinned_by_key(df: DataFrame, key: str, partitions: int | None = None) -> DataFrame:
     """Hash-partition ``df`` by ``key``, sort within partitions, and pin
     BOTH through a lazy ``localCheckpoint`` — the one-time exchange every
     iterative superstep then REUSES: each iteration's ``join``/``groupBy``
@@ -108,10 +100,8 @@ def _pinned_by_key(
     vector side broadcasts (local test scale), the join never shuffled
     the edges in the first place and the pin's up-front shuffle+sort is
     pure cost — measured in the r12 sf1 A/B (PLANS.md Audit C), which is
-    why each operator carries its own measured ``reuse_exchange`` default
-    and ``enabled=False`` degrades to the plain lazy checkpoint."""
-    if not (enabled and _EXCHANGE_REUSE):
-        return df.localCheckpoint(eager=False)
+    why only pagerank and hits pin; label_propagation and k_core take the
+    plain lazy checkpoint."""
     spark = df.sparkSession
     # two-step: first truncate the (possibly expensive) upstream lineage
     # with a NORMAL checkpoint so its derivation keeps AQE, THEN compile
@@ -147,7 +137,6 @@ def pagerank(
     dst: str = "dst",
     checkpoint_every: int = 1,
     seeds: DataFrame | None = None,
-    reuse_exchange: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -183,7 +172,6 @@ def pagerank(
     e = _pinned_by_key(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
         "src",
-        reuse_exchange,
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -205,7 +193,7 @@ def pagerank(
     # pinned by node: the per-iteration left join against contribs (which
     # arrives hash-partitioned by dst from its aggregate) is then exchange-
     # free on BOTH sides
-    verts = _pinned_by_key(verts, "node", reuse_exchange)
+    verts = _pinned_by_key(verts, "node")
     if seeds is None:
         n = verts.count()
         ns = None
@@ -543,7 +531,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     checkpoint_every: int = 1,
-    reuse_exchange: bool = False,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al., 2007) for community
     detection: ``(node, label)`` after a FIXED number of synchronous rounds.
@@ -570,12 +557,14 @@ def label_propagation(
         raise ValueError("iterations must be >= 1")
     fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
-    # pinned by src (consumed by every round's join): the edge-side
-    # exchange + sort happen once, not per round
-    e = _pinned_by_key(
-        fwd.union(rev).where(F.col("src") != F.col("dst")).distinct(),
-        "src",
-        reuse_exchange,
+    # checkpointed (consumed by every round's join), not pinned: the label
+    # side broadcasts at sf1, where a pin by src measured ~1 s slower
+    # (PLANS.md Audit C)
+    e = (
+        fwd.union(rev)
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+        .localCheckpoint(eager=False)
     )
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -607,7 +596,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 16,
-    reuse_exchange: bool = False,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling (Seidman 1983; the
     distributed peeling formulation of Montresor et al. 2013): repeatedly
@@ -638,16 +626,13 @@ def k_core(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     und = _canonical_undirected(edges, src, dst)
-    # pinned by the degree/anti-join key: round 1's degree aggregate (the
-    # FULL-graph round — the dominant one) reuses the exchange.  Later
-    # rounds re-derive e through the anti-join rebuild, whose lazy AQE
-    # checkpoint doesn't carry partitioning — but by then e is the
-    # shrinking survivor set, so the win is front-loaded where it matters
-    e = _pinned_by_key(
+    # checkpointed, not pinned: a pin by "a" serves round 1 only (the
+    # anti-join rebuild's lazy AQE checkpoint drops its partitioning) and
+    # measured ~6 s slower at sf1 (PLANS.md Audit C)
+    e = (
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b"))),
-        "a",
-        reuse_exchange,
+        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
+        .localCheckpoint(eager=False)
     )
     # max_rounds + 1 fixpoint checks bracket exactly max_rounds PEELS, so a
     # graph converging on the very last allowed peel still returns (the
@@ -689,7 +674,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     round_to: int = 9,
-    reuse_exchange: bool = True,
 ) -> DataFrame:
     """Kleinberg HITS (hubs & authorities, SIAM JACM 1999) over a directed
     edge list, fixed iterations: ``a(v) ← Σ_{(u,v)} h(u)`` then
@@ -717,17 +701,14 @@ def hits(
     # each by its step's key; every iteration's edge-side exchange (and
     # SMJ sort) is then reused instead of recomputed.  Both pins are of
     # the SAME edge frame, so size once and share (one count job, not two).
-    n_pin = (
-        _sized_pin_partitions(e) if (reuse_exchange and _EXCHANGE_REUSE) else None
-    )
-    e_src = _pinned_by_key(e, "src", reuse_exchange, n_pin)
-    e_dst = _pinned_by_key(e, "dst", reuse_exchange, n_pin)
+    n_pin = _sized_pin_partitions(e)
+    e_src = _pinned_by_key(e, "src", n_pin)
+    e_dst = _pinned_by_key(e, "dst", n_pin)
     nodes = _pinned_by_key(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct(),
         "node",
-        reuse_exchange,
     )
     h = nodes.withColumn("h", F.lit(1.0))
     a = None

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from fs2_kinesis_firehose_spark.operators import kmeans as KM
 from fs2_kinesis_firehose_spark.operators.similarity import _seq_sq_norm
 from fs2_kinesis_firehose_spark.queries import query
-from fs2_kinesis_firehose_spark.tables import load_table
+from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
 _K = 8
 _ITERS = 3
@@ -427,22 +427,10 @@ def ivf_pq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same sf_dir never race on a shared build-read lifecycle; each
     process reuses (after a wipe) its own slot across repeated sweeps
     instead of leaking a fresh mkdtemp per invocation."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators import pq as PQ
     from fs2_kinesis_firehose_spark.operators import similarity as S
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-pq-index"
-        / f"{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{os.getpid()}"
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-pq-index", "{h}-{pid}", sf_dir)
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
@@ -743,22 +731,10 @@ def ivf_pq_append_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the served distances.  pytest additionally pins appended-index codes
     == single-shot-encode codes exactly (tests/test_pq.py).  Eager build
     + PID-suffixed path, same as ``ivf_pq_persisted_topk``."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators import pq as PQ
     from fs2_kinesis_firehose_spark.operators import similarity as S
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-pq-append"
-        / f"{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{os.getpid()}"
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-pq-append", "{h}-{pid}", sf_dir)
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 2 == 0)
@@ -810,22 +786,12 @@ def streaming_ann_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per batch are constant in the query count (also pinned), and the
     per-batch driver fold is the ≤batch-size query rows, never corpus
     data."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
-    from pathlib import Path
 
     from fs2_kinesis_firehose_spark.operators import pq as PQ
     from fs2_kinesis_firehose_spark.operators import similarity as S
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-ann-serving"
-        / f"{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{os.getpid()}"
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-ann-serving", "{h}-{pid}", sf_dir)
     idx_dir, q_dir, out_dir, ckpt = (
         str(root / "index"), str(root / "queries"), str(root / "served"),
         str(root / "ckpt"),

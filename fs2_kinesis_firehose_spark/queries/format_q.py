@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fs2_kinesis_firehose_spark.queries import query
-from fs2_kinesis_firehose_spark.tables import load_table
+from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -54,18 +54,7 @@ def text_format_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     original.  EAGER by necessity (like zorder_pruning_stats): the read
     needs the text files written; output directories are deterministic per
     sf_dir under one managed tmp root, wiped per invocation."""
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-format"
-        / f"orders-{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}"
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-format", "orders-{h}", sf_dir)
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus",

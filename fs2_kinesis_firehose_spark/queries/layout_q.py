@@ -18,7 +18,7 @@ from fs2_kinesis_firehose_spark.operators.layout import (
     zorder_write_bucketed,
 )
 from fs2_kinesis_firehose_spark.queries import query
-from fs2_kinesis_firehose_spark.tables import load_table
+from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
 # 2-D query box over events(user_id, value) — selective on both clustered
 # dimensions, which is exactly the workload Z-order exists for (a 1-D sort
@@ -86,18 +86,7 @@ def zorder_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     EAGER by necessity (like kinesis_roundtrip_counts): the footer read needs
     the layout written.  The output directory is deterministic per sf_dir
     under one managed tmp root and wiped per invocation."""
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    out_dir = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-zorder"
-        / f"events-{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}"
-    )
-    if out_dir.exists():
-        shutil.rmtree(out_dir)
+    out_dir = scratch_dir("fs2spark-zorder", "events-{h}", sf_dir)
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     zorder_write_bucketed(events, str(out_dir), ["user_id", "value"], bits=16, n_buckets=16)
@@ -175,17 +164,9 @@ def bucketed_colocated_join_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     trips every row.  EAGER by necessity (like zorder_pruning_stats): the
     join needs the layout written.  Tables live in a per-sf database under
     one managed tmp root, dropped and rewritten per invocation."""
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    h = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    db = f"bktdb_{h}"
-    loc = Path(tempfile.gettempdir()) / "fs2spark-bucket" / f"db-{h}"
+    loc = scratch_dir("fs2spark-bucket", "db-{h}", sf_dir)
+    db = f"bktdb_{loc.name.removeprefix('db-')}"
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    if loc.exists():
-        shutil.rmtree(loc)
     spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
 
     n_buckets = 8
@@ -325,21 +306,9 @@ def hilbert_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     addresses are always grid neighbors (pytest-pinned adjacency), which
     is why its per-file boxes measure tighter than Morton's on a uniform
     grid (tests/test_layout.py)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators.layout import hilbert_write_bucketed
 
-    out_dir = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-hilbert"
-        / f"events-{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{os.getpid()}"
-    )
-    if out_dir.exists():
-        shutil.rmtree(out_dir)
+    out_dir = scratch_dir("fs2spark-hilbert", "events-{h}-{pid}", sf_dir)
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     hilbert_write_bucketed(
@@ -449,24 +418,12 @@ def bloom_index_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     false negatives (the oracle's n_rows_match is computed from the raw
     table).  Eager like the other layout queries; per-sf deterministic
     tmp dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators.layout import (
         bloom_index_prune_stats,
         bloom_index_write,
     )
 
-    out_dir = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-bloomidx"
-        / f"events-{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{os.getpid()}"
-    )
-    if out_dir.exists():
-        shutil.rmtree(out_dir)
+    out_dir = scratch_dir("fs2spark-bloomidx", "events-{h}-{pid}", sf_dir)
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     bloom_index_write(
@@ -505,21 +462,9 @@ def compaction_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the REAL rewritten files.  A dropped/duplicated row, a lost
     file, or a partial rewrite breaks the hash.  Eager like the other
     layout queries (the compaction is the thing being measured)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators.layout import compact_files
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-compact"
-        / f"events-{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{os.getpid()}"
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-compact", "events-{h}-{pid}", sf_dir)
     src, dst = str(root / "fragmented"), str(root / "compacted")
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
@@ -598,24 +543,12 @@ def range_layout_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     EAGER by necessity (the footer read needs the layout written); per-sf
     PID-suffixed tmp dir, wiped per invocation."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators.layout import (
         file_stats,
         range_write_clustered,
     )
 
-    out_dir = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-rangelayout"
-        / f"orders-{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{os.getpid()}"
-    )
-    if out_dir.exists():
-        shutil.rmtree(out_dir)
+    out_dir = scratch_dir("fs2spark-rangelayout", "orders-{h}-{pid}", sf_dir)
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     range_write_clustered(orders, str(out_dir), "o_totalprice", n_buckets=_RANGE_N)

@@ -17,7 +17,7 @@ from fs2_kinesis_firehose_spark.operators import multimodal as M
 from fs2_kinesis_firehose_spark.operators import similarity as S
 from fs2_kinesis_firehose_spark.operators import textstats as TS
 from fs2_kinesis_firehose_spark.queries import query
-from fs2_kinesis_firehose_spark.tables import load_table
+from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
 # DuckDB-side shared fragments ------------------------------------------------
 _DUCK_SHINGLES = """
@@ -2330,11 +2330,6 @@ def streaming_quality_gate_accounting(spark: SparkSession, sf_dir: str) -> DataF
     the trained-filter deployment shape a crawl pipeline runs: model as
     plan literals, corpus never leaves the cluster, at-least-once engine,
     exactly-once accounting."""
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators.classifier import (
         hashed_features,
         logreg_score,
@@ -2351,13 +2346,7 @@ def streaming_quality_gate_accounting(spark: SparkSession, sf_dir: str) -> DataF
         feat, dim=_QC_DIM, iterations=_QC_EVAL_ITERS, lr=_QC_LR, scale_bits=12
     )
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-quality-gate"
-        / hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-quality-gate", "{h}", sf_dir)
     staging, out = str(root / "staging"), str(root / "out")
     sink = idempotent_parquet_sink(out)
 

@@ -16,7 +16,7 @@ from fs2_kinesis_firehose_spark.firehose.serializers import serialize_and_frame
 from fs2_kinesis_firehose_spark.firehose.settings import ProducerSettings
 from fs2_kinesis_firehose_spark.firehose.sink import produce_acks
 from fs2_kinesis_firehose_spark.queries import query
-from fs2_kinesis_firehose_spark.tables import load_table
+from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
 @query(
     "firehose_delivery_accounting",
@@ -149,20 +149,9 @@ def kinesis_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     spool path is DETERMINISTIC per sf_dir under one managed tmp root and is
     wiped before each delivery — repeated catalog sweeps/bench passes reuse
     the same directory instead of leaking a fresh mkdtemp per invocation."""
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
 
-    spool_dir = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-spools"
-        / f"roundtrip-{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}"
-    )
-    if spool_dir.exists():
-        shutil.rmtree(spool_dir)
+    spool_dir = scratch_dir("fs2spark-spools", "roundtrip-{h}", sf_dir)
     spool_dir.mkdir(parents=True)
     spool = str(spool_dir)
     events = load_table(spark, sf_dir, "events")
@@ -216,21 +205,10 @@ def pipeline_dedup_delivery_accounting(spark: SparkSession, sf_dir: str) -> Data
 
     Eager like ``kinesis_roundtrip_counts`` (the read needs the spool
     populated) and uses the same deterministic per-sf_dir tmp root."""
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators.dedup import exact_dedup
     from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-spools"
-        / f"pipeline-{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}"
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-spools", "pipeline-{h}", sf_dir)
     # mkdir explicitly: the fake client creates its spool dir only in
     # __init__, and executors CACHE the client across query invocations —
     # after a wipe, a cached client would append into a missing directory

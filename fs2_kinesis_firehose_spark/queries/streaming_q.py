@@ -27,7 +27,7 @@ from fs2_kinesis_firehose_spark.streaming.windows import (
     stream_dedup,
     tumbling_counts,
 )
-from fs2_kinesis_firehose_spark.tables import load_table
+from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
 
 @query(
@@ -403,20 +403,9 @@ def exactly_once_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once file output over an at-least-once engine
     (streaming/sinks.py:idempotent_parquet_sink), verified by replaying the
     whole job and hashing the final directory contents."""
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.streaming.sinks import idempotent_parquet_sink
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-exactly-once"
-        / hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-exactly-once", "{h}", sf_dir)
     staging, out = str(root / "staging"), str(root / "out")
 
     for _run in range(2):  # second run = full replay of every batch id
@@ -560,21 +549,10 @@ def streaming_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     batch-split-invariant by construction (incoming docs are compared to the
     static corpus only, and each incoming doc lands in exactly one batch).
     """
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators import dedup as D
     from fs2_kinesis_firehose_spark.streaming.sinks import idempotent_parquet_sink
 
-    out_dir = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-incneardup"
-        / hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    )
-    if out_dir.exists():
-        shutil.rmtree(out_dir)
+    out_dir = scratch_dir("fs2spark-incneardup", "{h}", sf_dir)
     sink = idempotent_parquet_sink(str(out_dir))
 
     docs = load_table(spark, sf_dir, "documents")
@@ -657,21 +635,9 @@ def minhash_index_append_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (text, params); pytest-pinned), so the oracle is the same exact
     corpus×incoming J≥0.7 restatement the sibling uses.  Eager build +
     PID-suffixed path like the PQ index queries."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators import dedup as D
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-minhash-index"
-        / f"{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}-{os.getpid()}"
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-minhash-index", "{h}-{pid}", sf_dir)
 
     docs = load_table(spark, sf_dir, "documents")
     D.write_minhash_index(
@@ -732,20 +698,9 @@ def streaming_upsert_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MERGE: per-batch upsert_snapshot into chained snapshot
     versions (v{batch_id}, overwrite mode → replay-idempotent), snapshot
     read-back and cents-exact accounting at the end."""
-    import hashlib
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from fs2_kinesis_firehose_spark.operators.upsert import upsert_snapshot
 
-    root = (
-        Path(tempfile.gettempdir())
-        / "fs2spark-stream-upsert"
-        / hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    )
-    if root.exists():
-        shutil.rmtree(root)
+    root = scratch_dir("fs2spark-stream-upsert", "{h}", sf_dir)
     staging, snaps = str(root / "staging"), root / "snaps"
     snaps.mkdir(parents=True)
     # the base snapshot is the pruned orders scan itself — materializing a

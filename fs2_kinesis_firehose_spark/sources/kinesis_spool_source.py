@@ -4,14 +4,16 @@ DataSource, batch + streaming).
 The reference is write-only (Firehose has no consumer API), but the north
 star's Spark approach is "Structured Streaming with Kinesis source/sink" —
 this closes the read path.  The backend is the same length-prefixed spool
-the fake Firehose writes (client.py:_spool), modeled with Kinesis semantics:
+the fake Firehose writes (firehose/client.py owns the format, and its
+``spool_frames`` walks it here), modeled with Kinesis semantics:
 
 - each spool FILE is a SHARD (one Spark input partition per shard —
   parallelism = shard count, exactly Kinesis' model);
 - the record's byte position is its SEQUENCE NUMBER: offsets are
   per-shard byte positions, so streaming reads are incremental, replayable
   and checkpointable (at-least-once on restart, like the real source);
-- schema ``shard: string, seq: bigint, value: binary``.
+- schema ``shard: string, seq: bigint, value: binary``;
+- a batch read is the stream read over the spool's current prefix.
 
 Usage::
 
@@ -34,6 +36,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from fs2_kinesis_firehose_spark.firehose.client import spool_frames
+
 SCHEMA = "shard string, seq bigint, value binary"
 
 
@@ -41,48 +45,6 @@ def _shards(spool_dir: str) -> list[str]:
     if not os.path.isdir(spool_dir):
         return []
     return sorted(f for f in os.listdir(spool_dir) if f.endswith(".spool"))
-
-
-def _read_records(path: str, start: int, end: int) -> Iterator[tuple[int, bytes]]:
-    """Yield (seq=byte offset, payload) for records FULLY inside [start, end)
-    — a record straddling ``end`` belongs to the next batch (offsets are
-    record-aligned by ``_aligned_size``, this is defense in depth)."""
-    with open(path, "rb") as f:
-        f.seek(start)
-        pos = start
-        while pos < end:
-            header = f.read(4)
-            if len(header) < 4:
-                break
-            n = int.from_bytes(header, "big")
-            if pos + 4 + n > end:
-                break
-            payload = f.read(n)
-            if len(payload) < n:
-                break
-            yield pos, payload
-            pos += 4 + n
-
-
-def _aligned_size(path: str, known_aligned: int = 0) -> int:
-    """Largest record-aligned offset ≤ the current file size, walking frames
-    from a previously known aligned position (a concurrent producer may have
-    flushed a header without its payload — snapshotting the raw file size
-    would put the NEXT batch's start mid-record and desynchronize framing)."""
-    size = os.path.getsize(path)
-    pos = known_aligned
-    with open(path, "rb") as f:
-        f.seek(pos)
-        while pos + 4 <= size:
-            header = f.read(4)
-            if len(header) < 4:
-                break
-            n = int.from_bytes(header, "big")
-            if pos + 4 + n > size:
-                break
-            f.seek(n, 1)
-            pos += 4 + n
-    return pos
 
 
 @dataclass
@@ -93,49 +55,32 @@ class _ShardSlice(InputPartition):
     end: int
 
 
-class KinesisSpoolBatchReader(DataSourceReader):
-    def __init__(self, options: dict[str, str]) -> None:
-        self.spool_dir = options.get("spooldir") or options.get("spoolDir")
-        if not self.spool_dir:
-            raise ValueError("kinesis_spool requires .option('spoolDir', ...)")
-
-    def partitions(self) -> list[_ShardSlice]:
-        out = []
-        for s in _shards(self.spool_dir):
-            path = os.path.join(self.spool_dir, s)
-            out.append(_ShardSlice(s[: -len(".spool")], path, 0, _aligned_size(path)))
-        return out or [_ShardSlice("empty", "", 0, 0)]
-
-    def read(self, partition: _ShardSlice) -> Iterator[tuple]:
-        if not partition.path:
-            return
-        for seq, payload in _read_records(partition.path, partition.start, partition.end):
-            yield (partition.shard, seq, payload)
-
-
 class KinesisSpoolStreamReader(DataSourceStreamReader):
     """Offsets are ``{shard: byte_position}`` JSON — monotone, resumable."""
 
     def __init__(self, options: dict[str, str]) -> None:
-        self.spool_dir = options.get("spooldir") or options.get("spoolDir")
+        self.spool_dir = options.get("spooldir")
         if not self.spool_dir:
             raise ValueError("kinesis_spool requires .option('spoolDir', ...)")
         self._aligned: dict[str, int] = {}  # per-shard last known aligned end
-
-    def _snapshot(self) -> dict[str, int]:
-        out = {}
-        for s in _shards(self.spool_dir):
-            shard = s[: -len(".spool")]
-            path = os.path.join(self.spool_dir, s)
-            self._aligned[shard] = _aligned_size(path, self._aligned.get(shard, 0))
-            out[shard] = self._aligned[shard]
-        return out
 
     def initialOffset(self) -> dict:
         return {"offsets": json.dumps({})}
 
     def latestOffset(self) -> dict:
-        return {"offsets": json.dumps(self._snapshot())}
+        """Each shard's end after its last whole frame, walked from the
+        previous end: a concurrent producer may have flushed a header
+        without its payload, and an offset mid-record would desynchronize
+        the next batch's framing."""
+        out = {}
+        for s in _shards(self.spool_dir):
+            shard = s[: -len(".spool")]
+            end = self._aligned.get(shard, 0)
+            with open(os.path.join(self.spool_dir, s), "rb") as f:
+                for pos, n in spool_frames(f, end):
+                    end = pos + 4 + n
+            out[shard] = self._aligned[shard] = end
+        return {"offsets": json.dumps(out)}
 
     def partitions(self, start: dict, end: dict) -> list[_ShardSlice]:
         s = json.loads(start.get("offsets", "{}"))
@@ -157,11 +102,26 @@ class KinesisSpoolStreamReader(DataSourceStreamReader):
     def read(self, partition: _ShardSlice) -> Iterator[tuple]:
         if not partition.path:
             return
-        for seq, payload in _read_records(partition.path, partition.start, partition.end):
-            yield (partition.shard, seq, payload)
+        with open(partition.path, "rb") as f:
+            for seq, n in spool_frames(f, partition.start, partition.end):
+                yield (partition.shard, seq, f.read(n))
 
     def commit(self, end: dict) -> None:  # offsets live in the checkpoint
         pass
+
+
+class KinesisSpoolBatchReader(DataSourceReader):
+    """A batch read is the stream over the spool's current prefix: one
+    micro-batch from the initial offset to the latest."""
+
+    def __init__(self, options: dict[str, str]) -> None:
+        self._stream = KinesisSpoolStreamReader(options)
+
+    def partitions(self) -> list[_ShardSlice]:
+        return self._stream.partitions({}, self._stream.latestOffset())
+
+    def read(self, partition: _ShardSlice) -> Iterator[tuple]:
+        return self._stream.read(partition)
 
 
 class KinesisSpoolDataSource(DataSource):

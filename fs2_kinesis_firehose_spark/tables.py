@@ -4,11 +4,18 @@ Every query receives an explicit ``sf_dir`` so the same code runs at any scale
 factor; at cluster scale the directory would simply be an object-store prefix.
 Loaders use plain ``spark.read.parquet`` so Catalyst owns column pruning and
 predicate pushdown — do NOT pre-select columns here.
+
+``scratch_dir`` is the one owner of the per-``sf_dir`` scratch directories
+that eager queries write under the temporary directory.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +39,20 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def scratch_dir(family: str, leaf: str, sf_dir: str) -> Path:
+    """``<tmp>/<family>/<leaf>``, removed first if it exists; the caller
+    creates what it needs inside.  ``leaf`` is formatted with ``h``, the
+    first 12 hex digits of ``sha256(sf_dir)``, and ``pid``, this process's
+    id.  The path is deterministic per ``sf_dir`` (and process, where the
+    leaf names it), so repeated runs reuse one directory instead of leaking
+    a fresh mkdtemp each."""
+    h = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
+    path = Path(tempfile.gettempdir()) / family / leaf.format(h=h, pid=os.getpid())
+    if path.exists():
+        shutil.rmtree(path)
+    return path
 
 
 def ensure_session_confs(spark: SparkSession) -> None:

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from fs2_kinesis_firehose_spark.firehose import admin
-from fs2_kinesis_firehose_spark.firehose.client import FakeFirehose
+from fs2_kinesis_firehose_spark.firehose.client import FakeFirehose, read_spool
 from fs2_kinesis_firehose_spark.firehose.settings import ProducerSettings
 
 
@@ -22,13 +22,14 @@ def test_put_single_record(client):
     assert resp["RecordId"]
 
 
-def test_batch_put_500x1000(client):
+def test_batch_put_500x1000(tmp_path):
     # FirehoseTest.scala:70-78: 500 × 1000-byte records → failedPutCount == 0
+    client = FakeFirehose(spool_dir=str(tmp_path))
     admin.create_stream(client, "t")
     records = [{"Data": bytes([i % 256]) * 1000} for i in range(500)]
     resp = client.put_record_batch(DeliveryStreamName="t", Records=records)
     assert resp["FailedPutCount"] == 0
-    assert len(client.delivered["t"]) == 500
+    assert len(read_spool(str(tmp_path), "t")) == 500
 
 
 def test_describe_non_existing_stream_is_none(client):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from fs2_kinesis_firehose_spark.firehose.client import FakeFirehose
+from fs2_kinesis_firehose_spark.firehose.client import FakeFirehose, read_spool
 from fs2_kinesis_firehose_spark.firehose.retry import put_batch_with_retry
 from fs2_kinesis_firehose_spark.firehose.settings import RetryPolicy
 
@@ -16,54 +16,57 @@ def recs(*payloads: bytes) -> list[dict[str, bytes]]:
     return [{"Data": p} for p in payloads]
 
 
-def test_all_success_single_attempt():
-    client = FakeFirehose()
+def test_all_success_single_attempt(tmp_path):
+    client = FakeFirehose(spool_dir=str(tmp_path))
     resp = put_batch_with_retry(client, "s", recs(b"a", b"b"), RetryPolicy(), sleep=NO_SLEEP)
     assert resp["FailedPutCount"] == 0
     assert resp["Attempts"] == 1
-    assert client.delivered["s"] == [b"a", b"b"]
+    assert read_spool(str(tmp_path), "s") == [b"a", b"b"]
 
 
-def test_shrink_to_failed_resubmits_only_failures():
+def test_shrink_to_failed_resubmits_only_failures(tmp_path):
     # every record fails once, succeeds on second submission
-    client = FakeFirehose(fail_record_times=1)
+    client = FakeFirehose(fail_record_times=1, spool_dir=str(tmp_path))
     resp = put_batch_with_retry(client, "s", recs(b"a", b"b", b"c"), RetryPolicy(), sleep=NO_SLEEP)
     assert resp["FailedPutCount"] == 0
     assert resp["Attempts"] == 2
     # each record delivered exactly once (shrunken retry, no duplicates)
-    assert sorted(client.delivered["s"]) == [b"a", b"b", b"c"]
+    assert sorted(read_spool(str(tmp_path), "s")) == [b"a", b"b", b"c"]
     assert client.put_batch_calls == 2
 
 
-def test_partial_failure_shrinks_request():
+def test_partial_failure_shrinks_request(tmp_path):
     # only records ending in x fail, and only on their first attempt
-    client = FakeFirehose(record_should_fail=lambda p, attempt: p.endswith(b"x") and attempt == 0)
+    client = FakeFirehose(
+        record_should_fail=lambda p, attempt: p.endswith(b"x") and attempt == 0,
+        spool_dir=str(tmp_path),
+    )
     resp = put_batch_with_retry(
         client, "s", recs(b"ax", b"b", b"cx", b"d"), RetryPolicy(), sleep=NO_SLEEP
     )
     assert resp["FailedPutCount"] == 0
     assert resp["Attempts"] == 2
     # second request contained only the two failed records
-    assert sorted(client.delivered["s"]) == [b"ax", b"b", b"cx", b"d"]
+    assert sorted(read_spool(str(tmp_path), "s")) == [b"ax", b"b", b"cx", b"d"]
     # responses aligned to original order, all with RecordId
     assert all(e.get("RecordId") for e in resp["RequestResponses"])
 
 
-def test_retries_exhaust_returns_failed_result():
-    client = FakeFirehose(fail_record_times=100)
+def test_retries_exhaust_returns_failed_result(tmp_path):
+    client = FakeFirehose(fail_record_times=100, spool_dir=str(tmp_path))
     policy = RetryPolicy(max_retries=2)
     resp = put_batch_with_retry(client, "s", recs(b"a", b"b"), policy, sleep=NO_SLEEP)
     assert resp["FailedPutCount"] == 2
     assert resp["Attempts"] == 3  # 1 initial + 2 retries
-    assert client.delivered["s"] == []
+    assert read_spool(str(tmp_path), "s") == []
 
 
-def test_whole_call_failure_retries_unchanged_then_succeeds():
-    client = FakeFirehose(raise_call_times=2)
+def test_whole_call_failure_retries_unchanged_then_succeeds(tmp_path):
+    client = FakeFirehose(raise_call_times=2, spool_dir=str(tmp_path))
     resp = put_batch_with_retry(client, "s", recs(b"a", b"b"), RetryPolicy(), sleep=NO_SLEEP)
     assert resp["FailedPutCount"] == 0
     assert resp["Attempts"] == 3
-    assert client.delivered["s"] == [b"a", b"b"]
+    assert read_spool(str(tmp_path), "s") == [b"a", b"b"]
 
 
 def test_whole_call_failure_exhausts_raises_last_error():
@@ -116,30 +119,30 @@ def test_custom_schedule_fn_whole_call_giveup_raises():
     assert client.put_batch_calls == 2  # initial + the single scheduled retry
 
 
-def test_custom_schedule_fn_negative_delay_clamped():
+def test_custom_schedule_fn_negative_delay_clamped(tmp_path):
     """A schedule returning a negative float must not blow up time.sleep
     mid-loop (which would lose the merged partial result): negative delays
     are clamped to 0 and the retry proceeds (r9 ADVICE)."""
     import time
 
-    client = FakeFirehose(fail_record_times=1)
+    client = FakeFirehose(fail_record_times=1, spool_dir=str(tmp_path))
     policy = RetryPolicy(schedule_fn=lambda a: -1.5 if a < 5 else None)
     # real time.sleep: the clamp is what keeps this from raising ValueError
     resp = put_batch_with_retry(client, "s", recs(b"a", b"b"), policy, sleep=time.sleep)
     assert resp["FailedPutCount"] == 0
     assert resp["Attempts"] == 2
-    assert sorted(client.delivered["s"]) == [b"a", b"b"]
+    assert sorted(read_spool(str(tmp_path), "s")) == [b"a", b"b"]
 
 
-def test_custom_schedule_fn_recovers_partial_failures():
+def test_custom_schedule_fn_recovers_partial_failures(tmp_path):
     """The schedule interacts correctly with shrink-to-failed: records that
     succeed on their second submission are delivered once, under a custom
     constant-delay schedule."""
-    client = FakeFirehose(fail_record_times=1)
+    client = FakeFirehose(fail_record_times=1, spool_dir=str(tmp_path))
     policy = RetryPolicy(schedule_fn=lambda a: 0.0 if a < 5 else None)
     resp = put_batch_with_retry(
         client, "s", recs(b"a", b"b", b"c"), policy, sleep=lambda _: None
     )
     assert resp["FailedPutCount"] == 0
     assert resp["Attempts"] == 2
-    assert sorted(client.delivered["s"]) == [b"a", b"b", b"c"]
+    assert sorted(read_spool(str(tmp_path), "s")) == [b"a", b"b", b"c"]

@@ -3,16 +3,11 @@ spool framing round-trip, record-boundary alignment, BPE losslessness."""
 
 from __future__ import annotations
 
-import os
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from fs2_kinesis_firehose_spark.firehose.client import read_spool, spool_frames
 from fs2_kinesis_firehose_spark.operators.bpe import END, _segment_word
-from fs2_kinesis_firehose_spark.sources.kinesis_spool_source import (
-    _aligned_size,
-    _read_records,
-)
 
 payloads_strategy = st.lists(st.binary(min_size=0, max_size=64), max_size=40)
 
@@ -24,15 +19,25 @@ def _write_spool(path: str, payloads: list[bytes], tail: bytes = b"") -> None:
         f.write(tail)
 
 
+def _aligned_end(path: str, start: int = 0) -> int:
+    """The offset just past the last whole frame, walked from ``start``."""
+    with open(path, "rb") as f:
+        return max((pos + 4 + n for pos, n in spool_frames(f, start)), default=start)
+
+
 @given(payloads=payloads_strategy, tail=st.binary(max_size=10))
 @settings(max_examples=150, deadline=None)
 def test_spool_framing_roundtrip_with_torn_tail(tmp_path_factory, payloads, tail):
-    """Any torn trailing bytes must not affect the complete records read, and
-    _aligned_size must land exactly after the last complete record."""
-    path = str(tmp_path_factory.mktemp("spool") / "s.spool")
+    """Any torn trailing bytes must not affect the complete records read:
+    the walk, and ``read_spool`` on top of it, yield exactly the whole
+    records and end exactly after the last of them."""
+    spool_dir = tmp_path_factory.mktemp("spool")
+    path = str(spool_dir / "s.spool")
     _write_spool(path, payloads, tail)
-    aligned = _aligned_size(path)
-    got = [p for _, p in _read_records(path, 0, aligned)]
+    aligned = _aligned_end(path)
+    with open(path, "rb") as f:
+        got = [f.read(n) for _, n in spool_frames(f, 0, aligned)]
+    spooled = read_spool(str(spool_dir), "s")
     framed_len = sum(4 + len(p) for p in payloads)
     if len(tail) >= 4:
         # the tail may parse as further complete records if its length
@@ -42,6 +47,11 @@ def test_spool_framing_roundtrip_with_torn_tail(tmp_path_factory, payloads, tail
     else:
         assert got == payloads
         assert aligned == framed_len
+    assert spooled == got
+    if payloads:
+        # a frame running past ``end`` stops the walk before it
+        with open(path, "rb") as f:
+            assert len(list(spool_frames(f, 0, framed_len - 1))) == len(payloads) - 1
 
 
 @given(
@@ -54,12 +64,12 @@ def test_aligned_size_known_position_consistent(tmp_path_factory, payloads, star
     walking from zero."""
     path = str(tmp_path_factory.mktemp("spool") / "s.spool")
     _write_spool(path, payloads)
-    aligned_from_zero = _aligned_size(path)
+    aligned_from_zero = _aligned_end(path)
     # pick an aligned mid-position
     pos = 0
     for p in payloads[: min(start_hint, len(payloads))]:
         pos += 4 + len(p)
-    assert _aligned_size(path, pos) == aligned_from_zero
+    assert _aligned_end(path, pos) == aligned_from_zero
 
 
 words = st.text(alphabet="abcdef", min_size=1, max_size=12)

@@ -170,3 +170,27 @@ def test_kinesis_spool_ignores_partial_trailing_record(spark, tmp_path):
         f.write(b"x" * 97)
     rows = spark.read.format("kinesis_spool").option("spoolDir", spool).load().collect()
     assert sorted(len(bytes(r.value)) for r in rows) == [6, 100]
+
+
+def test_pipeline_line_spools_where_the_benchmark_reads(spark, sf_smoke):
+    """pipeline_dedup_delivery_accounting spools under
+    ``<tmp>/fs2spark-spools/pipeline-<sha256(sf_dir)[:12]>``, wiped before
+    use; the benchmark (perfbench/workloads.py) reads the line's delivery
+    back from exactly that path."""
+    import hashlib
+    import os
+    import tempfile
+
+    import fs2_kinesis_firehose_spark.queries as q
+    from fs2_kinesis_firehose_spark.firehose.client import read_spool
+
+    q.load_all()
+    h = hashlib.sha256(sf_smoke.encode()).hexdigest()[:12]
+    root = os.path.join(tempfile.gettempdir(), "fs2spark-spools", f"pipeline-{h}")
+    stale = os.path.join(root, "stale")
+    os.makedirs(stale, exist_ok=True)
+    (totals,) = q.QUERIES["pipeline_dedup_delivery_accounting"](spark, sf_smoke).collect()
+    assert not os.path.exists(stale)
+    delivered = read_spool(os.path.join(root, "deliver"), "delivered")
+    assert len(delivered) == totals.n_records > 0
+    assert any(f.endswith(".spool") for f in os.listdir(os.path.join(root, "ingest")))
