@@ -181,7 +181,8 @@ def test_gopher_repetition_grams_stay_codegen(spark, sf_smoke):
 
 # queries whose construction itself runs jobs (streaming engines, eager
 # produce, connected-components fixpoints, driver-side trainers) — their
-# plan shapes are pinned individually; the blanket plan scan skips them
+# plan shapes are pinned individually; the blanket scan skips them to keep
+# this test analysis-only
 _EAGER_OR_STREAMING = {
     "streaming_tumbling_counts", "streaming_sliding_stats",
     "streaming_session_counts", "streaming_dedup_counts",
@@ -196,18 +197,17 @@ _EAGER_OR_STREAMING = {
 
 
 def test_no_cartesian_product_catalog_wide(spark, sf_smoke):
-    """Builds every registered query once at smoke scale.  None may plan a
-    CartesianProduct — a cross product that isn't a deliberate one-row-
-    scalar broadcast is always a bug at scale.  (Scalar crossJoins compile
-    to BroadcastNestedLoopJoin with a 1-row build side, which this scan
-    permits.)  Each must also execute and return a stable schema."""
+    """No registered query may plan a CartesianProduct — a cross product
+    that isn't a deliberate one-row-scalar broadcast is always a bug at
+    scale.  (Scalar crossJoins compile to BroadcastNestedLoopJoin with a
+    1-row build side, which this scan permits.)"""
     offenders = []
     for name, fn in q.QUERIES.items():
-        df = fn(spark, sf_smoke)
-        if name not in _EAGER_OR_STREAMING and "CartesianProduct" in explain_str(df):
+        if name in _EAGER_OR_STREAMING:
+            continue
+        plan = explain_str(fn(spark, sf_smoke))
+        if "CartesianProduct" in plan:
             offenders.append(name)
-        assert df.columns, name
-        assert df.count() >= 0, name
     assert not offenders, f"CartesianProduct in: {offenders}"
 
 
