@@ -95,7 +95,12 @@ class FakeFirehose:
         self._lock = threading.Lock()
         self.streams: dict[str, dict[str, Any]] = {}
         self.put_batch_calls = 0
-        self._record_attempts: dict[bytes, int] = defaultdict(int)
+        # per-payload submission counts, kept only when a fault needs them:
+        # an executor-cached fault-free client would otherwise hold every
+        # payload it ever accepted
+        self._record_attempts: dict[bytes, int] | None = (
+            defaultdict(int) if fail_record_times > 0 or record_should_fail else None
+        )
         self._fail_record_times = fail_record_times
         self._raise_call_times = raise_call_times
         self._record_should_fail = record_should_fail
@@ -118,6 +123,8 @@ class FakeFirehose:
                 f.write(b"".join(len(p).to_bytes(4, "big") + p for p in payloads))
 
     def _record_fails(self, payload: bytes) -> bool:
+        if self._record_attempts is None:
+            return False
         attempt = self._record_attempts[payload]
         self._record_attempts[payload] += 1
         if self._record_should_fail is not None:

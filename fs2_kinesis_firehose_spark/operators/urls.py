@@ -60,12 +60,6 @@ DEFAULT_TRACKING_PREFIXES: tuple[str, ...] = ("utm_",)
 DEFAULT_TRACKING_KEYS: tuple[str, ...] = ("fbclid", "gclid", "msclkid")
 
 
-def _host_expr(url: Column) -> Column:
-    """Lowercased host (authority minus any ``:port``)."""
-    authority = F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
-    return F.lower(F.substring_index(authority, ":", 1))
-
-
 def registered_domain(
     host: Column,
     *,

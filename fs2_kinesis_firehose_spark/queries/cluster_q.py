@@ -790,6 +790,7 @@ def streaming_ann_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fs2_kinesis_firehose_spark.operators import pq as PQ
     from fs2_kinesis_firehose_spark.operators import similarity as S
+    from fs2_kinesis_firehose_spark.streaming.replay import run_foreach_batch
 
     root = scratch_dir("fs2spark-ann-serving", "{h}-{pid}", sf_dir)
     idx_dir, q_dir, out_dir, ckpt = (
@@ -863,15 +864,10 @@ def streaming_ann_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         res.write.mode("overwrite").parquet(f"{out_dir}/batch-{batch_id}")
 
-    (
-        spark.readStream.schema(qschema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(q_dir)
-        .writeStream.foreachBatch(serve)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_foreach_batch(
+        spark.readStream.schema(qschema).option("maxFilesPerTrigger", 1).parquet(q_dir),
+        serve,
+        checkpoint_location=ckpt,
     )
     return spark.read.parquet(f"{out_dir}/batch-*").select(
         "query_id", "vec_id", "l2_dist"

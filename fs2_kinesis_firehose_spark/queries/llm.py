@@ -2335,7 +2335,7 @@ def streaming_quality_gate_accounting(spark: SparkSession, sf_dir: str) -> DataF
         logreg_score,
         logreg_train,
     )
-    from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet
+    from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet, run_foreach_batch
     from fs2_kinesis_firehose_spark.streaming.sinks import idempotent_parquet_sink
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2361,12 +2361,7 @@ def streaming_quality_gate_accounting(spark: SparkSession, sf_dir: str) -> DataF
         stream = replay_parquet(
             spark, sf_dir, "documents", staging_dir=staging, max_files_per_trigger=1
         ).select("doc_id", "text")
-        qh = (
-            stream.writeStream.foreachBatch(score_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qh.awaitTermination()
+        run_foreach_batch(stream, score_batch)
 
     back = spark.read.parquet(out)
     return (

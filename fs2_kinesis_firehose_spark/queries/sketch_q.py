@@ -519,7 +519,7 @@ def streaming_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_merge,
         hll_table,
     )
-    from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet
+    from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet, run_foreach_batch
 
     acc: dict = {"reg": None, "batches": 0}
 
@@ -532,8 +532,7 @@ def streaming_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = replay_parquet(
         spark, sf_dir, "events", copies=2, max_files_per_trigger=1
     ).select("user_id")
-    qh = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    qh.awaitTermination()
+    run_foreach_batch(stream, fold)
 
     est = hll_estimate(acc["reg"], p=_HLL_P)
     exact = load_table(spark, sf_dir, "events").agg(
@@ -715,7 +714,7 @@ def streaming_heavy_hitter_bigrams(spark: SparkSession, sf_dir: str) -> DataFram
     every sketch internal is checked by implication.  State per batch is
     ≤ k rows, localCheckpointed; driver cost independent of stream volume.
     """
-    from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet
+    from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet, run_foreach_batch
 
     empty = spark.createDataFrame([], "item string, weight long")
     acc: dict = {"state": empty, "batches": 0}
@@ -733,8 +732,7 @@ def streaming_heavy_hitter_bigrams(spark: SparkSession, sf_dir: str) -> DataFram
     stream = replay_parquet(
         spark, sf_dir, "documents", copies=2, max_files_per_trigger=1
     ).select("doc_id", "text")
-    qh = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    qh.awaitTermination()
+    run_foreach_batch(stream, fold)
 
     docs = load_table(spark, sf_dir, "documents")
     grams = word_ngram_rows(docs, "text", "doc_id", 2, distinct=False, out_col="bg")
@@ -786,7 +784,7 @@ def streaming_kll_doclen_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     against the single-copy table, which is what the emitted ``rank_ok``
     booleans check exactly (one scan, two conditional sums per phi)."""
     from fs2_kinesis_firehose_spark.operators.kll import kll_sketch
-    from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet
+    from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet, run_foreach_batch
 
     acc: dict = {"sk": None, "batches": 0}
 
@@ -801,8 +799,7 @@ def streaming_kll_doclen_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     stream = replay_parquet(
         spark, sf_dir, "documents", copies=2, max_files_per_trigger=1
     ).select("text")
-    qh = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    qh.awaitTermination()
+    run_foreach_batch(stream, fold)
 
     docs = load_table(spark, sf_dir, "documents")
     lens = docs.select(F.length("text").cast("double").alias("len")).where(

@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 from fs2_kinesis_firehose_spark.queries import query
 from fs2_kinesis_firehose_spark.streaming.replay import (
     replay_parquet,
+    run_foreach_batch,
     run_to_memory,
-    sized_state_partitions,
 )
 from fs2_kinesis_firehose_spark.streaming.windows import (
     session_counts,
@@ -46,11 +46,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute tumbling event-time windows per event_type, via the real
     streaming engine (windows align to epoch, same as the oracle's floor)."""
     stream = replay_parquet(spark, sf_dir, "events")
-    return run_to_memory(
-        tumbling_counts(stream),
-        output_mode="complete",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events"),
-    )
+    return run_to_memory(tumbling_counts(stream), output_mode="complete")
 
 
 @query(
@@ -71,11 +67,7 @@ def streaming_sliding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """20-minute windows sliding by 10 — every event lands in exactly 2
     windows; the oracle enumerates both slide phases."""
     stream = replay_parquet(spark, sf_dir, "events")
-    return run_to_memory(
-        sliding_value_stats(stream),
-        output_mode="complete",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events"),
-    )
+    return run_to_memory(sliding_value_stats(stream), output_mode="complete")
 
 
 @query(
@@ -107,11 +99,7 @@ def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     state; the oracle is the classic gaps-and-islands rewrite.  A new session
     starts when the gap is ≥ the timeout (Spark session end is exclusive)."""
     stream = replay_parquet(spark, sf_dir, "events")
-    return run_to_memory(
-        session_counts(stream),
-        output_mode="complete",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events"),
-    )
+    return run_to_memory(session_counts(stream), output_mode="complete")
 
 
 @query(
@@ -139,7 +127,6 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = run_to_memory(
         stream_dedup(stream, watermark="30 minutes"),
         output_mode="append",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events", copies=2),
     )
     return deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
@@ -219,11 +206,7 @@ def streaming_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFram
         .groupBy(F.window("ts", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    sink, progress = run_to_memory_with_progress(
-        agg,
-        output_mode="append",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events"),
-    )
+    sink, progress = run_to_memory_with_progress(agg, output_mode="append")
     dropped = sum(
         int(so.numRowsDroppedByWatermark) for p in progress for so in p.stateOperators
     )
@@ -263,11 +246,7 @@ def streaming_static_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    return run_to_memory(
-        agg,
-        output_mode="complete",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events"),
-    )
+    return run_to_memory(agg, output_mode="complete")
 
 
 @query(
@@ -293,11 +272,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s1 = replay_parquet(spark, sf_dir, "events")
     s2 = replay_parquet(spark, sf_dir, "events")  # self-join needs 2 readers
-    return run_to_memory(
-        attribution_join(s1, s2),
-        output_mode="append",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events", copies=2),
-    )
+    return run_to_memory(attribution_join(s1, s2), output_mode="append")
 
 
 @query(
@@ -352,7 +327,6 @@ def streaming_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     return run_to_memory(
         attribution_join(s1, s2, how="left_outer"),
         output_mode="append",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events", copies=2),
     )
 
 
@@ -375,11 +349,7 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     from fs2_kinesis_firehose_spark.streaming.stateful import running_user_stats
 
     stream = replay_parquet(spark, sf_dir, "events")
-    return run_to_memory(
-        running_user_stats(stream),
-        output_mode="update",
-        state_partitions=sized_state_partitions(spark, sf_dir, "events"),
-    )
+    return run_to_memory(running_user_stats(stream), output_mode="update")
 
 
 @query(
@@ -412,12 +382,7 @@ def exactly_once_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = replay_parquet(
             spark, sf_dir, "events", staging_dir=staging, max_files_per_trigger=1
         ).select("event_id", "event_type")
-        q = (
-            stream.writeStream.foreachBatch(idempotent_parquet_sink(out))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_foreach_batch(stream, idempotent_parquet_sink(out))
 
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
@@ -457,11 +422,7 @@ def streaming_progress_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected = load_table(spark, sf_dir, "events").count() * 3
     with ProgressCapture(spark) as cap:
         stream = replay_parquet(spark, sf_dir, "events", copies=3, max_files_per_trigger=1)
-        run_to_memory(
-            tumbling_counts(stream),
-            output_mode="complete",
-            state_partitions=sized_state_partitions(spark, sf_dir, "events", copies=3),
-        )
+        run_to_memory(tumbling_counts(stream), output_mode="complete")
         # listener delivery is async (event bus): awaitTermination returning
         # does NOT mean every progress event reached the Python listener —
         # wait until the captured input-row total covers the source.  On
@@ -577,8 +538,7 @@ def streaming_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     stream = replay_parquet(spark, sf_dir, "documents", max_files_per_trigger=4).filter(
         F.col("doc_id") % 2 == 1
     )
-    q = stream.writeStream.foreachBatch(step).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_foreach_batch(stream, step)
     return (
         spark.read.schema("doc_id bigint, n_corpus_dups bigint")
         .parquet(str(out_dir))
@@ -741,8 +701,7 @@ def streaming_upsert_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "orders", copies=3, staging_dir=staging,
         max_files_per_trigger=1,
     ).select("o_orderkey", "o_totalprice")
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_foreach_batch(stream, apply_batch)
 
     # zero delivered batches (empty source) leaves no version — the final
     # snapshot is then the untouched base, not a read of a missing path

@@ -1,9 +1,18 @@
-"""Deterministic file-source replay of fixture tables + memory-sink runner.
+"""Deterministic file-source replay of fixture tables, and the one runner
+every availableNow stream in the package goes through.
 
 File streaming sources need a directory; fixtures are single parquet files —
 ``replay_parquet`` stages copies into a temp dir (optionally N copies to
 synthesize duplicate deliveries) and returns the streaming DataFrame with the
 same column types as ``tables.load_table`` (events.ts long-nanos → timestamp).
+
+``run_to_memory*`` (memory sink) and ``run_foreach_batch`` (foreachBatch)
+run a stream to completion through ``_run``, which owns the whole
+lifecycle: the availableNow trigger, stopping the query, and removing the
+staging dirs the replays auto-created for it.  The memory runner also sizes
+the stateful operators' state stores from the bytes the replays staged and
+drops its ``mem_*`` view once the result has resolved, so a run leaves the
+session's conf and catalog as it found them.
 """
 
 from __future__ import annotations
@@ -13,19 +22,23 @@ import os
 import shutil
 import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from fs2_kinesis_firehose_spark.tables import ensure_session_confs, table_path
 
-# Staging dirs created by replay_parquet/replay_phased WITHOUT an explicit
-# ``staging_dir``: every run_to_memory* call removes whatever is registered
-# once its query has terminated (the staged copies are only read while the
-# query runs).  Before this, a full bench run leaked hundreds of
-# /tmp/replay-* dirs (observed: 362), the known dirty-tmp noise source for
-# the /tmp-I/O-sensitive bench lines (PLANS.md noise protocol).
-_EPHEMERAL_STAGING: list[str] = []
+# Every dir replay_parquet/replay_phased staged since the last run, paired
+# with whether the replay created it (True) or the caller passed it as
+# ``staging_dir`` (False).  The next run sizes its state stores from their
+# bytes, then removes the dirs the replays created (the staged copies are
+# only read while the query runs).  Before the cleanup, a full bench run
+# leaked hundreds of /tmp/replay-* dirs (observed: 362), the known
+# dirty-tmp noise source for the /tmp-I/O-sensitive bench lines (PLANS.md
+# noise protocol).
+_STAGED: list[tuple[str, bool]] = []
 
 # Stateful-shuffle sizing constant: state partitions = ceil(sqrt(bytes /
 # this)).  Why sqrt (measured, r15): a micro-batch pays a FIXED cost k per
@@ -51,8 +64,8 @@ _STATE_PARTITION_SQRT_BYTES = 64 * 1024
 
 
 def _source_bytes(src: str) -> int:
-    """Total bytes of a fixture table: one parquet file or a directory of
-    part files (matches the staging logic in replay_parquet)."""
+    """Total parquet bytes of one parquet file or of a directory of part
+    files (a fixture table or a staging dir)."""
     if os.path.isdir(src):
         return sum(
             e.stat().st_size
@@ -62,12 +75,10 @@ def _source_bytes(src: str) -> int:
     return os.path.getsize(src)
 
 
-def sized_state_partitions(
-    spark: SparkSession, sf_dir: str, *names: str, copies: int = 1
-) -> int:
-    """Scale-adaptive stateful-shuffle sizing for an availableNow replay
-    reading ``names`` (each staged ``copies`` times):
-    ``clamp(ceil(sqrt(input_bytes / 64KB)), 1, session shuffle partitions)``
+def sized_state_partitions(spark: SparkSession, n_bytes: int) -> int:
+    """Scale-adaptive stateful-shuffle sizing for an availableNow run over
+    ``n_bytes`` of input:
+    ``clamp(ceil(sqrt(n_bytes / 64KB)), 1, session shuffle partitions)``
     — the fixed-cost-per-store vs divisible-compute optimum (see the
     ``_STATE_PARTITION_SQRT_BYTES`` cost model).
 
@@ -83,7 +94,6 @@ def sized_state_partitions(
         cap = int(conf)
     except ValueError:  # e.g. "auto" on some platforms
         cap = spark.sparkContext.defaultParallelism
-    n_bytes = sum(_source_bytes(table_path(sf_dir, n)) for n in names) * copies
     derived = math.isqrt(max(0, n_bytes - 1) // _STATE_PARTITION_SQRT_BYTES) + 1
     return max(1, min(cap, derived))
 
@@ -104,7 +114,7 @@ def replay_parquet(
         staging = os.path.join(
             tempfile.gettempdir(), f"replay-{name}-{uuid.uuid4().hex[:8]}"
         )
-        _EPHEMERAL_STAGING.append(staging)
+    _STAGED.append((staging, staging_dir is None))
     os.makedirs(staging, exist_ok=True)
     # a table is either one parquet file (the driver fixture layout) or a
     # directory of part files (anything Spark itself wrote, e.g. the sf1
@@ -159,7 +169,7 @@ def replay_phased(
         staging = os.path.join(
             tempfile.gettempdir(), f"replay-phased-{uuid.uuid4().hex[:8]}"
         )
-        _EPHEMERAL_STAGING.append(staging)
+    _STAGED.append((staging, staging_dir is None))
     os.makedirs(staging, exist_ok=True)
     base = time.time()
     for k, frame in enumerate(frames):
@@ -206,18 +216,31 @@ class scoped_state_partitions:
         return False
 
 
-def _drain_ephemeral_staging() -> None:
-    """Remove every auto-created staging dir (their queries have finished:
-    run_to_memory* is sequential in every query/test path)."""
-    while _EPHEMERAL_STAGING:
-        shutil.rmtree(_EPHEMERAL_STAGING.pop(), ignore_errors=True)
+def _run(writer: DataStreamWriter) -> list:
+    """Run ``writer``'s query to completion under the availableNow trigger
+    (everything currently in the source, then stop) and return its
+    recorded progress objects.  However the run ends, the query is stopped
+    and every staging dir a replay auto-created for it is removed;
+    caller-owned ``staging_dir``s stay (runs are sequential in every
+    query and test path)."""
+    q = None
+    try:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return list(q.recentProgress)
+    finally:
+        if q is not None:
+            q.stop()
+        while _STAGED:
+            path, created = _STAGED.pop()
+            if created:
+                shutil.rmtree(path, ignore_errors=True)
 
 
 def run_to_memory_with_progress(
     stream_df: DataFrame,
     *,
     output_mode: str = "append",
-    state_partitions: int | None = None,
 ) -> tuple[DataFrame, list]:
     """Run a streaming DataFrame to completion (availableNow) into a memory
     sink; return the materialized result as a batch DataFrame, with the
@@ -229,36 +252,40 @@ def run_to_memory_with_progress(
     the deterministic way to exercise real streaming operators in tests and
     the correctness harness.
 
-    ``state_partitions``: pins the stateful operator's state-store count
-    for this run (see ``sized_state_partitions``); the session conf is
-    restored afterwards."""
+    When the stream reads replays, the stateful operators' state-store
+    count is pinned for this run from the bytes those replays staged
+    (``sized_state_partitions``) and the session conf is restored
+    afterwards; any other source runs under the session conf.  The
+    memory sink's view is dropped once the result has resolved."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
-    with scoped_state_partitions(spark, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-            progress = list(q.recentProgress)
-        finally:
-            if q.isActive:
-                q.stop()
-            _drain_ephemeral_staging()
-    return spark.table(name), progress
+    n_bytes = sum(_source_bytes(path) for path, _ in _STAGED)
+    partitions = sized_state_partitions(spark, n_bytes) if _STAGED else None
+    writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    try:
+        with scoped_state_partitions(spark, partitions):
+            progress = _run(writer)
+        return spark.table(name), progress
+    finally:
+        spark.catalog.dropTempView(name)
 
 
-def run_to_memory(
-    stream_df: DataFrame,
-    *,
-    output_mode: str = "append",
-    state_partitions: int | None = None,
-) -> DataFrame:
+def run_to_memory(stream_df: DataFrame, *, output_mode: str = "append") -> DataFrame:
     """:func:`run_to_memory_with_progress` without the progress objects."""
-    return run_to_memory_with_progress(
-        stream_df, output_mode=output_mode, state_partitions=state_partitions
-    )[0]
+    return run_to_memory_with_progress(stream_df, output_mode=output_mode)[0]
+
+
+def run_foreach_batch(
+    stream_df: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    *,
+    checkpoint_location: str | None = None,
+) -> None:
+    """Run a streaming DataFrame to completion (availableNow), handing each
+    micro-batch to ``fn(batch_df, batch_id)``.  Shuffle partitions are not
+    pinned: ``fn`` runs batch jobs under the session conf.  Without a
+    ``checkpoint_location`` the query checkpoints to a temporary dir."""
+    writer = stream_df.writeStream.foreachBatch(fn)
+    if checkpoint_location is not None:
+        writer = writer.option("checkpointLocation", checkpoint_location)
+    _run(writer)

@@ -87,9 +87,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views for ``spark.sql`` queries."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -24,6 +24,16 @@ def test_all_success_single_attempt(tmp_path):
     assert read_spool(str(tmp_path), "s") == [b"a", b"b"]
 
 
+def test_fault_free_client_retains_no_per_payload_state():
+    # executors cache their client across queries: without a fault to
+    # inject, it must not keep a per-payload attempt count
+    client = FakeFirehose()
+    for i in range(3):
+        resp = client.put_record_batch(DeliveryStreamName="s", Records=recs(b"%d" % i, b"x"))
+        assert resp["FailedPutCount"] == 0
+    assert not client._record_attempts
+
+
 def test_shrink_to_failed_resubmits_only_failures(tmp_path):
     # every record fails once, succeeds on second submission
     client = FakeFirehose(fail_record_times=1, spool_dir=str(tmp_path))

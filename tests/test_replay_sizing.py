@@ -1,7 +1,5 @@
-"""r15 streaming machinery: input-sized state partitions + staging cleanup.
-
-Pins the three internals the r15 optimization round changed in
-``streaming/replay.py``:
+"""Streaming runner machinery in ``streaming/replay.py``: input-sized state
+partitions, staging cleanup and session hygiene.
 
 - ``sized_state_partitions``: sqrt-of-bytes derivation, conf override,
   clamp to the session shuffle-partition cap, floor of 1.
@@ -10,38 +8,55 @@ Pins the three internals the r15 optimization round changed in
 - auto-created replay staging dirs are removed once their query has run
   (the /tmp/replay-* leak was the known dirty-tmp bench-noise source);
   caller-owned ``staging_dir``s are left alone.
-- the ``state_partitions`` argument actually lands as the stateful
-  operator's state-store count (engine-reported numShufflePartitions).
+- the memory runner pins the stateful operator's state-store count itself
+  (engine-reported numShufflePartitions).
+- both runners leave the session as they found it: no ``mem_*`` view, no
+  staged dir, an empty staging registry, the shuffle conf restored.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
 from fs2_kinesis_firehose_spark.streaming import replay as R
 from fs2_kinesis_firehose_spark.streaming.windows import tumbling_counts
+from fs2_kinesis_firehose_spark.tables import load_table, table_path
 
 SF = "/root/testdata/sf0.001"
+OVERRIDE = "spark.fs2kf.streaming.statePartitions"
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+@contextmanager
+def _conf(spark, key, value):
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_sized_state_partitions_derivation(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        one = R.sized_state_partitions(spark, SF, "events")
-        # monotone in copies, never below 1, never above the session cap
-        three = R.sized_state_partitions(spark, SF, "events", copies=3)
-        assert 1 <= one <= three <= 32
-        # tiny fixture → far below the cap
-        assert one < 32
-        # cap clamps: with a 2-partition session the derivation can't exceed it
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        big = R.sized_state_partitions(spark, SF, "events", copies=3)
-        assert 1 <= big <= 2
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    events = R._source_bytes(table_path(SF, "events"))
+    with _conf(spark, SHUFFLE, "32"):
+        # never below 1, grows with bytes, tiny fixture far below the cap
+        assert R.sized_state_partitions(spark, 0) == 1
+        one = R.sized_state_partitions(spark, events)
+        three = R.sized_state_partitions(spark, 3 * events)
+        assert 1 <= one <= three < 32
+        assert R.sized_state_partitions(spark, 64 * 1024) == 1
+        assert R.sized_state_partitions(spark, 100 * 64 * 1024) == 10
+        # the session conf caps the derivation
+        assert R.sized_state_partitions(spark, 10**12) == 32
+        with _conf(spark, SHUFFLE, "2"):
+            assert R.sized_state_partitions(spark, 100 * 64 * 1024) == 2
 
 
 def test_sized_state_partitions_override(spark):
@@ -49,36 +64,35 @@ def test_sized_state_partitions_override(spark):
     # sized_state_partitions stays as defensive code only: Spark 4.1's
     # conf.set validates the value as an int, so it cannot be simulated
     # through a real session here)
-    try:
-        spark.conf.set("spark.fs2kf.streaming.statePartitions", "13")
-        assert R.sized_state_partitions(spark, SF, "events") == 13
-    finally:
-        spark.conf.unset("spark.fs2kf.streaming.statePartitions")
+    events = R._source_bytes(table_path(SF, "events"))
+    with _conf(spark, OVERRIDE, "13"):
+        assert R.sized_state_partitions(spark, events) == 13
 
 
 def test_scoped_state_partitions_restores_conf(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    prev = spark.conf.get(SHUFFLE)
     with R.scoped_state_partitions(spark, 3):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+        assert spark.conf.get(SHUFFLE) == "3"
+    assert spark.conf.get(SHUFFLE) == prev
     with pytest.raises(RuntimeError):
         with R.scoped_state_partitions(spark, 3):
             raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert spark.conf.get(SHUFFLE) == prev
     # None = no-op
     with R.scoped_state_partitions(spark, None):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+        assert spark.conf.get(SHUFFLE) == prev
 
 
 def test_auto_staging_removed_after_run(spark):
     stream = R.replay_parquet(spark, SF, "events")
-    assert R._EPHEMERAL_STAGING, "auto staging should be registered"
-    staging = R._EPHEMERAL_STAGING[-1]
+    assert R._STAGED, "auto staging should be registered"
+    staging, created = R._STAGED[-1]
+    assert created
     assert os.path.isdir(staging)
     out = R.run_to_memory(tumbling_counts(stream), output_mode="complete")
     assert out.count() > 0
     assert not os.path.exists(staging)
-    assert not R._EPHEMERAL_STAGING
+    assert not R._STAGED
 
 
 def test_explicit_staging_dir_preserved(spark, tmp_path):
@@ -89,10 +103,12 @@ def test_explicit_staging_dir_preserved(spark, tmp_path):
 
 
 def test_state_partitions_pin_store_count(spark):
-    stream = R.replay_parquet(spark, SF, "events")
-    _, progress = R.run_to_memory_with_progress(
-        tumbling_counts(stream), output_mode="complete", state_partitions=2
-    )
+    # the session's 4 would be the store count if the runner did not pin
+    with _conf(spark, SHUFFLE, "4"), _conf(spark, OVERRIDE, "2"):
+        stream = R.replay_parquet(spark, SF, "events")
+        _, progress = R.run_to_memory_with_progress(
+            tumbling_counts(stream), output_mode="complete"
+        )
     parts = {
         int(so.numShufflePartitions)
         for p in progress
@@ -104,10 +120,31 @@ def test_state_partitions_pin_store_count(spark):
 
 def test_stateful_results_partition_count_invariant(spark):
     def rows(n):
-        stream = R.replay_parquet(spark, SF, "events")
-        out = R.run_to_memory(
-            tumbling_counts(stream), output_mode="complete", state_partitions=n
-        )
+        with _conf(spark, OVERRIDE, str(n)):
+            stream = R.replay_parquet(spark, SF, "events")
+            out = R.run_to_memory(tumbling_counts(stream), output_mode="complete")
         return sorted(tuple(r) for r in out.collect())
 
     assert rows(1) == rows(4)
+
+
+def test_runners_leave_session_as_found(spark):
+    shuffle = spark.conf.get(SHUFFLE)
+    n_events = load_table(spark, SF, "events").count()
+
+    stream = R.replay_parquet(spark, SF, "events")
+    staged = [R._STAGED[-1][0]]
+    out = R.run_to_memory(tumbling_counts(stream), output_mode="complete")
+    # the result resolved before its view was dropped still aggregates
+    assert out.agg({"n_events": "sum"}).first()[0] == n_events
+
+    seen: list[int] = []
+    stream = R.replay_parquet(spark, SF, "events", copies=2, max_files_per_trigger=1)
+    staged.append(R._STAGED[-1][0])
+    R.run_foreach_batch(stream.select("event_id"), lambda df, _: seen.append(df.count()))
+    assert sum(seen) == 2 * n_events
+
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")] == []
+    assert [p for p in staged if os.path.exists(p)] == []
+    assert R._STAGED == []
+    assert spark.conf.get(SHUFFLE) == shuffle
