@@ -2,7 +2,7 @@
 
 Five strategies, all designed around Spark's shuffle model:
 
-- exact          — content hash + min-key per group (one shuffle on the hash);
+- exact          — one aggregate: the min-key row per content hash, no join;
 - MinHash-LSH    — shingle → signature → band buckets → bucket self-join →
                    exact-Jaccard verify → connected components → keep one per
                    cluster.  The self-join shuffles on (band, band_hash), so
@@ -42,16 +42,17 @@ def _key_ddl(df: DataFrame, col: str) -> str:
 def exact_dedup(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
     """Keep the min-key row per distinct content (sha256 of the text).
 
-    One shuffle on the 256-bit hash; survivors are deterministic (min key),
-    unlike ``dropDuplicates`` whose surviving row is partitioning-dependent.
+    One aggregate, no join: ``min(struct(key, *rest))`` per hash, so each
+    input is read once.  NULL-key rows never survive; every column must be
+    orderable; ties on the key fall to the other columns in ``df`` order.
     """
-    h = F.sha2(F.col(text_col), 256).alias("content_hash")
-    keep = (
-        df.select(h, F.col(key_col))
-        .groupBy("content_hash")
-        .agg(F.min(key_col).alias(key_col))
+    rest = [c for c in df.columns if c != key_col]
+    survivor = (
+        df.where(F.col(key_col).isNotNull())
+        .groupBy(F.sha2(F.col(text_col), 256))
+        .agg(F.min(F.struct(key_col, *rest)).alias("row"))
     )
-    return df.join(keep, key_col, "left_semi")
+    return survivor.select(*(F.col("row")[c].alias(c) for c in df.columns))
 
 
 # ---------------------------------------------------------------------------

@@ -47,8 +47,7 @@ def assign_clusters(
     df: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
 ) -> DataFrame:
     """Append ``cluster`` = argmin-distance centroid (first-min tie-break) —
-    the oracle-exact HOF form; use the default BLAS path inside
-    ``kmeans_lloyd`` for bulk work."""
+    the oracle-exact HOF form; ``kmeans_lloyd`` trains on the BLAS path."""
     dists = F.array(
         *_centroid_dist_exprs(vec_col, np.asarray(centroids, dtype=np.float64))
     )
@@ -72,7 +71,6 @@ def kmeans_lloyd(
     k: int = 8,
     iterations: int = 3,
     round_to: int = 9,
-    use_blas: bool = True,
 ) -> list[list[float]]:
     """Train centroids; returns the k×dim centroid list (metadata).
 
@@ -89,11 +87,8 @@ def kmeans_lloyd(
         raise ValueError(f"need at least k={k} rows, got {len(init)}")
     centroids = [[float(x) for x in r[0]] for r in init]
     dim = len(centroids[0])
-    assign = _assign_blas if use_blas else (
-        lambda d, c, v: assign_clusters(d, c, v)
-    )
     for _ in range(iterations):
-        assigned = assign(df, centroids, vec_col)
+        assigned = _assign_blas(df, centroids, vec_col)
         means = (
             assigned.select(
                 "cluster", F.posexplode(F.col(vec_col)).alias("dim", "val")

@@ -159,7 +159,7 @@ def kinesis_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelism=8: the A5 in-flight bound is a tunable, and 2 writer tasks
     # serialize the whole table at larger SFs (the sf1 smoke was
     # overhead-bound at 2).  The oracle (per-type counts) is
-    # parallelism-invariant; more spool shards also widen the read side.
+    # parallelism-invariant; every put task appends to one spool file.
     settings = ProducerSettings(stream_name="roundtrip", parallelism=8)
     # deliver (eager: the read below needs the spool populated)
     produce_acks(framed, settings, fake_client_factory(spool_dir=spool)).count()
@@ -191,12 +191,13 @@ def pipeline_dedup_delivery_accounting(spark: SparkSession, sf_dir: str) -> Data
     Firehose sink, with byte-exact delivery accounting.
 
     Stage 1 (ingest): events → JSON+newline framing → produce pipe into a
-    spool (8 shards).  Stage 2 (at-least-once read): the spool is read
-    TWICE through ``format("kinesis_spool")`` and unioned — the duplicate
-    delivery a real at-least-once consumer sees after a checkpoint replay.
-    Stage 3 (transform): ``exact_dedup`` (operators/dedup.py) over payload
-    bytes with a unique (attempt, shard, seq) row key collapses the
-    duplicates.  Stage 4 (deliver): the surviving payloads (already framed)
+    one-shard spool (all 8 put tasks append to one file).  Stage 2
+    (at-least-once read): the spool is read TWICE through
+    ``format("kinesis_spool")`` and unioned — the duplicate delivery a real
+    at-least-once consumer sees after a checkpoint replay.  Stage 3
+    (transform): ``exact_dedup`` (operators/dedup.py) over payload bytes
+    with a unique (attempt, shard, seq) row key collapses the duplicates,
+    reading each replay once.  Stage 4 (deliver): the surviving payloads (already framed)
     go through the produce pipe at parallelism=1 → request count is exactly
     ceil(n/500) and delivered bytes are the summed JSON+newline frame
     lengths, both restated independently by the oracle from the raw events
@@ -238,11 +239,7 @@ def pipeline_dedup_delivery_accounting(spark: SparkSession, sf_dir: str) -> Data
         )
 
     replayed = attempt(1).unionByName(attempt(2))
-    deduped = exact_dedup(
-        replayed.withColumn("payload_str", F.col("value").cast("string")),
-        text_col="payload_str",
-        key_col="row_key",
-    )
+    deduped = exact_dedup(replayed, text_col="value", key_col="row_key")
     acks = produce_acks(
         deduped.select("value"),
         ProducerSettings(stream_name="delivered", parallelism=1),

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 
 from fs2_kinesis_firehose_spark.session import get_spark
 
@@ -19,3 +20,13 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return "/root/testdata/sf0.01"
+
+
+@pytest.fixture(scope="session")
+def smoke_catalog(spark, sf_smoke) -> dict[str, DataFrame]:
+    """Every registered query built once at smoke scale, for the tests that
+    sweep the whole catalog."""
+    import fs2_kinesis_firehose_spark.queries as q
+
+    q.load_all()
+    return {name: fn(spark, sf_smoke) for name, fn in q.QUERIES.items()}

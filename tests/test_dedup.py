@@ -27,6 +27,46 @@ def test_exact_dedup_keeps_min_id(spark):
     assert ids == [1, 3, 4, 5]  # doc 2 dropped, survivor is min id 1
 
 
+def test_exact_dedup_reads_each_input_once(spark, tmp_path):
+    """The pipeline line's shape: one spool read twice and unioned.  The
+    dedup must scan each read once (a join back to its input is pushed into
+    every union branch and scans the spool 6 times) and keep, per distinct
+    payload, the whole row with the minimum non-NULL key."""
+    from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    payloads = [b"a", b"b", b"a", b"z", b"c", b"b", b"a", b"z"] + [b"d"] * 9
+    (spool / "s.spool").write_bytes(b"".join(len(p).to_bytes(4, "big") + p for p in payloads))
+    register_kinesis_spool_source(spark)
+
+    def attempt(n):
+        key = F.concat_ws(":", F.lit(n), F.col("shard"), F.col("seq"))
+        return (
+            spark.read.format("kinesis_spool").option("spoolDir", str(spool)).load()
+            # payload b"z" only ever has a NULL key, so it has no survivor
+            .select("value", F.when(F.col("value") != b"z", key).alias("row_key"), "seq")
+        )
+
+    replayed = attempt(1).unionByName(attempt(2))
+    out = D.exact_dedup(replayed, text_col="value", key_col="row_key")
+    rows = out.collect()
+
+    final = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert final.count("BatchScan") == 2, final
+
+    assert out.columns == replayed.columns
+    best: dict[bytes, tuple] = {}
+    for r in replayed.collect():
+        v = bytes(r.value)
+        if r.row_key is not None and (v not in best or (r.row_key, r.seq) < best[v]):
+            best[v] = (r.row_key, r.seq)
+    got = {bytes(r.value): (r.row_key, r.seq) for r in rows}
+    assert len(rows) == len(got) == 4
+    assert got == best
+    assert all(r.row_key is not None for r in rows)
+
+
 def test_minhash_lsh_finds_planted_near_dupes(spark):
     df = _docs_with_dupes(spark)
     cands = D.minhash_lsh_candidates(df, shingle_n=3, num_hashes=64, bands=16)

@@ -196,16 +196,16 @@ _EAGER_OR_STREAMING = {
 }
 
 
-def test_no_cartesian_product_catalog_wide(spark, sf_smoke):
+def test_no_cartesian_product_catalog_wide(smoke_catalog):
     """No registered query may plan a CartesianProduct — a cross product
     that isn't a deliberate one-row-scalar broadcast is always a bug at
     scale.  (Scalar crossJoins compile to BroadcastNestedLoopJoin with a
     1-row build side, which this scan permits.)"""
     offenders = []
-    for name, fn in q.QUERIES.items():
+    for name, df in smoke_catalog.items():
         if name in _EAGER_OR_STREAMING:
             continue
-        plan = explain_str(fn(spark, sf_smoke))
+        plan = explain_str(df)
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, f"CartesianProduct in: {offenders}"
