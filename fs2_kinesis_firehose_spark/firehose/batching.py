@@ -26,10 +26,10 @@ def slice_requests(
 ) -> Iterator[tuple[list[bytes], int]]:
     """Yield (request_payloads, request_bytes) slices observing all quotas.
 
-    ``max_record_bytes`` is clamped to ``max_batch_bytes`` here (not only in
-    the callers): a record may never exceed the request quota, otherwise a
-    single accepted record would form an over-quota request — the generator
-    alone holds every invariant regardless of caller discipline."""
+    ``max_record_bytes`` is clamped to ``max_batch_bytes``: a record may
+    never exceed the request quota, otherwise a single accepted record
+    would form an over-quota request — the generator alone holds every
+    invariant whatever quotas the caller passes."""
     max_record_bytes = min(max_record_bytes, max_batch_bytes)
     buf: list[bytes] = []
     buf_bytes = 0

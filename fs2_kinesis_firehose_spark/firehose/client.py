@@ -116,11 +116,19 @@ class FakeFirehose:
 
     def _spool(self, stream: str, payloads: list[bytes]) -> None:
         """Append ``payloads`` to the stream's spool in one open and one
-        write, before the call that delivered them returns."""
+        write, before the call that delivered them returns.  Executors cache
+        the client across queries, so the spool dir may have been wiped
+        since ``__init__``; it is recreated then."""
         if self._spool_dir and payloads:
             path = os.path.join(self._spool_dir, f"{stream}.spool")
-            with open(path, "ab") as f:
-                f.write(b"".join(len(p).to_bytes(4, "big") + p for p in payloads))
+            frames = b"".join(len(p).to_bytes(4, "big") + p for p in payloads)
+            try:
+                f = open(path, "ab")
+            except FileNotFoundError:
+                os.makedirs(self._spool_dir, exist_ok=True)
+                f = open(path, "ab")
+            with f:
+                f.write(frames)
 
     def _record_fails(self, payload: bytes) -> bool:
         if self._record_attempts is None:

@@ -30,7 +30,7 @@ def put_batch_with_retry(
     client: Any,
     stream_name: str,
     records: list[dict[str, bytes]],
-    retry: RetryPolicy | None,
+    retry: RetryPolicy,
     *,
     sleep=time.sleep,
 ) -> dict[str, Any]:
@@ -39,11 +39,6 @@ def put_batch_with_retry(
     Returns a boto3-shaped response whose ``RequestResponses`` is aligned to
     the original ``records`` order, plus an ``Attempts`` count.
     """
-    if retry is None:
-        resp = client.put_record_batch(DeliveryStreamName=stream_name, Records=records)
-        resp["Attempts"] = 1
-        return resp
-
     # index into the ORIGINAL list of each record still pending
     pending = list(range(len(records)))
     final: list[dict[str, Any] | None] = [None] * len(records)

@@ -6,7 +6,10 @@ ProducerSettings.scala:61), flush time window (default 5 s,
 ProducerSettings.scala:81), bounded put parallelism (default 1,
 ProducerSettings.scala:80), separator framing (default b"\\n",
 ProducerSettings.scala:29-30), and the retry policy (exponential backoff from
-500 ms, max 6 retries — ProducerSettings.scala:82).
+500 ms, max 6 retries — ProducerSettings.scala:82).  "No retry" is
+``RetryPolicy(max_retries=0)``.  The AWS byte quotas (``MAX_BATCH_BYTES``,
+``MAX_RECORD_BYTES``) are fixed, not settings: the sink's slicer enforces
+them on every request.
 """
 
 from __future__ import annotations
@@ -62,14 +65,7 @@ class ProducerSettings:
     time_window_s: float = 5.0
     parallelism: int = 1
     separator: bytes = b"\n"
-    retry: RetryPolicy | None = RetryPolicy()
-    # AWS byte quotas, ENFORCED by the sink slicer: a request flushes early
-    # when the next record would push it past ``max_batch_bytes``; a single
-    # record larger than ``max_record_bytes`` is rejected with a clear error
-    # (the real service would reject it after exhausting retries).  Lowerable
-    # for tests; never raisable past the AWS quotas.
-    max_batch_bytes: int = MAX_BATCH_BYTES
-    max_record_bytes: int = MAX_RECORD_BYTES
+    retry: RetryPolicy = RetryPolicy()
 
     def __post_init__(self) -> None:
         if not (0 < self.batch_size <= MAX_BATCH_SIZE):
@@ -80,18 +76,6 @@ class ProducerSettings:
             raise ValueError(f"parallelism must be >= 1, got {self.parallelism}")
         if self.time_window_s <= 0:
             raise ValueError(f"time_window_s must be > 0, got {self.time_window_s}")
-        if not (0 < self.max_batch_bytes <= MAX_BATCH_BYTES):
-            raise ValueError(
-                f"max_batch_bytes must be in (0, {MAX_BATCH_BYTES}], got {self.max_batch_bytes}"
-            )
-        if not (0 < self.max_record_bytes <= MAX_RECORD_BYTES):
-            raise ValueError(
-                f"max_record_bytes must be in (0, {MAX_RECORD_BYTES}], got {self.max_record_bytes}"
-            )
-        if self.max_record_bytes > self.max_batch_bytes:
-            # a single accepted record could otherwise overflow a request;
-            # lowering the request bound implicitly bounds records
-            object.__setattr__(self, "max_record_bytes", self.max_batch_bytes)
 
     # with* builders mirroring ProducerSettings.scala:27-42
     def with_batch_size(self, n: int) -> "ProducerSettings":
@@ -106,5 +90,5 @@ class ProducerSettings:
     def with_separator(self, sep: bytes) -> "ProducerSettings":
         return replace(self, separator=sep)
 
-    def with_retry(self, policy: RetryPolicy | None) -> "ProducerSettings":
+    def with_retry(self, policy: RetryPolicy) -> "ProducerSettings":
         return replace(self, retry=policy)

@@ -45,7 +45,11 @@ from fs2_kinesis_firehose_spark.firehose.batching import slice_requests
 from fs2_kinesis_firehose_spark.firehose.client import ClientFactory
 from fs2_kinesis_firehose_spark.firehose.retry import put_batch_with_retry
 from fs2_kinesis_firehose_spark.firehose.serializers import serialize_and_frame
-from fs2_kinesis_firehose_spark.firehose.settings import ProducerSettings
+from fs2_kinesis_firehose_spark.firehose.settings import (
+    MAX_BATCH_BYTES,
+    MAX_RECORD_BYTES,
+    ProducerSettings,
+)
 
 ACK_SCHEMA = StructType(
     [
@@ -122,8 +126,8 @@ def cut(
         slice_requests(
             payloads,
             batch_size=settings.batch_size,
-            max_batch_bytes=settings.max_batch_bytes,
-            max_record_bytes=settings.max_record_bytes,
+            max_batch_bytes=MAX_BATCH_BYTES,
+            max_record_bytes=MAX_RECORD_BYTES,
         )
     ):
         yield src_part, req_idx, buf, buf_bytes
@@ -177,7 +181,7 @@ def produce_acks(
     ``mapAsync(parallelism)(putWithRetry)`` (firehose.scala:41) — run in
     Arrow-batched ``mapInPandas`` so payload bytes cross the JVM→Python
     boundary as Arrow buffers.  Requests hold ≤ ``batch_size`` records and
-    ≤ ``max_batch_bytes`` bytes; a single record over ``max_record_bytes``
+    ≤ ``MAX_BATCH_BYTES`` bytes; a single record over ``MAX_RECORD_BYTES``
     raises on the executor (the real service would reject it on every
     retry).
 
@@ -222,7 +226,7 @@ def produce_acks(
         import pandas as pd
 
         # ONE frame per request: peak task memory stays proportional to
-        # max_batch_bytes, never to the source partition size
+        # MAX_BATCH_BYTES, never to the source partition size
         for request in cut(_payloads(batches), settings, _partition_id()):
             yield pd.DataFrame([request], columns=_REQUEST_SCHEMA.fieldNames())
 
@@ -307,16 +311,11 @@ def produce(
         raise ValueError("produce expects a streaming DataFrame; use write_batch for batch")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         framed = serialize_and_frame(batch_df, serializer, settings.separator)
-        # puts run on executors; only a ONE-ROW aggregated summary reaches the
-        # driver (never the per-request ack rows — unbounded at scale)
+        # one action runs the puts on executors; no ack row reaches the
+        # driver (the per-request acks are unbounded at scale)
         acks = produce_acks(framed, settings, client_factory)
-        acks.groupBy().agg(
-            F.count(F.lit(1)).alias("n_requests"),
-            F.sum("failed_records").alias("failed_records"),
-        ).collect()
+        acks.write.format("noop").mode("overwrite").save()
 
     writer = (
         stream_df.writeStream.foreachBatch(sink)

@@ -90,10 +90,14 @@ def _pinned_by_key(df: DataFrame, key: str, partitions: int | None = None) -> Da
     AQE is disabled for this one plan compile: under AQE the checkpoint
     captures the still-adaptive plan's UnknownPartitioning and the pin is
     silently lost (measured in r12 — the checkpointed LogicalRDD then
-    re-shuffles every iteration exactly as before).  The conf flip only
-    affects the repartition job compiled here (a plain shuffle that AQE
-    could not improve anyway); it is restored before returning, so the
-    supersteps themselves keep AQE.
+    re-shuffles every iteration exactly as before).  Still so on Spark
+    4.1.2: compiled with AQE on, the pin reports
+    ``UnknownPartitioning(0)``; with AQE off, ``hashpartitioning(src, n)``.
+    The conf flip covers only this plan compile (a plain shuffle that AQE
+    could not improve anyway) and is restored before returning, so the
+    supersteps themselves keep AQE.  It is the one session-conf flip in
+    the package outside ``tables.ensure_session_confs`` and the streaming
+    runner's ``start()``-scoped pin.
 
     The pin pays exactly when the superstep join is SHUFFLE-bound (rank/
     label vectors too big to broadcast — the 100-TB regime).  When the

@@ -156,8 +156,8 @@ def bucketed_colocated_join_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     join then reads bucket-aligned splits with NO shuffle on either side.
 
     The zero-shuffle property is not just pytest-pinned
-    (tests/test_bucketing.py): the plan of the measured join — built with
-    broadcast disabled, so the co-location is what saves the exchange —
+    (tests/test_bucketing.py): the plan of the measured join — hinted to
+    sort-merge, so the co-location is what saves the exchange —
     is inspected and emitted as columns (``join_exchanges`` = count of
     Exchange nodes, ``join_is_sort_merge``), which the oracle states as
     0/TRUE; the revenue aggregate proves the bucketed write+read round-
@@ -192,43 +192,40 @@ def bucketed_colocated_join_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         .mode("overwrite").saveAsTable(f"{db}.lineitem_b")
     )
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # isolate co-location
-    try:
-        o = spark.table(f"{db}.orders_b")
-        li = spark.table(f"{db}.lineitem_b")
-        joined = o.join(li, o.o_orderkey == li.l_orderkey)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        n_exchanges = plan.count("Exchange")
-        is_smj = "SortMergeJoin" in plan
-        out = (
-            joined.groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.count_distinct("o_orderkey").alias("n_orders"),
-                (
-                    F.round(
-                        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                        * 10000,
-                        0,
-                    )
-                    / 10000
-                ).alias("revenue"),
-            )
-            .select(
-                "o_orderpriority",
-                "n_items",
-                "n_orders",
-                "revenue",
-                F.lit(n_exchanges).cast("long").alias("join_exchanges"),
-                F.lit(is_smj).alias("join_is_sort_merge"),
-            )
+    o = spark.table(f"{db}.orders_b")
+    li = spark.table(f"{db}.lineitem_b")
+    # the merge hint keeps the small side from broadcasting, so the plan
+    # is the co-located sort-merge join whose exchanges are counted
+    joined = o.hint("merge").join(li, o.o_orderkey == li.l_orderkey)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    n_exchanges = plan.count("Exchange")
+    is_smj = "SortMergeJoin" in plan
+    out = (
+        joined.groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.count_distinct("o_orderkey").alias("n_orders"),
+            (
+                F.round(
+                    F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                    * 10000,
+                    0,
+                )
+                / 10000
+            ).alias("revenue"),
         )
-        # Materialize under the forced-SMJ conf so the measured plan IS the
-        # executed plan (the conf is restored before the driver collects).
-        return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        .select(
+            "o_orderpriority",
+            "n_items",
+            "n_orders",
+            "revenue",
+            F.lit(n_exchanges).cast("long").alias("join_exchanges"),
+            F.lit(is_smj).alias("join_is_sort_merge"),
+        )
+    )
+    # Materialize now: the per-sf database is dropped and rewritten on
+    # every call, so a lazy result could read a dropped table.
+    return out.localCheckpoint(eager=True)
 
 
 # The oracle recomputes the Hilbert layout end-to-end: identical grid

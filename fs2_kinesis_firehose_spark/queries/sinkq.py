@@ -151,9 +151,7 @@ def kinesis_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same directory instead of leaking a fresh mkdtemp per invocation."""
     from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
 
-    spool_dir = scratch_dir("fs2spark-spools", "roundtrip-{h}", sf_dir)
-    spool_dir.mkdir(parents=True)
-    spool = str(spool_dir)
+    spool = str(scratch_dir("fs2spark-spools", "roundtrip-{h}", sf_dir))
     events = load_table(spark, sf_dir, "events")
     framed = serialize_and_frame(events.select("event_id", "event_type"), "json", b"\n")
     # parallelism=8: the A5 in-flight bound is a tunable, and 2 writer tasks
@@ -210,11 +208,6 @@ def pipeline_dedup_delivery_accounting(spark: SparkSession, sf_dir: str) -> Data
     from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
 
     root = scratch_dir("fs2spark-spools", "pipeline-{h}", sf_dir)
-    # mkdir explicitly: the fake client creates its spool dir only in
-    # __init__, and executors CACHE the client across query invocations —
-    # after a wipe, a cached client would append into a missing directory
-    (root / "ingest").mkdir(parents=True)
-    (root / "deliver").mkdir(parents=True)
     ingest_spool, deliver_spool = str(root / "ingest"), str(root / "deliver")
 
     events = load_table(spark, sf_dir, "events")

@@ -38,9 +38,7 @@ from fs2_kinesis_firehose_spark.firehose.client import (
     fake_client_factory,
 )
 from fs2_kinesis_firehose_spark.firehose.settings import (
-    MAX_BATCH_BYTES,
     MAX_BATCH_SIZE,
-    MAX_RECORD_BYTES,
     ProducerSettings,
     RetryPolicy,
 )
@@ -78,7 +76,8 @@ class _WriterCore:
         options = {k.lower(): v for k, v in options.items()}
         if not options.get("streamname"):
             raise ValueError("firehose source requires .option('streamName', ...)")
-        # ProducerSettings validates the count and AWS byte quotas
+        # ProducerSettings validates the count; the slicer enforces the AWS
+        # byte quotas
         self.settings = ProducerSettings(
             stream_name=options["streamname"],
             batch_size=int(options.get("batchsize", MAX_BATCH_SIZE)),
@@ -87,8 +86,6 @@ class _WriterCore:
                 max_retries=int(options.get("maxretries", 6)),
                 base_backoff_s=float(options.get("basebackoffms", 500)) / 1000.0,
             ),
-            max_batch_bytes=int(options.get("maxbatchbytes", MAX_BATCH_BYTES)),
-            max_record_bytes=int(options.get("maxrecordbytes", MAX_RECORD_BYTES)),
         )
         self.client_factory = _client_factory(options)
 

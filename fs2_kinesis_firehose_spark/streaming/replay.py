@@ -11,8 +11,11 @@ run a stream to completion through ``_run``, which owns the whole
 lifecycle: the availableNow trigger, stopping the query, and removing the
 staging dirs the replays auto-created for it.  The memory runner also sizes
 the stateful operators' state stores from the bytes the replays staged and
-drops its ``mem_*`` view once the result has resolved, so a run leaves the
-session's conf and catalog as it found them.
+drops its ``mem_*`` view once the result has resolved.  The sized width is
+set on the session only across the query's ``start()``, where the stream
+takes its own copy of the conf, so a run leaves the session's conf and
+catalog as it found them, and a query planned while a stream runs sees the
+session's own width.
 """
 
 from __future__ import annotations
@@ -65,7 +68,9 @@ _STATE_PARTITION_SQRT_BYTES = 64 * 1024
 
 def _source_bytes(src: str) -> int:
     """Total parquet bytes of one parquet file or of a directory of part
-    files (a fixture table or a staging dir)."""
+    files (a fixture table or a staging dir).  Reads the driver's local
+    filesystem: replays stage there, so this sizing does not apply to an
+    object-store source (size those with the override conf instead)."""
     if os.path.isdir(src):
         return sum(
             e.stat().st_size
@@ -85,7 +90,8 @@ def sized_state_partitions(spark: SparkSession, n_bytes: int) -> int:
     ``spark.fs2kf.streaming.statePartitions`` overrides the derivation for
     deployments that size state partitions explicitly (state-store count is
     sticky per checkpoint, so production picks it for the stream's LIFETIME
-    peak, not its first batch)."""
+    peak, not its first batch).  ``n_bytes`` comes from the driver-local
+    staging dirs (``_source_bytes``)."""
     override = spark.conf.get("spark.fs2kf.streaming.statePartitions", None)
     if override:
         return max(1, int(override))
@@ -192,40 +198,33 @@ def replay_phased(
     )
 
 
-class scoped_state_partitions:
-    """Context manager pinning ``spark.sql.shuffle.partitions`` for the
-    duration of ONE availableNow streaming run (the conf is what fixes the
-    stateful operator's state-store count at batch 0 — see
-    ``sized_state_partitions``).  Restores the previous value afterwards;
-    ``None`` partitions = no-op."""
-
-    def __init__(self, spark: SparkSession, partitions: int | None):
-        self._spark = spark
-        self._n = partitions
-        self._prev: str | None = None
-
-    def __enter__(self):
-        if self._n is not None:
-            self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-            self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-        return self
-
-    def __exit__(self, *exc):
-        if self._prev is not None:
-            self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
-
-
-def _run(writer: DataStreamWriter) -> list:
+def _run(writer: DataStreamWriter, state_partitions: int | None = None) -> list:
     """Run ``writer``'s query to completion under the availableNow trigger
     (everything currently in the source, then stop) and return its
     recorded progress objects.  However the run ends, the query is stopped
     and every staging dir a replay auto-created for it is removed;
     caller-owned ``staging_dir``s stay (runs are sequential in every
-    query and test path)."""
+    query and test path).
+
+    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` across
+    ``start()`` only.  The query copies the session conf inside
+    ``start()`` (its ``StreamExecution`` clones the session, SPARK-26586)
+    and fixes its state-store count from that copy at batch 0, so the
+    session's own value is restored as soon as ``start()`` returns and no
+    other query on the session plans under the pinned width."""
     q = None
     try:
-        q = writer.trigger(availableNow=True).start()
+        writer = writer.trigger(availableNow=True)
+        if state_partitions is None:
+            q = writer.start()
+        else:
+            conf = writer._spark.conf
+            prev = conf.get("spark.sql.shuffle.partitions")
+            conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+            try:
+                q = writer.start()
+            finally:
+                conf.set("spark.sql.shuffle.partitions", prev)
         q.awaitTermination()
         return list(q.recentProgress)
     finally:
@@ -253,18 +252,17 @@ def run_to_memory_with_progress(
     the correctness harness.
 
     When the stream reads replays, the stateful operators' state-store
-    count is pinned for this run from the bytes those replays staged
-    (``sized_state_partitions``) and the session conf is restored
-    afterwards; any other source runs under the session conf.  The
-    memory sink's view is dropped once the result has resolved."""
+    count is sized from the bytes those replays staged
+    (``sized_state_partitions``) and pinned across the query's ``start()``
+    only (see ``_run``); any other source runs under the session conf.
+    The memory sink's view is dropped once the result has resolved."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
     n_bytes = sum(_source_bytes(path) for path, _ in _STAGED)
     partitions = sized_state_partitions(spark, n_bytes) if _STAGED else None
     writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     try:
-        with scoped_state_partitions(spark, partitions):
-            progress = _run(writer)
+        progress = _run(writer, partitions)
         return spark.table(name), progress
     finally:
         spark.catalog.dropTempView(name)
@@ -283,7 +281,8 @@ def run_foreach_batch(
 ) -> None:
     """Run a streaming DataFrame to completion (availableNow), handing each
     micro-batch to ``fn(batch_df, batch_id)``.  Shuffle partitions are not
-    pinned: ``fn`` runs batch jobs under the session conf.  Without a
+    pinned: the batch jobs inside ``fn`` run on the stream's copy of the
+    session, which would inherit a width pinned at ``start()``.  Without a
     ``checkpoint_location`` the query checkpoints to a temporary dir."""
     writer = stream_df.writeStream.foreachBatch(fn)
     if checkpoint_location is not None:

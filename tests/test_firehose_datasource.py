@@ -5,9 +5,11 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from fs2_kinesis_firehose_spark.firehose.client import read_spool
 from fs2_kinesis_firehose_spark.firehose.serializers import serialize_and_frame
+from fs2_kinesis_firehose_spark.firehose.settings import MAX_RECORD_BYTES
 from fs2_kinesis_firehose_spark.sources import register_firehose_source
 from fs2_kinesis_firehose_spark.tables import load_table
 
@@ -47,13 +49,15 @@ def test_batch_write_slices_500(spark, tmp_path):
 
 
 def test_batch_write_rejects_oversized_record(spark, tmp_path):
-    framed = spark.createDataFrame([(b"z" * 300,)], "value binary").coalesce(1)
+    # one record 1 byte over the AWS 1,000 KiB per-record quota
+    framed = spark.range(1).select(
+        F.expr(f"cast(repeat('z', {MAX_RECORD_BYTES + 1}) as binary)").alias("value")
+    )
     with pytest.raises(Exception, match="per-record limit"):
         (
             framed.write.format("firehose")
             .option("streamName", "big-rec")
             .option("spoolDir", str(tmp_path))
-            .option("maxRecordBytes", "100")
             .mode("append")
             .save()
         )

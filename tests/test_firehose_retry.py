@@ -3,6 +3,8 @@ the path the reference itself never tested (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from fs2_kinesis_firehose_spark.firehose.client import FakeFirehose, read_spool
@@ -88,9 +90,21 @@ def test_whole_call_failure_exhausts_raises_last_error():
 
 def test_no_retry_policy_passthrough():
     client = FakeFirehose(fail_record_times=1)
-    resp = put_batch_with_retry(client, "s", recs(b"a"), None, sleep=NO_SLEEP)
+    resp = put_batch_with_retry(client, "s", recs(b"a"), RetryPolicy(max_retries=0), sleep=NO_SLEEP)
     assert resp["FailedPutCount"] == 1
     assert resp["Attempts"] == 1
+
+
+def test_spool_dir_recreated_after_wipe(tmp_path):
+    # executors cache the client across queries, and each query wipes its
+    # spool dir first: a cached client must deliver into the new dir
+    spool = str(tmp_path / "spool")
+    client = FakeFirehose(spool_dir=spool)
+    put_batch_with_retry(client, "s", recs(b"first"), RetryPolicy(), sleep=NO_SLEEP)
+    shutil.rmtree(spool)
+    resp = put_batch_with_retry(client, "s", recs(b"second"), RetryPolicy(), sleep=NO_SLEEP)
+    assert resp["FailedPutCount"] == 0
+    assert read_spool(spool, "s") == [b"second"]
 
 
 def test_exponential_backoff_schedule():

@@ -7,13 +7,18 @@ import json
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from fs2_kinesis_firehose_spark.firehose.client import fake_client_factory, read_spool
 from fs2_kinesis_firehose_spark.firehose.serializers import (
     serialize_and_frame,
     string_serializer,
 )
-from fs2_kinesis_firehose_spark.firehose.settings import ProducerSettings
+from fs2_kinesis_firehose_spark.firehose.settings import (
+    MAX_BATCH_BYTES,
+    MAX_RECORD_BYTES,
+    ProducerSettings,
+)
 from fs2_kinesis_firehose_spark.firehose.sink import produce, produce_acks, write_batch, write_one
 from fs2_kinesis_firehose_spark.tables import load_table
 
@@ -93,31 +98,37 @@ def test_write_batch_typed_json_delivery(spark, tmp_path):
         json.loads(p.decode())
 
 
-def test_byte_bound_flushes_early(spark, tmp_path):
-    """10 records of 40 bytes with a 100-byte request cap → requests hold at
-    most 2 records (2×40=80 ≤ 100 < 120), regardless of the 500-record cap."""
-    spool = str(tmp_path / "spool")
-    df = spark.createDataFrame(
-        [(bytes([65 + i]) * 40,) for i in range(10)], "value binary"
+def _binary_records(spark, n, size):
+    return spark.range(n).select(
+        F.expr(f"cast(repeat('A', {size}) as binary)").alias("value")
     )
-    settings = ProducerSettings(stream_name="t", parallelism=1, max_batch_bytes=100)
+
+
+def test_byte_bound_flushes_early(spark, tmp_path):
+    """6 records of 900 KiB under the 4 MiB request quota → requests of 4
+    and 2 records (4×900 KiB ≤ 4 MiB < 5×900 KiB), well below the
+    500-record cap."""
+    spool = str(tmp_path / "spool")
+    df = _binary_records(spark, 6, 900 * 1024)
+    settings = ProducerSettings(stream_name="t", parallelism=1)
     acks = produce_acks(df, settings, fake_client_factory(spool_dir=spool)).collect()
-    assert sum(a.n_records for a in acks) == 10
-    assert all(a.n_records <= 2 and a.request_bytes <= 100 for a in acks)
-    assert len(read_spool(spool, "t")) == 10
+    assert [a.n_records for a in acks] == [4, 2]
+    assert all(a.request_bytes <= MAX_BATCH_BYTES for a in acks)
+    assert len(read_spool(spool, "t")) == 6
 
 
 def test_oversized_record_rejected(spark):
-    df = spark.createDataFrame([(b"x" * 200,)], "value binary")
-    settings = ProducerSettings(stream_name="t", parallelism=1, max_record_bytes=100)
+    df = _binary_records(spark, 1, MAX_RECORD_BYTES + 1)
+    settings = ProducerSettings(stream_name="t", parallelism=1)
     with pytest.raises(Exception, match="per-record limit"):
         produce_acks(df, settings, fake_client_factory()).collect()
 
 
 def test_settings_reject_quota_overrides_past_aws(spark):
-    with pytest.raises(ValueError):
+    # the AWS byte quotas are fixed, not settings
+    with pytest.raises(TypeError):
         ProducerSettings(stream_name="t", max_batch_bytes=5 * 1024 * 1024)
-    with pytest.raises(ValueError):
+    with pytest.raises(TypeError):
         ProducerSettings(stream_name="t", max_record_bytes=2_000 * 1024)
 
 

@@ -4,6 +4,9 @@ products, codegen coverage)."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import fs2_kinesis_firehose_spark.queries as q
 from fs2_kinesis_firehose_spark.plans import assert_plan_contains, assert_plan_lacks, explain_str
 
@@ -209,6 +212,40 @@ def test_no_cartesian_product_catalog_wide(smoke_catalog):
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, f"CartesianProduct in: {offenders}"
+
+
+# Every place the package writes a session conf, as (module, function).
+# Each write is scoped to one call, never to a whole query: the catalog's
+# idempotent read confs, the graph pin's AQE-off plan compile, and the
+# streaming runner's state-store width across ``start()`` only.
+_SESSION_CONF_WRITERS = {
+    ("tables.py", "ensure_session_confs"),
+    ("operators/graph.py", "_pinned_by_key"),
+    ("streaming/replay.py", "_run"),
+}
+
+
+def test_package_does_not_pin_session_conf():
+    """A conf set around a whole query leaks into every other query planned
+    on the session meanwhile; a query that needs a plan shape asks for it
+    in the plan (e.g. a join hint).  Every ``conf.set(`` in the package
+    must sit in one of the known call-scoped writers."""
+    pkg = Path(q.__file__).resolve().parents[1]
+    writers = set()
+    for path in pkg.rglob("*.py"):
+        src = path.read_text()
+        if "conf.set(" not in src:
+            continue
+        funcs = [
+            n for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for lineno, line in enumerate(src.splitlines(), 1):
+            if "conf.set(" in line:
+                owners = [f for f in funcs if f.lineno <= lineno <= f.end_lineno]
+                owner = max(owners, key=lambda f: f.lineno).name if owners else "<module>"
+                writers.add((path.relative_to(pkg).as_posix(), owner))
+    assert writers - _SESSION_CONF_WRITERS == set()
 
 
 def test_heavy_hitters_sketch_plan(spark, sf_smoke):

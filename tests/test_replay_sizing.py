@@ -3,8 +3,9 @@ partitions, staging cleanup and session hygiene.
 
 - ``sized_state_partitions``: sqrt-of-bytes derivation, conf override,
   clamp to the session shuffle-partition cap, floor of 1.
-- ``scoped_state_partitions``: the conf is pinned only for the run and
-  RESTORED afterwards (also on error).
+- the memory runner pins the sized width across ``start()`` only: the
+  session's own value is back while the query runs, after it ends, after
+  a ``start()`` that raises, and is never touched when nothing was staged.
 - auto-created replay staging dirs are removed once their query has run
   (the /tmp/replay-* leak was the known dirty-tmp bench-noise source);
   caller-owned ``staging_dir``s are left alone.
@@ -17,9 +18,12 @@ partitions, staging cleanup and session hygiene.
 from __future__ import annotations
 
 import os
+import shutil
+import time
 from contextlib import contextmanager
 
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from fs2_kinesis_firehose_spark.streaming import replay as R
 from fs2_kinesis_firehose_spark.streaming.windows import tumbling_counts
@@ -69,18 +73,77 @@ def test_sized_state_partitions_override(spark):
         assert R.sized_state_partitions(spark, events) == 13
 
 
-def test_scoped_state_partitions_restores_conf(spark):
-    prev = spark.conf.get(SHUFFLE)
-    with R.scoped_state_partitions(spark, 3):
-        assert spark.conf.get(SHUFFLE) == "3"
-    assert spark.conf.get(SHUFFLE) == prev
-    with pytest.raises(RuntimeError):
-        with R.scoped_state_partitions(spark, 3):
-            raise RuntimeError("boom")
-    assert spark.conf.get(SHUFFLE) == prev
-    # None = no-op
-    with R.scoped_state_partitions(spark, None):
-        assert spark.conf.get(SHUFFLE) == prev
+def _store_counts(progress):
+    return {
+        int(so.numShufflePartitions)
+        for p in progress
+        for so in p.stateOperators
+        if so.numShufflePartitions is not None
+    }
+
+
+def test_scoped_state_partitions_restores_conf(spark, tmp_path):
+    with _conf(spark, SHUFFLE, "4"), _conf(spark, OVERRIDE, "2"):
+        # a pinned run
+        stream = R.replay_parquet(spark, SF, "events")
+        R.run_to_memory(tumbling_counts(stream), output_mode="complete")
+        assert spark.conf.get(SHUFFLE) == "4"
+        # a pinned run whose start() raises: a keyed aggregate has no
+        # append output without a watermark
+        stream = R.replay_parquet(spark, SF, "events")
+        with pytest.raises(Exception, match="(?i)append"):
+            R.run_to_memory(stream.groupBy("event_type").count(), output_mode="append")
+        assert spark.conf.get(SHUFFLE) == "4"
+        assert R._STAGED == []
+        # nothing staged: no pin, the stream plans under the session's width
+        src = tmp_path / "src"
+        src.mkdir()
+        shutil.copy(table_path(SF, "events"), src / "events.parquet")
+        schema = spark.read.parquet(str(src)).schema
+        stream = spark.readStream.schema(schema).parquet(str(src))
+        _, progress = R.run_to_memory_with_progress(
+            stream.groupBy("event_type").count(), output_mode="complete"
+        )
+        assert spark.conf.get(SHUFFLE) == "4"
+        assert _store_counts(progress) == {4}
+
+
+def test_session_width_unpinned_while_stream_runs(spark):
+    """The pin covers ``start()`` only: a listener reading the session's
+    width on every progress event, while later batches still run, sees the
+    session's own 4, and the state stores still number the sized 2."""
+    reads: list[str] = []
+
+    class ReadWidth(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            reads.append(spark.conf.get(SHUFFLE))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = ReadWidth()
+    spark.streams.addListener(listener)
+    try:
+        with _conf(spark, SHUFFLE, "4"), _conf(spark, OVERRIDE, "2"):
+            stream = R.replay_parquet(spark, SF, "events", copies=3, max_files_per_trigger=1)
+            _, progress = R.run_to_memory_with_progress(
+                tumbling_counts(stream), output_mode="complete"
+            )
+            deadline = time.monotonic() + 30
+            while len(reads) < len(progress) and time.monotonic() < deadline:
+                time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(listener)
+    assert len(progress) >= 3
+    assert len(reads) == len(progress)
+    assert set(reads) == {"4"}
+    assert _store_counts(progress) == {2}
 
 
 def test_auto_staging_removed_after_run(spark):
