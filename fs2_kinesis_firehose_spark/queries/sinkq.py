@@ -149,7 +149,10 @@ def kinesis_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     spool path is DETERMINISTIC per sf_dir under one managed tmp root and is
     wiped before each delivery — repeated catalog sweeps/bench passes reuse
     the same directory instead of leaking a fresh mkdtemp per invocation."""
-    from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
+    from fs2_kinesis_firehose_spark.sources.kinesis_spool_source import (
+        SCHEMA,
+        register_kinesis_spool_source,
+    )
 
     spool = str(scratch_dir("fs2spark-spools", "roundtrip-{h}", sf_dir))
     events = load_table(spark, sf_dir, "events")
@@ -163,7 +166,7 @@ def kinesis_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce_acks(framed, settings, fake_client_factory(spool_dir=spool)).count()
 
     register_kinesis_spool_source(spark)
-    back = spark.read.format("kinesis_spool").option("spoolDir", spool).load()
+    back = spark.read.format("kinesis_spool").schema(SCHEMA).option("spoolDir", spool).load()
     parsed = back.select(
         F.get_json_object(F.col("value").cast("string"), "$.event_type").alias("event_type")
     )
@@ -205,7 +208,10 @@ def pipeline_dedup_delivery_accounting(spark: SparkSession, sf_dir: str) -> Data
     Eager like ``kinesis_roundtrip_counts`` (the read needs the spool
     populated) and uses the same deterministic per-sf_dir tmp root."""
     from fs2_kinesis_firehose_spark.operators.dedup import exact_dedup
-    from fs2_kinesis_firehose_spark.sources import register_kinesis_spool_source
+    from fs2_kinesis_firehose_spark.sources.kinesis_spool_source import (
+        SCHEMA,
+        register_kinesis_spool_source,
+    )
 
     root = scratch_dir("fs2spark-spools", "pipeline-{h}", sf_dir)
     ingest_spool, deliver_spool = str(root / "ingest"), str(root / "deliver")
@@ -223,6 +229,7 @@ def pipeline_dedup_delivery_accounting(spark: SparkSession, sf_dir: str) -> Data
     def attempt(n: int) -> DataFrame:
         return (
             spark.read.format("kinesis_spool")
+            .schema(SCHEMA)
             .option("spoolDir", ingest_spool)
             .load()
             .select(

@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and Python-worker import setup.
 
 Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default 32) in one JVM; the
 configuration below is chosen so the *same logical plans* scale to a
@@ -13,15 +13,65 @@ configuration below is chosen so the *same logical plans* scale to a
 - Session timezone pinned to UTC so event-time semantics are
   deployment-independent (and match the DuckDB oracle, which reads the naive
   parquet timestamps as-is).
+
+Every package function unpickled on an executor imports the package root and
+with it this module, so process setup for Spark's Python workers lives here
+too (``_reread_zips_only_when_changed``).
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import weakref
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "fs2-kinesis-firehose-spark"
+
+
+def _reread_zips_only_when_changed() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
+    only when the archive changed on disk.
+
+    Spark's Python workers call ``importlib.invalidate_caches()`` before every
+    task (``pyspark.worker_util.setup_spark_files``).  Before CPython 3.13 each
+    zip importer then re-reads its archive's whole central directory, and a
+    worker holds one importer per imported sub-package of ``pyspark.zip``,
+    ``py4j-*.zip`` and the spark-core jar: 0.15-0.28 s per task (4 cores)
+    before any data is touched.  The wrapper keeps, per importer, the
+    archive's ``(st_mtime_ns, st_size)`` as of that importer's last read and
+    calls the eager original only when the key is missing or differs, or
+    ``os.stat`` fails.  So the first invalidation per importer reads as
+    before, a rewritten archive is re-read, and ``FileFinder`` invalidation
+    is untouched.
+
+    Acts only where ``pyspark.worker_util`` is loaded, which only Spark's
+    Python worker entry points import (a driver is never patched), and only
+    on Python < 3.13.  From 3.13 on the stdlib invalidation is lazy; remove
+    this function once the package requires 3.13.
+    """
+    if sys.version_info >= (3, 13) or "pyspark.worker_util" not in sys.modules:
+        return
+    import zipimport
+
+    eager = zipimport.zipimporter.invalidate_caches
+    read_as_of = weakref.WeakKeyDictionary()
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        if key is None or read_as_of.get(self) != key:
+            eager(self)
+            read_as_of[self] = key
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_reread_zips_only_when_changed()
 
 
 def default_parallelism() -> int:
