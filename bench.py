@@ -335,35 +335,17 @@ _SERVE_STATE: dict[str, tuple] = {}
 def _ensure_pq_index(spark, sf_dir: str):
     if sf_dir in _SERVE_STATE:
         return _SERVE_STATE[sf_dir]
-    from fs2_kinesis_firehose_spark.operators import pq as PQ
-    from fs2_kinesis_firehose_spark.operators import similarity as S
-    from fs2_kinesis_firehose_spark.queries.cluster_q import (
-        _DIM,
-        _IVF_CELLS,
-        _PQ_ITERS,
-        _PQ_K,
-        _PQ_M,
-    )
+    from fs2_kinesis_firehose_spark.queries.cluster_q import _PQ_K, ivf_pq_index
     from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
     root = scratch_dir("fs2spark-bench-serve", "{h}-{pid}", sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
     head_rows = (
         emb.orderBy("vec_id").limit(_PQ_K).select("vec_id", "embedding").collect()
     )
-    model = PQ.pq_fit(
-        emb, vec_col="embedding", key_col="vec_id",
-        dim=_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS,
-        init_vectors=[[float(x) for x in r["embedding"]] for r in head_rows],
+    model2, codes2, cents2 = ivf_pq_index(
+        spark, emb, [[float(x) for x in r["embedding"]] for r in head_rows], str(root)
     )
-    enc = PQ.pq_encode(emb, model, centroids=cents)
-    PQ.write_pq_index(
-        str(root), model,
-        enc.select("vec_id", "embedding", "pq_code", "ivf_cell"),
-        cell_col="ivf_cell", centroids=cents,
-    )
-    model2, codes2, cents2 = PQ.read_pq_index(spark, str(root))
     qrows = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in head_rows[:3]

@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from fs2_kinesis_firehose_spark.operators.similarity import (
-    _hyperplanes,
     brute_force_topk,
+    lsh_probe_buckets,
     random_hyperplane_lsh,
 )
 
@@ -47,18 +47,7 @@ def ann_index_topk(
 ) -> DataFrame:
     """Top-k against the persisted index: the bucket IN-filter becomes a
     partition filter → only probed directories are listed/read."""
-    import numpy as np
-
-    planes = _hyperplanes(dim, n_planes, seed)
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) > 0))
-    probes = {qbucket}
-    if multiprobe_hamming >= 1:
-        probes.update(qbucket ^ (1 << i) for i in range(n_planes))
-    if multiprobe_hamming >= 2:
-        for i in range(n_planes):
-            for j in range(i + 1, n_planes):
-                probes.add(qbucket ^ (1 << i) ^ (1 << j))
+    probes = lsh_probe_buckets(query_vec, dim, n_planes, seed, multiprobe_hamming)
     index = spark.read.parquet(path)
-    candidates = index.filter(index["bucket"].isin(*sorted(probes)))
+    candidates = index.filter(index["bucket"].isin(*probes))
     return brute_force_topk(candidates, query_vec, k, vec_col, key_col)

@@ -74,6 +74,25 @@ def random_hyperplane_lsh(
     return df.withColumn("bucket", bucket)
 
 
+def lsh_probe_buckets(
+    query_vec, dim: int, n_planes: int, seed: int, multiprobe_hamming: int
+) -> list[int]:
+    """The LSH buckets a multi-probe query scans, ascending: the query's own
+    bucket under ``random_hyperplane_lsh``'s planes, plus every bucket one
+    bit flip away (``multiprobe_hamming`` >= 1) and two flips away (>= 2)."""
+    planes = _hyperplanes(dim, n_planes, seed)
+    qv = np.asarray(query_vec, dtype=np.float64)
+    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) > 0))
+    probes = {qbucket}
+    if multiprobe_hamming >= 1:
+        probes.update(qbucket ^ (1 << i) for i in range(n_planes))
+    if multiprobe_hamming >= 2:
+        for i in range(n_planes):
+            for j in range(i + 1, n_planes):
+                probes.add(qbucket ^ (1 << i) ^ (1 << j))
+    return sorted(probes)
+
+
 def ann_topk(
     df_bucketed: DataFrame,
     query_vec: list[float],
@@ -90,17 +109,8 @@ def ann_topk(
     buckets within ``multiprobe_hamming`` bit flips (multi-probe LSH —
     recovers recall lost to boundary effects without touching the rest of the
     corpus)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) > 0))
-    probes = {qbucket}
-    if multiprobe_hamming >= 1:
-        probes.update(qbucket ^ (1 << i) for i in range(n_planes))
-    if multiprobe_hamming >= 2:
-        for i in range(n_planes):
-            for j in range(i + 1, n_planes):
-                probes.add(qbucket ^ (1 << i) ^ (1 << j))
-    candidates = df_bucketed.filter(F.col("bucket").isin(*sorted(probes)))
+    probes = lsh_probe_buckets(query_vec, dim, n_planes, seed, multiprobe_hamming)
+    candidates = df_bucketed.filter(F.col("bucket").isin(*probes))
     return brute_force_topk(candidates, query_vec, k, vec_col, key_col)
 
 

@@ -129,15 +129,16 @@ _WINDOW_PRIORITY: list[str] = [
 
 def load_all() -> None:
     """Import every module that registers queries, then apply the explicit
-    driver-window ordering (idempotent)."""
+    driver-window ordering (idempotent).  Past the window, the import order
+    below is the registration order."""
     from fs2_kinesis_firehose_spark.queries import (  # noqa: F401
         cluster_q,
         curation_q,
         dq_q,
         format_q,
+        llm,
         graph_q,
         layout_q,
-        llm,
         relational,
         retrieval_q,
         robust_q,

@@ -18,16 +18,18 @@ from pyspark.sql import functions as F
 from fs2_kinesis_firehose_spark.operators import kmeans as KM
 from fs2_kinesis_firehose_spark.operators.similarity import _seq_sq_norm
 from fs2_kinesis_firehose_spark.queries import query
+from fs2_kinesis_firehose_spark.queries._sql import CELLS_SQL, cell_pos, probe_cells
 from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
 _K = 8
 _ITERS = 3
 _DIM = 64
+_PTS = "pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
 
 
 def _kmeans_oracle(k: int, iters: int, dim: int) -> str:
     ctes = [
-        "pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
+        _PTS,
         f"""c0 AS (
         SELECT CAST(rn - 1 AS INT) AS cluster, v AS c
         FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM pts)
@@ -104,6 +106,9 @@ _PQ_M = 4
 _PQ_K = 16
 _PQ_ITERS = 2
 _PQ_SUB = _DIM // _PQ_M
+_PQ_CAND = 50
+_IVF_CELLS = 16
+_IVF_NPROBE = 4
 
 
 def _pq_subspace_kmeans_ctes(
@@ -163,36 +168,96 @@ def _pq_subspace_kmeans_ctes(
     return ctes
 
 
+_FIN = _PQ_ITERS + 1  # the final assignment: a{_FIN}_j are subspace j's codes
+
+
+def _pq_fit_ctes() -> list[str]:
+    """``pts``, the m per-subspace kmeans replays, and the lowest-vec_id
+    query vector ``q``."""
+    ctes = [_PTS]
+    for j in range(_PQ_M):
+        ctes.extend(_pq_subspace_kmeans_ctes(j, _PQ_K, _PQ_ITERS, _PQ_SUB))
+    ctes.append("q AS (SELECT v FROM pts ORDER BY vec_id LIMIT 1)")
+    return ctes
+
+
+def _lut_ctes(lut: str, cols: str, qv: str, src: str) -> list[str]:
+    """The query LUTs ``{lut}_j``: the exact subdistance of ``qv``'s slice j
+    to every centroid of codebook j, one CTE per subspace."""
+    return [
+        f"""{lut}_{j} AS (
+        SELECT {cols},
+               list_inner_product(c.c, c.c)
+               - 2.0 * list_inner_product({qv}[{j * _PQ_SUB + 1}:{(j + 1) * _PQ_SUB}], c.c) AS dist
+        FROM c{_PQ_ITERS}_{j} c CROSS JOIN {src}
+    )"""
+        for j in range(_PQ_M)
+    ]
+
+
+def _adc_joins(lut: str) -> tuple[str, str]:
+    """(joins of every subspace's code a{j} and LUT row l{j} onto a0, the
+    left-to-right ADC sum the Spark side compiles)."""
+    joins = "\n        ".join(
+        f"JOIN a{_FIN}_{j} a{j} ON a{j}.vec_id = a0.vec_id\n        "
+        f"JOIN {lut}_{j} l{j} ON l{j}.cluster = a{j}.cluster"
+        if j else f"JOIN {lut}_0 l0 ON l0.cluster = a0.cluster"
+        for j in range(_PQ_M)
+    )
+    return joins, " + ".join(f"l{j}.dist" for j in range(_PQ_M))
+
+
+def _adc_candidates(lut: str, probe_filter: str) -> str:
+    """The {_PQ_CAND} codes with the smallest ADC sum over ``{lut}_j``,
+    among the rows ``probe_filter`` keeps."""
+    joins, est_sum = _adc_joins(lut)
+    return f"""
+        SELECT a0.vec_id
+        FROM a{_FIN}_0 a0
+        {joins}
+        {probe_filter}
+        ORDER BY ROUND({est_sum}, 6), a0.vec_id
+        LIMIT {_PQ_CAND}
+    """
+
+
+def _in_probed_cells(probe: str) -> str:
+    """Keeps the candidates whose cell is among ``probe``'s cells."""
+    return f"""JOIN cellv cv ON cv.vec_id = a0.vec_id
+        CROSS JOIN {probe}
+        WHERE list_contains({probe}.cells, cv.cellpos)"""
+
+
+def _rescored_top10(cols: str, cand: str, pts: str, q: str) -> str:
+    """Exact-L2² re-rank of the ``cand`` rows against ``{q}.v``: the
+    list_inner_product terms in the identical a − 2·b + c order the Spark
+    side compiles."""
+    l2 = (
+        f"ROUND(list_inner_product(p.v, p.v)\n"
+        f"                 - 2.0 * list_inner_product(p.v, {q}.v)\n"
+        f"                 + list_inner_product({q}.v, {q}.v), 6)"
+    )
+    return f"""
+    SELECT {cols},
+           {l2} AS l2_dist
+    FROM {cand} c JOIN {pts} p ON p.vec_id = c.vec_id CROSS JOIN {q}
+    ORDER BY {l2}, c.vec_id
+    LIMIT 10
+    """
+
+
 def _pq_oracle() -> str:
     """Full replay: m per-subspace kmeans fits, the per-vector codes (final
     assignments), the query's LUT (exact subdistances to every subspace
     centroid), and the left-to-right ADC sum — the identical chained
     addition the Spark side compiles, so even the float estimates hash."""
-    fin = _PQ_ITERS + 1
-    ctes = ["pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"]
-    for j in range(_PQ_M):
-        ctes.extend(_pq_subspace_kmeans_ctes(j, _PQ_K, _PQ_ITERS, _PQ_SUB))
-    ctes.append("q AS (SELECT v FROM pts ORDER BY vec_id LIMIT 1)")
-    for j in range(_PQ_M):
-        lo, hi = j * _PQ_SUB + 1, (j + 1) * _PQ_SUB
-        ctes.append(f"""lut_{j} AS (
-        SELECT c.cluster,
-               list_inner_product(c.c, c.c)
-               - 2.0 * list_inner_product(q.v[{lo}:{hi}], c.c) AS dist
-        FROM c{_PQ_ITERS}_{j} c CROSS JOIN q
-    )""")
-    joins = "\n        ".join(
-        f"JOIN a{fin}_{j} a{j} ON a{j}.vec_id = a0.vec_id\n        "
-        f"JOIN lut_{j} l{j} ON l{j}.cluster = a{j}.cluster"
-        if j else f"JOIN lut_0 l0 ON l0.cluster = a0.cluster"
-        for j in range(_PQ_M)
-    )
-    est_sum = " + ".join(f"l{j}.dist" for j in range(_PQ_M))
+    ctes = _pq_fit_ctes() + _lut_ctes("lut", "c.cluster", "q.v", "q")
+    joins, est_sum = _adc_joins("lut")
     joined = ",\n    ".join(ctes)
     return f"""
     WITH {joined}
     SELECT a0.vec_id, ROUND({est_sum}, 6) AS adc_dist
-    FROM a{fin}_0 a0
+    FROM a{_FIN}_0 a0
         {joins}
     ORDER BY ROUND({est_sum}, 6), a0.vec_id
     LIMIT 10
@@ -208,18 +273,53 @@ def _ordered_head_vectors(emb, n: int) -> list[list[float]]:
     return [[float(x) for x in r["embedding"]] for r in rows]
 
 
+def _pq_fit_encode(emb: DataFrame, init_vectors, centroids) -> tuple[dict, DataFrame]:
+    """The catalog's PQ model (_PQ_M codebooks of _PQ_K centroids, _PQ_ITERS
+    Lloyd iterations) fit on ``emb``, and ``emb`` encoded with it;
+    ``init_vectors`` and ``centroids`` pass through to pq_fit / pq_encode."""
+    from fs2_kinesis_firehose_spark.operators import pq as PQ
+
+    model = PQ.pq_fit(
+        emb, vec_col="embedding", key_col="vec_id",
+        dim=_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS, init_vectors=init_vectors,
+    )
+    return model, PQ.pq_encode(emb, model, centroids=centroids)
+
+
+def _write_ivf_pq_index(path: str, model: dict, enc: DataFrame, cents) -> None:
+    """Persist the encoded corpus as an IVF+PQ index, codes partitioned by
+    their ``ivf_cell`` (the inverted lists)."""
+    from fs2_kinesis_firehose_spark.operators import pq as PQ
+
+    PQ.write_pq_index(
+        path,
+        model,
+        enc.select("vec_id", "embedding", "pq_code", "ivf_cell"),
+        cell_col="ivf_cell",
+        centroids=cents,
+    )
+
+
+def ivf_pq_index(spark: SparkSession, emb: DataFrame, head, path: str):
+    """Fit (first-k init from ``head``), encode and cell-assign ``emb``
+    once, write the IVF+PQ index to ``path`` and read it back:
+    ``(model, codes, centroids)`` from the persisted artifacts."""
+    from fs2_kinesis_firehose_spark.operators import pq as PQ
+    from fs2_kinesis_firehose_spark.operators import similarity as S
+
+    cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
+    model, enc = _pq_fit_encode(emb, head, cents)
+    _write_ivf_pq_index(path, model, enc, cents)
+    return PQ.read_pq_index(spark, path)
+
+
 def _pq_adc_topk(spark: SparkSession, sf_dir: str, lut_mode: str) -> DataFrame:
     from fs2_kinesis_firehose_spark.operators import pq as PQ
 
     emb = load_table(spark, sf_dir, "embeddings")
     head = _ordered_head_vectors(emb, _PQ_K)
-    model = PQ.pq_fit(
-        emb, vec_col="embedding", key_col="vec_id",
-        dim=_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS, init_vectors=head,
-    )
-    q = head[0]
-    enc = PQ.pq_encode(emb, model)
-    return PQ.pq_topk(enc, model, q, 10, key_col="vec_id", lut_mode=lut_mode)
+    model, enc = _pq_fit_encode(emb, head, None)
+    return PQ.pq_topk(enc, model, head[0], 10, key_col="vec_id", lut_mode=lut_mode)
 
 
 @query("pq_adc_topk", oracle=_pq_oracle())
@@ -249,83 +349,14 @@ def pq_adc_bcast_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_adc_topk(spark, sf_dir, "broadcast")
 
 
-_PQ_CAND = 50
-
-
 def _pq_rescored_oracle() -> str:
     """ADC candidate CTE (the pq_adc_topk replay with LIMIT C) + exact-L2²
-    re-rank over the candidates: list_inner_product terms in the identical
-    a − 2·b + c order the Spark side compiles."""
-    fin = _PQ_ITERS + 1
-    ctes = ["pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"]
-    for j in range(_PQ_M):
-        ctes.extend(_pq_subspace_kmeans_ctes(j, _PQ_K, _PQ_ITERS, _PQ_SUB))
-    ctes.append("q AS (SELECT v FROM pts ORDER BY vec_id LIMIT 1)")
-    for j in range(_PQ_M):
-        lo, hi = j * _PQ_SUB + 1, (j + 1) * _PQ_SUB
-        ctes.append(f"""lut_{j} AS (
-        SELECT c.cluster,
-               list_inner_product(c.c, c.c)
-               - 2.0 * list_inner_product(q.v[{lo}:{hi}], c.c) AS dist
-        FROM c{_PQ_ITERS}_{j} c CROSS JOIN q
-    )""")
-    joins = "\n        ".join(
-        f"JOIN a{fin}_{j} a{j} ON a{j}.vec_id = a0.vec_id\n        "
-        f"JOIN lut_{j} l{j} ON l{j}.cluster = a{j}.cluster"
-        if j else f"JOIN lut_0 l0 ON l0.cluster = a0.cluster"
-        for j in range(_PQ_M)
-    )
-    est_sum = " + ".join(f"l{j}.dist" for j in range(_PQ_M))
-    ctes.append(f"""cand AS (
-        SELECT a0.vec_id
-        FROM a{fin}_0 a0
-        {joins}
-        ORDER BY ROUND({est_sum}, 6), a0.vec_id
-        LIMIT {_PQ_CAND}
-    )""")
+    re-rank over the candidates."""
+    ctes = _pq_fit_ctes() + _lut_ctes("lut", "c.cluster", "q.v", "q")
+    ctes.append(f"cand AS ({_adc_candidates('lut', '')})")
     joined = ",\n    ".join(ctes)
     return f"""
-    WITH {joined}
-    SELECT c.vec_id,
-           ROUND(list_inner_product(p.v, p.v)
-                 - 2.0 * list_inner_product(p.v, q.v)
-                 + list_inner_product(q.v, q.v), 6) AS l2_dist
-    FROM cand c JOIN pts p ON p.vec_id = c.vec_id CROSS JOIN q
-    ORDER BY ROUND(list_inner_product(p.v, p.v)
-                   - 2.0 * list_inner_product(p.v, q.v)
-                   + list_inner_product(q.v, q.v), 6), c.vec_id
-    LIMIT 10
-    """
-
-
-_IVF_CELLS = 16
-_IVF_NPROBE = 4
-
-
-def _ivf_cell_sql() -> tuple[str, str]:
-    """(probe-cells expr over ``q.v``, per-row cellpos expr over ``p.v``) for
-    the seeded Voronoi centroids — identical literal centroids and
-    sequential-fold arithmetic as ``ivf_assign``/``ivf_probe_cells`` (the
-    ``_ivf_oracle`` pattern in queries/llm.py, 1-based on the SQL side)."""
-    from fs2_kinesis_firehose_spark.operators import similarity as S
-
-    cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
-    cent_sql = ["[" + ", ".join(repr(float(x)) for x in c) + "]" for c in cents]
-    c2 = [repr(_seq_sq_norm(c)) for c in cents]
-
-    def dist_list(vec: str) -> str:
-        return (
-            "["
-            + ", ".join(
-                f"{c2[i]} - 2.0 * list_inner_product({vec}, {cent_sql[i]})"
-                for i in range(len(cents))
-            )
-            + "]"
-        )
-
-    probe = f"list_grade_up({dist_list('q.v')})[1:{_IVF_NPROBE}]"
-    cellpos = f"list_position({dist_list('p.v')}, list_min({dist_list('p.v')}))"
-    return probe, cellpos
+    WITH {joined}{_rescored_top10("c.vec_id", "cand", "pts", "q")}"""
 
 
 def _ivf_pq_oracle() -> str:
@@ -334,52 +365,14 @@ def _ivf_pq_oracle() -> str:
     assignment and probe ranking (the _ivf_oracle machinery) filtering the
     ADC candidate pool to the nprobe probed cells, then the exact-L2²
     rescore in the identical a − 2·b + c order."""
-    fin = _PQ_ITERS + 1
-    probe_expr, cellpos_expr = _ivf_cell_sql()
-    ctes = ["pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"]
-    for j in range(_PQ_M):
-        ctes.extend(_pq_subspace_kmeans_ctes(j, _PQ_K, _PQ_ITERS, _PQ_SUB))
-    ctes.append("q AS (SELECT v FROM pts ORDER BY vec_id LIMIT 1)")
-    ctes.append(f"probe AS (SELECT {probe_expr} AS cells FROM q)")
-    ctes.append(f"cellv AS (SELECT p.vec_id, {cellpos_expr} AS cellpos FROM pts p)")
-    for j in range(_PQ_M):
-        lo, hi = j * _PQ_SUB + 1, (j + 1) * _PQ_SUB
-        ctes.append(f"""lut_{j} AS (
-        SELECT c.cluster,
-               list_inner_product(c.c, c.c)
-               - 2.0 * list_inner_product(q.v[{lo}:{hi}], c.c) AS dist
-        FROM c{_PQ_ITERS}_{j} c CROSS JOIN q
-    )""")
-    joins = "\n        ".join(
-        f"JOIN a{fin}_{j} a{j} ON a{j}.vec_id = a0.vec_id\n        "
-        f"JOIN lut_{j} l{j} ON l{j}.cluster = a{j}.cluster"
-        if j else f"JOIN lut_0 l0 ON l0.cluster = a0.cluster"
-        for j in range(_PQ_M)
-    )
-    est_sum = " + ".join(f"l{j}.dist" for j in range(_PQ_M))
-    ctes.append(f"""cand AS (
-        SELECT a0.vec_id
-        FROM a{fin}_0 a0
-        {joins}
-        JOIN cellv cv ON cv.vec_id = a0.vec_id
-        CROSS JOIN probe
-        WHERE list_contains(probe.cells, cv.cellpos)
-        ORDER BY ROUND({est_sum}, 6), a0.vec_id
-        LIMIT {_PQ_CAND}
-    )""")
+    ctes = _pq_fit_ctes()
+    ctes.append(f"probe AS (SELECT {probe_cells('q.v', _IVF_NPROBE)} AS cells FROM q)")
+    ctes.append(f"cellv AS (SELECT p.vec_id, {cell_pos('p.v')} AS cellpos FROM pts p)")
+    ctes += _lut_ctes("lut", "c.cluster", "q.v", "q")
+    ctes.append(f"cand AS ({_adc_candidates('lut', _in_probed_cells('probe'))})")
     joined = ",\n    ".join(ctes)
     return f"""
-    WITH {joined}
-    SELECT c.vec_id,
-           ROUND(list_inner_product(p.v, p.v)
-                 - 2.0 * list_inner_product(p.v, q.v)
-                 + list_inner_product(q.v, q.v), 6) AS l2_dist
-    FROM cand c JOIN pts p ON p.vec_id = c.vec_id CROSS JOIN q
-    ORDER BY ROUND(list_inner_product(p.v, p.v)
-                   - 2.0 * list_inner_product(p.v, q.v)
-                   + list_inner_product(q.v, q.v), 6), c.vec_id
-    LIMIT 10
-    """
+    WITH {joined}{_rescored_top10("c.vec_id", "cand", "pts", "q")}"""
 
 
 @query("ivf_pq_rescored_topk", oracle=_ivf_pq_oracle())
@@ -400,14 +393,9 @@ def ivf_pq_rescored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
     head = _ordered_head_vectors(emb, _PQ_K)
-    model = PQ.pq_fit(
-        emb, vec_col="embedding", key_col="vec_id",
-        dim=_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS, init_vectors=head,
-    )
-    q = head[0]
-    enc = PQ.pq_encode(emb, model, centroids=cents)
+    model, enc = _pq_fit_encode(emb, head, cents)
     return PQ.ivf_pq_rescored_topk(
-        enc, cents, model, q, 10, nprobe=_IVF_NPROBE, candidates=_PQ_CAND
+        enc, cents, model, head[0], 10, nprobe=_IVF_NPROBE, candidates=_PQ_CAND
     )
 
 
@@ -428,30 +416,14 @@ def ivf_pq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     process reuses (after a wipe) its own slot across repeated sweeps
     instead of leaking a fresh mkdtemp per invocation."""
     from fs2_kinesis_firehose_spark.operators import pq as PQ
-    from fs2_kinesis_firehose_spark.operators import similarity as S
 
     root = scratch_dir("fs2spark-pq-index", "{h}-{pid}", sf_dir)
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
     head = _ordered_head_vectors(emb, _PQ_K)
-    model = PQ.pq_fit(
-        emb, vec_col="embedding", key_col="vec_id",
-        dim=_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS, init_vectors=head,
-    )
-    enc = PQ.pq_encode(emb, model, centroids=cents)
-    PQ.write_pq_index(
-        str(root),
-        model,
-        enc.select("vec_id", "embedding", "pq_code", "ivf_cell"),
-        cell_col="ivf_cell",
-        centroids=cents,
-    )
-
-    model2, codes2, cents2 = PQ.read_pq_index(spark, str(root))
-    q = head[0]
+    model2, codes2, cents2 = ivf_pq_index(spark, emb, head, str(root))
     return PQ.ivf_pq_rescored_topk(
-        codes2, cents2, model2, q, 10, nprobe=_IVF_NPROBE, candidates=_PQ_CAND
+        codes2, cents2, model2, head[0], 10, nprobe=_IVF_NPROBE, candidates=_PQ_CAND
     )
 
 
@@ -469,73 +441,42 @@ def pq_rescored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     head = _ordered_head_vectors(emb, _PQ_K)
-    model = PQ.pq_fit(
-        emb, vec_col="embedding", key_col="vec_id",
-        dim=_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS, init_vectors=head,
-    )
-    q = head[0]
-    enc = PQ.pq_encode(emb, model)
-    return PQ.pq_rescored_topk(enc, model, q, 10, candidates=_PQ_CAND)
-
-
-def _cent_literal_sql() -> str:
-    """The seeded IVF centroids as ONE nested SQL list literal (the same
-    repr-exact floats `_ivf_cell_sql` inlines per-distance)."""
-    from fs2_kinesis_firehose_spark.operators import similarity as S
-
-    cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
-    return (
-        "["
-        + ", ".join(
-            "[" + ", ".join(repr(float(x)) for x in c) + "]" for c in cents
-        )
-        + "]"
-    )
+    model, enc = _pq_fit_encode(emb, head, None)
+    return PQ.pq_rescored_topk(enc, model, head[0], 10, candidates=_PQ_CAND)
 
 
 def _ivf_pq_residual_oracle() -> str:
-    """The residual-IVFADC replay: cell assignment + probe ranking (the
-    `_ivf_cell_sql` machinery), residual points r = v − centroid[cell],
-    m per-subspace kmeans fits ON THE RESIDUALS, a PER-CELL LUT from the
-    query residual q − centroid[cell], the in-cell ADC shortlist ranked by
-    LUT sum + the per-cell ‖q − c‖² comparability constant, and the exact
-    rescore on the RAW vectors — every stage bit-restated."""
-    fin = _PQ_ITERS + 1
-    probe_expr, cellpos_expr = _ivf_cell_sql()
-    cent = _cent_literal_sql()
+    """The residual-IVFADC replay: cell assignment + probe ranking,
+    residual points r = v − centroid[cell], m per-subspace kmeans fits ON
+    THE RESIDUALS, a PER-CELL LUT from the query residual q − centroid[cell],
+    the in-cell ADC shortlist ranked by LUT sum + the per-cell ‖q − c‖²
+    comparability constant, and the exact rescore on the RAW vectors —
+    every stage bit-restated."""
     ctes = [
         "raw AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
         "FROM embeddings)",
         "q AS (SELECT v FROM raw ORDER BY vec_id LIMIT 1)",
     ]
-    # cellpos/probe exprs reference p.v / q.v (the _ivf_cell_sql contract)
     ctes.append(
-        f"cellv AS MATERIALIZED (SELECT p.vec_id, {cellpos_expr} AS cellpos "
+        f"cellv AS MATERIALIZED (SELECT p.vec_id, {cell_pos('p.v')} AS cellpos "
         "FROM raw p)"
     )
-    ctes.append(f"probe AS (SELECT {probe_expr} AS cells FROM q)")
+    ctes.append(f"probe AS (SELECT {probe_cells('q.v', _IVF_NPROBE)} AS cells FROM q)")
     ctes.append(f"""pts AS MATERIALIZED (
         SELECT r.vec_id,
-               [r.v[i] - ({cent})[cv.cellpos][i] FOR i IN range(1, {_DIM + 1})] AS v
+               [r.v[i] - ({CELLS_SQL})[cv.cellpos][i] FOR i IN range(1, {_DIM + 1})] AS v
         FROM raw r JOIN cellv cv USING (vec_id)
     )""")
     for j in range(_PQ_M):
         ctes.extend(_pq_subspace_kmeans_ctes(j, _PQ_K, _PQ_ITERS, _PQ_SUB))
     ctes.append(f"""qrn AS (
         SELECT u.cell,
-               [q.v[i] - ({cent})[u.cell][i] FOR i IN range(1, {_DIM + 1})] AS v
+               [q.v[i] - ({CELLS_SQL})[u.cell][i] FOR i IN range(1, {_DIM + 1})] AS v
         FROM (SELECT UNNEST(cells) AS cell FROM probe) u CROSS JOIN q
     )""")
-    for j in range(_PQ_M):
-        lo, hi = j * _PQ_SUB + 1, (j + 1) * _PQ_SUB
-        ctes.append(f"""lutr_{j} AS (
-        SELECT qr.cell, c.cluster,
-               list_inner_product(c.c, c.c)
-               - 2.0 * list_inner_product(qr.v[{lo}:{hi}], c.c) AS dist
-        FROM c{_PQ_ITERS}_{j} c CROSS JOIN qrn qr
-    )""")
+    ctes += _lut_ctes("lutr", "qr.cell, c.cluster", "qr.v", "qrn qr")
     joins = "\n        ".join(
-        f"JOIN a{fin}_{j} a{j} ON a{j}.vec_id = a0.vec_id\n        "
+        f"JOIN a{_FIN}_{j} a{j} ON a{j}.vec_id = a0.vec_id\n        "
         f"JOIN lutr_{j} l{j} ON l{j}.cell = cv.cellpos "
         f"AND l{j}.cluster = a{j}.cluster"
         if j
@@ -548,7 +489,7 @@ def _ivf_pq_residual_oracle() -> str:
     )
     ctes.append(f"""cand AS (
         SELECT a0.vec_id
-        FROM a{fin}_0 a0
+        FROM a{_FIN}_0 a0
         JOIN cellv cv ON cv.vec_id = a0.vec_id
         JOIN qrn qn ON qn.cell = cv.cellpos
         {joins}
@@ -557,17 +498,7 @@ def _ivf_pq_residual_oracle() -> str:
     )""")
     joined = ",\n    ".join(ctes)
     return f"""
-    WITH {joined}
-    SELECT c.vec_id,
-           ROUND(list_inner_product(p.v, p.v)
-                 - 2.0 * list_inner_product(p.v, q.v)
-                 + list_inner_product(q.v, q.v), 6) AS l2_dist
-    FROM cand c JOIN raw p ON p.vec_id = c.vec_id CROSS JOIN q
-    ORDER BY ROUND(list_inner_product(p.v, p.v)
-                   - 2.0 * list_inner_product(p.v, q.v)
-                   + list_inner_product(q.v, q.v), 6), c.vec_id
-    LIMIT 10
-    """
+    WITH {joined}{_rescored_top10("c.vec_id", "cand", "raw", "q")}"""
 
 
 def _residual_ivfadc(spark: SparkSession, sf_dir: str, lut_mode: str) -> DataFrame:
@@ -600,8 +531,6 @@ def _residual_ivfadc(spark: SparkSession, sf_dir: str, lut_mode: str) -> DataFra
         enc, cents, model, q, 10,
         nprobe=_IVF_NPROBE, candidates=_PQ_CAND, lut_mode=lut_mode,
     )
-
-
 @query("ivf_pq_residual_rescored_topk", oracle=_ivf_pq_residual_oracle())
 def ivf_pq_residual_rescored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual IVFADC (operators/pq.py:ivf_pq_residual_rescored_topk) —
@@ -633,6 +562,8 @@ def ivf_pq_residual_bcast_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _residual_ivfadc(spark, sf_dir, "broadcast")
 
 
+
+
 def _ivf_pq_multi_oracle(nq: int = 3, fit_where: str | None = None) -> str:
     """Multi-query IVFADC replay: the corpus-side fits (per-subspace kmeans
     chains, cell assignment) are built ONCE and marked MATERIALIZED (they
@@ -640,8 +571,6 @@ def _ivf_pq_multi_oracle(nq: int = 3, fit_where: str | None = None) -> str:
     every kmeans chain nq times — the classifier-oracle lesson), then each
     query rank r gets its own probe/LUT/candidate/rescore chain tagged
     ``query_id``, UNION ALL'd."""
-    fin = _PQ_ITERS + 1
-    probe_expr, cellpos_expr = _ivf_cell_sql()
     ctes = [
         "pts AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
         "FROM embeddings)"
@@ -653,11 +582,11 @@ def _ivf_pq_multi_oracle(nq: int = 3, fit_where: str | None = None) -> str:
             # the final codes (a{fin}_j) and codebook (c{iters}_j) are read
             # once per query — materialize them; intermediate iterations
             # stay inline (single reference each)
-            for name in (f"a{fin}_{j} AS (", f"c{_PQ_ITERS}_{j} AS ("):
+            for name in (f"a{_FIN}_{j} AS (", f"c{_PQ_ITERS}_{j} AS ("):
                 cte = cte.replace(name, name.replace(" AS (", " AS MATERIALIZED ("))
             ctes.append(cte)
     ctes.append(
-        f"cellv AS MATERIALIZED (SELECT p.vec_id, {cellpos_expr} AS cellpos "
+        f"cellv AS MATERIALIZED (SELECT p.vec_id, {cell_pos('p.v')} AS cellpos "
         "FROM pts p)"
     )
     finals = []
@@ -668,45 +597,16 @@ def _ivf_pq_multi_oracle(nq: int = 3, fit_where: str | None = None) -> str:
             f"ORDER BY vec_id LIMIT 1 OFFSET {r})"
         )
         ctes.append(
-            f"probe{r} AS (SELECT {probe_expr.replace('q.v', f'{qn}.v')} AS cells "
+            f"probe{r} AS (SELECT {probe_cells(f'{qn}.v', _IVF_NPROBE)} AS cells "
             f"FROM {qn})"
         )
-        for j in range(_PQ_M):
-            lo, hi = j * _PQ_SUB + 1, (j + 1) * _PQ_SUB
-            ctes.append(f"""lut{r}_{j} AS (
-        SELECT c.cluster,
-               list_inner_product(c.c, c.c)
-               - 2.0 * list_inner_product({qn}.v[{lo}:{hi}], c.c) AS dist
-        FROM c{_PQ_ITERS}_{j} c CROSS JOIN {qn}
-    )""")
-        joins = "\n        ".join(
-            f"JOIN a{fin}_{j} a{j} ON a{j}.vec_id = a0.vec_id\n        "
-            f"JOIN lut{r}_{j} l{j} ON l{j}.cluster = a{j}.cluster"
-            if j else f"JOIN lut{r}_0 l0 ON l0.cluster = a0.cluster"
-            for j in range(_PQ_M)
+        ctes += _lut_ctes(f"lut{r}", "c.cluster", f"{qn}.v", qn)
+        ctes.append(
+            f"cand{r} AS ({_adc_candidates(f'lut{r}', _in_probed_cells(f'probe{r}'))})"
         )
-        est_sum = " + ".join(f"l{j}.dist" for j in range(_PQ_M))
-        ctes.append(f"""cand{r} AS (
-        SELECT a0.vec_id
-        FROM a{fin}_0 a0
-        {joins}
-        JOIN cellv cv ON cv.vec_id = a0.vec_id
-        CROSS JOIN probe{r}
-        WHERE list_contains(probe{r}.cells, cv.cellpos)
-        ORDER BY ROUND({est_sum}, 6), a0.vec_id
-        LIMIT {_PQ_CAND}
-    )""")
-        finals.append(f"""(
-    SELECT {qn}.qid AS query_id, c.vec_id,
-           ROUND(list_inner_product(p.v, p.v)
-                 - 2.0 * list_inner_product(p.v, {qn}.v)
-                 + list_inner_product({qn}.v, {qn}.v), 6) AS l2_dist
-    FROM cand{r} c JOIN pts p ON p.vec_id = c.vec_id CROSS JOIN {qn}
-    ORDER BY ROUND(list_inner_product(p.v, p.v)
-                   - 2.0 * list_inner_product(p.v, {qn}.v)
-                   + list_inner_product({qn}.v, {qn}.v), 6), c.vec_id
-    LIMIT 10
-    )""")
+        finals.append(
+            f"({_rescored_top10(f'{qn}.qid AS query_id, c.vec_id', f'cand{r}', 'pts', qn)})"
+        )
     joined = ",\n    ".join(ctes)
     return f"WITH {joined}\n" + "\n    UNION ALL\n".join(finals)
 
@@ -741,18 +641,8 @@ def ivf_pq_append_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth = emb.filter(F.col("vec_id") % 2 == 1)
 
     cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
-    model = PQ.pq_fit(
-        base, vec_col="embedding", key_col="vec_id",
-        dim=_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS,
-    )
-    enc = PQ.pq_encode(base, model, centroids=cents)
-    PQ.write_pq_index(
-        str(root),
-        model,
-        enc.select("vec_id", "embedding", "pq_code", "ivf_cell"),
-        cell_col="ivf_cell",
-        centroids=cents,
-    )
+    model, enc = _pq_fit_encode(base, None, cents)
+    _write_ivf_pq_index(str(root), model, enc, cents)
     PQ.append_pq_index(
         spark, str(root), growth.select("vec_id", "embedding"), blas=True
     )
@@ -766,7 +656,6 @@ def ivf_pq_append_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes2, cents2, model2, qrows, 10,
         nprobe=_IVF_NPROBE, candidates=_PQ_CAND,
     )
-
 
 @query("streaming_ann_serving_topk", oracle=_ivf_pq_multi_oracle(3))
 def streaming_ann_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -789,7 +678,6 @@ def streaming_ann_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from fs2_kinesis_firehose_spark.operators import pq as PQ
-    from fs2_kinesis_firehose_spark.operators import similarity as S
     from fs2_kinesis_firehose_spark.streaming.replay import run_foreach_batch
 
     root = scratch_dir("fs2spark-ann-serving", "{h}-{pid}", sf_dir)
@@ -799,24 +687,13 @@ def streaming_ann_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = S.seeded_centroids(_DIM, _IVF_CELLS, seed=7, scale=0.125)
     # ONE ordered collect serves the fit init (first-k rule) AND the
     # 3-query feed below (lowest-vec_id probes) — r14
     head_rows = (
         emb.orderBy("vec_id").limit(_PQ_K).select("vec_id", "embedding").collect()
     )
     head = [[float(x) for x in r["embedding"]] for r in head_rows]
-    model = PQ.pq_fit(
-        emb, vec_col="embedding", key_col="vec_id",
-        dim=_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS, init_vectors=head,
-    )
-    enc = PQ.pq_encode(emb, model, centroids=cents)
-    PQ.write_pq_index(
-        idx_dir, model,
-        enc.select("vec_id", "embedding", "pq_code", "ivf_cell"),
-        cell_col="ivf_cell", centroids=cents,
-    )
-    model2, codes2, cents2 = PQ.read_pq_index(spark, idx_dir)
+    model2, codes2, cents2 = ivf_pq_index(spark, emb, head, idx_dir)
 
     # the query feed: 3 lowest-vec_id embeddings, ONE FILE EACH so
     # maxFilesPerTrigger=1 serves them in 3 separate micro-batches.

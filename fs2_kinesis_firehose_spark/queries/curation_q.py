@@ -179,14 +179,18 @@ def packed_sequence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "doc_chunk_stats",
-    oracle=r"""
-    WITH toks AS (
+# each non-blank document's whitespace tokens (functions/text.tokens)
+_NONEMPTY_TOKS = r"""toks AS (
         SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
         FROM documents
         WHERE length(trim(text)) > 0
-    ),
+    )"""
+
+
+@query(
+    "doc_chunk_stats",
+    oracle=f"""
+    WITH {_NONEMPTY_TOKS},
     chunks AS (
         SELECT doc_id,
                CAST(s.start AS INT) // 48 AS chunk_idx,
@@ -454,12 +458,8 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "repeated_chunk_stats",
-    oracle=r"""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        FROM documents
-        WHERE length(trim(text)) > 0
-    ),
+    oracle=f"""
+    WITH {_NONEMPTY_TOKS},
     chunks AS (
         SELECT doc_id,
                md5(array_to_string(

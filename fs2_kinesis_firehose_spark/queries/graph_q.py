@@ -28,11 +28,83 @@ from fs2_kinesis_firehose_spark.operators.graph import (
     triangle_counts,
 )
 from fs2_kinesis_firehose_spark.queries import query
-from fs2_kinesis_firehose_spark.queries.llm import _DUCK_SHINGLES
+from fs2_kinesis_firehose_spark.queries._sql import NEAR_DUP_PAIRS, PAIR_CTES
 from fs2_kinesis_firehose_spark.tables import load_table
 
 _ITERATIONS = 3
 _DAMPING = 0.85
+
+# the J >= 0.7 near-dup document pairs (pairs) and the symmetric source
+# graph they induce (sp, edges, nodes)
+_NEAR_DUP_PAIRS = f"""{PAIR_CTES},
+    pairs AS ({NEAR_DUP_PAIRS})"""
+_SOURCE_GRAPH = f"""{_NEAR_DUP_PAIRS},
+    sp AS (
+        SELECT d1.source AS s1, d2.source AS s2
+        FROM pairs p
+        JOIN documents d1 ON p.key1 = d1.doc_id
+        JOIN documents d2 ON p.key2 = d2.doc_id
+    ),
+    edges AS (
+        SELECT DISTINCT src, dst FROM (
+            SELECT s1 AS src, s2 AS dst FROM sp
+            UNION ALL
+            SELECT s2 AS src, s1 AS dst FROM sp
+        )
+    ),
+    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)"""
+
+
+def _source_edges(docs: DataFrame) -> DataFrame:
+    """The source graph of ``_SOURCE_GRAPH``: both directions of every
+    (source, source) pair holding a J >= 0.7 near-dup document pair."""
+    pairs = D.ngram_jaccard_pairs(docs, "text", "doc_id", shingle_n=3, threshold=0.7)
+    d1 = docs.select(F.col("doc_id").alias("key1"), F.col("source").alias("s1"))
+    d2 = docs.select(F.col("doc_id").alias("key2"), F.col("source").alias("s2"))
+    # pairs is the small side (near-dup pairs ≪ corpus): no explicit
+    # broadcast hint — AQE broadcasts pairs at scale, either side here.
+    sp = pairs.join(d1, "key1").join(d2, "key2").select("s1", "s2")
+    return sp.select(F.col("s1").alias("src"), F.col("s2").alias("dst")).union(
+        sp.select(F.col("s2").alias("src"), F.col("s1").alias("dst"))
+    )
+
+
+# the part co-purchase graph: parts u < v linked when an order holds both
+_COPURCHASE_EDGES = """e AS (
+        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+        FROM lineitem a
+        JOIN lineitem b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    )"""
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchase edges (src < dst) with repeats, as the operators
+    take them."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
+    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
+    return a.join(b, "ok").where(F.col("src") < F.col("dst")).select("src", "dst")
+
+
+def _dangling_and_inflow(prev: str) -> str:
+    """One power iteration's joins onto ``v``: the rank mass of dangling
+    nodes in ``prev`` (dm.dmass) and each node's inflow over ``edges``
+    (i.inflow), as operators/graph.py:pagerank computes them."""
+    return f"""
+        CROSS JOIN (
+            SELECT COALESCE(SUM(r.pr), 0.0) AS dmass
+            FROM {prev} r LEFT JOIN deg d ON r.node = d.src
+            WHERE d.src IS NULL
+        ) dm
+        LEFT JOIN (
+            SELECT e.dst AS node, SUM(r.pr / d.out_deg) AS inflow
+            FROM edges e
+            JOIN {prev} r ON e.src = r.node
+            JOIN deg d ON e.src = d.src
+            GROUP BY e.dst
+        ) i ON v.node = i.node
+"""
 
 
 def _unrolled_pagerank_sql(iterations: int, damping: float) -> str:
@@ -50,54 +122,14 @@ def _unrolled_pagerank_sql(iterations: int, damping: float) -> str:
                + {damping!r} * (COALESCE(i.inflow, 0.0) + dm.dmass / nn.n) AS pr
         FROM nodes v
         CROSS JOIN nn
-        CROSS JOIN (
-            SELECT COALESCE(SUM(r.pr), 0.0) AS dmass
-            FROM {prev} r LEFT JOIN deg d ON r.node = d.src
-            WHERE d.src IS NULL
-        ) dm
-        LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.pr / d.out_deg) AS inflow
-            FROM edges e
-            JOIN {prev} r ON e.src = r.node
-            JOIN deg d ON e.src = d.src
-            GROUP BY e.dst
-        ) i ON v.node = i.node
-    )""")
+{_dangling_and_inflow(prev)}    )""")
     return ",\n".join(ctes)
 
 
 @query(
     "pagerank_top_sources",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT key1, key2
-        FROM common c
-        JOIN sizes s1 ON c.key1 = s1.doc_id
-        JOIN sizes s2 ON c.key2 = s2.doc_id
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    ),
-    sp AS (
-        SELECT d1.source AS s1, d2.source AS s2
-        FROM pairs p
-        JOIN documents d1 ON p.key1 = d1.doc_id
-        JOIN documents d2 ON p.key2 = d2.doc_id
-    ),
-    edges AS (
-        SELECT DISTINCT src, dst FROM (
-            SELECT s1 AS src, s2 AS dst FROM sp
-            UNION ALL
-            SELECT s2 AS src, s1 AS dst FROM sp
-        )
-    ),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+    WITH {_SOURCE_GRAPH},
     nn AS (SELECT COUNT(*) AS n FROM nodes),
     deg AS (SELECT src, COUNT(*) AS out_deg FROM edges GROUP BY src),
     {_unrolled_pagerank_sql(_ITERATIONS, _DAMPING)}
@@ -109,16 +141,7 @@ def pagerank_top_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-overlap graph: sources linked when they hold a J≥0.7 near-dup
     document pair (symmetrized, deduplicated).  Returns every node's rank —
     ranks sum to 1 over the connected sources."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, "text", "doc_id", shingle_n=3, threshold=0.7)
-    d1 = docs.select(F.col("doc_id").alias("key1"), F.col("source").alias("s1"))
-    d2 = docs.select(F.col("doc_id").alias("key2"), F.col("source").alias("s2"))
-    # pairs is the small side (near-dup pairs ≪ corpus): no explicit
-    # broadcast hint — AQE broadcasts pairs at scale, either side here.
-    sp = pairs.join(d1, "key1").join(d2, "key2").select("s1", "s2")
-    edges = sp.select(F.col("s1").alias("src"), F.col("s2").alias("dst")).union(
-        sp.select(F.col("s2").alias("src"), F.col("s1").alias("dst"))
-    )
+    edges = _source_edges(load_table(spark, sf_dir, "documents"))
     ranks = pagerank(edges, iterations=_ITERATIONS, damping=_DAMPING)
     return ranks.select(
         F.col("node").alias("source"), F.round("rank", 6).alias("rank")
@@ -127,13 +150,8 @@ def pagerank_top_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "part_copurchase_triangles",
-    oracle="""
-    WITH e AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a
-        JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    oracle=f"""
+    WITH {_COPURCHASE_EDGES},
     tri AS (
         SELECT e1.u AS a, e1.v AS b, e2.v AS c
         FROM e e1
@@ -155,10 +173,7 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters.  The oracle restates the orientation-free a<b<c three-way
     join; the engine runs the degree-oriented O(m^{3/2})-bounded plan
     (operators/graph.py:triangle_counts)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    pairs = a.join(b, "ok").where(F.col("src") < F.col("dst")).select("src", "dst")
+    pairs = _copurchase_pairs(spark, sf_dir)
     return triangle_counts(pairs).withColumnRenamed("node", "part")
 
 
@@ -190,21 +205,7 @@ def _unrolled_lpa_sql(iterations: int) -> str:
 @query(
     "doc_community_labels",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT key1, key2
-        FROM common c
-        JOIN sizes s1 ON c.key1 = s1.doc_id
-        JOIN sizes s2 ON c.key2 = s2.doc_id
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    ),
+    WITH {_NEAR_DUP_PAIRS},
     edges AS (
         SELECT DISTINCT src, dst FROM (
             SELECT key1 AS src, key2 AS dst FROM pairs
@@ -242,12 +243,7 @@ _DOULION_P = 0.5
     # point: the estimate is reproducible and cross-engine checkable, not
     # just statistically plausible.
     oracle=f"""
-    WITH e AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a
-        JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    WITH {_COPURCHASE_EDGES},
     s AS (
         SELECT u, v FROM e
         WHERE CAST(CONCAT('0x', SUBSTRING(md5(CONCAT(CAST(u AS VARCHAR), '|',
@@ -275,10 +271,7 @@ def approx_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5 coin makes the sampled count itself oracle-exact.
     pytest (tests/test_graph.py) bounds the estimator's relative error vs
     the exact count."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    pairs = a.join(b, "ok").where(F.col("src") < F.col("dst")).select("src", "dst")
+    pairs = _copurchase_pairs(spark, sf_dir)
     return triangle_count_estimate(pairs, _DOULION_P)
 
 
@@ -313,12 +306,7 @@ def _unrolled_kcore_sql(k: int, rounds: int) -> str:
 @query(
     "part_copurchase_kcore",
     oracle=f"""
-    WITH e AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a
-        JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    WITH {_COPURCHASE_EDGES},
     sym0 AS MATERIALIZED (
         SELECT u AS a, v AS b FROM e
         UNION ALL
@@ -337,10 +325,7 @@ def part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive next to CC / PageRank / triangles / LPA.  The oracle unrolls
     the same peeling {_KCORE_ROUNDS} rounds (idempotent past the fixpoint);
     the engine raises if it would need more."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    pairs = a.join(b, "ok").where(F.col("src") < F.col("dst")).select("src", "dst")
+    pairs = _copurchase_pairs(spark, sf_dir)
     return k_core(pairs, _KCORE_K, max_rounds=_KCORE_ROUNDS).withColumnRenamed(
         "node", "part"
     )
@@ -373,54 +358,14 @@ def _unrolled_ppr_sql(iterations: int, damping: float) -> str:
                ) AS pr
         FROM sv v
         CROSS JOIN nsd
-        CROSS JOIN (
-            SELECT COALESCE(SUM(r.pr), 0.0) AS dmass
-            FROM {prev} r LEFT JOIN deg d ON r.node = d.src
-            WHERE d.src IS NULL
-        ) dm
-        LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.pr / d.out_deg) AS inflow
-            FROM edges e
-            JOIN {prev} r ON e.src = r.node
-            JOIN deg d ON e.src = d.src
-            GROUP BY e.dst
-        ) i ON v.node = i.node
-    )""")
+{_dangling_and_inflow(prev)}    )""")
     return ",\n".join(ctes)
 
 
 @query(
     "ppr_seed_sources",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT key1, key2
-        FROM common c
-        JOIN sizes s1 ON c.key1 = s1.doc_id
-        JOIN sizes s2 ON c.key2 = s2.doc_id
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    ),
-    sp AS (
-        SELECT d1.source AS s1, d2.source AS s2
-        FROM pairs p
-        JOIN documents d1 ON p.key1 = d1.doc_id
-        JOIN documents d2 ON p.key2 = d2.doc_id
-    ),
-    edges AS (
-        SELECT DISTINCT src, dst FROM (
-            SELECT s1 AS src, s2 AS dst FROM sp
-            UNION ALL
-            SELECT s2 AS src, s1 AS dst FROM sp
-        )
-    ),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+    WITH {_SOURCE_GRAPH},
     sv AS (SELECT node, node LIKE '%1%' AS is_seed FROM nodes),
     nsd AS (SELECT COUNT(*) AS ns FROM sv WHERE is_seed),
     deg AS (SELECT src, COUNT(*) AS out_deg FROM edges GROUP BY src),
@@ -438,13 +383,7 @@ def ppr_seed_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle replays every iteration as unrolled CTEs, exactly like the
     classic-PageRank query."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, "text", "doc_id", shingle_n=3, threshold=0.7)
-    d1 = docs.select(F.col("doc_id").alias("key1"), F.col("source").alias("s1"))
-    d2 = docs.select(F.col("doc_id").alias("key2"), F.col("source").alias("s2"))
-    sp = pairs.join(d1, "key1").join(d2, "key2").select("s1", "s2")
-    edges = sp.select(F.col("s1").alias("src"), F.col("s2").alias("dst")).union(
-        sp.select(F.col("s2").alias("src"), F.col("s1").alias("dst"))
-    )
+    edges = _source_edges(docs)
     seeds = (
         docs.select(F.col("source").alias("node"))
         .where(F.col("node").like("%1%"))

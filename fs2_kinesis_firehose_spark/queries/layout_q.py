@@ -25,28 +25,95 @@ from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 # would prune on one dimension only).
 _BOX = {"user_id": (20.0, 50.0), "value": (50.0, 150.0)}
 
-# The oracle recomputes the ENTIRE layout in SQL: identical min-max grid
-# scaling (same double arithmetic, same clamps), identical Morton bit
-# interleave (col i bit b → position 2b+i), identical top-4-bit bucket
-# assignment, then per-bucket min/max boxes and the conjunctive-range
-# pruning decision.  A scaling/interleave/bucketing bug on the Spark side,
-# or footer stats that disagree with the data, breaks the hash.
-_ZORDER_ORACLE = """
-    WITH b AS (
+
+def _grid_ctes(top: int) -> str:
+    """``b``: the min/max of events(user_id, value); ``g``: every event's
+    cell (ug, vg) on the [0, top] min-max grid, with layout.py's scaling
+    and clamps."""
+    return f"""b AS (
         SELECT MIN(CAST(user_id AS DOUBLE)) AS lo_u, MAX(CAST(user_id AS DOUBLE)) AS hi_u,
                MIN(CAST(value   AS DOUBLE)) AS lo_v, MAX(CAST(value   AS DOUBLE)) AS hi_v
         FROM events
     ),
     g AS (
         SELECT event_id, user_id, value,
-               CASE WHEN hi_u > lo_u THEN LEAST(65535, GREATEST(0,
-                    CAST(FLOOR((CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) * 65535) AS BIGINT)))
+               CASE WHEN hi_u > lo_u THEN LEAST({top}, GREATEST(0,
+                    CAST(FLOOR((CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) * {top}) AS BIGINT)))
                     ELSE 0 END AS ug,
-               CASE WHEN hi_v > lo_v THEN LEAST(65535, GREATEST(0,
-                    CAST(FLOOR((CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) * 65535) AS BIGINT)))
+               CASE WHEN hi_v > lo_v THEN LEAST({top}, GREATEST(0,
+                    CAST(FLOOR((CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) * {top}) AS BIGINT)))
                     ELSE 0 END AS vg
         FROM events, b
-    ),
+    )"""
+
+
+# Over the per-file boxes ``fk`` (bucket, flo_u, fhi_u, flo_v, fhi_v, n):
+# the files the _BOX predicate opens and the scan accounting.
+_BOX_PRUNING = """
+    op AS (
+        SELECT * FROM fk
+        WHERE NOT (fhi_u < 20.0 OR flo_u > 50.0 OR fhi_v < 50.0 OR flo_v > 150.0)
+    )
+    SELECT (SELECT COUNT(*) FROM fk)                     AS n_files_total,
+           (SELECT COUNT(*) FROM op)                     AS n_files_opened,
+           (SELECT CAST(SUM(n) AS BIGINT) FROM fk)       AS n_rows_total,
+           (SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) FROM op) AS n_rows_scanned,
+           (SELECT COUNT(*) FROM events
+             WHERE user_id BETWEEN 20.0 AND 50.0
+               AND value   BETWEEN 50.0 AND 150.0)       AS n_rows_match
+"""
+
+
+def _in_box(s: dict) -> bool:
+    """Whether a min/max reader must open the file with footer stats
+    ``s`` for the _BOX predicate (a column without stats cannot prune)."""
+    for c, (qlo, qhi) in _BOX.items():
+        lo, hi = s[c]
+        if lo is None or hi is None:
+            continue
+        if hi < qlo or lo > qhi:
+            return False
+    return True
+
+
+def _pruning_stats(
+    spark: SparkSession, out_dir: str, stats: list[dict], opened: list[dict], match
+) -> DataFrame:
+    """One row: files and rows of the layout in ``out_dir`` in total and
+    in the ``opened`` files, and the rows matching the ``match`` predicate."""
+    n_rows_match = spark.read.parquet(out_dir).filter(match).count()
+    row = (
+        len(stats),
+        len(opened),
+        sum(s["n_rows"] for s in stats),
+        sum(s["n_rows"] for s in opened),
+        n_rows_match,
+    )
+    return spark.createDataFrame(
+        [row],
+        "n_files_total bigint, n_files_opened bigint, n_rows_total bigint, "
+        "n_rows_scanned bigint, n_rows_match bigint",
+    )
+
+def _box_pruning_stats(spark: SparkSession, out_dir: str) -> DataFrame:
+    """_pruning_stats of the (user_id, value) layout in ``out_dir`` for the
+    _BOX predicate, from its real parquet footers."""
+    stats = file_stats(out_dir, ["user_id", "value"])
+    return _pruning_stats(
+        spark, out_dir, stats, [s for s in stats if _in_box(s)],
+        F.col("user_id").between(*_BOX["user_id"])
+        & F.col("value").between(*_BOX["value"]),
+    )
+
+
+# The oracle recomputes the ENTIRE layout in SQL: identical min-max grid
+# scaling (same double arithmetic, same clamps), identical Morton bit
+# interleave (col i bit b → position 2b+i), identical top-4-bit bucket
+# assignment, then per-bucket min/max boxes and the conjunctive-range
+# pruning decision.  A scaling/interleave/bucketing bug on the Spark side,
+# or footer stats that disagree with the data, breaks the hash.
+_ZORDER_ORACLE = f"""
+    WITH {_grid_ctes(65535)},
     z AS (
         SELECT event_id, user_id, value,
                CAST(SUM((((ug >> CAST(i AS INT)) & 1) << (2 * CAST(i AS INT)))
@@ -61,18 +128,7 @@ _ZORDER_ORACLE = """
                COUNT(*) AS n
         FROM z GROUP BY 1
     ),
-    op AS (
-        SELECT * FROM fk
-        WHERE NOT (fhi_u < 20.0 OR flo_u > 50.0 OR fhi_v < 50.0 OR flo_v > 150.0)
-    )
-    SELECT (SELECT COUNT(*) FROM fk)                     AS n_files_total,
-           (SELECT COUNT(*) FROM op)                     AS n_files_opened,
-           (SELECT CAST(SUM(n) AS BIGINT) FROM fk)       AS n_rows_total,
-           (SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) FROM op) AS n_rows_scanned,
-           (SELECT COUNT(*) FROM events
-             WHERE user_id BETWEEN 20.0 AND 50.0
-               AND value   BETWEEN 50.0 AND 150.0)       AS n_rows_match
-"""
+{_BOX_PRUNING}"""
 
 
 @query("zorder_pruning_stats", oracle=_ZORDER_ORACLE)
@@ -91,38 +147,7 @@ def zorder_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     zorder_write_bucketed(events, str(out_dir), ["user_id", "value"], bits=16, n_buckets=16)
 
-    stats = file_stats(str(out_dir), ["user_id", "value"])
-
-    def hit(s: dict) -> bool:
-        for c, (qlo, qhi) in _BOX.items():
-            lo, hi = s[c]
-            if lo is None or hi is None:
-                continue  # no stats → cannot prune
-            if hi < qlo or lo > qhi:
-                return False
-        return True
-
-    opened = [s for s in stats if hit(s)]
-    n_rows_match = (
-        spark.read.parquet(str(out_dir))
-        .filter(
-            F.col("user_id").between(*_BOX["user_id"])
-            & F.col("value").between(*_BOX["value"])
-        )
-        .count()
-    )
-    row = (
-        len(stats),
-        len(opened),
-        sum(s["n_rows"] for s in stats),
-        sum(s["n_rows"] for s in opened),
-        n_rows_match,
-    )
-    return spark.createDataFrame(
-        [row],
-        "n_files_total bigint, n_files_opened bigint, n_rows_total bigint, "
-        "n_rows_scanned bigint, n_rows_match bigint",
-    )
+    return _box_pruning_stats(spark, str(out_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -233,22 +258,8 @@ def bucketed_colocated_join_revenue(spark: SparkSession, sf_dir: str) -> DataFra
 # CTE (8 levels of quadrant-rank accumulation + rot(n) reflect/swap —
 # exactly the chained projections the Spark side compiles), the top-4-bit
 # bucket assignment, per-bucket min/max boxes, and the pruning decision.
-_HILBERT_ORACLE = """
-    WITH RECURSIVE b AS (
-        SELECT MIN(CAST(user_id AS DOUBLE)) AS lo_u, MAX(CAST(user_id AS DOUBLE)) AS hi_u,
-               MIN(CAST(value   AS DOUBLE)) AS lo_v, MAX(CAST(value   AS DOUBLE)) AS hi_v
-        FROM events
-    ),
-    g AS (
-        SELECT event_id, user_id, value,
-               CASE WHEN hi_u > lo_u THEN LEAST(255, GREATEST(0,
-                    CAST(FLOOR((CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) * 255) AS BIGINT)))
-                    ELSE 0 END AS ug,
-               CASE WHEN hi_v > lo_v THEN LEAST(255, GREATEST(0,
-                    CAST(FLOOR((CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) * 255) AS BIGINT)))
-                    ELSE 0 END AS vg
-        FROM events, b
-    ),
+_HILBERT_ORACLE = f"""
+    WITH RECURSIVE {_grid_ctes(255)},
     walk AS (
         SELECT event_id, user_id, value, ug AS x, vg AS y,
                CAST(0 AS BIGINT) AS d, 7 AS lev
@@ -277,18 +288,7 @@ _HILBERT_ORACLE = """
         FROM walk WHERE lev = -1
         GROUP BY 1
     ),
-    op AS (
-        SELECT * FROM fk
-        WHERE NOT (fhi_u < 20.0 OR flo_u > 50.0 OR fhi_v < 50.0 OR flo_v > 150.0)
-    )
-    SELECT (SELECT COUNT(*) FROM fk)                     AS n_files_total,
-           (SELECT COUNT(*) FROM op)                     AS n_files_opened,
-           (SELECT CAST(SUM(n) AS BIGINT) FROM fk)       AS n_rows_total,
-           (SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) FROM op) AS n_rows_scanned,
-           (SELECT COUNT(*) FROM events
-             WHERE user_id BETWEEN 20.0 AND 50.0
-               AND value   BETWEEN 50.0 AND 150.0)       AS n_rows_match
-"""
+{_BOX_PRUNING}"""
 
 
 @query("hilbert_pruning_stats", oracle=_HILBERT_ORACLE)
@@ -312,38 +312,7 @@ def hilbert_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         events, str(out_dir), ["user_id", "value"], bits=8, n_buckets=16
     )
 
-    stats = file_stats(str(out_dir), ["user_id", "value"])
-
-    def hit(s: dict) -> bool:
-        for c, (qlo, qhi) in _BOX.items():
-            lo, hi = s[c]
-            if lo is None or hi is None:
-                continue
-            if hi < qlo or lo > qhi:
-                return False
-        return True
-
-    opened = [s for s in stats if hit(s)]
-    n_rows_match = (
-        spark.read.parquet(str(out_dir))
-        .filter(
-            F.col("user_id").between(*_BOX["user_id"])
-            & F.col("value").between(*_BOX["value"])
-        )
-        .count()
-    )
-    row = (
-        len(stats),
-        len(opened),
-        sum(s["n_rows"] for s in stats),
-        sum(s["n_rows"] for s in opened),
-        n_rows_match,
-    )
-    return spark.createDataFrame(
-        [row],
-        "n_files_total bigint, n_files_opened bigint, n_rows_total bigint, "
-        "n_rows_scanned bigint, n_rows_match bigint",
-    )
+    return _box_pruning_stats(spark, str(out_dir))
 
 
 # The oracle replays the ENTIRE index: the fixed Z-grid bucket of every
@@ -352,22 +321,8 @@ def hilbert_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket decision, and the resulting scan accounting.  A hash mismatch
 # catches a wrong bit formula, a dropped sidecar row, OR a false negative
 # (the probed event's own bucket failing the membership test).
-_BLOOM_IDX_ORACLE = """
-    WITH b AS (
-        SELECT MIN(CAST(user_id AS DOUBLE)) AS lo_u, MAX(CAST(user_id AS DOUBLE)) AS hi_u,
-               MIN(CAST(value   AS DOUBLE)) AS lo_v, MAX(CAST(value   AS DOUBLE)) AS hi_v
-        FROM events
-    ),
-    g AS (
-        SELECT event_id, user_id, value,
-               CASE WHEN hi_u > lo_u THEN LEAST(65535, GREATEST(0,
-                    CAST(FLOOR((CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) * 65535) AS BIGINT)))
-                    ELSE 0 END AS ug,
-               CASE WHEN hi_v > lo_v THEN LEAST(65535, GREATEST(0,
-                    CAST(FLOOR((CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) * 65535) AS BIGINT)))
-                    ELSE 0 END AS vg
-        FROM events, b
-    ),
+_BLOOM_IDX_ORACLE = f"""
+    WITH {_grid_ctes(65535)},
     z AS (
         SELECT event_id,
                CAST(SUM((((ug >> CAST(i AS INT)) & 1) << (2 * CAST(i AS INT)))
@@ -558,20 +513,7 @@ def range_layout_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         and s["o_totalprice"][1] >= _RANGE_LO
         and s["o_totalprice"][0] <= _RANGE_HI
     ]
-    n_rows_match = (
-        spark.read.parquet(str(out_dir))
-        .filter(F.col("o_totalprice").between(_RANGE_LO, _RANGE_HI))
-        .count()
-    )
-    row = (
-        len(stats),
-        len(opened),
-        sum(s["n_rows"] for s in stats),
-        sum(s["n_rows"] for s in opened),
-        n_rows_match,
-    )
-    return spark.createDataFrame(
-        [row],
-        "n_files_total bigint, n_files_opened bigint, n_rows_total bigint, "
-        "n_rows_scanned bigint, n_rows_match bigint",
+    return _pruning_stats(
+        spark, str(out_dir), stats, opened,
+        F.col("o_totalprice").between(_RANGE_LO, _RANGE_HI),
     )

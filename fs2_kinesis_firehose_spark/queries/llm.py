@@ -17,15 +17,26 @@ from fs2_kinesis_firehose_spark.operators import multimodal as M
 from fs2_kinesis_firehose_spark.operators import similarity as S
 from fs2_kinesis_firehose_spark.operators import textstats as TS
 from fs2_kinesis_firehose_spark.queries import query
+from fs2_kinesis_firehose_spark.queries._sql import (
+    JACCARD,
+    NEAR_DUP_PAIRS,
+    PAIR_CTES,
+    SHINGLES,
+    SIZED_PAIRS,
+    cell_pos,
+    probe_cells,
+    vector_sql,
+)
 from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
-# DuckDB-side shared fragments ------------------------------------------------
-_DUCK_SHINGLES = """
-    SELECT doc_id,
-           list_distinct([array_to_string(words[i:i+2], ' ')
-                          FOR i IN range(1, len(words) - 1)]) AS shingles
-    FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
+# The exact J >= 0.7 pair set: the oracle of every path that must find it
+_JACCARD_PAIRS = f"""
+    SELECT key1, key2,
+           ROUND({JACCARD}, 6) AS jaccard
+    {SIZED_PAIRS}
+    WHERE {JACCARD} >= 0.7
 """
+_JACCARD_ORACLE = f"WITH {PAIR_CTES}{_JACCARD_PAIRS}"
 
 
 # ---------------------------------------------------------------------------
@@ -50,22 +61,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ngram_jaccard_pairs",
-    oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT key1, key2,
-           ROUND(common * 1.0 / (s1.sz + s2.sz - common), 6) AS jaccard
-    FROM common c
-    JOIN sizes s1 ON c.key1 = s1.doc_id
-    JOIN sizes s2 ON c.key2 = s2.doc_id
-    WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    """,
+    oracle=_JACCARD_ORACLE,
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (inverted-index self-join)."""
@@ -76,19 +72,10 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ngram_containment_pairs",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH {PAIR_CTES}
     SELECT key1, key2,
            ROUND(common * 1.0 / LEAST(s1.sz, s2.sz), 6) AS containment
-    FROM common c
-    JOIN sizes s1 ON c.key1 = s1.doc_id
-    JOIN sizes s2 ON c.key2 = s2.doc_id
+    {SIZED_PAIRS}
     WHERE common * 1.0 / LEAST(s1.sz, s2.sz) >= 0.9
     """,
 )
@@ -108,22 +95,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate-generation change with an exactness proof (the smallest
     # common shingle of any qualifying pair sits in BOTH prefixes under the
     # df-ascending total order), so the pair set must match bit-for-bit.
-    oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT key1, key2,
-           ROUND(common * 1.0 / (s1.sz + s2.sz - common), 6) AS jaccard
-    FROM common c
-    JOIN sizes s1 ON c.key1 = s1.doc_id
-    JOIN sizes s2 ON c.key2 = s2.doc_id
-    WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    """,
+    oracle=_JACCARD_ORACLE,
 )
 def prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact J>=0.7 near-dup pairs via PREFIX FILTERING (AllPairs/PPJoin,
@@ -142,7 +114,7 @@ def prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ngram_jaccard_filtered",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
+    WITH sh AS ({SHINGLES}),
     toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     stop AS (
         SELECT shingle FROM toks GROUP BY shingle
@@ -155,12 +127,7 @@ def prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ftoks a JOIN ftoks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2
     )
-    SELECT key1, key2,
-           ROUND(common * 1.0 / (s1.sz + s2.sz - common), 6) AS jaccard
-    FROM common c
-    JOIN sizes s1 ON c.key1 = s1.doc_id
-    JOIN sizes s2 ON c.key2 = s2.doc_id
-    WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
+    {_JACCARD_PAIRS}
     """,
 )
 def ngram_jaccard_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,34 +146,8 @@ def ngram_jaccard_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "minhash_lsh_pairs",
-    # The PIPELINE OUTPUT is oracle-able even though the xxhash64 signatures
-    # aren't: exact-Jaccard verification filters the LSH candidates, so with
-    # recall 1.0 (held at sf0.001/0.01/0.1, pytest-asserted) the result IS the
-    # exact J≥0.7 pair set.  A mismatch on this row means the LSH pruning
-    # dropped a true pair — a real quality regression, which SHOULD fail.
-    oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT key1, key2,
-           ROUND(common * 1.0 / (s1.sz + s2.sz - common), 6) AS jaccard
-    FROM common c
-    JOIN sizes s1 ON c.key1 = s1.doc_id
-    JOIN sizes s2 ON c.key2 = s2.doc_id
-    WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    """,
-)
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidates verified by exact Jaccard ≥ 0.7 (the scale path:
-    LSH prunes the O(n²) space; verification touches only candidates).
-    Ground truth recall vs ngram_jaccard_pairs is asserted in pytest."""
+def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH candidate pairs verified by exact Jaccard >= 0.7."""
     docs = load_table(spark, sf_dir, "documents")
     # doc→shingles computed ONCE and shared by the signature and verify
     # stages.  localCheckpoint (lazy) instead of persist: blocks are freed
@@ -227,27 +168,39 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cluster_size_histogram(comp: DataFrame) -> DataFrame:
+    """Number of components per component size, from (node, component)."""
+    return (
+        comp.groupBy("component")
+        .agg(F.count(F.lit(1)).alias("cluster_size"))
+        .groupBy("cluster_size")
+        .agg(F.count(F.lit(1)).alias("n_clusters"))
+    )
+
+
+@query(
+    "minhash_lsh_pairs",
+    # The PIPELINE OUTPUT is oracle-able even though the xxhash64 signatures
+    # aren't: exact-Jaccard verification filters the LSH candidates, so with
+    # recall 1.0 (held at sf0.001/0.01/0.1, pytest-asserted) the result IS the
+    # exact J≥0.7 pair set.  A mismatch on this row means the LSH pruning
+    # dropped a true pair — a real quality regression, which SHOULD fail.
+    oracle=_JACCARD_ORACLE,
+)
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH candidates verified by exact Jaccard ≥ 0.7 (the scale path:
+    LSH prunes the O(n²) space; verification touches only candidates).
+    Ground truth recall vs ngram_jaccard_pairs is asserted in pytest."""
+    return _lsh_verified_pairs(spark, sf_dir)
+
+
 # near_dedup_survivors oracle: survivors are "min doc_id per connected
 # component of the exact-Jaccard≥0.7 graph" — LSH recall vs that graph is 100%
 # on the fixtures (pytest-asserted), so the SQL closure IS the ground truth.
 # WITH RECURSIVE computes reachability, then component = min reachable id.
-_SURVIVORS_ORACLE = f"""
-    WITH RECURSIVE
-    sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT key1, key2
-        FROM common c
-        JOIN sizes s1 ON c.key1 = s1.doc_id
-        JOIN sizes s2 ON c.key2 = s2.doc_id
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    ),
+_COMPONENTS = f"""
+    WITH RECURSIVE {PAIR_CTES},
+    edges AS ({NEAR_DUP_PAIRS}),
     sym AS (
         SELECT key1 AS a, key2 AS b FROM edges
         UNION
@@ -262,6 +215,8 @@ _SURVIVORS_ORACLE = f"""
         SELECT node, LEAST(node, MIN(reach)) AS component
         FROM reach GROUP BY node
     )
+"""
+_SURVIVORS_ORACLE = f"""{_COMPONENTS}
     SELECT d.doc_id, d.lang, d.source
     FROM documents d
     WHERE d.doc_id NOT IN (SELECT node FROM comp WHERE component < node)
@@ -333,7 +288,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "benchmark_contamination",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
+    WITH sh AS ({SHINGLES}),
     bench AS (
         SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id < 10
     ),
@@ -359,9 +314,8 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "embedding_neardup_pairs",
-    oracle="""
+# every vector pair with cosine >= 0.4: the exact and blocked paths' oracle
+_COSINE_PAIRS_ORACLE = """
     SELECT key1, key2, cos_sim
     FROM (
         SELECT a.vec_id AS key1, b.vec_id AS key2,
@@ -374,7 +328,12 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN embeddings b ON a.vec_id < b.vec_id
     )
     WHERE cos_sim >= 0.4
-    """,
+"""
+
+
+@query(
+    "embedding_neardup_pairs",
+    oracle=_COSINE_PAIRS_ORACLE,
 )
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicates (exact O(n²) baseline; the blocked
@@ -385,20 +344,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_neardup_blocked",
-    oracle="""
-    SELECT key1, key2, cos_sim
-    FROM (
-        SELECT a.vec_id AS key1, b.vec_id AS key2,
-               ROUND(
-                   list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-                   / (SQRT(list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-                      * SQRT(list_inner_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
-                   6) AS cos_sim
-        FROM embeddings a
-        JOIN embeddings b ON a.vec_id < b.vec_id
-    )
-    WHERE cos_sim >= 0.4
-    """,
+    oracle=_COSINE_PAIRS_ORACLE,
 )
 def embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked-GEMM exact near-dup pairs — same semantics and oracle as
@@ -493,28 +439,34 @@ def binary_quant_rescored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set is "xor(bucket, query_bucket) has ≤2 bits", i.e. membership of the xor
 # in the static ≤2-bit mask list.  This makes the full ANN pipeline
 # (bucketing + probe pruning + exact re-rank) value-hash-checkable.
+_PLANES_SQL = [vector_sql(p) for p in S._hyperplanes(64, 6, seed=42)]
+
+
+def _lsh_bucket(vec: str) -> str:
+    """``vec``'s 6-plane sign-LSH bucket, random_hyperplane_lsh's bit order."""
+    return " + ".join(
+        f"{1 << i} * (CASE WHEN list_inner_product({vec}, {plane}) > 0 "
+        f"THEN 1 ELSE 0 END)"
+        for i, plane in enumerate(_PLANES_SQL)
+    )
+
+
+# every corpus vector with its LSH bucket
+_LSH_BUCKETED = f"""b AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+               ({_lsh_bucket('CAST(embedding AS DOUBLE[])')}) AS bucket
+        FROM embeddings
+    )"""
+
+
 def _ann_oracle() -> str:
-    planes = S._hyperplanes(64, 6, seed=42)
-    plane_sql = ["[" + ", ".join(repr(float(x)) for x in p) + "]" for p in planes]
-
-    def bucket_expr(vec: str) -> str:
-        return " + ".join(
-            f"{1 << i} * (CASE WHEN list_inner_product({vec}, {plane_sql[i]}) > 0 "
-            f"THEN 1 ELSE 0 END)"
-            for i in range(6)
-        )
-
     masks = [0] + [1 << i for i in range(6)] + [
         (1 << i) | (1 << j) for i in range(6) for j in range(i + 1, 6)
     ]
     return f"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-    qb AS (SELECT ({bucket_expr('qv')}) AS qbucket FROM q),
-    b AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-               ({bucket_expr('CAST(embedding AS DOUBLE[])')}) AS bucket
-        FROM embeddings
-    )
+    qb AS (SELECT ({_lsh_bucket('qv')}) AS qbucket FROM q),
+    {_LSH_BUCKETED}
     SELECT vec_id, cos_sim
     FROM (
         SELECT b.vec_id,
@@ -552,27 +504,13 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-rank with the IDENTICAL literals; k-means training
 # (ivf_train_centroids) remains the production path, pytest-covered.
 def _ivf_oracle() -> str:
-    cents = S.seeded_centroids(64, 16, seed=7, scale=0.125)
-    cent_sql = ["[" + ", ".join(repr(float(x)) for x in c) + "]" for c in cents]
-    c2 = [repr(S._seq_sq_norm(c)) for c in cents]
-
-    def dist_list(vec: str) -> str:
-        return (
-            "["
-            + ", ".join(
-                f"{c2[i]} - 2.0 * list_inner_product({vec}, {cent_sql[i]})"
-                for i in range(len(cents))
-            )
-            + "]"
-        )
-
     v = "CAST(embedding AS DOUBLE[])"
     return f"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-    probe AS (SELECT list_grade_up({dist_list('qv')})[1:4] AS cells FROM q),
+    probe AS (SELECT {probe_cells('qv', 4)} AS cells FROM q),
     b AS (
         SELECT vec_id, {v} AS vv,
-               list_position({dist_list(v)}, list_min({dist_list(v)})) AS cellpos
+               {cell_pos(v)} AS cellpos
         FROM embeddings
     )
     SELECT vec_id, cos_sim
@@ -790,6 +728,20 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# TS.quality_features: the three features of every non-empty document
+# (diversity, stop_r, mwl) and the composite score over them
+_QUALITY_FEATURES = f"""len(list_distinct(toks)) * 1.0 / len(toks) AS diversity,
+               len(list_intersect(list_distinct(toks), {_MARKER_SQL["en"]})) * 1.0
+                   / len(list_distinct(toks)) AS stop_r,
+               list_sum(list_transform(toks, t -> length(t))) * 1.0 / len(toks) AS mwl
+        FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents)
+        WHERE len(toks) > 0"""
+_QUALITY_SCORE = """ROUND(LEAST(1.0, GREATEST(0.0,
+                 0.4 * diversity
+               + 0.3 * LEAST(1.0, stop_r * 5)
+               + 0.3 * LEAST(1.0, mwl / 8))), 6)"""
+
+
 @query(
     "quality_scores",
     oracle=f"""
@@ -799,20 +751,12 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(diversity, 6) AS lexical_diversity,
            ROUND(stop_r, 6)    AS stopword_ratio,
            ROUND(mwl, 6)       AS mean_word_len,
-           ROUND(LEAST(1.0, GREATEST(0.0,
-                 0.4 * diversity
-               + 0.3 * LEAST(1.0, stop_r * 5)
-               + 0.3 * LEAST(1.0, mwl / 8))), 6) AS quality_score
+           {_QUALITY_SCORE} AS quality_score
     FROM (
         SELECT doc_id,
                len(toks) AS n_tokens,
                len(list_distinct(toks)) AS n_distinct_tokens,
-               len(list_distinct(toks)) * 1.0 / len(toks) AS diversity,
-               len(list_intersect(list_distinct(toks), {_MARKER_SQL["en"]})) * 1.0
-                   / len(list_distinct(toks)) AS stop_r,
-               list_sum(list_transform(toks, t -> length(t))) * 1.0 / len(toks) AS mwl
-        FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents)
-        WHERE len(toks) > 0
+               {_QUALITY_FEATURES}
     )
     """,
 )
@@ -1022,14 +966,14 @@ def udtf_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fs2_kinesis_firehose_spark.operators.udtf_ops import register_udtfs
 
     register_udtfs(spark)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         """
         SELECT t.ngram, COUNT(*) AS n
-        FROM documents d, LATERAL ngrams(d.text, 2) t
+        FROM {documents} d, LATERAL ngrams(d.text, 2) t
         GROUP BY t.ngram
         HAVING COUNT(*) >= 30
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -1120,10 +1064,9 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # CCNet-style n-gram LM perplexity + C4-style span dedup (round 3)
 # ---------------------------------------------------------------------------
-@query(
-    "lm_perplexity_scores",
-    oracle="""
-    WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+# operators/lm.py's add-one bigram LM over space-split words: bigram rows
+# (big), bigram and unigram counts (bi, uni) and the vocabulary size (v)
+_BIGRAM_LM = """words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     big AS (
         SELECT doc_id, w[CAST(t.i AS INT)] AS w1, w[CAST(t.i AS INT) + 1] AS w2
         FROM words, UNNEST(range(1, len(w))) AS t(i)
@@ -1133,7 +1076,13 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     v AS (
         SELECT COUNT(DISTINCT tok) AS v
         FROM (SELECT w1 AS tok FROM big UNION ALL SELECT w2 FROM big)
-    ),
+    )"""
+
+
+@query(
+    "lm_perplexity_scores",
+    oracle=f"""
+    WITH {_BIGRAM_LM},
     scored AS (
         SELECT b.doc_id,
                ln(COALESCE(bi.c12, 0) + 1) - ln(u.c1 + (SELECT v FROM v)) AS logp,
@@ -1267,26 +1216,20 @@ def span_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.span_dedup(docs, "text", "doc_id", span_tokens=10)
 
 
-# Recall evaluation of the ANN path vs exact ground truth, 8 queries in one
-# plan.  Same literal-hyperplane restatement as _ann_oracle; query vectors
-# are corpus rows, so their buckets come from the same bucket expression.
-def _ann_recall_oracle() -> str:
-    planes = S._hyperplanes(64, 6, seed=42)
-    plane_sql = ["[" + ", ".join(repr(float(x)) for x in p) + "]" for p in planes]
+def _top10(scored: str) -> str:
+    """Each query's top 10 rows of ``scored`` by (cos_sim desc, vec_id)."""
+    return f"""(
+            SELECT query_id, vec_id,
+                   ROW_NUMBER() OVER (PARTITION BY query_id
+                                      ORDER BY cos_sim DESC, vec_id ASC) AS rn
+            FROM {scored}
+        ) WHERE rn <= 10"""
 
-    def bucket_expr(vec: str) -> str:
-        return " + ".join(
-            f"{1 << i} * (CASE WHEN list_inner_product({vec}, {plane_sql[i]}) > 0 "
-            f"THEN 1 ELSE 0 END)"
-            for i in range(6)
-        )
 
-    return f"""
-    WITH b AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-               ({bucket_expr('CAST(embedding AS DOUBLE[])')}) AS bucket
-        FROM embeddings
-    ),
+# 8 corpus vectors as queries, every (query, vector) cosine and bucket
+# Hamming distance, and the exact top 10 per query
+_ANN_SCORED = f"""
+    WITH {_LSH_BUCKETED},
     q AS (SELECT vec_id AS query_id, v AS qv, bucket AS qbucket FROM b WHERE vec_id < 8),
     scored AS (
         SELECT q.query_id, b.vec_id,
@@ -1297,20 +1240,17 @@ def _ann_recall_oracle() -> str:
         FROM b, q
     ),
     exact AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos_sim DESC, vec_id ASC) AS rn
-            FROM scored
-        ) WHERE rn <= 10
-    ),
+        SELECT query_id, vec_id FROM {_top10("scored")}
+    )"""
+
+
+# Recall evaluation of the ANN path vs exact ground truth, 8 queries in one
+# plan.  Same literal-hyperplane restatement as _ann_oracle; query vectors
+# are corpus rows, so their buckets come from the same bucket expression.
+def _ann_recall_oracle() -> str:
+    return f"""{_ANN_SCORED},
     ann AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos_sim DESC, vec_id ASC) AS rn
-            FROM scored WHERE ham <= 2
-        ) WHERE rn <= 10
+        SELECT query_id, vec_id FROM {_top10("scored WHERE ham <= 2")}
     ),
     annc AS (SELECT query_id, COUNT(*) AS n_ann FROM ann GROUP BY query_id),
     common AS (
@@ -1342,46 +1282,9 @@ def _ann_ranking_oracle() -> str:
     relevance set — the graded companions to _ann_recall_oracle, sharing
     its literal-hyperplane scored CTE.  IDCG is the shared repr literal
     Σ 1/log2(i+1), i=1..10 (identical constant on both engines)."""
-    planes = S._hyperplanes(64, 6, seed=42)
-    plane_sql = ["[" + ", ".join(repr(float(x)) for x in p) + "]" for p in planes]
-
-    def bucket_expr(vec: str) -> str:
-        return " + ".join(
-            f"{1 << i} * (CASE WHEN list_inner_product({vec}, {plane_sql[i]}) > 0 "
-            f"THEN 1 ELSE 0 END)"
-            for i in range(6)
-        )
-
-    return f"""
-    WITH b AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-               ({bucket_expr('CAST(embedding AS DOUBLE[])')}) AS bucket
-        FROM embeddings
-    ),
-    q AS (SELECT vec_id AS query_id, v AS qv, bucket AS qbucket FROM b WHERE vec_id < 8),
-    scored AS (
-        SELECT q.query_id, b.vec_id,
-               ROUND(list_inner_product(b.v, q.qv)
-                     / (SQRT(list_inner_product(b.v, b.v))
-                        * SQRT(list_inner_product(q.qv, q.qv))), 6) AS cos_sim,
-               bit_count(xor(b.bucket, q.qbucket)) AS ham
-        FROM b, q
-    ),
-    exact AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos_sim DESC, vec_id ASC) AS rn
-            FROM scored
-        ) WHERE rn <= 10
-    ),
+    return f"""{_ANN_SCORED},
     ann AS (
-        SELECT query_id, vec_id, rn AS rank FROM (
-            SELECT query_id, vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cos_sim DESC, vec_id ASC) AS rn
-            FROM scored WHERE ham <= 2
-        ) WHERE rn <= 10
+        SELECT query_id, vec_id, rn AS rank FROM {_top10("scored WHERE ham <= 2")}
     ),
     hits AS (
         SELECT a.query_id, a.rank
@@ -1502,20 +1405,10 @@ def _semdedup_oracle() -> str:
     """SemDeDup restated: same seeded centroids as the IVF queries (literal
     arrays), same argmin cell rule, same ROUND(cos,6) edge predicate, then the
     recursive-CTE reachability closure used by near_dedup_survivors."""
-    cents = S.seeded_centroids(64, 16, seed=7, scale=0.125)
-    cent_sql = ["[" + ", ".join(repr(float(x)) for x in c) + "]" for c in cents]
-    c2 = [repr(S._seq_sq_norm(c)) for c in cents]
-    dist_list = (
-        "["
-        + ", ".join(
-            f"{c2[i]} - 2.0 * list_inner_product(vv, {cent_sql[i]})" for i in range(len(cents))
-        )
-        + "]"
-    )
     return f"""
     WITH RECURSIVE
     b AS (
-        SELECT vec_id, vv, list_position({dist_list}, list_min({dist_list})) AS cell
+        SELECT vec_id, vv, {cell_pos('vv')} AS cell
         FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings)
     ),
     edges AS (
@@ -1551,37 +1444,7 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SD.semantic_dedup(emb, cents, threshold=0.4).select("vec_id", "label")
 
 
-_CLUSTER_SIZES_ORACLE = f"""
-    WITH RECURSIVE
-    sh AS ({_DUCK_SHINGLES}),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT a.doc_id AS key1, b.doc_id AS key2, COUNT(*) AS common
-        FROM toks a JOIN toks b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT key1, key2
-        FROM common c
-        JOIN sizes s1 ON c.key1 = s1.doc_id
-        JOIN sizes s2 ON c.key2 = s2.doc_id
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    ),
-    sym AS (
-        SELECT key1 AS a, key2 AS b FROM edges
-        UNION
-        SELECT key2, key1 FROM edges
-    ),
-    reach AS (
-        SELECT a AS node, b AS reach FROM sym
-        UNION
-        SELECT r.node, e.b FROM reach r JOIN sym e ON r.reach = e.a
-    ),
-    comp AS (
-        SELECT node, LEAST(node, MIN(reach)) AS component
-        FROM reach GROUP BY node
-    )
+_CLUSTER_SIZES_ORACLE = f"""{_COMPONENTS}
     SELECT sz AS cluster_size, COUNT(*) AS n_clusters
     FROM (SELECT component, COUNT(*) AS sz FROM comp GROUP BY component)
     GROUP BY sz
@@ -1595,23 +1458,19 @@ def near_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Directly exercises connected_components' (node, component) output; the
     oracle closes the exact-Jaccard graph with the same recursive CTE as
     near_dedup_survivors."""
-    docs = load_table(spark, sf_dir, "documents")
-    shingled = D.shingle_projection(docs, "text", "doc_id", shingle_n=3).localCheckpoint(
-        eager=False
+    return _cluster_size_histogram(
+        D.connected_components(_lsh_verified_pairs(spark, sf_dir))
     )
-    cands = D.minhash_lsh_candidates(
-        docs, "text", "doc_id", shingle_n=3, num_hashes=32, bands=16, shingled=shingled
-    )
-    verified = D.verify_jaccard(
-        cands, docs, "text", "doc_id", shingle_n=3, threshold=0.7, shingled=shingled
-    )
-    comp = D.connected_components(verified)
-    return (
-        comp.groupBy("component")
-        .agg(F.count(F.lit(1)).alias("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(F.count(F.lit(1)).alias("n_clusters"))
-    )
+
+
+# every word 3-gram of ``wds`` at its 1-based position, hashed as
+# operators/fingerprint.py does
+_GRAM_HASHES = """grams AS (
+        SELECT doc_id, CAST(t.i AS BIGINT) AS pos,
+               CAST(concat('0x', substr(md5(array_to_string(
+                   w[CAST(t.i AS INT):CAST(t.i + 2 AS INT)], ' ')), 1, 15)) AS BIGINT) AS h
+        FROM wds, UNNEST(range(1, len(w) - 1)) AS t(i)
+    )"""
 
 
 @query(
@@ -1619,14 +1478,9 @@ def near_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Full restatement: identical md5-prefix gram hashes, identical
     # window-min selection rule (valid starts 1..max(cnt-w+1, 1)), identical
     # value-distinct fingerprint sets, then the inverted-index overlap join.
-    oracle="""
+    oracle=f"""
     WITH wds AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    grams AS (
-        SELECT doc_id, CAST(t.i AS BIGINT) AS pos,
-               CAST(concat('0x', substr(md5(array_to_string(
-                   w[CAST(t.i AS INT):CAST(t.i + 2 AS INT)], ' ')), 1, 15)) AS BIGINT) AS h
-        FROM wds, UNNEST(range(1, len(w) - 1)) AS t(i)
-    ),
+    {_GRAM_HASHES},
     wmin AS (
         SELECT doc_id,
                MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
@@ -1669,14 +1523,9 @@ def winnow_fingerprint_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # implication max_gram_run >= window ⇒ n_shared_fp >= 1.  A fingerprint
     # selection bug that breaks the guarantee flips guarantee_ok → hash
     # mismatch.
-    oracle="""
+    oracle=f"""
     WITH wds AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents),
-    grams AS (
-        SELECT doc_id, CAST(t.i AS BIGINT) AS pos,
-               CAST(concat('0x', substr(md5(array_to_string(
-                   w[CAST(t.i AS INT):CAST(t.i + 2 AS INT)], ' ')), 1, 15)) AS BIGINT) AS h
-        FROM wds, UNNEST(range(1, len(w) - 1)) AS t(i)
-    ),
+    {_GRAM_HASHES},
     m AS (
         SELECT a.doc_id AS key1, b.doc_id AS key2, a.pos AS p1,
                a.pos - b.pos AS diag
@@ -1742,22 +1591,8 @@ def near_dedup_clusters_distributed(spark: SparkSession, sf_dir: str) -> DataFra
     The default-threshold query exercises driver union-find; this one earns
     the star-contraction path its own hash-green row against the identical
     exact-Jaccard oracle (r3 verdict ask #6)."""
-    docs = load_table(spark, sf_dir, "documents")
-    shingled = D.shingle_projection(docs, "text", "doc_id", shingle_n=3).localCheckpoint(
-        eager=False
-    )
-    cands = D.minhash_lsh_candidates(
-        docs, "text", "doc_id", shingle_n=3, num_hashes=32, bands=16, shingled=shingled
-    )
-    verified = D.verify_jaccard(
-        cands, docs, "text", "doc_id", shingle_n=3, threshold=0.7, shingled=shingled
-    )
-    comp = D.connected_components(verified, driver_threshold=0)
-    return (
-        comp.groupBy("component")
-        .agg(F.count(F.lit(1)).alias("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(F.count(F.lit(1)).alias("n_clusters"))
+    return _cluster_size_histogram(
+        D.connected_components(_lsh_verified_pairs(spark, sf_dir), driver_threshold=0)
     )
 
 
@@ -1892,17 +1727,7 @@ _CCNET_P2 = 2.0 / 3.0
 @query(
     "ccnet_perplexity_buckets",
     oracle=f"""
-    WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    big AS (
-        SELECT doc_id, w[CAST(t.i AS INT)] AS w1, w[CAST(t.i AS INT) + 1] AS w2
-        FROM words, UNNEST(range(1, len(w))) AS t(i)
-    ),
-    bi AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY 1, 2),
-    uni AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1),
-    v AS (
-        SELECT COUNT(DISTINCT tok) AS v
-        FROM (SELECT w1 AS tok FROM big UNION ALL SELECT w2 FROM big)
-    ),
+    WITH {_BIGRAM_LM},
     scored AS (
         SELECT b.doc_id,
                ln(COALESCE(bi.c12, 0) + 1) - ln(u.c1 + (SELECT v FROM v)) AS logp
@@ -2152,6 +1977,26 @@ def _qc_oracle() -> str:
     """
 
 
+def _qc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every document's hashed features and teacher label, materialized
+    (the trainer passes over them once per iteration)."""
+    from fs2_kinesis_firehose_spark.operators.classifier import hashed_features
+
+    docs = load_table(spark, sf_dir, "documents")
+    return hashed_features(
+        docs, "text", "doc_id", dim=_QC_DIM, label_min_tokens=_QC_MIN_TOKENS
+    ).localCheckpoint(eager=True)
+
+
+def _qc_eval_weights(feat: DataFrame) -> list[float]:
+    """The classifier weights after _QC_EVAL_ITERS training iterations."""
+    from fs2_kinesis_firehose_spark.operators.classifier import logreg_train
+
+    return logreg_train(
+        feat, dim=_QC_DIM, iterations=_QC_EVAL_ITERS, lr=_QC_LR, scale_bits=12
+    )
+
+
 @query("quality_classifier_accounting", oracle=_qc_oracle())
 def quality_classifier_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the quality classifier (operators/classifier.py) end-to-end —
@@ -2162,16 +2007,9 @@ def quality_classifier_accounting(spark: SparkSession, sf_dir: str) -> DataFrame
     features, all 12 gradient integers vectors, the weight trajectory, and
     the final decisions agree across engines.  EAGER by necessity: the
     training loop runs at construction (the kmeans/PQ precedent)."""
-    from fs2_kinesis_firehose_spark.operators.classifier import (
-        hashed_features,
-        logreg_score,
-        logreg_train,
-    )
+    from fs2_kinesis_firehose_spark.operators.classifier import logreg_score, logreg_train
 
-    docs = load_table(spark, sf_dir, "documents")
-    feat = hashed_features(
-        docs, "text", "doc_id", dim=_QC_DIM, label_min_tokens=_QC_MIN_TOKENS
-    ).localCheckpoint(eager=True)
+    feat = _qc_features(spark, sf_dir)
     n = feat.count()
     s = _QC_SCALE
     # first-iteration gradient checksum: recompute the w=0 gradient exactly
@@ -2274,19 +2112,10 @@ def classifier_auc_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical weight trajectory and restates all three metrics; the
     hash certifies rank order, tie groups, and every calibration bin
     agree across engines.  EAGER: training runs at construction."""
-    from fs2_kinesis_firehose_spark.operators.classifier import (
-        classifier_eval,
-        hashed_features,
-        logreg_train,
-    )
+    from fs2_kinesis_firehose_spark.operators.classifier import classifier_eval
 
-    docs = load_table(spark, sf_dir, "documents")
-    feat = hashed_features(
-        docs, "text", "doc_id", dim=_QC_DIM, label_min_tokens=_QC_MIN_TOKENS
-    ).localCheckpoint(eager=True)
-    w = logreg_train(
-        feat, dim=_QC_DIM, iterations=_QC_EVAL_ITERS, lr=_QC_LR, scale_bits=12
-    )
+    feat = _qc_features(spark, sf_dir)
+    w = _qc_eval_weights(feat)
     return classifier_eval(feat, w)
 
 
@@ -2333,18 +2162,11 @@ def streaming_quality_gate_accounting(spark: SparkSession, sf_dir: str) -> DataF
     from fs2_kinesis_firehose_spark.operators.classifier import (
         hashed_features,
         logreg_score,
-        logreg_train,
     )
     from fs2_kinesis_firehose_spark.streaming.replay import replay_parquet, run_foreach_batch
     from fs2_kinesis_firehose_spark.streaming.sinks import idempotent_parquet_sink
 
-    docs = load_table(spark, sf_dir, "documents")
-    feat = hashed_features(
-        docs, "text", "doc_id", dim=_QC_DIM, label_min_tokens=_QC_MIN_TOKENS
-    ).localCheckpoint(eager=True)
-    w = logreg_train(
-        feat, dim=_QC_DIM, iterations=_QC_EVAL_ITERS, lr=_QC_LR, scale_bits=12
-    )
+    w = _qc_eval_weights(_qc_features(spark, sf_dir))
 
     root = scratch_dir("fs2spark-quality-gate", "{h}", sf_dir)
     staging, out = str(root / "staging"), str(root / "out")
@@ -2376,6 +2198,23 @@ def streaming_quality_gate_accounting(spark: SparkSession, sf_dir: str) -> DataF
             F.sum("label").cast("long").alias("n_teacher_pos"),
         )
         .orderBy("prob_bin")
+    )
+
+
+def _encoded_clips(spark: SparkSession, sf_dir: str, encode) -> DataFrame:
+    """(doc_id, payload, n_bytes) for docs 0-99, the payload being
+    ``encode(doc_id)``'s container bytes, built in one Arrow pass."""
+    import pandas as pd
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100).select("doc_id")
+
+    def synth(batches):
+        for pdf in batches:
+            rows = [(int(d), encode(int(d))) for d in pdf["doc_id"]]
+            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+
+    return docs.mapInPandas(synth, "doc_id bigint, payload binary").withColumn(
+        "n_bytes", F.length("payload").cast("long")
     )
 
 
@@ -2432,29 +2271,17 @@ def multimodal_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFram
     zero crossings, peak) via one Arrow-batched audio_features pass.
     The encode stage is a second narrow mapInPandas; nothing shuffles."""
     import numpy as np
-    import pandas as pd
 
     from fs2_kinesis_firehose_spark.operators.wav import audio_features, encode_wav
 
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100).select("doc_id")
+    def encode(d: int) -> bytes:
+        rate = 8000 + (d % 3) * 4000
+        n = 400 + d % 211
+        k = d % 97 + 1
+        samples = (((np.arange(n, dtype=np.int64) * k) % 20001) - 10000).astype(np.int16)
+        return encode_wav(samples, rate)
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                rate = 8000 + (d % 3) * 4000
-                n = 400 + d % 211
-                k = d % 97 + 1
-                samples = (((np.arange(n, dtype=np.int64) * k) % 20001) - 10000).astype(
-                    np.int16
-                )
-                rows.append((d, encode_wav(samples, rate)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    clips = docs.mapInPandas(synth, "doc_id bigint, payload binary").withColumn(
-        "n_bytes", F.length("payload").cast("long")
-    )
+    clips = _encoded_clips(spark, sf_dir, encode)
     return audio_features(clips, "payload", ["doc_id", "n_bytes"])
 
 
@@ -2512,28 +2339,16 @@ def multimodal_y4m_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFram
     including the Σ|S_t − S_{t−1}| temporal-activity measure.  Two narrow
     Arrow stages, no shuffle (operators/y4m.py)."""
     import numpy as np
-    import pandas as pd
 
     from fs2_kinesis_firehose_spark.operators.y4m import encode_y4m, video_features
 
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100).select("doc_id")
+    def encode(d: int) -> bytes:
+        t = 3 + d % 5
+        tt, yy, xx = np.meshgrid(np.arange(t), np.arange(8), np.arange(8), indexing="ij")
+        frames = ((d * 31 + tt * 17 + yy * 8 + xx) % 256).astype(np.uint8)
+        return encode_y4m(frames, fps=(25, 1))
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                t = 3 + d % 5
-                tt, yy, xx = np.meshgrid(
-                    np.arange(t), np.arange(8), np.arange(8), indexing="ij"
-                )
-                frames = ((d * 31 + tt * 17 + yy * 8 + xx) % 256).astype(np.uint8)
-                rows.append((d, encode_y4m(frames, fps=(25, 1))))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    clips = docs.mapInPandas(synth, "doc_id bigint, payload binary").withColumn(
-        "n_bytes", F.length("payload").cast("long")
-    )
+    clips = _encoded_clips(spark, sf_dir, encode)
     return video_features(clips, "payload", ["doc_id", "n_bytes"])
 
 
@@ -2552,19 +2367,11 @@ _CURR_P = (0.25, 0.5, 0.75)
     oracle=f"""
     WITH s AS (
         SELECT doc_id, n_tokens,
-               ROUND(LEAST(1.0, GREATEST(0.0,
-                     0.4 * diversity
-                   + 0.3 * LEAST(1.0, stop_r * 5)
-                   + 0.3 * LEAST(1.0, mwl / 8))), 6) AS q
+               {_QUALITY_SCORE} AS q
         FROM (
             SELECT doc_id,
                    len(toks) AS n_tokens,
-                   len(list_distinct(toks)) * 1.0 / len(toks) AS diversity,
-                   len(list_intersect(list_distinct(toks), {_MARKER_SQL["en"]})) * 1.0
-                       / len(list_distinct(toks)) AS stop_r,
-                   list_sum(list_transform(toks, t -> length(t))) * 1.0 / len(toks) AS mwl
-            FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents)
-            WHERE len(toks) > 0
+                   {_QUALITY_FEATURES}
         )
     ),
     qs AS (
@@ -2694,18 +2501,24 @@ def truncated_dim_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.truncated_dim_recall_eval(emb, dim=64, trunc_dim=16, n_queries=8, k=10)
 
 
-def _knn_label_oracle(n_queries: int = 16, k: int = 10) -> str:
-    """Full-replay restatement of knn_label_eval: leave-one-out exact-cosine
-    neighbor ranking, the k-NN vote, and the deterministic majority rule
-    (count desc, label asc)."""
-    return f"""
-    WITH b AS (
+def _labeled_queries(n_queries: int) -> str:
+    """``b``: every labeled vector; ``q``: the first ``n_queries`` of them
+    as queries with their true label."""
+    return f"""b AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
     ),
     q AS (
         SELECT vec_id AS query_id, v AS qv, label AS true_label
         FROM b WHERE vec_id < {n_queries}
-    ),
+    )"""
+
+
+def _knn_label_oracle(n_queries: int = 16, k: int = 10) -> str:
+    """Full-replay restatement of knn_label_eval: leave-one-out exact-cosine
+    neighbor ranking, the k-NN vote, and the deterministic majority rule
+    (count desc, label asc)."""
+    return f"""
+    WITH {_labeled_queries(n_queries)},
     scored AS (
         SELECT q.query_id, q.true_label, b.vec_id, b.label AS nl,
                ROUND(list_inner_product(b.v, q.qv)
@@ -2752,21 +2565,10 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_balance_oracle(cap: int = 20, salt: str = "bal") -> str:
     """Restates seeded-centroid assignment (the proven _ivf_oracle idiom)
     + the md5-ordered per-cell cap."""
-    cents = S.seeded_centroids(64, 16, seed=7, scale=0.125)
-    cent_sql = ["[" + ", ".join(repr(float(x)) for x in c) + "]" for c in cents]
-    c2 = [repr(S._seq_sq_norm(c)) for c in cents]
-    dist_list = (
-        "["
-        + ", ".join(
-            f"{c2[i]} - 2.0 * list_inner_product(CAST(embedding AS DOUBLE[]), {cent_sql[i]})"
-            for i in range(len(cents))
-        )
-        + "]"
-    )
     return f"""
     WITH b AS (
         SELECT vec_id,
-               list_position({dist_list}, list_min({dist_list})) - 1 AS ivf_cell
+               {cell_pos('CAST(embedding AS DOUBLE[])')} - 1 AS ivf_cell
         FROM embeddings
     ),
     ranked AS (
@@ -2986,13 +2788,7 @@ def _contrastive_oracle(n_queries: int = 8) -> str:
     """Full replay of contrastive_pair_mining: cosine scoring, the per-
     (anchor, same-label?) best-neighbor windows, and the margin."""
     return f"""
-    WITH b AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-    ),
-    q AS (
-        SELECT vec_id AS query_id, v AS qv, label AS true_label
-        FROM b WHERE vec_id < {n_queries}
-    ),
+    WITH {_labeled_queries(n_queries)},
     scored AS (
         SELECT q.query_id, q.true_label, b.vec_id,
                (b.label = q.true_label) AS same,

@@ -199,17 +199,23 @@ def customer_order_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Rollup / cube / grouping sets
 # ---------------------------------------------------------------------------
-@query(
-    "market_segment_rollup",
-    oracle="""
+# order count and spend per group of orders joined to customers; the
+# GROUP BY clause follows
+_SEGMENT_SPEND = """
     SELECT c_mktsegment,
            o_orderpriority,
            COUNT(*) AS n_orders,
            ROUND(SUM(o_totalprice), 2) AS total_spend
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY ROLLUP (c_mktsegment, o_orderpriority)
-    """,
+    FROM {orders} o
+    JOIN {customer} c ON o.o_custkey = c.c_custkey
+"""
+_TABLE_NAMES = {"orders": "orders", "customer": "customer"}
+
+
+@query(
+    "market_segment_rollup",
+    oracle=_SEGMENT_SPEND.format(**_TABLE_NAMES)
+    + "GROUP BY ROLLUP (c_mktsegment, o_orderpriority)",
 )
 def market_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -775,33 +781,20 @@ def asof_join_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "grouping_sets_order_stats",
-    oracle="""
-    SELECT c_mktsegment,
-           o_orderpriority,
-           COUNT(*) AS n_orders,
-           ROUND(SUM(o_totalprice), 2) AS total_spend
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY GROUPING SETS ((c_mktsegment), (o_orderpriority), ())
-    """,
+# Spark runs the oracle's own text, the tables passed as frames
+_GROUPING_SETS = (
+    _SEGMENT_SPEND + "GROUP BY GROUPING SETS ((c_mktsegment), (o_orderpriority), ())"
 )
+
+
+@query("grouping_sets_order_stats", oracle=_GROUPING_SETS.format(**_TABLE_NAMES))
 def grouping_sets_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via Spark SQL (rollup/cube cover the structured
     API; this exercises the SQL surface)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
-        """
-        SELECT c_mktsegment,
-               o_orderpriority,
-               COUNT(*) AS n_orders,
-               ROUND(SUM(o_totalprice), 2) AS total_spend
-        FROM orders o
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        GROUP BY GROUPING SETS ((c_mktsegment), (o_orderpriority), ())
-        """
+        _GROUPING_SETS,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

@@ -23,38 +23,55 @@ _B = 0.75
 
 _terms_sql = ", ".join(f"'{t}'" for t in _QUERY_TERMS)
 
-
-@query(
-    "bm25_topk",
-    # string_split_regex('\\s+') matches functions/text.tokens exactly (split
-    # on any whitespace run), not just single spaces — r4 ADVICE.
-    oracle=f"""
-    WITH toks AS (
+# string_split_regex('\\s+') matches functions/text.tokens exactly (split
+# on any whitespace run), not just single spaces — r4 ADVICE.
+_TOKS = """toks AS (
         SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-    ),
+    )"""
+_TOKS_STATS = f"""{_TOKS},
     stats AS (
         SELECT COUNT(*) AS n_docs, AVG(len(t)) AS avgdl FROM toks
-    ),
-    posts AS (
+    )"""
+
+
+def _postings(where: str) -> str:
+    """Term frequency per (doc, doc length, term) of ``toks``, for the
+    rows ``where`` keeps."""
+    return f"""
         SELECT doc_id, dl, term, COUNT(*) AS tf
         FROM (SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM toks)
-        WHERE term IN ({_terms_sql})
+        {where}
         GROUP BY doc_id, dl, term
-    ),
-    dfs AS (SELECT term, COUNT(*) AS df FROM posts GROUP BY term)
-    SELECT p.doc_id,
-           ROUND(SUM(
+    """
+
+
+# per doc, the BM25 sum over the posting rows p with term df f and corpus
+# stats s
+_BM25 = f"""ROUND(SUM(
                LN(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
                * (p.tf * {_K1 + 1.0!r})
                / (p.tf + {_K1!r} * ({1.0 - _B!r} + {_B!r} * p.dl / s.avgdl))
-           ), 4) AS bm25
+           ), 4) AS bm25"""
+
+# the top _K docs by BM25 over ``posts``
+_BM25_TOPK = f"""
+    dfs AS (SELECT term, COUNT(*) AS df FROM posts GROUP BY term)
+    SELECT p.doc_id,
+           {_BM25}
     FROM posts p
     JOIN dfs f USING (term)
     CROSS JOIN stats s
     GROUP BY p.doc_id
     ORDER BY bm25 DESC, doc_id ASC
     LIMIT {_K}
-    """,
+    """
+
+
+@query(
+    "bm25_topk",
+    oracle=f"""
+    WITH {_TOKS_STATS},
+    posts AS ({_postings(f"WHERE term IN ({_terms_sql})")}),{_BM25_TOPK}""",
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents for a fixed 4-term query: postings filtered to the
@@ -74,34 +91,11 @@ _PQUERY_TERMS = ["sort", "merge", "shuffle"]
 @query(
     "bm25_postings_topk",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-    ),
-    stats AS (
-        SELECT COUNT(*) AS n_docs, AVG(len(t)) AS avgdl FROM toks
-    ),
-    postings AS (
-        SELECT doc_id, dl, term, COUNT(*) AS tf
-        FROM (SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM toks)
-        GROUP BY doc_id, dl, term
-    ),
+    WITH {_TOKS_STATS},
+    postings AS ({_postings("")}),
     posts AS (
         SELECT * FROM postings WHERE term IN ({", ".join(f"'{t}'" for t in _PQUERY_TERMS)})
-    ),
-    dfs AS (SELECT term, COUNT(*) AS df FROM posts GROUP BY term)
-    SELECT p.doc_id,
-           ROUND(SUM(
-               LN(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-               * (p.tf * {_K1 + 1.0!r})
-               / (p.tf + {_K1!r} * ({1.0 - _B!r} + {_B!r} * p.dl / s.avgdl))
-           ), 4) AS bm25
-    FROM posts p
-    JOIN dfs f USING (term)
-    CROSS JOIN stats s
-    GROUP BY p.doc_id
-    ORDER BY bm25 DESC, doc_id ASC
-    LIMIT {_K}
-    """,
+    ),{_BM25_TOPK}""",
 )
 def bm25_postings_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The repeated-query path end-to-end under the driver: ``posting_lists``
@@ -138,24 +132,13 @@ _RRF_TOP = 15
 @query(
     "hybrid_rrf_topk",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-    ),
+    WITH {_TOKS},
     stats AS (SELECT COUNT(*) AS n_docs, AVG(len(t)) AS avgdl FROM toks),
-    posts AS (
-        SELECT doc_id, dl, term, COUNT(*) AS tf
-        FROM (SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM toks)
-        WHERE term IN ({_terms_sql})
-        GROUP BY doc_id, dl, term
-    ),
+    posts AS ({_postings(f"WHERE term IN ({_terms_sql})")}),
     dfs AS (SELECT term, COUNT(*) AS df FROM posts GROUP BY term),
     lex AS (
         SELECT p.doc_id,
-               ROUND(SUM(
-                   LN(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-                   * (p.tf * {_K1 + 1.0!r})
-                   / (p.tf + {_K1!r} * ({1.0 - _B!r} + {_B!r} * p.dl / s.avgdl))
-               ), 4) AS bm25
+               {_BM25}
         FROM posts p JOIN dfs f USING (term) CROSS JOIN stats s
         GROUP BY p.doc_id
         ORDER BY bm25 DESC, doc_id ASC LIMIT {_RRF_CAND}

@@ -23,17 +23,23 @@ _PHI = 0.00125
 _K = 800  # == ceil(1/phi): minimum counter budget; forces real compression
 
 
-@query(
-    "heavy_hitter_bigrams",
-    oracle=f"""
-    WITH w AS (
+def _bigram_ctes(col: str) -> str:
+    """``w``: each document's words; ``big``: one row per word bigram, as
+    ``col`` (word_ngram_rows(n=2, distinct=False) in DuckDB)."""
+    return f"""w AS (
         SELECT string_split_regex(trim(text), '\\s+') AS words FROM documents
     ),
     big AS (
         SELECT unnest([words[i] || ' ' || words[i + 1]
-                       FOR i IN range(1, len(words))]) AS bigram
+                       FOR i IN range(1, len(words))]) AS {col}
         FROM w
-    ),
+    )"""
+
+
+@query(
+    "heavy_hitter_bigrams",
+    oracle=f"""
+    WITH {_bigram_ctes("bigram")},
     tot AS (SELECT COUNT(*) AS n FROM big)
     SELECT bigram, COUNT(*) AS cnt
     FROM big, tot
@@ -59,6 +65,42 @@ def heavy_hitter_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KLL_PHIS = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
 _KLL_EPS = 0.03  # == the pytest-asserted bound (observed ~0.002 at k=200: 15x margin)
+
+
+def _doc_lengths(docs: DataFrame) -> DataFrame:
+    """Non-null text lengths as double column ``len``."""
+    return docs.select(F.length("text").cast("double").alias("len")).where(
+        F.col("len").isNotNull()
+    )
+
+
+def _rank_checks(lens: DataFrame, ests: list[float], *lead) -> DataFrame:
+    """One row per phi of _KLL_PHIS: the ``lead`` columns, phi, n, and
+    whether that phi's estimate has an exact rank interval
+    [count(len < est), count(len <= est)] within _KLL_EPS·n of phi·n —
+    every interval from ONE exact pass over ``lens``."""
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for i, v in enumerate(ests):
+        aggs.append(F.sum((F.col("len") < F.lit(v)).cast("long")).alias(f"lo{i}"))
+        aggs.append(F.sum((F.col("len") <= F.lit(v)).cast("long")).alias(f"hi{i}"))
+    stats = lens.agg(*aggs).localCheckpoint(eager=False)
+
+    parts = []
+    for i, phi in enumerate(_KLL_PHIS):
+        target = F.lit(phi) * F.col("n")
+        err = F.greatest(F.lit(0.0), F.col(f"lo{i}") - target, target - F.col(f"hi{i}"))
+        parts.append(
+            stats.select(
+                *lead,
+                F.lit(phi).alias("phi"),
+                F.col("n"),
+                (err <= F.lit(_KLL_EPS) * F.col("n")).alias("rank_ok"),
+            )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 @query(
@@ -88,38 +130,9 @@ def kll_doclen_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-checkable."""
     from fs2_kinesis_firehose_spark.operators.kll import kll_sketch
 
-    docs = load_table(spark, sf_dir, "documents")
-    lens = docs.select(F.length("text").cast("double").alias("len")).where(
-        F.col("len").isNotNull()
-    )
+    lens = _doc_lengths(load_table(spark, sf_dir, "documents"))
     sk = kll_sketch(lens, "len", k=200)
-    ests = [sk.quantile(p) for p in _KLL_PHIS]
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for i, v in enumerate(ests):
-        aggs.append(F.sum((F.col("len") < F.lit(v)).cast("long")).alias(f"lo{i}"))
-        aggs.append(F.sum((F.col("len") <= F.lit(v)).cast("long")).alias(f"hi{i}"))
-    stats = lens.agg(*aggs).localCheckpoint(eager=False)  # ONE exact pass
-
-    parts = []
-    for i, phi in enumerate(_KLL_PHIS):
-        target = F.lit(phi) * F.col("n")
-        err = F.greatest(
-            F.lit(0.0),
-            F.col(f"lo{i}") - target,
-            target - F.col(f"hi{i}"),
-        )
-        parts.append(
-            stats.select(
-                F.lit(phi).alias("phi"),
-                F.col("n"),
-                (err <= F.lit(_KLL_EPS) * F.col("n")).alias("rank_ok"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _rank_checks(lens, [sk.quantile(p) for p in _KLL_PHIS])
 
 
 _CM_W, _CM_D = 4096, 4
@@ -141,14 +154,7 @@ def _cm_oracle() -> str:
         for r in range(_CM_D)
     )
     return f"""
-    WITH w AS (
-        SELECT string_split_regex(trim(text), '\\s+') AS words FROM documents
-    ),
-    big AS (
-        SELECT unnest([words[i] || ' ' || words[i + 1]
-                       FOR i IN range(1, len(words))]) AS bg
-        FROM w
-    ),
+    WITH {_bigram_ctes("bg")},
     cm AS (
         SELECT row, col, COUNT(*) AS cnt
         FROM ({build_arms})
@@ -212,49 +218,81 @@ _HLL_RMAX = 60 - _HLL_P + 1  # 49
 _HLL_ALPHA_MM = (0.7213 / (1.0 + 1.079 / _HLL_M)) * _HLL_M * _HLL_M
 
 
-def _hll_arm(table: str, col: str) -> str:
-    """One DuckDB restatement of the ENTIRE HLL build for (table, col):
-    same md5-derived 60-bit hash, same bucket/rho split, same exact
-    scaled-integer harmonic sum, same small-range-corrected estimate —
-    compared to Spark only through integers and a tolerance boolean."""
-    wbits = 60 - _HLL_P
+# The DuckDB restatement of operators/hll.py: same md5-derived 60-bit hash,
+# same bucket/rho split, same exact scaled-integer harmonic sum, same
+# small-range-corrected estimate.
+def _hll_registers(col: str, rows: str) -> str:
+    """The register table (bucket, rho) of ``col`` over ``rows``."""
     return f"""
-    SELECT '{table}.{col}' AS col_name, n_nonzero, scaled_sum,
-           (SELECT COUNT(DISTINCT {col}) FROM {table}) AS exact_distinct,
-           ABS(
-             CASE WHEN raw <= 2.5 * {_HLL_M} AND n_nonzero < {_HLL_M}
-                  THEN {_HLL_M} * LN(CAST({_HLL_M} AS DOUBLE) / ({_HLL_M} - n_nonzero))
-                  ELSE raw END
-             / (SELECT COUNT(DISTINCT {col}) FROM {table}) - 1.0
-           ) < 0.05 AS within_tol
-    FROM (
-        SELECT n_nonzero, scaled_sum,
-               CAST({_HLL_ALPHA_MM!r} AS DOUBLE)
-                 * CAST({float(1 << _HLL_RMAX)!r} AS DOUBLE) / scaled_sum AS raw
-        FROM (
-            SELECT COUNT(*) AS n_nonzero,
-                   CAST(SUM(1::BIGINT << ({_HLL_RMAX} - rho)) AS BIGINT)
-                     + ({_HLL_M} - COUNT(*)) * ({1 << _HLL_RMAX}::BIGINT)
-                     AS scaled_sum
-            FROM (
                 SELECT bucket, MAX(rho) AS rho
                 FROM (
                     SELECT CAST(hv % {_HLL_M} AS INT) AS bucket,
                            CASE WHEN hv // {_HLL_M} = 0 THEN {_HLL_RMAX}
-                                ELSE {wbits} - LENGTH(bin(hv // {_HLL_M})) + 1
+                                ELSE {60 - _HLL_P} - LENGTH(bin(hv // {_HLL_M})) + 1
                            END AS rho
                     FROM (
                         SELECT CAST(CONCAT('0x',
                                  SUBSTRING(md5(CAST({col} AS VARCHAR) || '|hll'),
                                            1, 15)) AS BIGINT) AS hv
-                        FROM {table} WHERE {col} IS NOT NULL
+                        FROM {rows}
                     )
                 )
                 GROUP BY bucket
-            )
+            """
+
+
+# over a register table: the exact harmonic sum scaled to an integer, the
+# raw estimate from it, and the small-range-corrected estimate from both
+_HLL_SCALED_SUM = f"""CAST(SUM(1::BIGINT << ({_HLL_RMAX} - rho)) AS BIGINT)
+                     + ({_HLL_M} - COUNT(*)) * ({1 << _HLL_RMAX}::BIGINT)
+                     AS scaled_sum"""
+_HLL_RAW = f"""CAST({_HLL_ALPHA_MM!r} AS DOUBLE)
+                 * CAST({float(1 << _HLL_RMAX)!r} AS DOUBLE) / scaled_sum AS raw"""
+_HLL_ESTIMATE = f"""CASE WHEN raw <= 2.5 * {_HLL_M} AND n_nonzero < {_HLL_M}
+                  THEN {_HLL_M} * LN(CAST({_HLL_M} AS DOUBLE) / ({_HLL_M} - n_nonzero))
+                  ELSE raw END"""
+
+
+def _hll_raw(col: str, rows: str) -> str:
+    """n_nonzero, scaled_sum and the raw estimate of ``col`` over ``rows``."""
+    return f"""
+        SELECT n_nonzero, scaled_sum,
+               {_HLL_RAW}
+        FROM (
+            SELECT COUNT(*) AS n_nonzero,
+                   {_HLL_SCALED_SUM}
+            FROM ({_hll_registers(col, rows)})
         )
-    )
     """
+
+
+def _hll_arm(table: str, col: str) -> str:
+    """The whole HLL build for (table, col), compared to Spark only through
+    integers and a tolerance boolean."""
+    return f"""
+    SELECT '{table}.{col}' AS col_name, n_nonzero, scaled_sum,
+           (SELECT COUNT(DISTINCT {col}) FROM {table}) AS exact_distinct,
+           ABS(
+             {_HLL_ESTIMATE}
+             / (SELECT COUNT(DISTINCT {col}) FROM {table}) - 1.0
+           ) < 0.05 AS within_tol
+    FROM ({_hll_raw(col, f"{table} WHERE {col} IS NOT NULL")})
+    """
+
+
+def _hll_checked(est: DataFrame, *lead) -> DataFrame:
+    """The ``lead`` columns, the integer register state and whether the
+    estimate is within 5% of the exact distinct count."""
+    return est.select(
+        *lead,
+        "n_nonzero",
+        "scaled_sum",
+        "register_checksum",
+        "exact_distinct",
+        (F.abs(F.col("estimate") / F.col("exact_distinct") - 1.0) < 0.05).alias(
+            "within_tol"
+        ),
+    )
 
 
 @query(
@@ -310,41 +348,12 @@ def _hll_est_sql(alias: str, where: str) -> str:
     """Register-rebuild + estimate subquery for one orders slice (the
     ``_hll_arm`` machinery, parameterized by a WHERE clause and returning
     ``n_nonzero / scaled_sum / est`` under ``alias``-prefixed names)."""
-    wbits = 60 - _HLL_P
+    rows = f"orders WHERE o_custkey IS NOT NULL AND ({where})"
     return f"""
     {alias} AS (
         SELECT n_nonzero AS {alias}_nz, scaled_sum AS {alias}_sum,
-               CASE WHEN raw <= 2.5 * {_HLL_M} AND n_nonzero < {_HLL_M}
-                    THEN {_HLL_M} * LN(CAST({_HLL_M} AS DOUBLE)
-                                       / ({_HLL_M} - n_nonzero))
-                    ELSE raw END AS {alias}_est
-        FROM (
-            SELECT n_nonzero, scaled_sum,
-                   CAST({_HLL_ALPHA_MM!r} AS DOUBLE)
-                     * CAST({float(1 << _HLL_RMAX)!r} AS DOUBLE) / scaled_sum AS raw
-            FROM (
-                SELECT COUNT(*) AS n_nonzero,
-                       CAST(SUM(1::BIGINT << ({_HLL_RMAX} - rho)) AS BIGINT)
-                         + ({_HLL_M} - COUNT(*)) * ({1 << _HLL_RMAX}::BIGINT)
-                         AS scaled_sum
-                FROM (
-                    SELECT bucket, MAX(rho) AS rho
-                    FROM (
-                        SELECT CAST(hv % {_HLL_M} AS INT) AS bucket,
-                               CASE WHEN hv // {_HLL_M} = 0 THEN {_HLL_RMAX}
-                                    ELSE {wbits} - LENGTH(bin(hv // {_HLL_M})) + 1
-                               END AS rho
-                        FROM (
-                            SELECT CAST(CONCAT('0x',
-                                     SUBSTRING(md5(CAST(o_custkey AS VARCHAR)
-                                               || '|hll'), 1, 15)) AS BIGINT) AS hv
-                            FROM orders WHERE o_custkey IS NOT NULL AND ({where})
-                        )
-                    )
-                    GROUP BY bucket
-                )
-            )
-        )
+               {_HLL_ESTIMATE} AS {alias}_est
+        FROM ({_hll_raw("o_custkey", rows)})
     )"""
 
 
@@ -459,43 +468,22 @@ def _hll_stream_oracle() -> str:
     copies=2 replay (every row delivered twice) — register max-merge is
     idempotent, so the fold MUST equal the one-shot build; duplicated or
     dropped deliveries would move the checksum and fail the hash."""
-    wbits = 60 - _HLL_P
     return f"""
     SELECT CAST(2 AS BIGINT) AS n_batches, n_nonzero, scaled_sum,
            register_checksum,
            (SELECT COUNT(DISTINCT user_id) FROM events) AS exact_distinct,
            ABS(
-             CASE WHEN raw <= 2.5 * {_HLL_M} AND n_nonzero < {_HLL_M}
-                  THEN {_HLL_M} * LN(CAST({_HLL_M} AS DOUBLE) / ({_HLL_M} - n_nonzero))
-                  ELSE raw END
+             {_HLL_ESTIMATE}
              / (SELECT COUNT(DISTINCT user_id) FROM events) - 1.0
            ) < 0.05 AS within_tol
     FROM (
         SELECT n_nonzero, scaled_sum, register_checksum,
-               CAST({_HLL_ALPHA_MM!r} AS DOUBLE)
-                 * CAST({float(1 << _HLL_RMAX)!r} AS DOUBLE) / scaled_sum AS raw
+               {_HLL_RAW}
         FROM (
             SELECT COUNT(*) AS n_nonzero,
-                   CAST(SUM(1::BIGINT << ({_HLL_RMAX} - rho)) AS BIGINT)
-                     + ({_HLL_M} - COUNT(*)) * ({1 << _HLL_RMAX}::BIGINT)
-                     AS scaled_sum,
+                   {_HLL_SCALED_SUM},
                    CAST(SUM((bucket + 1) * rho) AS BIGINT) AS register_checksum
-            FROM (
-                SELECT bucket, MAX(rho) AS rho
-                FROM (
-                    SELECT CAST(hv % {_HLL_M} AS INT) AS bucket,
-                           CASE WHEN hv // {_HLL_M} = 0 THEN {_HLL_RMAX}
-                                ELSE {wbits} - LENGTH(bin(hv // {_HLL_M})) + 1
-                           END AS rho
-                    FROM (
-                        SELECT CAST(CONCAT('0x',
-                                 SUBSTRING(md5(CAST(user_id AS VARCHAR) || '|hll'),
-                                           1, 15)) AS BIGINT) AS hv
-                        FROM events WHERE user_id IS NOT NULL
-                    )
-                )
-                GROUP BY bucket
-            )
+            FROM ({_hll_registers("user_id", "events WHERE user_id IS NOT NULL")})
         )
     )
     """
@@ -543,19 +531,9 @@ def streaming_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "register_checksum"
         )
     )
-    return (
-        est.crossJoin(exact)  # 1-row x 1-row
-        .crossJoin(chk)
-        .select(
-            F.lit(acc["batches"]).cast("long").alias("n_batches"),
-            "n_nonzero",
-            "scaled_sum",
-            "register_checksum",
-            "exact_distinct",
-            (F.abs(F.col("estimate") / F.col("exact_distinct") - 1.0) < 0.05).alias(
-                "within_tol"
-            ),
-        )
+    return _hll_checked(
+        est.crossJoin(exact).crossJoin(chk),  # 1-row x 1-row x 1-row
+        F.lit(acc["batches"]).cast("long").alias("n_batches"),
     )
 
 
@@ -588,14 +566,7 @@ def _ams_oracle() -> str:
         for g in range(_AMS_GROUPS)
     )
     return f"""
-    WITH w AS (
-        SELECT string_split_regex(trim(text), '\\s+') AS words FROM documents
-    ),
-    big AS (
-        SELECT unnest([words[i] || ' ' || words[i + 1]
-                       FOR i IN range(1, len(words))]) AS bg
-        FROM w
-    ),
+    WITH {_bigram_ctes("bg")},
     ws AS (
         SELECT {words}
         FROM big
@@ -682,14 +653,7 @@ _SHH_K = _K
 @query(
     "streaming_heavy_hitter_bigrams",
     oracle=f"""
-    WITH w AS (
-        SELECT string_split_regex(trim(text), '\\s+') AS words FROM documents
-    ),
-    big AS (
-        SELECT unnest([words[i] || ' ' || words[i + 1]
-                       FOR i IN range(1, len(words))]) AS bigram
-        FROM w
-    ),
+    WITH {_bigram_ctes("bigram")},
     tot AS (SELECT COUNT(*) AS n FROM big)
     SELECT CAST(2 AS BIGINT) AS n_batches, bigram, COUNT(*) AS cnt
     FROM big, tot
@@ -789,10 +753,7 @@ def streaming_kll_doclen_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     acc: dict = {"sk": None, "batches": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        lens = batch.select(F.length("text").cast("double").alias("len")).where(
-            F.col("len").isNotNull()
-        )
-        sk = kll_sketch(lens, "len", k=200)
+        sk = kll_sketch(_doc_lengths(batch), "len", k=200)
         acc["sk"] = sk if acc["sk"] is None else acc["sk"].merge(sk)
         acc["batches"] += 1
 
@@ -801,34 +762,11 @@ def streaming_kll_doclen_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     ).select("text")
     run_foreach_batch(stream, fold)
 
-    docs = load_table(spark, sf_dir, "documents")
-    lens = docs.select(F.length("text").cast("double").alias("len")).where(
-        F.col("len").isNotNull()
+    return _rank_checks(
+        _doc_lengths(load_table(spark, sf_dir, "documents")),
+        [acc["sk"].quantile(p) for p in _KLL_PHIS],
+        F.lit(acc["batches"]).cast("long").alias("n_batches"),
     )
-    ests = [acc["sk"].quantile(p) for p in _KLL_PHIS]
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for i, v in enumerate(ests):
-        aggs.append(F.sum((F.col("len") < F.lit(v)).cast("long")).alias(f"lo{i}"))
-        aggs.append(F.sum((F.col("len") <= F.lit(v)).cast("long")).alias(f"hi{i}"))
-    stats = lens.agg(*aggs).localCheckpoint(eager=False)  # ONE exact pass
-
-    parts = []
-    for i, phi in enumerate(_KLL_PHIS):
-        target = F.lit(phi) * F.col("n")
-        err = F.greatest(F.lit(0.0), F.col(f"lo{i}") - target, target - F.col(f"hi{i}"))
-        parts.append(
-            stats.select(
-                F.lit(acc["batches"]).cast("long").alias("n_batches"),
-                F.lit(phi).alias("phi"),
-                F.col("n"),
-                (err <= F.lit(_KLL_EPS) * F.col("n")).alias("rank_ok"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def _hll_grouped_oracle() -> str:
@@ -905,17 +843,4 @@ def hll_grouped_distinct_estimates(spark: SparkSession, sf_dir: str) -> DataFram
         .groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(F.count_distinct("o_custkey").alias("exact_distinct"))
     )
-    return (
-        est.join(chk, "priority")
-        .join(exact, "priority")
-        .select(
-            "priority",
-            "n_nonzero",
-            "scaled_sum",
-            "register_checksum",
-            "exact_distinct",
-            (F.abs(F.col("estimate") / F.col("exact_distinct") - 1.0) < 0.05).alias(
-                "within_tol"
-            ),
-        )
-    )
+    return _hll_checked(est.join(chk, "priority").join(exact, "priority"), "priority")

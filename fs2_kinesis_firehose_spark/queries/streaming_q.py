@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fs2_kinesis_firehose_spark.queries import query
+from fs2_kinesis_firehose_spark.queries._sql import JACCARD, SHINGLE_CTES
 from fs2_kinesis_firehose_spark.streaming.replay import (
     replay_parquet,
     run_foreach_batch,
@@ -452,24 +453,10 @@ def streaming_progress_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "streaming_incremental_neardup",
-    # Oracle-able despite the streaming engine: banding is 16 bands × 2 rows,
-    # so the per-pair miss probability at J≥0.7 is (1-0.49)^16 ≈ 2.1e-5 —
-    # recall-1.0 equality with the exact oracle holds by margin, not by
-    # fixture luck (r3 ADVICE).  Incoming docs are compared against the
-    # STATIC corpus only (never each other), and exact-Jaccard verification
-    # filters candidates — so the output is exactly the corpus×incoming
-    # J≥0.7 pair counts regardless of how files split into micro-batches.
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([array_to_string(words[i:i+2], ' ')
-                              FOR i IN range(1, len(words) - 1)]) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-    ),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
+# per incoming (odd) doc, the number of corpus (even) docs it is a J >= 0.7
+# near-duplicate of
+_CORPUS_DUPS_ORACLE = f"""
+    WITH {SHINGLE_CTES},
     common AS (
         SELECT c.doc_id AS corpus_id, i.doc_id AS incoming_id, COUNT(*) AS common
         FROM toks c JOIN toks i ON c.shingle = i.shingle
@@ -481,11 +468,23 @@ def streaming_progress_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM common x
         JOIN sizes s1 ON x.corpus_id = s1.doc_id
         JOIN sizes s2 ON x.incoming_id = s2.doc_id
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
+        WHERE {JACCARD} >= 0.7
     )
     SELECT incoming_id AS doc_id, COUNT(*) AS n_corpus_dups
     FROM dups GROUP BY 1
-    """,
+"""
+
+
+@query(
+    "streaming_incremental_neardup",
+    # Oracle-able despite the streaming engine: banding is 16 bands × 2 rows,
+    # so the per-pair miss probability at J≥0.7 is (1-0.49)^16 ≈ 2.1e-5 —
+    # recall-1.0 equality with the exact oracle holds by margin, not by
+    # fixture luck (r3 ADVICE).  Incoming docs are compared against the
+    # STATIC corpus only (never each other), and exact-Jaccard verification
+    # filters candidates — so the output is exactly the corpus×incoming
+    # J≥0.7 pair counts regardless of how files split into micro-batches.
+    oracle=_CORPUS_DUPS_ORACLE,
 )
 def streaming_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dedup of an incoming document stream against a STATIC
@@ -555,31 +554,7 @@ def streaming_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     # sibling query fingerprints in-session — so a hash match proves the
     # reloaded, append-grown index answers identically to the from-scratch
     # fingerprint set.
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([array_to_string(words[i:i+2], ' ')
-                              FOR i IN range(1, len(words) - 1)]) AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-    ),
-    toks AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    common AS (
-        SELECT c.doc_id AS corpus_id, i.doc_id AS incoming_id, COUNT(*) AS common
-        FROM toks c JOIN toks i ON c.shingle = i.shingle
-        WHERE c.doc_id % 2 = 0 AND i.doc_id % 2 = 1
-        GROUP BY 1, 2
-    ),
-    dups AS (
-        SELECT incoming_id
-        FROM common x
-        JOIN sizes s1 ON x.corpus_id = s1.doc_id
-        JOIN sizes s2 ON x.incoming_id = s2.doc_id
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= 0.7
-    )
-    SELECT incoming_id AS doc_id, COUNT(*) AS n_corpus_dups
-    FROM dups GROUP BY 1
-    """,
+    oracle=_CORPUS_DUPS_ORACLE,
 )
 def minhash_index_append_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash fingerprint index\'s PERSIST + APPEND lifecycle (r11

@@ -258,47 +258,37 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "tpch_q17_small_quantity_revenue",
-    oracle="""
+# Spark runs the oracle's own text, the tables passed as frames
+_Q17 = """
     SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
-    FROM lineitem, part
+    FROM {lineitem}, {part}
     WHERE p_partkey = l_partkey
       AND p_brand = 'Brand#1'
       AND l_quantity < (
           SELECT 0.2 * AVG(l_quantity)
-          FROM lineitem l2
+          FROM {lineitem} l2
           WHERE l2.l_partkey = p_partkey
       )
-    """,
+    """
+
+
+@query(
+    "tpch_q17_small_quantity_revenue",
+    oracle=_Q17.format(lineitem="lineitem", part="part"),
 )
 def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q17 (brand-only adaptation): revenue lost if small-quantity orders
     below 20%% of a part's average were not taken — the CORRELATED SCALAR
     SUBQUERY surface.  Catalyst de-correlates it into an aggregate + join
     (no per-row re-execution), which is the only shape that scales."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    lineitem.createOrReplaceTempView("lineitem")
-    part.createOrReplaceTempView("part")
     return spark.sql(
-        """
-        SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
-        FROM lineitem, part
-        WHERE p_partkey = l_partkey
-          AND p_brand = 'Brand#1'
-          AND l_quantity < (
-              SELECT 0.2 * AVG(l_quantity)
-              FROM lineitem l2
-              WHERE l2.l_partkey = p_partkey
-          )
-        """
+        _Q17,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
     )
 
 
-@query(
-    "tpch_q18_large_volume_customers",
-    oracle="""
+_Q18_ORACLE = """
     SELECT c_custkey, o_orderkey,
            strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
            ROUND(o_totalprice, 2) AS totalprice,
@@ -312,21 +302,25 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
     ORDER BY totalprice DESC, o_orderkey ASC
     LIMIT 20
-    """,
-)
-def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q18 canonical: orders whose total quantity exceeds a threshold — the
-    IN-over-aggregated-subquery surface (planned as a semi join against the
-    grouped lineitem, one extra aggregate, no correlated re-execution)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    big = (
+    """
+
+
+def _q18_big_orders(l: DataFrame) -> DataFrame:
+    """Order keys whose lineitems total more than 250 units."""
+    return (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("q"))
         .filter(F.col("q") > 250)
         .select("l_orderkey")
     )
+
+
+def _q18_top20(spark: SparkSession, sf_dir: str, l: DataFrame, big: DataFrame) -> DataFrame:
+    """Q18 past the key set: the ``l`` rows of the ``big`` orders (semi
+    join), joined to orders and customers, per-order quantity, top 20 by
+    price."""
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         l.join(big, "l_orderkey", "left_semi")
         .join(o, F.col("l_orderkey") == o.o_orderkey)
@@ -346,6 +340,18 @@ def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 @query(
+    "tpch_q18_large_volume_customers",
+    oracle=_Q18_ORACLE,
+)
+def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q18 canonical: orders whose total quantity exceeds a threshold — the
+    IN-over-aggregated-subquery surface (planned as a semi join against the
+    grouped lineitem, one extra aggregate, no correlated re-execution)."""
+    l = load_table(spark, sf_dir, "lineitem")
+    return _q18_top20(spark, sf_dir, l, _q18_big_orders(l))
+
+
+@query(
     "tpch_q18_bloom_prefilter",
     # IDENTICAL result contract to tpch_q18_large_volume_customers (same
     # oracle): the Bloom prefilter admits every true key (no false
@@ -353,21 +359,7 @@ def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFra
     # runtime filter changes the PLAN, never the answer.  The plan pin in
     # tests/test_plans.py asserts the membership filter drops fact rows
     # scan-side, before the first exchange.
-    oracle="""
-    SELECT c_custkey, o_orderkey,
-           strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-           ROUND(o_totalprice, 2) AS totalprice,
-           SUM(l_quantity) AS total_qty
-    FROM customer, orders, lineitem
-    WHERE o_orderkey IN (
-            SELECT l_orderkey FROM lineitem
-            GROUP BY l_orderkey HAVING SUM(l_quantity) > 250
-          )
-      AND c_custkey = o_custkey AND o_orderkey = l_orderkey
-    GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
-    ORDER BY totalprice DESC, o_orderkey ASC
-    LIMIT 20
-    """,
+    oracle=_Q18_ORACLE,
 )
 def tpch_q18_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 with the Bloom runtime filter (operators/bloom.py) composed into
@@ -379,37 +371,14 @@ def tpch_q18_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the canonical tpch_q18_large_volume_customers, by construction."""
     from fs2_kinesis_firehose_spark.operators import bloom as B
 
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
     # the qualifying-key aggregate feeds BOTH the bitmap build (an eager
     # job) and the exact semi join — pin it so the lineitem scan+groupBy
     # runs once, not twice
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 250)
-        .select("l_orderkey")
-        .localCheckpoint(eager=False)
-    )
+    big = _q18_big_orders(l).localCheckpoint(eager=False)
     bm = B.bloom_build(big, "l_orderkey", n_bits=1 << 18, n_hashes=5)
     pre = B.bloom_prefilter(l, "l_orderkey", bm, n_bits=1 << 18, n_hashes=5)
-    return (
-        pre.join(big, "l_orderkey", "left_semi")
-        .join(o, F.col("l_orderkey") == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .select(
-            "c_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            F.round("o_totalprice", 2).alias("totalprice"),
-            "total_qty",
-        )
-        .orderBy(F.desc("totalprice"), F.asc("o_orderkey"))
-        .limit(20)
-    )
+    return _q18_top20(spark, sf_dir, pre, big)
 
 
 @query(
@@ -508,41 +477,33 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "tpch_q4_order_priority",
-    oracle="""
+# Spark runs the oracle's own text, the tables passed as frames
+_Q4 = """
     SELECT o_orderpriority, COUNT(*) AS order_count
-    FROM orders
+    FROM {orders}
     WHERE o_orderdate >= TIMESTAMP '1996-07-01'
       AND o_orderdate < TIMESTAMP '1996-10-01'
       AND EXISTS (
-          SELECT 1 FROM lineitem
+          SELECT 1 FROM {lineitem}
           WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate
       )
     GROUP BY o_orderpriority
-    """,
+    """
+
+
+@query(
+    "tpch_q4_order_priority",
+    oracle=_Q4.format(orders="orders", lineitem="lineitem"),
 )
 def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 (adapted: ship-after-order stands in for the absent
     commitdate<receiptdate): per-priority count of orders with at least one
     late-shipping lineitem — the CORRELATED EXISTS surface, planned as a
     left-semi join whose correlation carries an extra non-equi predicate."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    o.createOrReplaceTempView("orders")
-    l.createOrReplaceTempView("lineitem")
     return spark.sql(
-        """
-        SELECT o_orderpriority, COUNT(*) AS order_count
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-          AND o_orderdate < TIMESTAMP '1996-10-01'
-          AND EXISTS (
-              SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate
-          )
-        GROUP BY o_orderpriority
-        """
+        _Q4,
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -82,6 +82,51 @@ def snapshot_upsert_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     return live.unionByName(deleted)
 
 
+def _scd2_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The orders as an SCD2 history: one open version per key, valid from 0."""
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_totalprice",
+        F.lit(0).cast("long").alias("valid_from"),
+        F.lit(None).cast("long").alias("valid_to"),
+    )
+
+
+def _tick(base: DataFrame, pred, delta: float, ts: int) -> DataFrame:
+    """A change batch: the ``base`` keys ``pred`` keeps, repriced by
+    ``delta`` at change time ``ts``."""
+    return base.where(pred).select(
+        "o_orderkey",
+        (F.col("o_totalprice") + F.lit(delta)).alias("o_totalprice"),
+        F.lit(ts).cast("long").alias("change_ts"),
+    )
+
+
+def _two_batch_history(base: DataFrame) -> DataFrame:
+    """``base`` after two chained single-tick batches: keys ≡3 (mod 10)
+    repriced +7.77 at 1000, then keys ≡13 (mod 100) +12.77 and a resend
+    of the current price (a no-op) for keys ≡23 (mod 100) at 2000."""
+    from fs2_kinesis_firehose_spark.operators.upsert import scd2_apply
+
+    key = F.col("o_orderkey")
+    b1 = _tick(base, key % 10 == 3, 7.77, 1000)
+    b2 = _tick(base, key % 100 == 13, 12.77, 2000).unionByName(
+        _tick(base, key % 100 == 23, 7.77, 2000)
+    )
+    # checkpoint BETWEEN chained applies: apply #2 reads its history three
+    # ways (closed slice, NULL-key slice, current slice) and would otherwise
+    # re-evaluate apply #1's join per consumer.  Both batches are one tick
+    # per key, so the single-tick codegen fast path applies (r6 verdict #3:
+    # the generalized chain logic made single-tick batches pay the
+    # multi-tick HOF price — ~2x on this bench).
+    h1 = scd2_apply(
+        base, b1, "o_orderkey", "change_ts", single_tick=True
+    ).localCheckpoint(eager=False)
+    return scd2_apply(
+        h1, b2, "o_orderkey", "change_ts", single_tick=True
+    ).localCheckpoint(eager=False)
+
+
 @query(
     "scd2_version_accounting",
     # Two chained SCD2 batches over the orders base (t=0):
@@ -111,47 +156,7 @@ def scd2_version_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     change batches over the orders base, then version-count cohorts with
     exact-cents current sums.  Exercises close+open, chaining, and the
     no-op suppression rule in one driver-hashed result."""
-    key = F.col("o_orderkey")
-    price = F.col("o_totalprice")
-    base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_totalprice",
-        F.lit(0).cast("long").alias("valid_from"),
-        F.lit(None).cast("long").alias("valid_to"),
-    )
-    b1 = base.where(key % 10 == 3).select(
-        "o_orderkey",
-        (price + F.lit(7.77)).alias("o_totalprice"),
-        F.lit(1000).cast("long").alias("change_ts"),
-    )
-    b2 = (
-        base.where(key % 100 == 13).select(
-            "o_orderkey",
-            (price + F.lit(12.77)).alias("o_totalprice"),
-            F.lit(2000).cast("long").alias("change_ts"),
-        )
-        .unionByName(
-            base.where(key % 100 == 23).select(
-                "o_orderkey",
-                (price + F.lit(7.77)).alias("o_totalprice"),  # == current → no-op
-                F.lit(2000).cast("long").alias("change_ts"),
-            )
-        )
-    )
-    from fs2_kinesis_firehose_spark.operators.upsert import scd2_apply
-
-    # checkpoint BETWEEN chained applies: apply #2 reads its history three
-    # ways (closed slice, NULL-key slice, current slice) and would otherwise
-    # re-evaluate apply #1's join per consumer.  Both batches are one tick
-    # per key, so the single-tick codegen fast path applies (r6 verdict #3:
-    # the generalized chain logic made single-tick batches pay the
-    # multi-tick HOF price — ~2x on this bench).
-    h1 = scd2_apply(
-        base, b1, "o_orderkey", "change_ts", single_tick=True
-    ).localCheckpoint(eager=False)
-    h2 = scd2_apply(
-        h1, b2, "o_orderkey", "change_ts", single_tick=True
-    ).localCheckpoint(eager=False)
+    h2 = _two_batch_history(_scd2_base(spark, sf_dir))
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     per_key = h2.groupBy("o_orderkey").agg(
         F.count(F.lit(1)).alias("n_versions"),
@@ -209,27 +214,13 @@ def scd2_multi_tick_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppression, and the leading-resend rule, all accounted per version
     count with exact cents and a current-valid_from checksum."""
     key = F.col("o_orderkey")
-    price = F.col("o_totalprice")
-    base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_totalprice",
-        F.lit(0).cast("long").alias("valid_from"),
-        F.lit(None).cast("long").alias("valid_to"),
-    )
-
-    def tick(pred, delta, ts):
-        return base.where(pred).select(
-            "o_orderkey",
-            (price + F.lit(delta)).alias("o_totalprice"),
-            F.lit(ts).cast("long").alias("change_ts"),
-        )
-
+    base = _scd2_base(spark, sf_dir)
     batch = (
-        tick(key % 10 == 3, 7.77, 1000)
-        .unionByName(tick(key % 100 == 7, 0.0, 1000))   # leading no-op resend
-        .unionByName(tick(key % 100 == 13, 12.77, 2000))
-        .unionByName(tick(key % 100 == 23, 7.77, 2000))  # in-chain no-op
-        .unionByName(tick(key % 100 == 7, 3.33, 2000))
+        _tick(base, key % 10 == 3, 7.77, 1000)
+        .unionByName(_tick(base, key % 100 == 7, 0.0, 1000))   # leading no-op resend
+        .unionByName(_tick(base, key % 100 == 13, 12.77, 2000))
+        .unionByName(_tick(base, key % 100 == 23, 7.77, 2000))  # in-chain no-op
+        .unionByName(_tick(base, key % 100 == 7, 3.33, 2000))
     )
     from fs2_kinesis_firehose_spark.operators.upsert import scd2_apply
 
@@ -343,41 +334,9 @@ def scd2_point_in_time_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mis-ordered interval bounds, open-version mishandling, or a no-op
     that spuriously opened a version) shifts an epoch's sum and fails
     the hash."""
-    from fs2_kinesis_firehose_spark.operators.upsert import (
-        scd2_apply,
-        scd2_point_in_time_join,
-    )
+    from fs2_kinesis_firehose_spark.operators.upsert import scd2_point_in_time_join
 
-    key = F.col("o_orderkey")
-    price = F.col("o_totalprice")
-    base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_totalprice",
-        F.lit(0).cast("long").alias("valid_from"),
-        F.lit(None).cast("long").alias("valid_to"),
-    )
-    b1 = base.where(key % 10 == 3).select(
-        "o_orderkey",
-        (price + F.lit(7.77)).alias("o_totalprice"),
-        F.lit(1000).cast("long").alias("change_ts"),
-    )
-    b2 = base.where(key % 100 == 13).select(
-        "o_orderkey",
-        (price + F.lit(12.77)).alias("o_totalprice"),
-        F.lit(2000).cast("long").alias("change_ts"),
-    ).unionByName(
-        base.where(key % 100 == 23).select(
-            "o_orderkey",
-            (price + F.lit(7.77)).alias("o_totalprice"),  # no-op resend
-            F.lit(2000).cast("long").alias("change_ts"),
-        )
-    )
-    h1 = scd2_apply(
-        base, b1, "o_orderkey", "change_ts", single_tick=True
-    ).localCheckpoint(eager=False)
-    h2 = scd2_apply(
-        h1, b2, "o_orderkey", "change_ts", single_tick=True
-    ).localCheckpoint(eager=False)
+    h2 = _two_batch_history(_scd2_base(spark, sf_dir))
     facts = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey")

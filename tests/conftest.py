@@ -6,6 +6,13 @@ from pyspark.sql import DataFrame
 from fs2_kinesis_firehose_spark.session import get_spark
 
 
+def pytest_configure(config):
+    # print the slowest tests after every run, so a slow suite can be
+    # told apart from a slow host; an explicit --durations still wins
+    if config.option.durations is None:
+        config.option.durations = 25
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("fs2-kinesis-firehose-spark-tests", shuffle_partitions=8)

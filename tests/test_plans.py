@@ -5,6 +5,7 @@ products, codegen coverage)."""
 from __future__ import annotations
 
 import ast
+from collections import defaultdict
 from pathlib import Path
 
 import fs2_kinesis_firehose_spark.queries as q
@@ -246,6 +247,63 @@ def test_package_does_not_pin_session_conf():
                 owner = max(owners, key=lambda f: f.lineno).name if owners else "<module>"
                 writers.add((path.relative_to(pkg).as_posix(), owner))
     assert writers - _SESSION_CONF_WRITERS == set()
+
+
+# the queries that run SQL text; each passes its tables to spark.sql as
+# frames, whose views the formatter drops again
+_SQL_TEXT_QUERIES = (
+    "tpch_q17_small_quantity_revenue",
+    "tpch_q4_order_priority",
+    "grouping_sets_order_stats",
+    "udtf_bigram_counts",
+)
+
+
+def test_sql_text_queries_leave_no_temp_view(spark, sf_smoke):
+    """Building a query leaves the session's catalog as it found it.  The
+    queries build on a fresh session (its own temp views, the shared
+    context), so a view some earlier test left behind cannot hide a leak."""
+    session = spark.newSession()
+    for name in _SQL_TEXT_QUERIES:
+        q.QUERIES[name](session, sf_smoke)
+    assert [t.name for t in session.catalog.listTables() if t.isTemporary] == []
+
+
+# Repeated runs of code in queries/: two places holding the same six code
+# lines (blank and comment lines skipped, whitespace collapsed) are a
+# pasted fragment, and a fix to one copy misses the other.  A survivor is
+# named by one of its lines and the files holding it, with its reason.
+_PASTE_WIDTH = 6
+_PASTE_SURVIVORS = {
+    # kinesis_roundtrip_counts (sinkq.py) and streaming_dedup_counts both
+    # check against the plain per-type event counts; perfbench runs
+    # sinkq.py's oracle text as written, so that copy stays
+    "SELECT event_type, COUNT(*) AS n_events": {"sinkq.py", "streaming_q.py"},
+}
+
+
+def _pasted_runs(paths: list[Path]) -> dict[tuple[str, ...], list[str]]:
+    seen = defaultdict(list)
+    for path in paths:
+        code = [" ".join(line.split()) for line in path.read_text().splitlines()]
+        code = [line for line in code if line and not line.startswith("#")]
+        for i in range(len(code) - _PASTE_WIDTH + 1):
+            seen[tuple(code[i:i + _PASTE_WIDTH])].append(path.name)
+    return {run: files for run, files in seen.items() if len(files) > 1}
+
+
+def test_queries_hold_no_pasted_fragment():
+    """Each oracle fragment and query build in queries/ has one definition."""
+    qdir = Path(q.__file__).resolve().parent
+    pasted = [
+        (sorted(files), run[0])
+        for run, files in _pasted_runs(sorted(qdir.glob("*.py"))).items()
+        if not any(
+            line in run and set(files) == where
+            for line, where in _PASTE_SURVIVORS.items()
+        )
+    ]
+    assert pasted == [], f"{len(pasted)} pasted runs, first lines: {pasted[:10]}"
 
 
 def test_heavy_hitters_sketch_plan(spark, sf_smoke):
