@@ -46,6 +46,17 @@ def word_shingles(col: Column | str, n: int = 3, *, distinct: bool = True) -> Co
     return F.array_distinct(shingles) if distinct else shingles
 
 
+def md5_int(col: Column | str, n_hex: int) -> Column:
+    """The engine-portable hash: the first ``n_hex`` hex digits of
+    ``md5(col)`` as a base-10 string, ``conv(substring(md5(col), 1, n_hex),
+    16, 10)``.  md5 agrees byte-for-byte in Spark and DuckDB, so an oracle
+    restates the value as ``CAST('0x' || substr(md5(col), 1, n_hex) AS
+    BIGINT)``.  ``n_hex <= 15`` (at most 60 bits) keeps it strictly inside
+    a signed bigint on both engines.  Callers add their own ``.cast`` and
+    ``% n``."""
+    return F.conv(F.substring(F.md5(col), 1, n_hex), 16, 10)
+
+
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard similarity of two string arrays (set semantics)."""
     inter = F.size(F.array_intersect(a, b)).cast("double")

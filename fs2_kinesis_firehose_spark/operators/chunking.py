@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark.functions import text as T
+
 
 def chunk_documents(
     df: DataFrame,
@@ -126,14 +128,7 @@ def concat_chunk_pack(
     from pyspark.sql import Window
 
     key = F.col(key_col)
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.concat(key.cast("string"), F.lit(salt))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % shards
-    )
+    shard = T.md5_int(F.concat(key.cast("string"), F.lit(salt)), 8).cast("long") % shards
     toks = F.col(token_col).cast("long")
     w = (
         Window.partitionBy("shard")

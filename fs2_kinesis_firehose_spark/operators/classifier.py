@@ -76,11 +76,7 @@ def training_parallelism_floor(features: DataFrame, n: int, d1: int) -> DataFram
 def feature_hash_bucket(token, dim: int, salt: str = "qc"):
     """md5-derived feature bucket — deterministic and SQL-restatable (the
     Count-Min / HLL hashing recipe)."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(token, F.lit("|" + salt))), 1, 8), 16, 10)
-        .cast("long")
-        % dim
-    )
+    return T.md5_int(F.concat(token, F.lit("|" + salt)), 8).cast("long") % dim
 
 
 def hashed_features(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark.functions import text as T
+
 HASH_SPACE = float(1 << 32)  # first 8 md5 hex chars → uniform over 2^32
 
 
@@ -26,9 +28,7 @@ def hash_fraction(col: Column | str, salt: str = "") -> Column:
     ``md5(key || salt)``.  Same expression is expressible in any SQL engine
     with md5 — the engine-portable analog of ``rand(seed)``."""
     c = F.col(col) if isinstance(col, str) else col
-    bits = F.conv(
-        F.substring(F.md5(F.concat(c.cast("string"), F.lit(salt))), 1, 8), 16, 10
-    ).cast("double")
+    bits = T.md5_int(F.concat(c.cast("string"), F.lit(salt)), 8).cast("double")
     return bits / F.lit(HASH_SPACE)
 
 
@@ -119,13 +119,9 @@ def weighted_sample(
     """
     if n < 1:
         raise ValueError("n must be >= 1")
-    bits = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(key_col).cast("string"), F.lit(salt))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("double")
+    bits = T.md5_int(F.concat(F.col(key_col).cast("string"), F.lit(salt)), 8).cast(
+        "double"
+    )
     u = (bits + F.lit(0.5)) / F.lit(HASH_SPACE)
     key = F.round(F.log(u) / F.col(weight_col), round_to)
     return (

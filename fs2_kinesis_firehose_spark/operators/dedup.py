@@ -602,15 +602,17 @@ def simhash(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> D
     )
 
 
-def simhash_candidates(
-    df: DataFrame, key_col: str = "doc_id", *, bands: int = 4, text_col: str = "text"
+def _simhash_band_pairs(
+    fps: DataFrame, key_col: str, bits: int, bands: int, *carried: str
 ) -> DataFrame:
-    """Candidate pairs whose SimHash matches on ≥1 of ``bands`` 16-bit bands
-    (catches Hamming distance ≤ bands-1 guaranteed, more probabilistically)."""
-    width = 64 // bands
-    with_sh = simhash(df, text_col, key_col) if "simhash" not in df.columns else df
-    banded = with_sh.select(
+    """Self-join of the ``simhash`` fingerprints on their ``bands`` equal-
+    width bands: one ``l``/``r`` row pair per (key1 < key2, band) that
+    agree on the band, each side carrying ``key_col`` and ``carried``.
+    One shuffle on (band, band_val), O(Σ bucket²), never all-pairs."""
+    width = bits // bands
+    banded = fps.select(
         key_col,
+        *carried,
         F.explode(
             F.array(
                 *[
@@ -624,15 +626,24 @@ def simhash_candidates(
                 ]
             )
         ).alias("b"),
-    ).select(key_col, "b.band", "b.band_val")
+    ).select(key_col, *carried, "b.band", "b.band_val")
     l, r = banded.alias("l"), banded.alias("r")
+    return l.join(
+        r,
+        (F.col("l.band") == F.col("r.band"))
+        & (F.col("l.band_val") == F.col("r.band_val"))
+        & (F.col(f"l.{key_col}") < F.col(f"r.{key_col}")),
+    )
+
+
+def simhash_candidates(
+    df: DataFrame, key_col: str = "doc_id", *, bands: int = 4, text_col: str = "text"
+) -> DataFrame:
+    """Candidate pairs whose SimHash matches on ≥1 of ``bands`` 16-bit bands
+    (catches Hamming distance ≤ bands-1 guaranteed, more probabilistically)."""
+    with_sh = simhash(df, text_col, key_col) if "simhash" not in df.columns else df
     return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col(f"l.{key_col}") < F.col(f"r.{key_col}")),
-        )
+        _simhash_band_pairs(with_sh, key_col, 64, bands)
         .select(F.col(f"l.{key_col}").alias("key1"), F.col(f"r.{key_col}").alias("key2"))
         .distinct()
     )
@@ -649,22 +660,17 @@ def simhash_portable(
     """(key, simhash) — ENGINE-PORTABLE SimHash fingerprints.
 
     Identical shape to ``simhash`` (explode distinct tokens → one shuffle with
-    per-bit vote aggregates, zero Python) but the per-token hash is the first
-    ``bits/4`` hex chars of **md5** converted to a bigint — bit-identical in
-    Spark (``conv(substring(md5(t),1,15),16,10)``) and DuckDB
-    (``CAST('0x'||substr(md5(t),1,15) AS BIGINT)``), the same portability
-    trick ``curation.hash_fraction`` uses.  60 bits (not 64) keeps the value
-    strictly inside a signed bigint on both engines.  xxhash64 ``simhash``
-    stays the production path (~cheaper hash); this variant exists so the
-    ENTIRE candidate pipeline (fingerprint → banding → Hamming verify) is
-    reproducible by the SQL oracle."""
+    per-bit vote aggregates, zero Python) but the per-token hash is the
+    engine-portable ``T.md5_int`` over ``bits/4`` hex chars (60 bits by
+    default, the widest it allows), so it is bit-identical in Spark and
+    DuckDB.  xxhash64 ``simhash`` stays the production path (~cheaper
+    hash); this variant exists so the ENTIRE candidate pipeline (fingerprint
+    → banding → Hamming verify) is reproducible by the SQL oracle."""
     toks = df.select(
         F.col(key_col), F.explode(T.distinct_tokens(text_col)).alias("_tok")
     ).select(
         key_col,
-        F.conv(F.substring(F.md5("_tok"), 1, bits // 4), 16, 10)
-        .cast("long")
-        .alias("_th"),
+        T.md5_int("_tok", bits // 4).cast("long").alias("_th"),
     )
     vote_aggs = [
         F.sum(
@@ -708,36 +714,12 @@ def simhash_neardup_pairs(
             f"max_hamming={max_hamming} >= bands={bands}: band collision no "
             f"longer guarantees recall 1.0 — raise bands or lower max_hamming"
         )
-    width = bits // bands
     # the fingerprint pipeline (md5 + 60 vote aggregates) feeds BOTH sides of
     # the band self-join; without materialization the self-join plan
     # evaluates it twice
     fps = simhash_portable(df, text_col, key_col, bits=bits).localCheckpoint(eager=False)
-    banded = fps.select(
-        key_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("band_val"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(key_col, "simhash", "b.band", "b.band_val")
-    l, r = banded.alias("l"), banded.alias("r")
     return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col(f"l.{key_col}") < F.col(f"r.{key_col}")),
-        )
+        _simhash_band_pairs(fps, key_col, bits, bands, "simhash")
         .select(
             F.col(f"l.{key_col}").alias("key1"),
             F.col(f"r.{key_col}").alias("key2"),
@@ -751,29 +733,19 @@ def simhash_neardup_pairs(
 # ---------------------------------------------------------------------------
 # n-gram Jaccard (exact, inverted-index join)
 # ---------------------------------------------------------------------------
-def ngram_jaccard_pairs(
+def _shingle_overlaps(
     df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    *,
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-    max_df_fraction: float | None = None,
+    text_col: str,
+    key_col: str,
+    shingle_n: int,
+    max_df_fraction: float | None,
 ) -> DataFrame:
-    """All pairs with shingle-set Jaccard ≥ threshold, exactly.
-
-    Inverted-index pattern: explode distinct shingles, self-join on the
-    shingle (only co-occurring pairs materialize), count common shingles per
-    pair, then J = common / (|A| + |B| - common).  The shuffle key is the
-    shingle; document-frequency skew is the scale risk: a shingle present in
-    k docs contributes a k² bucket to the self-join.
-
-    ``max_df_fraction`` enables the stop-shingle mitigation: shingles present
-    in more than that fraction of documents are dropped BEFORE the self-join
-    (and before sizes, so J is computed over the filtered shingle space —
-    deterministic, engine-portable semantics).  The drop set is tiny (only
-    ultra-common shingles) and broadcast, so the filter adds one map-side
-    anti-join, no extra shuffle of the index."""
+    """``(key2, key1, common, sz1, sz2)`` for every pair key1 < key2 that
+    shares a distinct word ``shingle_n``-gram: the shared count and each
+    side's shingle-set size, over the shingles left after the stop-shingle
+    filter (those in more than ``max_df_fraction`` of the documents; none
+    dropped when it is None).  The pair count is an inverted-index self-
+    join on the shingle, so only co-occurring pairs materialize."""
     shingled = T.word_ngram_rows(df, text_col, key_col, shingle_n, distinct=True)
     if max_df_fraction is not None:
         limit = max_df_fraction * df.count()
@@ -800,6 +772,32 @@ def ngram_jaccard_pairs(
     )
     s1 = sizes.select(F.col(key_col).alias("key1"), F.col("sz").alias("sz1"))
     s2 = sizes.select(F.col(key_col).alias("key2"), F.col("sz").alias("sz2"))
+    return common.join(s1, "key1").join(s2, "key2")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    key_col: str = "doc_id",
+    *,
+    shingle_n: int = 3,
+    threshold: float = 0.7,
+    max_df_fraction: float | None = None,
+) -> DataFrame:
+    """All pairs with shingle-set Jaccard ≥ threshold, exactly.
+
+    Inverted-index pattern: explode distinct shingles, self-join on the
+    shingle (only co-occurring pairs materialize), count common shingles per
+    pair, then J = common / (|A| + |B| - common).  The shuffle key is the
+    shingle; document-frequency skew is the scale risk: a shingle present in
+    k docs contributes a k² bucket to the self-join.
+
+    ``max_df_fraction`` enables the stop-shingle mitigation: shingles present
+    in more than that fraction of documents are dropped BEFORE the self-join
+    (and before sizes, so J is computed over the filtered shingle space —
+    deterministic, engine-portable semantics).  The drop set is tiny (only
+    ultra-common shingles) and broadcast, so the filter adds one map-side
+    anti-join, no extra shuffle of the index."""
     # filter on the UNROUNDED ratio (what the SQL oracles state), round only
     # for output — filtering the rounded value would admit pairs with true
     # J in [threshold − 5e-7, threshold)
@@ -807,8 +805,7 @@ def ngram_jaccard_pairs(
         F.col("sz1") + F.col("sz2") - F.col("common")
     ).cast("double")
     return (
-        common.join(s1, "key1")
-        .join(s2, "key2")
+        _shingle_overlaps(df, text_col, key_col, shingle_n, max_df_fraction)
         .filter(j_raw >= threshold)
         .select("key1", "key2", F.round(j_raw, 6).alias("jaccard"))
     )
@@ -838,38 +835,12 @@ def ngram_containment_pairs(
     At 100 TB this runs AFTER MinHash-LSH banding (exact verify of banded
     candidates), not as the global all-pairs discovery pass.
     """
-    shingled = T.word_ngram_rows(df, text_col, key_col, shingle_n, distinct=True)
-    if max_df_fraction is not None:
-        limit = max_df_fraction * df.count()
-        stop = (
-            shingled.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > limit)
-            .select("shingle")
-        )
-        shingled = shingled.join(F.broadcast(stop), "shingle", "left_anti")
-    sizes = shingled.groupBy(key_col).agg(F.count(F.lit(1)).alias("sz"))
-    l, r = shingled.alias("l"), shingled.alias("r")
-    common = (
-        l.join(
-            r,
-            (F.col("l.shingle") == F.col("r.shingle"))
-            & (F.col(f"l.{key_col}") < F.col(f"r.{key_col}")),
-        )
-        .groupBy(
-            F.col(f"l.{key_col}").alias("key1"), F.col(f"r.{key_col}").alias("key2")
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    s1 = sizes.select(F.col(key_col).alias("key1"), F.col("sz").alias("sz1"))
-    s2 = sizes.select(F.col(key_col).alias("key2"), F.col("sz").alias("sz2"))
     # unrounded filter, rounded output — same rationale as the Jaccard join
     c_raw = F.col("common").cast("double") / F.least(
         F.col("sz1"), F.col("sz2")
     ).cast("double")
     return (
-        common.join(s1, "key1")
-        .join(s2, "key2")
+        _shingle_overlaps(df, text_col, key_col, shingle_n, max_df_fraction)
         .filter(c_raw >= threshold)
         .select("key1", "key2", F.round(c_raw, 6).alias("containment"))
     )

@@ -37,7 +37,7 @@ from fs2_kinesis_firehose_spark.functions import text as T
 def _bucket(col: Column, n_buckets: int) -> Column:
     """Engine-portable feature hash: first 8 md5 hex chars → bigint → mod B
     (md5 agrees byte-for-byte across Spark and DuckDB; 32 bits >> B)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % n_buckets
+    return T.md5_int(col, 8).cast("long") % n_buckets
 
 
 def feature_rows(

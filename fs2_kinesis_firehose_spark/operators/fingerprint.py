@@ -59,9 +59,7 @@ def gram_hash_rows(
         .select(
             key_col,
             "_gpos",
-            F.conv(F.substring(F.md5("_g"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("_h"),
+            T.md5_int("_g", 15).cast("bigint").alias("_h"),
         )
     )
 

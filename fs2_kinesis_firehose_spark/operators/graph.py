@@ -24,10 +24,10 @@ the join plus the one irreducible message-delivery aggregate on dst.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from fs2_kinesis_firehose_spark.session import sqrt_sized_partitions
 
 __all__ = [
     "pagerank",
@@ -39,9 +39,9 @@ __all__ = [
 ]
 
 
-# Row quantum for the scale-adaptive pin sizing below.  Fixed-cost-vs-
-# divisible-compute optimum, same derivation as the streaming state-store
-# sizing (streaming/replay.py): every superstep stage over a pinned frame
+# Row quantum for the scale-adaptive pin sizing below, by the fixed-cost-
+# vs-divisible-compute rule ``session.sqrt_sized_partitions`` that also
+# sizes the streaming state stores: every superstep stage over a pinned frame
 # pays a fixed per-task scheduling cost on EVERY partition of the pin
 # (AQE is off for the pin by necessity — see _pinned_by_key — so nothing
 # ever coalesces it), while the divisible compute shrinks with 1/n, giving
@@ -62,18 +62,9 @@ def _sized_pin_partitions(df: DataFrame) -> int:
     materialized anyway, so the sizing costs one cheap cached-count job.
     ``spark.fs2kf.graph.pinPartitions`` overrides the derivation for
     deployments that size the superstep width explicitly."""
-    spark = df.sparkSession
-    override = spark.conf.get("spark.fs2kf.graph.pinPartitions", None)
-    if override:
-        return max(1, int(override))
-    conf = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        cap = int(conf)
-    except ValueError:  # e.g. "auto" on some platforms
-        cap = spark.sparkContext.defaultParallelism
-    rows = df.count()
-    derived = math.isqrt(max(0, rows - 1) // _PIN_SQRT_ROWS) + 1
-    return max(1, min(cap, derived))
+    return sqrt_sized_partitions(
+        df.sparkSession, "spark.fs2kf.graph.pinPartitions", _PIN_SQRT_ROWS, df.count
+    )
 
 
 def _pinned_by_key(df: DataFrame, key: str, partitions: int | None = None) -> DataFrame:
@@ -450,12 +441,7 @@ def _oriented_triangles(und: DataFrame) -> DataFrame:
     # graphs that cannot trigger the floor pay zero extra jobs beyond the
     # single gate fold).
     spark = oriented.sparkSession
-    try:
-        session_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    except ValueError:  # e.g. "auto" under AQE auto-optimized shuffle
-        session_parts = spark.sparkContext.defaultParallelism
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     floor_cutoff = session_parts * _WEDGE_TARGET_BYTES // _WEDGE_ROW_BYTES
     if wedge_ub > floor_cutoff:
         n_wedges = (

@@ -33,9 +33,11 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark.functions import text as T
+
 __all__ = ["hll_table", "hll_merge", "hll_estimate", "hll_alpha"]
 
-_HASH_BITS = 60  # 15 hex chars of md5 → always in int64 range
+_HASH_BITS = 60  # the widest T.md5_int hash
 
 
 def hll_alpha(m: int) -> float:
@@ -69,15 +71,8 @@ def hll_table(
     _check_p(p)
     m = 1 << p
     rmax = _HASH_BITS - p + 1
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.col(item_col).cast("string"), F.lit(salt))),
-            1,
-            _HASH_BITS // 4,
-        ),
-        16,
-        10,
-    ).cast("long")
+    salted = F.concat_ws("|", F.col(item_col).cast("string"), F.lit(salt))
+    h = T.md5_int(salted, _HASH_BITS // 4).cast("long")
     # Exact integer floor-div: m = 2^p, so h div m == h >> p.  (A ``h / m``
     # double division would round at 53 bits — h is 60-bit, so for
     # h >= 2^53 the rounding could move w across a multiple-of-m boundary

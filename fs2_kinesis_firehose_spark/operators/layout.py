@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark.functions import text as T
+
 
 def _scale_to_grid(col: Column, lo: Column, hi: Column, bits: int) -> Column:
     """Min-max scale a numeric column onto the integer grid [0, 2^bits)."""
@@ -31,6 +33,58 @@ def _scale_to_grid(col: Column, lo: Column, hi: Column, bits: int) -> Column:
     return F.least(
         F.lit(max_cell).cast("long"),
         F.greatest(F.lit(0).cast("long"), F.floor(unit * max_cell).cast("long")),
+    )
+
+
+def _gridded(df: DataFrame, cols: list[str], bits: int) -> tuple[DataFrame, list[Column]]:
+    """``df`` with each column's min/max bounds cross-joined in from ONE
+    broadcast one-row aggregate (lazy: it runs inside the consuming job,
+    no separate driver action), and each column's grid cell over them."""
+    agg = df.agg(
+        *[
+            m
+            for c in cols
+            for m in (
+                F.min(F.col(c).cast("double")).alias(f"_lo_{c}"),
+                F.max(F.col(c).cast("double")).alias(f"_hi_{c}"),
+            )
+        ]
+    )
+    keyed = df.crossJoin(F.broadcast(agg))
+    grid = [
+        _scale_to_grid(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits)
+        for c in cols
+    ]
+    return keyed, grid
+
+
+def _bucket_bits(n_buckets: int) -> int:
+    """log2 of a power-of-two bucket count: the address bits a file owns."""
+    bucket_bits = (n_buckets - 1).bit_length()
+    if n_buckets != 1 << bucket_bits:
+        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
+    return bucket_bits
+
+
+def _zbucketed(df: DataFrame, cols: list[str], bits: int, n_buckets: int) -> DataFrame:
+    """``df`` plus ``_zbucket``: the top ``log2(n_buckets)`` bits of the
+    Morton address of ``cols`` on their fixed min/max grid."""
+    bucket_bits = _bucket_bits(n_buckets)
+    keyed, grid = _gridded(df, cols, bits)
+    z = morton_key(grid, bits)
+    total_bits = len(cols) * bits
+    return keyed.withColumn(
+        "_zbucket", F.shiftright(z, total_bits - bucket_bits)
+    ).select(*df.columns, "_zbucket")
+
+
+def _write_buckets(bucketed: DataFrame, n_buckets: int, bucket_col: str, path: str) -> None:
+    """One parquet partition directory per ``bucket_col`` value, one file each."""
+    (
+        bucketed.repartition(n_buckets, bucket_col)
+        .write.mode("overwrite")
+        .partitionBy(bucket_col)
+        .parquet(path)
     )
 
 
@@ -83,21 +137,7 @@ def zorder_write(
         ]
         keyed = df
     else:
-        agg = df.agg(
-            *[
-                m
-                for c in cols
-                for m in (
-                    F.min(F.col(c).cast("double")).alias(f"_lo_{c}"),
-                    F.max(F.col(c).cast("double")).alias(f"_hi_{c}"),
-                )
-            ]
-        )
-        keyed = df.crossJoin(F.broadcast(agg))
-        grid = [
-            _scale_to_grid(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits)
-            for c in cols
-        ]
+        keyed, grid = _gridded(df, cols, bits)
     z = morton_key(grid, bits)
     out_cols = df.columns
     (
@@ -129,35 +169,7 @@ def zorder_write_bucketed(
     (the driver's DuckDB oracle) can recompute the exact per-file statistics
     and the exact pruning outcome.  Same single-shuffle cost; skew tolerance
     is what's traded away."""
-    bucket_bits = (n_buckets - 1).bit_length()
-    if n_buckets != 1 << bucket_bits:
-        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    total_bits = len(cols) * bits
-    agg = df.agg(
-        *[
-            m
-            for c in cols
-            for m in (
-                F.min(F.col(c).cast("double")).alias(f"_lo_{c}"),
-                F.max(F.col(c).cast("double")).alias(f"_hi_{c}"),
-            )
-        ]
-    )
-    keyed = df.crossJoin(F.broadcast(agg))
-    grid = [
-        _scale_to_grid(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits)
-        for c in cols
-    ]
-    z = morton_key(grid, bits)
-    out_cols = df.columns
-    (
-        keyed.withColumn("_zbucket", F.shiftright(z, total_bits - bucket_bits))
-        .select(*out_cols, "_zbucket")
-        .repartition(n_buckets, "_zbucket")
-        .write.mode("overwrite")
-        .partitionBy("_zbucket")
-        .parquet(path)
-    )
+    _write_buckets(_zbucketed(df, cols, bits, n_buckets), n_buckets, "_zbucket", path)
 
 
 def file_stats(path: str, cols: list[str]) -> list[dict]:
@@ -289,39 +301,17 @@ def hilbert_write_bucketed(
     the 2-D specialist)."""
     if len(cols) != 2:
         raise ValueError(f"hilbert_write_bucketed is 2-D only, got {cols}")
-    bucket_bits = (n_buckets - 1).bit_length()
-    if n_buckets != 1 << bucket_bits:
-        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    agg = df.agg(
-        *[
-            m
-            for c in cols
-            for m in (
-                F.min(F.col(c).cast("double")).alias(f"_lo_{c}"),
-                F.max(F.col(c).cast("double")).alias(f"_hi_{c}"),
-            )
-        ]
-    )
-    keyed = df.crossJoin(F.broadcast(agg))
-    gx, gy = (
-        _scale_to_grid(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits)
-        for c in cols
-    )
+    bucket_bits = _bucket_bits(n_buckets)
+    keyed, (gx, gy) = _gridded(df, cols, bits)
     out_cols = df.columns
     gridded = keyed.withColumn("_gx", gx).withColumn("_gy", gy).select(
         *out_cols, "_gx", "_gy"
     )
     hk = hilbert_key_2d(gridded, "_gx", "_gy", bits=bits, out="_hkey")
-    (
-        hk.withColumn(
-            "_hbucket", F.shiftright(F.col("_hkey"), 2 * bits - bucket_bits)
-        )
-        .select(*out_cols, "_hbucket")
-        .repartition(n_buckets, "_hbucket")
-        .write.mode("overwrite")
-        .partitionBy("_hbucket")
-        .parquet(path)
-    )
+    bucketed = hk.withColumn(
+        "_hbucket", F.shiftright(F.col("_hkey"), 2 * bits - bucket_bits)
+    ).select(*out_cols, "_hbucket")
+    _write_buckets(bucketed, n_buckets, "_hbucket", path)
 
 
 # --- persisted Bloom-filter index sidecars (Delta-style data skipping) -------
@@ -340,16 +330,8 @@ def _md5_pos(value, j: int, n_bits: int, salt: str) -> int:
 
 
 def _md5_pos_col(col: Column, j: int, n_bits: int, salt: str) -> Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(col.cast("string"), F.lit(f":{j}{salt}"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % n_bits
-    )
+    salted = F.concat(col.cast("string"), F.lit(f":{j}{salt}"))
+    return T.md5_int(salted, 8).cast("long") % n_bits
 
 
 def bloom_index_write(
@@ -380,36 +362,8 @@ def bloom_index_write(
     construction.  At 100 TB: the sidecar build is one extra distinct
     over (bucket, k positions) — map-side combined, output bounded by
     the index size, not the data."""
-    bucket_bits = (n_buckets - 1).bit_length()
-    if n_buckets != 1 << bucket_bits:
-        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    agg = df.agg(
-        *[
-            m
-            for c in layout_cols
-            for m in (
-                F.min(F.col(c).cast("double")).alias(f"_lo_{c}"),
-                F.max(F.col(c).cast("double")).alias(f"_hi_{c}"),
-            )
-        ]
-    )
-    keyed = df.crossJoin(F.broadcast(agg))
-    grid = [
-        _scale_to_grid(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits)
-        for c in layout_cols
-    ]
-    z = morton_key(grid, bits)
-    total_bits = len(layout_cols) * bits
-    out_cols = df.columns
-    bucketed = keyed.withColumn(
-        "_zbucket", F.shiftright(z, total_bits - bucket_bits)
-    ).select(*out_cols, "_zbucket")
-    (
-        bucketed.repartition(n_buckets, "_zbucket")
-        .write.mode("overwrite")
-        .partitionBy("_zbucket")
-        .parquet(f"{path}/{_BLOOM_DATA}")
-    )
+    bucketed = _zbucketed(df, layout_cols, bits, n_buckets)
+    _write_buckets(bucketed, n_buckets, "_zbucket", f"{path}/{_BLOOM_DATA}")
     positions = bucketed.select(
         "_zbucket",
         F.explode(

@@ -51,6 +51,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark.functions import vectors as V
+
 
 __all__ = [
     "pq_fit",
@@ -417,24 +419,47 @@ def pq_rescored_topk(
     surfaces), so scores stay bit-equal — same contract the kmeans/IVF
     oracles already rely on.
     Returns ``(key_col, l2_dist)``."""
-    from fs2_kinesis_firehose_spark.functions import vectors as V
+    scored = pq_adc_scores(df, model, query, code_col=code_col, lut_mode=lut_mode)
+    cand = _adc_shortlist(
+        scored, F.col("adc_dist"), candidates, vec_col, key_col, round_to
+    )
+    return _exact_l2_topk(cand, query, k, vec_col, key_col, round_to)
 
-    cand = (
-        pq_adc_scores(df, model, query, code_col=code_col, lut_mode=lut_mode)
-        .select(
-            key_col, vec_col, F.round(F.col("adc_dist"), round_to).alias("_adc")
-        )
+
+def _adc_shortlist(
+    df: DataFrame,
+    score: Column,
+    candidates: int,
+    vec_col: str,
+    key_col: str,
+    round_to: int,
+) -> DataFrame:
+    """The ``candidates`` rows of least rounded ADC ``score`` (ties to the
+    smaller key) as ``(key_col, vec_col, _adc)``: one TakeOrderedAndProject."""
+    return (
+        df.select(key_col, vec_col, F.round(score, round_to).alias("_adc"))
         .orderBy(F.asc("_adc"), F.asc(key_col))
         .limit(candidates)
     )
-    qlit = V.literal_vector(query)
-    q_sq = 0.0
-    for x in query:
-        q_sq += float(x) * float(x)
+
+
+def _exact_l2_topk(
+    cand: DataFrame,
+    query: list[float],
+    k: int,
+    vec_col: str,
+    key_col: str,
+    round_to: int,
+) -> DataFrame:
+    """The rescore: exact L2² of each shortlisted vector to ``query``, top
+    ``k`` as ``(key_col, l2_dist)``.  HOF-fold dots, bit-equal and over
+    candidate-scale rows only (see ``pq_rescored_topk``)."""
+    from fs2_kinesis_firehose_spark.operators.similarity import _seq_sq_norm
+
     v = F.col(vec_col)
-    l2 = (
-        V.dot(v, v) - F.lit(2.0) * V.dot(v, qlit)
-    ) + F.lit(q_sq)
+    l2 = (V.dot(v, v) - F.lit(2.0) * V.dot(v, V.literal_vector(query))) + F.lit(
+        _seq_sq_norm(query)
+    )
     return (
         cand.select(key_col, F.round(l2, round_to).alias("l2_dist"))
         .orderBy(F.asc("l2_dist"), F.asc(key_col))
@@ -551,7 +576,6 @@ def ivf_pq_rescored_topk_multi(
     Returns ``(query_id, key_col, l2_dist)``, per-query top-k."""
     from pyspark.sql import Window
 
-    from fs2_kinesis_firehose_spark.functions import vectors as V
     from fs2_kinesis_firehose_spark.operators.similarity import ivf_probe_cells
 
     if not queries:
@@ -873,7 +897,6 @@ def ivf_pq_residual_rescored_topk(
     chain + TakeOrderedAndProject, candidate-local rescore — the per-cell
     LUT only widens the projection by nprobe branches.  Returns
     ``(key_col, l2_dist)``."""
-    from fs2_kinesis_firehose_spark.functions import vectors as V
     from fs2_kinesis_firehose_spark.operators.similarity import (
         _seq_sq_norm,
         ivf_probe_cells,
@@ -904,12 +927,8 @@ def ivf_pq_residual_rescored_topk(
         score_b = (
             _lut_chain_sum(F.col("_lut"), code_col, model["m"]) + F.col("_cconst")
         )
-        cand = (
-            df.join(F.broadcast(lut_df), F.col(cell_col) == F.col("_lutcell"))
-            .select(key_col, vec_col, F.round(score_b, round_to).alias("_adc"))
-            .orderBy(F.asc("_adc"), F.asc(key_col))
-            .limit(candidates)
-        )
+        probed = df.join(F.broadcast(lut_df), F.col(cell_col) == F.col("_lutcell"))
+        cand = _adc_shortlist(probed, score_b, candidates, vec_col, key_col, round_to)
     else:
         score = None
         for c in cells:
@@ -929,22 +948,6 @@ def ivf_pq_residual_rescored_topk(
                 else score.when(F.col(cell_col) == c, term)
             )
 
-        cand = (
-            df.filter(F.col(cell_col).isin(cells))
-            .select(key_col, vec_col, F.round(score, round_to).alias("_adc"))
-            .orderBy(F.asc("_adc"), F.asc(key_col))
-            .limit(candidates)
-        )
-    qlit = V.literal_vector(query)
-    q_sq = 0.0
-    for x in query:
-        q_sq += float(x) * float(x)
-    v = F.col(vec_col)
-    # HOF-fold dots: bit-equal, candidate-scale rows only (see
-    # pq_rescored_topk)
-    l2 = (V.dot(v, v) - F.lit(2.0) * V.dot(v, qlit)) + F.lit(q_sq)
-    return (
-        cand.select(key_col, F.round(l2, round_to).alias("l2_dist"))
-        .orderBy(F.asc("l2_dist"), F.asc(key_col))
-        .limit(k)
-    )
+        probed = df.filter(F.col(cell_col).isin(cells))
+        cand = _adc_shortlist(probed, score, candidates, vec_col, key_col, round_to)
+    return _exact_l2_topk(cand, query, k, vec_col, key_col, round_to)

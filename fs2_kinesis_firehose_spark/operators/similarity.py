@@ -31,18 +31,16 @@ def brute_force_topk(
     vec_col: str = "embedding",
     key_col: str = "vec_id",
 ) -> DataFrame:
-    dim = len(query_vec)
     """Exact cosine top-k. Deterministic tie-break on the key column.
 
     The query norm is a constant: computed driver-side with a SEQUENTIAL fold
     (bit-identical to a SQL engine's left-fold, unlike numpy's pairwise sum)
     and baked in as a literal — the per-row work is one dot + one row norm."""
-    q = V.literal_vector(query_vec)
-    acc = 0.0
-    for x in query_vec:
-        acc += float(x) * float(x)
-    q_norm = F.lit(acc**0.5)
-    cos = V.dot(F.col(vec_col), q, dim) / (V.norm(F.col(vec_col), dim) * q_norm)
+    dim = len(query_vec)
+    q_norm = F.lit(_seq_sq_norm(query_vec) ** 0.5)
+    cos = V.dot(F.col(vec_col), V.literal_vector(query_vec), dim) / (
+        V.norm(F.col(vec_col), dim) * q_norm
+    )
     scored = df.select(F.col(key_col), F.round(cos, 6).alias("cos_sim"))
     return scored.orderBy(F.col("cos_sim").desc(), F.col(key_col).asc()).limit(k)
 
@@ -243,6 +241,86 @@ def ivf_topk(
     return brute_force_topk(candidates, query_vec, k, vec_col, key_col)
 
 
+def _query_set(
+    df: DataFrame, n_queries: int, key_col: str, vec_col: str, *carried: Column
+) -> DataFrame:
+    """The eval harnesses' query set: the first ``n_queries`` corpus rows
+    as ``(query_id, _qv, *carried)``, broadcast to every corpus row."""
+    return F.broadcast(
+        df.filter(F.col(key_col) < n_queries).select(
+            F.col(key_col).alias("query_id"), F.col(vec_col).alias("_qv"), *carried
+        )
+    )
+
+
+def _query_cosine(vec_col: str, dim: int) -> Column:
+    """Cosine of ``vec_col`` and the query vector ``_qv`` over their first
+    ``dim`` coordinates, rounded to 6 dp (the cross-engine ranking key)."""
+    v, qv = F.col(vec_col), F.col("_qv")
+    return F.round(V.dot(v, qv, dim) / (V.norm(v, dim) * V.norm(qv, dim)), 6)
+
+
+def _top_rows(scored: DataFrame, w, k: int) -> DataFrame:
+    """The first ``k`` rows per window partition of ``w``, ranked ``_rn``."""
+    return scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
+
+
+def _anchor_scores(
+    df: DataFrame,
+    dim: int,
+    n_queries: int,
+    vec_col: str,
+    key_col: str,
+    label_col: str,
+    neighbor_label: Column,
+) -> DataFrame:
+    """Every corpus row but the anchor itself scored against each anchor:
+    ``(query_id, true_label, key, neighbor_label, _c)``."""
+    q = _query_set(
+        df, n_queries, key_col, vec_col, F.col(label_col).alias("true_label")
+    )
+    return (
+        df.crossJoin(q)
+        .filter(F.col(key_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            "true_label",
+            F.col(key_col),
+            neighbor_label,
+            _query_cosine(vec_col, dim).alias("_c"),
+        )
+    )
+
+
+def _exact_and_ann_topk(
+    df_bucketed: DataFrame,
+    dim: int,
+    n_queries: int,
+    k: int,
+    multiprobe_hamming: int,
+    vec_col: str,
+    key_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Per query, the exact-cosine top-k and the top-k among the rows
+    within ``multiprobe_hamming`` bucket bits of the query's bucket (the
+    sign-LSH probe), both ranked ``_rn`` by cosine then key."""
+    from pyspark.sql.window import Window
+
+    q = _query_set(
+        df_bucketed, n_queries, key_col, vec_col, F.col("bucket").alias("_qbucket")
+    )
+    scored = df_bucketed.crossJoin(q).select(
+        "query_id",
+        F.col(key_col),
+        _query_cosine(vec_col, dim).alias("cos_sim"),
+        F.bit_count(F.col("bucket").bitwiseXOR(F.col("_qbucket"))).alias("_ham"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(key_col))
+    exact = _top_rows(scored, w, k)
+    ann = _top_rows(scored.filter(F.col("_ham") <= multiprobe_hamming), w, k)
+    return exact, ann
+
+
 def ann_recall_eval(
     df_bucketed: DataFrame,
     dim: int,
@@ -268,38 +346,11 @@ def ann_recall_eval(
     n_planes/probe width, not a serving-path query.  The ANN candidate side
     alone is the production read path (bucket-pruned, see ``ann_topk``).
     """
-    from pyspark.sql.window import Window
-
-    q = F.broadcast(
-        df_bucketed.filter(F.col(key_col) < n_queries).select(
-            F.col(key_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.col("bucket").alias("_qbucket"),
-        )
+    exact, ann = _exact_and_ann_topk(
+        df_bucketed, dim, n_queries, k, multiprobe_hamming, vec_col, key_col
     )
-    cos = F.round(
-        V.dot(F.col(vec_col), F.col("_qv"), dim)
-        / (V.norm(F.col(vec_col), dim) * V.norm(F.col("_qv"), dim)),
-        6,
-    )
-    scored = df_bucketed.crossJoin(q).select(
-        "query_id",
-        F.col(key_col),
-        cos.alias("cos_sim"),
-        F.bit_count(F.col("bucket").bitwiseXOR(F.col("_qbucket"))).alias("_ham"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(key_col))
-    exact = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", key_col)
-    )
-    ann = (
-        scored.filter(F.col("_ham") <= multiprobe_hamming)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", key_col)
-    )
+    exact = exact.select("query_id", key_col)
+    ann = ann.select("query_id", key_col)
     n_ann = ann.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_ann"))
     common = (
         exact.join(ann, ["query_id", key_col])
@@ -339,38 +390,11 @@ def ann_ranking_metrics(
     constant Σ_{i=1..k} 1/log2(i+1), emitted as an identical repr literal
     on both engines.  Output: (query_id, n_ann, mrr_at_k, ndcg_at_k),
     rounded to 6 dp."""
-    from pyspark.sql.window import Window
-
-    q = F.broadcast(
-        df_bucketed.filter(F.col(key_col) < n_queries).select(
-            F.col(key_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.col("bucket").alias("_qbucket"),
-        )
+    exact, ann = _exact_and_ann_topk(
+        df_bucketed, dim, n_queries, k, multiprobe_hamming, vec_col, key_col
     )
-    cos = F.round(
-        V.dot(F.col(vec_col), F.col("_qv"), dim)
-        / (V.norm(F.col(vec_col), dim) * V.norm(F.col("_qv"), dim)),
-        6,
-    )
-    scored = df_bucketed.crossJoin(q).select(
-        "query_id",
-        F.col(key_col),
-        cos.alias("cos_sim"),
-        F.bit_count(F.col("bucket").bitwiseXOR(F.col("_qbucket"))).alias("_ham"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(key_col))
-    exact = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", key_col)
-    )
-    ann = (
-        scored.filter(F.col("_ham") <= multiprobe_hamming)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", key_col, F.col("_rn").alias("_rank"))
-    )
+    exact = exact.select("query_id", key_col)
+    ann = ann.select("query_id", key_col, F.col("_rn").alias("_rank"))
     hits = ann.join(exact, ["query_id", key_col])
     idcg = sum(1.0 / math.log2(i + 1) for i in range(1, k + 1))
     gain = F.lit(1.0) / F.log2(F.col("_rank") + 1)
@@ -515,18 +539,8 @@ def binary_quant_rescored_topk(
         .limit(candidates)
         .select(key_col)
     )
-    q = V.literal_vector(query_vec)
-    acc = 0.0
-    for x in query_vec:
-        acc += float(x) * float(x)
-    q_norm = F.lit(acc**0.5)
-    cos = V.dot(F.col(vec_col), q, dim) / (V.norm(F.col(vec_col), dim) * q_norm)
-    return (
-        df.join(F.broadcast(cand), key_col, "left_semi")
-        .select(F.col(key_col), F.round(cos, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(key_col).asc())
-        .limit(k)
-    )
+    rescored = df.join(F.broadcast(cand), key_col, "left_semi")
+    return brute_force_topk(rescored, query_vec, k, vec_col, key_col)
 
 
 def truncated_dim_recall_eval(
@@ -561,31 +575,17 @@ def truncated_dim_recall_eval(
 
     if not 0 < trunc_dim <= dim:
         raise ValueError(f"trunc_dim must be in (0, {dim}], got {trunc_dim}")
-    q = F.broadcast(
-        df.filter(F.col(key_col) < n_queries).select(
-            F.col(key_col).alias("query_id"), F.col(vec_col).alias("_qv")
-        )
-    )
-    v, qv = F.col(vec_col), F.col("_qv")
-    cos_full = F.round(V.dot(v, qv, dim) / (V.norm(v, dim) * V.norm(qv, dim)), 6)
-    cos_trunc = F.round(
-        V.dot(v, qv, trunc_dim) / (V.norm(v, trunc_dim) * V.norm(qv, trunc_dim)), 6
-    )
+    q = _query_set(df, n_queries, key_col, vec_col)
     scored = df.crossJoin(q).select(
-        "query_id", F.col(key_col), cos_full.alias("_cf"), cos_trunc.alias("_ct")
+        "query_id",
+        F.col(key_col),
+        _query_cosine(vec_col, dim).alias("_cf"),
+        _query_cosine(vec_col, trunc_dim).alias("_ct"),
     )
     wf = Window.partitionBy("query_id").orderBy(F.desc("_cf"), F.asc(key_col))
     wt = Window.partitionBy("query_id").orderBy(F.desc("_ct"), F.asc(key_col))
-    exact = (
-        scored.withColumn("_rn", F.row_number().over(wf))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", key_col)
-    )
-    trunc = (
-        scored.withColumn("_rn", F.row_number().over(wt))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", key_col)
-    )
+    exact = _top_rows(scored, wf, k).select("query_id", key_col)
+    trunc = _top_rows(scored, wt, k).select("query_id", key_col)
     common = (
         exact.join(trunc, ["query_id", key_col])
         .groupBy("query_id")
@@ -630,28 +630,12 @@ def knn_label_eval(
     """
     from pyspark.sql.window import Window
 
-    q = F.broadcast(
-        df.filter(F.col(key_col) < n_queries).select(
-            F.col(key_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.col(label_col).alias("true_label"),
-        )
-    )
-    v, qv = F.col(vec_col), F.col("_qv")
-    cos = F.round(V.dot(v, qv, dim) / (V.norm(v, dim) * V.norm(qv, dim)), 6)
-    scored = (
-        df.crossJoin(q)
-        .filter(F.col(key_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            "true_label",
-            F.col(key_col),
-            F.col(label_col).alias("_nl"),
-            cos.alias("_c"),
-        )
+    scored = _anchor_scores(
+        df, dim, n_queries, vec_col, key_col, label_col,
+        F.col(label_col).alias("_nl"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("_c"), F.asc(key_col))
-    nn = scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
+    nn = _top_rows(scored, w, k)
     votes = nn.groupBy("query_id", "true_label", "_nl").agg(
         F.count(F.lit(1)).alias("_v")
     )
@@ -694,25 +678,9 @@ def contrastive_pair_mining(
     """
     from pyspark.sql.window import Window
 
-    q = F.broadcast(
-        df.filter(F.col(key_col) < n_queries).select(
-            F.col(key_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.col(label_col).alias("true_label"),
-        )
-    )
-    v, qv = F.col(vec_col), F.col("_qv")
-    cos = F.round(V.dot(v, qv, dim) / (V.norm(v, dim) * V.norm(qv, dim)), 6)
-    scored = (
-        df.crossJoin(q)
-        .filter(F.col(key_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            "true_label",
-            F.col(key_col),
-            (F.col(label_col) == F.col("true_label")).alias("_same"),
-            cos.alias("_c"),
-        )
+    scored = _anchor_scores(
+        df, dim, n_queries, vec_col, key_col, label_col,
+        (F.col(label_col) == F.col("true_label")).alias("_same"),
     )
     w = Window.partitionBy("query_id", "_same").orderBy(F.desc("_c"), F.asc(key_col))
     ranked = scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)

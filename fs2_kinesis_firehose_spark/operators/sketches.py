@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark.functions import text as T
+
 __all__ = [
     "misra_gries_summaries",
     "mg_merge_compress",
@@ -235,14 +237,8 @@ def _cm_hash(item, width: int, r: int, salt: str):
     the repo's engine-portable hash (bit-identical in DuckDB), so the whole
     sketch is deterministic and cross-engine restatable."""
     c = F.col(item) if isinstance(item, str) else item
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(c.cast("string"), F.lit(f"{salt}{r}"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % width
-    )
+    salted = F.concat(c.cast("string"), F.lit(f"{salt}{r}"))
+    return T.md5_int(salted, 8).cast("long") % width
 
 
 def count_min_table(
@@ -320,8 +316,8 @@ def ams_sign(item_col: str, r: int, *, salt: str = "ams") -> F.Column:
     identical shift/mask, making the sketch sums (exact integers)
     bit-comparable cross-engine."""
     block, pos = divmod(r, 32)
-    h = F.md5(F.concat(F.col(item_col).cast("string"), F.lit(f"|{salt}{block}")))
-    word = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
+    salted = F.concat(F.col(item_col).cast("string"), F.lit(f"|{salt}{block}"))
+    word = T.md5_int(salted, 8).cast("long")
     return F.shiftright(word, pos).bitwiseAND(F.lit(1)) * 2 - 1
 
 
@@ -359,18 +355,8 @@ def ams_f2_sketch(
     n_blocks = (reps + 31) // 32
     rows = df.where(F.col(item_col).isNotNull()).select(
         *[
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col(item_col).cast("string"), F.lit(f"|{salt}{b}")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
+            T.md5_int(
+                F.concat(F.col(item_col).cast("string"), F.lit(f"|{salt}{b}")), 8
             )
             .cast("long")
             .alias(f"_w{b}")

@@ -157,23 +157,11 @@ def scd2_apply(
             history, changes, key_col, change_ts_col,
             from_col=from_col, to_col=to_col,
         )
-    data_cols = [
-        c for c in history.columns if c not in (key_col, from_col, to_col)
-    ]
-    missing = [
-        c for c in [key_col, *data_cols, change_ts_col] if c not in changes.columns
-    ]
-    if missing:
-        raise ValueError(f"changes is missing columns: {missing}")
-
+    data_cols, closed, null_key_current, cur = _scd2_slices(
+        history, changes, key_col, change_ts_col, from_col, to_col
+    )
     to_type = history.schema[to_col].dataType
     from_type = history.schema[from_col].dataType
-    closed = history.where(F.col(to_col).isNotNull())
-    cur_all = history.where(F.col(to_col).isNull())
-    # NULL-key current rows are routed through unchanged (they cannot match
-    # any change); only non-NULL-key current rows join the batch
-    null_key_current = cur_all.where(F.col(key_col).isNull())
-    cur = cur_all.where(F.col(key_col).isNotNull())
 
     # one aggregate: each key's ticks as a ts-sorted array of structs
     # (struct ordering sorts by _ts first; (key, ts) uniqueness is the
@@ -241,6 +229,33 @@ def scd2_apply(
     return closed.unionByName(null_key_current).unionByName(applied)
 
 
+def _scd2_slices(
+    history: DataFrame,
+    changes: DataFrame,
+    key_col: str,
+    change_ts_col: str,
+    from_col: str,
+    to_col: str,
+) -> tuple[list[str], DataFrame, DataFrame, DataFrame]:
+    """``(data_cols, closed, null_key_current, current)``: the history's
+    data columns (checked present in ``changes``), its closed rows, and its
+    current rows split by key.  NULL-key current rows are routed through
+    unchanged (they cannot match any change); only the non-NULL-key current
+    rows join the batch."""
+    data_cols = [
+        c for c in history.columns if c not in (key_col, from_col, to_col)
+    ]
+    missing = [
+        c for c in [key_col, *data_cols, change_ts_col] if c not in changes.columns
+    ]
+    if missing:
+        raise ValueError(f"changes is missing columns: {missing}")
+    closed = history.where(F.col(to_col).isNotNull())
+    cur_all = history.where(F.col(to_col).isNull())
+    null_key_current = cur_all.where(F.col(key_col).isNull())
+    return data_cols, closed, null_key_current, cur_all.where(F.col(key_col).isNotNull())
+
+
 def _scd2_apply_single_tick(
     history: DataFrame,
     changes: DataFrame,
@@ -264,21 +279,12 @@ def _scd2_apply_single_tick(
     cannot ride the join-miss branch — the exact row-loss the chain path's
     null_key_current slice guards against); NULL-key changes are
     dropped."""
-    data_cols = [
-        c for c in history.columns if c not in (key_col, from_col, to_col)
-    ]
-    missing = [
-        c for c in [key_col, *data_cols, change_ts_col] if c not in changes.columns
-    ]
-    if missing:
-        raise ValueError(f"changes is missing columns: {missing}")
-
+    data_cols, closed, null_key_current, cur = _scd2_slices(
+        history, changes, key_col, change_ts_col, from_col, to_col
+    )
+    cur = cur.alias("s")
     to_type = history.schema[to_col].dataType
     from_type = history.schema[from_col].dataType
-    closed = history.where(F.col(to_col).isNotNull())
-    cur_all = history.where(F.col(to_col).isNull())
-    null_key_current = cur_all.where(F.col(key_col).isNull())
-    cur = cur_all.where(F.col(key_col).isNotNull()).alias("s")
     c = changes.where(F.col(key_col).isNotNull()).alias("c")
     j = cur.join(c, F.col(f"s.{key_col}") == F.col(f"c.{key_col}"), "full_outer")
     in_change = F.col(f"c.{key_col}").isNotNull()

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark.functions import text as T
 from fs2_kinesis_firehose_spark.queries import query
 from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 
@@ -85,19 +86,8 @@ def text_format_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     orc_back = spark.read.schema(schema).orc(str(root / "orc"))
 
     def arm(df: DataFrame, fmt: str) -> DataFrame:
-        str_hash = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("o_orderstatus"), F.lit("|"), F.col("o_orderpriority")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        status = F.concat(F.col("o_orderstatus"), F.lit("|"), F.col("o_orderpriority"))
+        str_hash = T.md5_int(status, 8).cast("long")
         return df.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.count_distinct("o_orderkey").alias("n_orders"),

@@ -911,13 +911,18 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder derives dimensions from the first/last payload byte, which the
     oracle reproduces in SQL — verifying the full Spark-side plumbing
     (binary column, metadata struct, mapInPandas batch flow, 1:1 schema)."""
-    docs = load_table(spark, sf_dir, "documents")
-    media = M.attach_media(
-        docs.select("doc_id", F.encode("text", "UTF-8").alias("payload")), "payload"
-    )
+    media = _text_media(spark, sf_dir)
     feats = M.extract_image_features(media, fake=True)
     return feats.select(
         "doc_id", "media_type", "width", "height", "n_channels", "payload_sha"
+    )
+
+
+def _text_media(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each document's UTF-8 text as a binary media payload (``attach_media``)."""
+    docs = load_table(spark, sf_dir, "documents")
+    return M.attach_media(
+        docs.select("doc_id", F.encode("text", "UTF-8").alias("payload")), "payload"
     )
 
 
@@ -936,10 +941,7 @@ def multimodal_frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     width×3 bytes each.  The fake decoder derives height/width from the
     first/last payload byte, so the oracle reproduces the frame count and
     frame size in SQL — verifying the 1-to-many batch shape end-to-end."""
-    docs = load_table(spark, sf_dir, "documents")
-    media = M.attach_media(
-        docs.select("doc_id", F.encode("text", "UTF-8").alias("payload")), "payload"
-    )
+    media = _text_media(spark, sf_dir)
     frames = M.sample_frames(media, every_n=4, fake=True)
     return frames.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_frames"),
@@ -962,19 +964,26 @@ def multimodal_frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def udtf_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (table function) surface: one doc row → many bigram rows
-    via a LATERAL correlated call, then aggregated."""
+    via a LATERAL correlated call, then aggregated.  ``spark.sql`` resolves
+    ``ngrams`` while it analyzes the text, so the function is dropped again
+    right after, unless the session held it before."""
     from fs2_kinesis_firehose_spark.operators.udtf_ops import register_udtfs
 
+    held = spark.catalog.functionExists("ngrams")
     register_udtfs(spark)
-    return spark.sql(
-        """
-        SELECT t.ngram, COUNT(*) AS n
-        FROM {documents} d, LATERAL ngrams(d.text, 2) t
-        GROUP BY t.ngram
-        HAVING COUNT(*) >= 30
-        """,
-        documents=load_table(spark, sf_dir, "documents"),
-    )
+    try:
+        return spark.sql(
+            """
+            SELECT t.ngram, COUNT(*) AS n
+            FROM {documents} d, LATERAL ngrams(d.text, 2) t
+            GROUP BY t.ngram
+            HAVING COUNT(*) >= 30
+            """,
+            documents=load_table(spark, sf_dir, "documents"),
+        )
+    finally:
+        if not held:
+            spark.sql("DROP TEMPORARY FUNCTION ngrams")
 
 
 @query(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fs2_kinesis_firehose_spark.operators.asof import asof_join
 from fs2_kinesis_firehose_spark.queries import query
 from fs2_kinesis_firehose_spark.tables import load_table
 
@@ -754,8 +755,6 @@ def asof_join_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     no built-in for, realized as union + carry-forward window (one shuffle,
     no range cross-join).  The right side is deduped to one row per
     (key, time) so the as-of pick is engine-deterministic."""
-    from fs2_kinesis_firehose_spark.operators.asof import asof_join
-
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 10 == 0)
@@ -1076,8 +1075,6 @@ def asof_tolerance_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance bug in either direction (dropping rows, keeping stale
     values) breaks the hash.  Zero extra shuffles vs the plain as-of —
     the matched right time rides the same carry-forward window."""
-    from fs2_kinesis_firehose_spark.operators.asof import asof_join
-
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 10 == 0)

@@ -17,16 +17,16 @@ from pyspark.sql import functions as F
 
 from fs2_kinesis_firehose_spark.queries import query
 from fs2_kinesis_firehose_spark.queries._sql import JACCARD, SHINGLE_CTES
-from fs2_kinesis_firehose_spark.streaming.replay import (
-    replay_parquet,
-    run_foreach_batch,
-    run_to_memory,
-)
-from fs2_kinesis_firehose_spark.streaming.windows import (
+from fs2_kinesis_firehose_spark.streaming import (
     session_counts,
     sliding_value_stats,
     stream_dedup,
     tumbling_counts,
+)
+from fs2_kinesis_firehose_spark.streaming.replay import (
+    replay_parquet,
+    run_foreach_batch,
+    run_to_memory,
 )
 from fs2_kinesis_firehose_spark.tables import load_table, scratch_dir
 

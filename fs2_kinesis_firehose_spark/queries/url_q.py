@@ -24,6 +24,12 @@ from fs2_kinesis_firehose_spark.queries import query
 from fs2_kinesis_firehose_spark.tables import load_table
 
 
+def _canonical_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents with their messy URLs run through ``canonicalize_url``."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    return canonicalize_url(_with_messy_url(docs), "url")
+
+
 def _with_messy_url(docs: DataFrame) -> DataFrame:
     """Deterministic messy URL per document (see module docstring; the
     oracle's ``u`` CTE is the SQL restatement of this construction)."""
@@ -137,8 +143,7 @@ def domain_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     string expressions, one hash aggregate on the domain key (domains are
     the natural partition key of a web corpus — this is the groupBy every
     downstream per-domain policy reuses)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    canon = canonicalize_url(_with_messy_url(docs), "url")
+    canon = _canonical_urls(spark, sf_dir)
     return (
         canon.groupBy("registered_domain")
         .agg(
@@ -183,8 +188,7 @@ def canon_url_dedup_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup — the first aggregate's partitioning feeds the second (domain
     is a prefix of the first key), so the rollup reshuffle is narrow
     pre-aggregated rows."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    canon = canonicalize_url(_with_messy_url(docs), "url")
+    canon = _canonical_urls(spark, sf_dir)
     survivors = canon.groupBy("registered_domain", "canon_url").agg(
         F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dup")
     )
@@ -239,8 +243,7 @@ def domain_cap_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything downstream sees bounded per-domain cardinality."""
     from fs2_kinesis_firehose_spark.operators.curation import group_cap_sample
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    canon = canonicalize_url(_with_messy_url(docs), "url")
+    canon = _canonical_urls(spark, sf_dir)
     flagged = group_cap_sample(
         canon, "registered_domain", "doc_id", cap=10, salt="cap", keep_col="_keep"
     )

@@ -21,9 +21,11 @@ too (``_reread_zips_only_when_changed``).
 
 from __future__ import annotations
 
+import math
 import os
 import sys
 import weakref
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -76,6 +78,27 @@ _reread_zips_only_when_changed()
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def sqrt_sized_partitions(
+    spark: SparkSession, override_key: str, quantum: int, measure: Callable[[], int]
+) -> int:
+    """Partition width for work that pays a fixed cost per partition that
+    nothing coalesces (a stream's state stores, a pinned superstep frame):
+    ``clamp(ceil(sqrt(amount / quantum)), 1, session shuffle partitions)``.
+    A fixed cost k per partition plus divisible work c·amount/p is least
+    at p* = sqrt(c·amount/k), so the quantum is the caller's calibrated
+    k/c; the session conf stays the upper bound, so a cluster configured
+    with thousands of shuffle partitions keeps them at scale.
+
+    The conf ``override_key``, when set, is the width outright, and
+    ``measure`` (which returns the amount) is then never called."""
+    override = spark.conf.get(override_key, None)
+    if override:
+        return max(1, int(override))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    derived = math.isqrt(max(0, measure() - 1) // quantum) + 1
+    return max(1, min(cap, derived))
 
 
 def get_spark(

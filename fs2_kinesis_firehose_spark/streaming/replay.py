@@ -20,7 +20,6 @@ session's own width.
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import tempfile
@@ -31,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from fs2_kinesis_firehose_spark.session import sqrt_sized_partitions
 from fs2_kinesis_firehose_spark.tables import ensure_session_confs, table_path
 
 # Every dir replay_parquet/replay_phased staged since the last run, paired
@@ -92,16 +92,12 @@ def sized_state_partitions(spark: SparkSession, n_bytes: int) -> int:
     sticky per checkpoint, so production picks it for the stream's LIFETIME
     peak, not its first batch).  ``n_bytes`` comes from the driver-local
     staging dirs (``_source_bytes``)."""
-    override = spark.conf.get("spark.fs2kf.streaming.statePartitions", None)
-    if override:
-        return max(1, int(override))
-    conf = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        cap = int(conf)
-    except ValueError:  # e.g. "auto" on some platforms
-        cap = spark.sparkContext.defaultParallelism
-    derived = math.isqrt(max(0, n_bytes - 1) // _STATE_PARTITION_SQRT_BYTES) + 1
-    return max(1, min(cap, derived))
+    return sqrt_sized_partitions(
+        spark,
+        "spark.fs2kf.streaming.statePartitions",
+        _STATE_PARTITION_SQRT_BYTES,
+        lambda: n_bytes,
+    )
 
 
 def replay_parquet(

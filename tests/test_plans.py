@@ -260,18 +260,24 @@ _SQL_TEXT_QUERIES = (
 
 
 def test_sql_text_queries_leave_no_temp_view(spark, sf_smoke):
-    """Building a query leaves the session's catalog as it found it.  The
-    queries build on a fresh session (its own temp views, the shared
-    context), so a view some earlier test left behind cannot hide a leak."""
+    """Building a query leaves the session's catalog as it found it: no
+    temp view and no temporary function (the UDTF query registers one to
+    resolve its SQL text).  The queries build on a fresh session (its own
+    temp views and functions, the shared context), so a view some earlier
+    test left behind cannot hide a leak."""
     session = spark.newSession()
-    for name in _SQL_TEXT_QUERIES:
-        q.QUERIES[name](session, sf_smoke)
+    functions = {f.name for f in session.catalog.listFunctions()}
+    built = {name: q.QUERIES[name](session, sf_smoke) for name in _SQL_TEXT_QUERIES}
     assert [t.name for t in session.catalog.listTables() if t.isTemporary] == []
+    assert {f.name for f in session.catalog.listFunctions()} == functions
+    # the plan resolved the function before it was dropped, so it still runs
+    assert built["udtf_bigram_counts"].count() >= 0
 
 
-# Repeated runs of code in queries/: two places holding the same six code
-# lines (blank and comment lines skipped, whitespace collapsed) are a
-# pasted fragment, and a fix to one copy misses the other.  A survivor is
+# Repeated runs of code in queries/, and (signatures and docstrings left
+# out) in the whole package: two places holding the same six code lines
+# (blank and comment lines skipped, whitespace collapsed) are a pasted
+# fragment, and a fix to one copy misses the other.  A survivor is
 # named by one of its lines and the files holding it, with its reason.
 _PASTE_WIDTH = 6
 _PASTE_SURVIVORS = {
@@ -282,10 +288,33 @@ _PASTE_SURVIVORS = {
 }
 
 
-def _pasted_runs(paths: list[Path]) -> dict[tuple[str, ...], list[str]]:
+def _signature_and_docstring_lines(src: str) -> set[int]:
+    """Line numbers of every function signature and every module, class
+    and function docstring in ``src``."""
+    lines = set()
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            lines.update(range(node.lineno, node.body[0].lineno))
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ) and ast.get_docstring(node, clean=False) is not None:
+            doc = node.body[0]
+            lines.update(range(doc.lineno, doc.end_lineno + 1))
+    return lines
+
+
+def _pasted_runs(
+    paths: list[Path], *, code_only: bool = False
+) -> dict[tuple[str, ...], list[str]]:
     seen = defaultdict(list)
     for path in paths:
-        code = [" ".join(line.split()) for line in path.read_text().splitlines()]
+        src = path.read_text()
+        skip = _signature_and_docstring_lines(src) if code_only else set()
+        code = [
+            " ".join(line.split())
+            for lineno, line in enumerate(src.splitlines(), 1)
+            if lineno not in skip
+        ]
         code = [line for line in code if line and not line.startswith("#")]
         for i in range(len(code) - _PASTE_WIDTH + 1):
             seen[tuple(code[i:i + _PASTE_WIDTH])].append(path.name)
@@ -298,6 +327,22 @@ def test_queries_hold_no_pasted_fragment():
     pasted = [
         (sorted(files), run[0])
         for run, files in _pasted_runs(sorted(qdir.glob("*.py"))).items()
+        if not any(
+            line in run and set(files) == where
+            for line, where in _PASTE_SURVIVORS.items()
+        )
+    ]
+    assert pasted == [], f"{len(pasted)} pasted runs, first lines: {pasted[:10]}"
+
+
+def test_package_holds_no_pasted_fragment():
+    """Each decision in the package has one definition: the same scan over
+    every module, with function signatures and docstrings left out (a
+    repeated parameter list or sentence of prose is not pasted code)."""
+    pkg = Path(q.__file__).resolve().parents[1]
+    pasted = [
+        (sorted(files), run[0])
+        for run, files in _pasted_runs(sorted(pkg.rglob("*.py")), code_only=True).items()
         if not any(
             line in run and set(files) == where
             for line, where in _PASTE_SURVIVORS.items()

@@ -117,3 +117,30 @@ def test_word_ngram_rows_equals_hof_shingles(spark):
         for r in rows:
             lead[r["doc_id"]].add(r["shingle"])
         assert lead == hof, f"n={n}"
+
+
+def test_md5_int_matches_python_and_duckdb(spark):
+    """``md5_int`` is the hash contract the DuckDB oracles restate: at the
+    common width (8 hex digits) and the widest one (15), its value equals
+    Python's md5 prefix and DuckDB's ``CAST('0x' || substr(md5(s), 1, n)
+    AS BIGINT)``, byte for byte."""
+    import hashlib
+
+    import duckdb
+
+    from fs2_kinesis_firehose_spark.functions.text import md5_int
+
+    strings = ["", "a", "hello world", "7|hll", "ünïcödé ✓"]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(strings)], "i int, s string")
+    con = duckdb.connect()
+    for n in (8, 15):
+        spark_vals = [
+            r[0] for r in df.orderBy("i").select(md5_int("s", n).cast("long")).collect()
+        ]
+        python_vals = [int(hashlib.md5(s.encode()).hexdigest()[:n], 16) for s in strings]
+        duck_vals = [
+            con.execute(f"SELECT CAST('0x' || substr(md5(?), 1, {n}) AS BIGINT)", [s])
+            .fetchone()[0]
+            for s in strings
+        ]
+        assert spark_vals == python_vals == duck_vals, f"n={n}"
