@@ -31,19 +31,17 @@ def distinct_tokens(col: Column | str) -> Column:
     return F.array_distinct(tokens(col))
 
 
-def word_shingles(col: Column | str, n: int = 3, *, distinct: bool = True) -> Column:
-    """Word n-gram shingles → array<string> (distinct by default).
+def word_shingles(col: Column | str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles → array<string>.
 
     ``transform(sequence(0, size-n), i -> array_join(slice(words, i+1, n)))``
-    — stays in codegen; no explode needed until LSH banding.  Pass
-    ``distinct=False`` when the consumer is multiset-invariant (e.g. MinHash)
-    to skip the O(n²) array_distinct."""
+    — stays in codegen; no explode needed until LSH banding."""
     words = tokens(col)
     shingles = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
         lambda i: F.array_join(F.slice(words, i + 1, n), " "),
     )
-    return F.array_distinct(shingles) if distinct else shingles
+    return F.array_distinct(shingles)
 
 
 def md5_int(col: Column | str, n_hex: int) -> Column:

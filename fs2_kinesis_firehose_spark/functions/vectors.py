@@ -41,10 +41,6 @@ def norm(a: Column, dim: int | None = None) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def scale(a: Column, factor: Column) -> Column:
     return F.transform(a, lambda x: x.cast("double") * factor)
 

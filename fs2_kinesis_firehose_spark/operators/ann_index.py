@@ -24,11 +24,10 @@ def write_ann_index(
     *,
     dim: int,
     n_planes: int = 6,
-    seed: int = 42,
     vec_col: str = "embedding",
 ) -> None:
     """Bucket by sign-LSH and write partitioned parquet (the on-disk index)."""
-    bucketed = random_hyperplane_lsh(df, dim, n_planes=n_planes, seed=seed, vec_col=vec_col)
+    bucketed = random_hyperplane_lsh(df, dim, n_planes=n_planes, vec_col=vec_col)
     bucketed.write.partitionBy("bucket").mode("overwrite").parquet(path)
 
 
@@ -40,14 +39,13 @@ def ann_index_topk(
     dim: int,
     k: int = 10,
     n_planes: int = 6,
-    seed: int = 42,
-    multiprobe_hamming: int = 2,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
 ) -> DataFrame:
     """Top-k against the persisted index: the bucket IN-filter becomes a
-    partition filter → only probed directories are listed/read."""
-    probes = lsh_probe_buckets(query_vec, dim, n_planes, seed, multiprobe_hamming)
+    partition filter → only probed directories (the query's bucket and
+    every bucket within two bit flips) are listed/read."""
+    probes = lsh_probe_buckets(query_vec, dim, n_planes, 2)
     index = spark.read.parquet(path)
     candidates = index.filter(index["bucket"].isin(*probes))
     return brute_force_topk(candidates, query_vec, k, vec_col, key_col)

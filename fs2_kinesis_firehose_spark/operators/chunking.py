@@ -91,7 +91,6 @@ def concat_chunk_pack(
     key_col: str,
     seq_len: int,
     shards: int = 16,
-    salt: str = "pack",
 ) -> DataFrame:
     """Cross-document sequence packing, GPT-pretraining style
     (concat-and-chunk — the complement of ``curation.pack_sequences``'s
@@ -128,7 +127,7 @@ def concat_chunk_pack(
     from pyspark.sql import Window
 
     key = F.col(key_col)
-    shard = T.md5_int(F.concat(key.cast("string"), F.lit(salt)), 8).cast("long") % shards
+    shard = T.md5_int(F.concat(key.cast("string"), F.lit("pack")), 8).cast("long") % shards
     toks = F.col(token_col).cast("long")
     w = (
         Window.partitionBy("shard")

@@ -73,7 +73,7 @@ def training_parallelism_floor(features: DataFrame, n: int, d1: int) -> DataFram
     return features
 
 
-def feature_hash_bucket(token, dim: int, salt: str = "qc"):
+def feature_hash_bucket(token, dim: int, salt: str):
     """md5-derived feature bucket — deterministic and SQL-restatable (the
     Count-Min / HLL hashing recipe)."""
     return T.md5_int(F.concat(token, F.lit("|" + salt)), 8).cast("long") % dim
@@ -85,8 +85,6 @@ def hashed_features(
     key_col: str = "doc_id",
     *,
     dim: int = 32,
-    salt: str = "qc",
-    count_scale: float = 10.0,
     label_min_tokens: int | None = None,
 ) -> DataFrame:
     """Per-document hashed bag-of-words features:
@@ -94,7 +92,7 @@ def hashed_features(
     ``(key_col, x array<double> of length dim+1, [label int])``
 
     ``x[0] = 1`` (bias); ``x[1+j] = (count of tokens hashing to bucket j)
-    / count_scale`` — linear scaled counts.  (ln(1+cnt) compression was
+    / 10`` — linear scaled counts.  (ln(1+cnt) compression was
     measured to condition full-batch GD far worse on this corpus: 0.85 acc
     at 40 iterations vs 0.96 at 12 with linear counts.)  Built with ``dim``
     conditional-count aggregate columns (whole-stage codegen; no pivot
@@ -104,7 +102,7 @@ def hashed_features(
     """
     tok = df.select(
         F.col(key_col), F.explode(T.tokens(text_col)).alias("_tok")
-    ).withColumn("_b", feature_hash_bucket(F.col("_tok"), dim, salt))
+    ).withColumn("_b", feature_hash_bucket(F.col("_tok"), dim, "qc"))
     aggs = [F.count(F.lit(1)).alias("_n")]
     aggs += [
         F.count_if(F.col("_b") == j).alias(f"_c{j}") for j in range(dim)
@@ -113,7 +111,7 @@ def hashed_features(
     x = F.array(
         F.lit(1.0),
         *[
-            (F.col(f"_c{j}").cast("double") / F.lit(float(count_scale)))
+            (F.col(f"_c{j}").cast("double") / F.lit(10.0))
             for j in range(dim)
         ],
     ).alias("x")
@@ -239,9 +237,6 @@ def classifier_eval(
     *,
     label_col: str = "label",
     x_col: str = "x",
-    score_scale_bits: int = 12,
-    prob_scale_bits: int = 24,
-    n_bins: int = 10,
 ) -> DataFrame:
     """Threshold-free evaluation of a trained linear model: rank-sum
     ROC-AUC (Mann–Whitney U with exact average-rank tie handling), a
@@ -251,25 +246,24 @@ def classifier_eval(
 
     Determinism recipe (same as the trainer): every float that enters an
     unordered SUM is first rounded to a scaled integer.  Ranking happens on
-    ``qs = round(margin · 2^score_scale_bits)`` — the rounding grid is
+    ``qs = round(margin · 2^12)`` — the rounding grid is
     orders of magnitude above cross-engine exp/fma ulps, so ties and ranks
     are identical everywhere; ``rank_sum_x2 = Σ_pos 2·avgrank`` is then an
     exact integer, and AUC = (rank_sum_x2 − n_pos(n_pos+1)) / (2·n_pos·
     n_neg) is ONE division of exactly-represented integers → bit-identical
-    across engines.  Brier sums ``round((p−y)²·2^prob_scale_bits)``; ECE
-    sums per-bin ``|Σ round(p·2^s) − pos_b·2^s|`` over ``n_bins`` equal
-    probability bins.
+    across engines.  Brier sums ``round((p−y)²·2^24)``; ECE sums per-bin
+    ``|Σ round(p·2^24) − pos_b·2^24|`` over 10 equal probability bins.
 
     Scale shape: scoring + both quantized sums are distributed aggregates
     over the corpus; the ONLY single-partition step is the rank cumsum,
     which runs over the SCORE HISTOGRAM (one row per distinct quantized
-    score — bounded by the margin range × 2^score_scale_bits, independent
+    score — bounded by the margin range × 2^12, independent
     of corpus size), never over rows.
     """
     m = _dot_w(F.col(x_col), weights)
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
-    s_q = float(1 << score_scale_bits)
-    s_p = 1 << prob_scale_bits
+    s_q = float(1 << 12)
+    s_p = 1 << 24
     scored = features.select(
         F.round(m * s_q).cast("long").alias("_qs"),
         p.alias("_p"),
@@ -302,7 +296,7 @@ def classifier_eval(
         ).alias("brier_scaled")
     )
     bins = scored.groupBy(
-        F.least(F.floor(F.col("_p") * n_bins).cast("int"), F.lit(n_bins - 1)).alias(
+        F.least(F.floor(F.col("_p") * 10).cast("int"), F.lit(9)).alias(
             "_b"
         )
     ).agg(

@@ -98,8 +98,6 @@ def weighted_sample(
     n: int,
     *,
     key_col: str = "doc_id",
-    salt: str = "wsample",
-    round_to: int = 9,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis &
     Spirakis 2006, A-ES): each row gets key ``u^(1/w)`` for a per-row
@@ -107,23 +105,23 @@ def weighted_sample(
     uses the monotone-equivalent ``ln(u)/w`` (the raw power form collapses
     toward 1 for large weights and would drown in rounding ties).
 
-    ``u`` is derived from md5(key, salt) with a half-ulp offset so it is
+    ``u`` is derived from md5(key || 'wsample') with a half-ulp offset so it is
     never exactly 0 (``ln`` stays finite) — fully deterministic: stable
     under repartitioning, retries, and re-runs, and restatable in SQL.
     Rows with ``w <= 0`` or NULL are excluded (zero-weight rows are
     unsampleable by definition).  Returns the input columns plus
-    ``sample_key`` (rounded to ``round_to``; ranking ties broken by
+    ``sample_key`` (rounded to 9 places; ranking ties broken by
     ``key_col`` ASC).
 
     One scan + TakeOrderedAndProject (per-partition heaps, no global sort).
     """
     if n < 1:
         raise ValueError("n must be >= 1")
-    bits = T.md5_int(F.concat(F.col(key_col).cast("string"), F.lit(salt)), 8).cast(
+    bits = T.md5_int(F.concat(F.col(key_col).cast("string"), F.lit("wsample")), 8).cast(
         "double"
     )
     u = (bits + F.lit(0.5)) / F.lit(HASH_SPACE)
-    key = F.round(F.log(u) / F.col(weight_col), round_to)
+    key = F.round(F.log(u) / F.col(weight_col), 9)
     return (
         df.where(F.col(weight_col) > 0)
         .withColumn("sample_key", key)
@@ -138,7 +136,6 @@ def quantile_bucket(
     probs: tuple[float, ...] = (1.0 / 3.0, 2.0 / 3.0),
     labels: tuple[str, ...] = ("head", "middle", "tail"),
     *,
-    round_to: int = 6,
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Bucket rows by EXACT quantiles of ``col`` (linear interpolation —
@@ -150,8 +147,8 @@ def quantile_bucket(
     frame (len(probs) doubles — metadata), broadcast back via BNLJ; the
     assignment is a codegen'd when-chain — no global sort, no ntile window
     (a corpus-wide ntile needs a single-partition sort; boundaries + a
-    when-chain is the distributed form).  Boundaries are rounded to
-    ``round_to`` so both engines compare against the identical literal;
+    when-chain is the distributed form).  Boundaries are rounded to 6
+    places so both engines compare against the identical literal;
     rows with NULL ``col`` get a NULL bucket (they were never scored).
     """
     if len(labels) != len(probs) + 1:
@@ -160,7 +157,7 @@ def quantile_bucket(
         raise ValueError("probs must be ascending")
     qs = df.agg(
         *[
-            F.round(F.percentile(F.col(col), F.lit(p)), round_to).alias(f"_q{i}")
+            F.round(F.percentile(F.col(col), F.lit(p)), 6).alias(f"_q{i}")
             for i, p in enumerate(probs)
         ]
     )
@@ -351,7 +348,6 @@ def temperature_mixing(
     total_fraction: float = 0.5,
     source_col: str = "source",
     key_col: str = "doc_id",
-    salt: str = "temp",
 ) -> DataFrame:
     """Temperature-based corpus mixing (the multinomial ``p_s ∝ c_s^α``
     reweighting used by multilingual/multi-source pretraining recipes —
@@ -391,7 +387,7 @@ def temperature_mixing(
         df.join(
             F.broadcast(fracs), F.col(source_col).eqNullSafe(F.col("_frac_src"))
         )
-        .filter(hash_fraction(key_col, salt) < F.col("_keep_frac"))
+        .filter(hash_fraction(key_col, "temp") < F.col("_keep_frac"))
         .drop("_keep_frac", "_frac_src")
     )
 

@@ -237,7 +237,6 @@ def write_minhash_index(
     shingle_n: int = 3,
     num_hashes: int = 32,
     bands: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Persist the corpus MinHash-LSH fingerprint index — the MinHash twin
     of ``write_pq_index`` (r11 verdict Missing #2 names both): fingerprint
@@ -267,16 +266,16 @@ def write_minhash_index(
         "key_col": key_col,
     }
     table = pa.Table.from_pylist([meta_row], schema=_minhash_meta_arrow_schema())
-    if not meta_io.write_meta_rows(f"{path}/meta", table, mode=mode):
+    if not meta_io.write_meta_rows(f"{path}/meta", table, mode="overwrite"):
         spark.createDataFrame(
             [(shingle_n, num_hashes, bands, text_col, key_col)],
             _MINHASH_META_SCHEMA,
-        ).coalesce(1).write.mode(mode).parquet(f"{path}/meta")
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
     idx = band_hashes(
         df, text_col, key_col,
         shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
     )
-    idx.select(key_col, "band", "band_hash").write.mode(mode).partitionBy(
+    idx.select(key_col, "band", "band_hash").write.mode("overwrite").partitionBy(
         "band"
     ).parquet(f"{path}/index")
 
@@ -378,7 +377,7 @@ def verify_jaccard(
 
 
 def _star_contraction_components(
-    pairs: DataFrame, key1: str, key2: str, max_iter: int
+    pairs: DataFrame, key1: str, key2: str
 ) -> DataFrame:
     """Distributed CC via alternating large-star / small-star contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14
@@ -441,7 +440,7 @@ def _star_contraction_components(
 
     prev = checksum(edges)
     converged = False
-    for _ in range(max_iter):
+    for _ in range(20):
         new_edges = small_star(large_star(edges)).localCheckpoint()
         cur = checksum(new_edges)
         edges = new_edges
@@ -452,12 +451,11 @@ def _star_contraction_components(
     if not converged:
         # a partially-contracted edge set labels one true component as several
         # — silently WRONG survivors; fail loudly instead (alternating-star
-        # converges in O(log n) rounds, so hitting this means max_iter is far
-        # too small for the graph, not a transient condition worth retrying)
+        # converges in O(log n) rounds, so hitting this means 20 rounds are
+        # far too few for the graph, not a transient condition worth retrying)
         raise RuntimeError(
-            f"connected-components star contraction did not reach a fixpoint "
-            f"within max_iter={max_iter} rounds; results would split true "
-            f"clusters — raise max_iter (O(log n) rounds suffice)"
+            "connected-components star contraction did not reach a fixpoint "
+            "within 20 rounds; results would split true clusters"
         )
     # fixpoint: every edge is (component_min, node)
     labels = edges.select(F.col(v).alias("key"), F.col(u).alias("component"))
@@ -472,7 +470,6 @@ def connected_components(
     *,
     key1: str = "key1",
     key2: str = "key2",
-    max_iter: int = 20,
     driver_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Edge list → (key, component) with component = min key of the cluster.
@@ -519,7 +516,7 @@ def connected_components(
                 parent[hi] = lo
         rows = [(k, find(k)) for k in parent]
         return pairs.sparkSession.createDataFrame(rows, f"key {_key_ddl(pairs, key1)}, component {_key_ddl(pairs, key1)}")
-    return _star_contraction_components(edges, key1, key2, max_iter)
+    return _star_contraction_components(edges, key1, key2)
 
 
 def near_dedup_minhash(

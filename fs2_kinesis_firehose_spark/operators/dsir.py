@@ -72,13 +72,12 @@ def importance_weights(
     key_col: str = "doc_id",
     *,
     n_buckets: int = 10_000,
-    round_digits: int = 4,
 ) -> DataFrame:
     """(key, n_features, log_weight, keep) for every document in ``df``.
 
     ``target`` is the target-domain sample (its own DataFrame — typically a
     small curated corpus; here any slice).  Smoothing is add-one over the
-    bucket space; ``log_weight`` is rounded (the per-doc sum is a float fold
+    bucket space; ``log_weight`` is rounded to 4 places (the per-doc sum is a float fold
     whose association differs between engines — same mitigation as the LM
     cross-entropy oracle).  ``keep`` = log_weight > 0 (closer to target than
     to raw)."""
@@ -116,7 +115,7 @@ def importance_weights(
         .groupBy(key_col)
         .agg(
             F.count(F.lit(1)).alias("n_features"),
-            F.round(F.sum("log_ratio"), round_digits).alias("log_weight"),
+            F.round(F.sum("log_ratio"), 4).alias("log_weight"),
         )
     )
     return (

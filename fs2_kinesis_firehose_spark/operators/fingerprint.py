@@ -145,13 +145,12 @@ def coverage_report(
     *,
     gram_n: int = 3,
     window: int = 4,
-    min_matches: int | None = None,
 ) -> DataFrame:
     """Audit of the winnowing coverage guarantee, per document pair.
 
-    For every pair sharing ≥ ``min_matches`` gram occurrences (default:
-    ``window`` — any pair that could trigger the guarantee survives, since a
-    shared run of ``window`` grams implies ≥ ``window`` matches), emits:
+    For every pair sharing ≥ ``window`` gram occurrences (any pair that
+    could trigger the guarantee survives, since a shared run of ``window``
+    grams implies ≥ ``window`` matches), emits:
 
     - ``n_matches``      — matched (position₁, position₂) gram-hash pairs;
     - ``max_gram_run``   — the longest run of consecutive shared grams
@@ -168,8 +167,6 @@ def coverage_report(
     overlap report (join on gram hash, never all-pairs); runs need one
     shuffle on (pair, diagonal) and one on the pair key.
     """
-    if min_matches is None:
-        min_matches = window
     grams = gram_hash_rows(df, text_col, key_col, gram_n=gram_n).localCheckpoint(
         eager=False
     )
@@ -193,7 +190,7 @@ def coverage_report(
             F.sum("run_len").alias("n_matches"),
             F.max("run_len").alias("max_gram_run"),
         )
-        .filter(F.col("n_matches") >= min_matches)
+        .filter(F.col("n_matches") >= window)
     )
     # reuse the checkpointed gram stream — the fingerprint selection would
     # otherwise rebuild the identical tokenize+posexplode+window stage

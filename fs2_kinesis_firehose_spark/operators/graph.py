@@ -53,6 +53,10 @@ __all__ = [
 # conf is the pin size, exactly the pre-r15 behavior.
 _PIN_SQRT_ROWS = 16 * 1024
 
+# decimals ``hits`` rounds each normalized vector to; its SQL oracle
+# (queries/graph_q.py) restates the same rounding
+HITS_ROUND_TO = 9
+
 
 def _sized_pin_partitions(df: DataFrame) -> int:
     """Scale-adaptive partition count for a superstep pin:
@@ -333,11 +337,11 @@ _PEEL_MIN_FRINGE_FRAC = 0.02
 
 
 def _peel_fringes(
-    und: DataFrame, deg: DataFrame, rounds: int = 2
+    und: DataFrame, deg: DataFrame
 ) -> tuple[DataFrame, DataFrame, int]:
-    """Gated degree-< 2 peel: each round first folds the (node-sized,
-    already-checkpointed) degree table down to ``(n_nodes, n_fringe,
-    wedge_ub)`` and peels only when the fringe clears
+    """Gated degree-< 2 peel, at most two rounds: each round first folds
+    the (node-sized, already-checkpointed) degree table down to
+    ``(n_nodes, n_fringe, wedge_ub)`` and peels only when the fringe clears
     ``_PEEL_MIN_FRINGE_FRAC`` — so a fringe-free graph pays one driver
     fold and ZERO extra joins.  Returns the (possibly peeled) edge list,
     its matching degree table (so the caller reuses the final degree
@@ -357,7 +361,7 @@ def _peel_fringes(
         ).first()
         return row[0], row[1], int(row[2] or 0)
 
-    for _ in range(rounds):
+    for _ in range(2):
         n_nodes, n_fringe, wedge_ub = fold(deg)
         if n_nodes == 0 or n_fringe < _PEEL_MIN_FRINGE_FRAC * n_nodes:
             break
@@ -369,16 +373,16 @@ def _peel_fringes(
         )
         deg = _degrees(und).localCheckpoint(eager=False)
         wedge_ub = None  # stale: computed on the pre-peel degree table
-    if wedge_ub is None:  # every allowed round peeled (or rounds == 0)
+    if wedge_ub is None:  # every allowed round peeled
         wedge_ub = fold(deg)[2]
     return und, deg, wedge_ub
 
 
-def _prune_low_degree(und: DataFrame, rounds: int = 2) -> DataFrame:
+def _prune_low_degree(und: DataFrame) -> DataFrame:
     """Peeled edge list alone (test/utility view of ``_peel_fringes``)."""
     und = und.localCheckpoint(eager=False)
     deg = _degrees(und).localCheckpoint(eager=False)
-    return _peel_fringes(und, deg, rounds)[0]  # wedge_ub unused here
+    return _peel_fringes(und, deg)[0]  # wedge_ub unused here
 
 
 # Wedge-exchange sizing (see _oriented_triangles): ~40 B per wedge row
@@ -470,7 +474,6 @@ def triangle_count_estimate(
     *,
     src: str = "src",
     dst: str = "dst",
-    salt: str = "doulion",
 ) -> DataFrame:
     """DOULION approximate GLOBAL triangle count (Tsourakakis, Kang &
     Faloutsos, KDD 2009): sparsify-and-count — keep each undirected edge
@@ -483,7 +486,7 @@ def triangle_count_estimate(
     the exact path kept for verification.
 
     The edge coin is the engine-portable deterministic md5 uniform
-    (``hash_fraction(u || '|' || v, salt)`` < p) rather than ``rand()`` —
+    (``hash_fraction(u || '|' || v, 'doulion')`` < p) rather than ``rand()`` —
     the same run is exactly reproducible, partitioning-independent, and a
     SQL oracle can restate the identical sample.
 
@@ -497,7 +500,7 @@ def triangle_count_estimate(
     und = _canonical_undirected(edges, src, dst).localCheckpoint(eager=False)
     coin = hash_fraction(
         F.concat_ws("|", F.col("u").cast("string"), F.col("v").cast("string")),
-        salt,
+        "doulion",
     )
     sampled = und.where(coin < F.lit(p)).localCheckpoint(eager=False)
     tri = _oriented_triangles(sampled).agg(
@@ -520,7 +523,6 @@ def label_propagation(
     *,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al., 2007) for community
     detection: ``(node, label)`` after a FIXED number of synchronous rounds.
@@ -559,7 +561,7 @@ def label_propagation(
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for i in range(iterations):
+    for _ in range(iterations):
         counts = (
             e.join(labels, e["src"] == labels["node"])
             .groupBy(F.col("dst").alias("node"), "label")
@@ -573,9 +575,7 @@ def label_propagation(
             (-F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl")))["nl"]).alias(
                 "label"
             )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
     return labels
 
 
@@ -663,12 +663,11 @@ def hits(
     *,
     src: str = "src",
     dst: str = "dst",
-    round_to: int = 9,
 ) -> DataFrame:
     """Kleinberg HITS (hubs & authorities, SIAM JACM 1999) over a directed
     edge list, fixed iterations: ``a(v) ← Σ_{(u,v)} h(u)`` then
     ``h(u) ← Σ_{(u,v)} a(v)``, each vector max-normalized and ROUNDED to
-    ``round_to`` decimals per iteration — the kmeans-oracle trick that
+    ``HITS_ROUND_TO`` decimals per iteration — the kmeans-oracle trick that
     makes every iteration's values bit-identical across engines, so the
     whole loop restates as unrolled SQL CTEs.
 
@@ -721,7 +720,7 @@ def hits(
             .crossJoin(F.broadcast(a_max))
             .select(
                 "node",
-                F.round(F.coalesce("_raw", F.lit(0.0)) / F.col("_m"), round_to).alias("a"),
+                F.round(F.coalesce("_raw", F.lit(0.0)) / F.col("_m"), HITS_ROUND_TO).alias("a"),
             )
             .localCheckpoint(eager=False)
         )
@@ -736,7 +735,7 @@ def hits(
             .crossJoin(F.broadcast(h_max))
             .select(
                 "node",
-                F.round(F.coalesce("_raw", F.lit(0.0)) / F.col("_m"), round_to).alias("h"),
+                F.round(F.coalesce("_raw", F.lit(0.0)) / F.col("_m"), HITS_ROUND_TO).alias("h"),
             )
             .localCheckpoint(eager=False)
         )

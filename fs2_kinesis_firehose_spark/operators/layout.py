@@ -112,12 +112,11 @@ def zorder_write(
     path: str,
     cols: list[str],
     *,
-    bits: int = 16,
     n_files: int = 16,
     bounds: dict[str, tuple[float, float]] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as parquet clustered by the Z-order of ``cols``.
+    """Write ``df`` as parquet clustered by the Z-order of ``cols``, each
+    column scaled to a 16-bit grid.
 
     ``bounds`` gives (min, max) per column when the caller knows them (table
     metadata, partition boundaries); otherwise ONE tiny one-row aggregate is
@@ -132,20 +131,20 @@ def zorder_write(
     """
     if bounds is not None:
         grid = [
-            _scale_to_grid(F.col(c), F.lit(bounds[c][0]), F.lit(bounds[c][1]), bits)
+            _scale_to_grid(F.col(c), F.lit(bounds[c][0]), F.lit(bounds[c][1]), 16)
             for c in cols
         ]
         keyed = df
     else:
-        keyed, grid = _gridded(df, cols, bits)
-    z = morton_key(grid, bits)
+        keyed, grid = _gridded(df, cols, 16)
+    z = morton_key(grid, 16)
     out_cols = df.columns
     (
         keyed.withColumn("_z", z)
         .repartitionByRange(n_files, F.col("_z"))
         .sortWithinPartitions("_z")
         .select(*out_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -318,20 +317,25 @@ def hilbert_write_bucketed(
 
 _BLOOM_SIDECAR = "_bloomidx"
 _BLOOM_DATA = "data"
+# the Bloom sidecar's shape, shared by its writer and its reader; the SQL
+# oracle (queries/layout_q.py) restates all three
+_BLOOM_BITS = 4096
+_BLOOM_HASHES = 3
+_BLOOM_SALT = "bloomidx"
 
 
-def _md5_pos(value, j: int, n_bits: int, salt: str) -> int:
+def _md5_pos(value, j: int) -> int:
     """Python twin of the engine-portable md5 bit position (same formula
-    as the Column/SQL forms below — first 32 md5 bits mod n_bits)."""
+    as the Column/SQL forms below — first 32 md5 bits mod _BLOOM_BITS)."""
     import hashlib
 
-    h = hashlib.md5(f"{value}:{j}{salt}".encode()).hexdigest()[:8]
-    return int(h, 16) % n_bits
+    h = hashlib.md5(f"{value}:{j}{_BLOOM_SALT}".encode()).hexdigest()[:8]
+    return int(h, 16) % _BLOOM_BITS
 
 
-def _md5_pos_col(col: Column, j: int, n_bits: int, salt: str) -> Column:
-    salted = F.concat(col.cast("string"), F.lit(f":{j}{salt}"))
-    return T.md5_int(salted, 8).cast("long") % n_bits
+def _md5_pos_col(col: Column, j: int) -> Column:
+    salted = F.concat(col.cast("string"), F.lit(f":{j}{_BLOOM_SALT}"))
+    return T.md5_int(salted, 8).cast("long") % _BLOOM_BITS
 
 
 def bloom_index_write(
@@ -342,9 +346,6 @@ def bloom_index_write(
     *,
     bits: int = 16,
     n_buckets: int = 16,
-    n_bits: int = 4096,
-    n_hashes: int = 3,
-    salt: str = "bloomidx",
 ) -> None:
     """Write ``df`` Z-order-bucketed by ``layout_cols`` (the fixed-grid
     pure-function layout of ``zorder_write_bucketed``) PLUS a persisted
@@ -354,10 +355,10 @@ def bloom_index_write(
     column covers every file; the Bloom sidecar does not).
 
     Sidecar layout: ``<path>/_bloomidx`` holds the DISTINCT
-    ``(_zbucket, pos)`` set-bit rows (≤ n_buckets·n_bits rows — index
+    ``(_zbucket, pos)`` set-bit rows (≤ n_buckets·4096 rows — index
     metadata, thousands of times smaller than the data).  Bit positions
-    are the engine-portable md5 formula (first 32 bits of
-    ``md5(value || ':' || j || salt)`` mod ``n_bits``), so an external
+    are the engine-portable md5 formula for each of 3 hashes j (first 32
+    bits of ``md5(value || ':' || j || 'bloomidx')`` mod 4096), so an external
     SQL checker can replay the whole index; no false negatives by
     construction.  At 100 TB: the sidecar build is one extra distinct
     over (bucket, k positions) — map-side combined, output bounded by
@@ -369,8 +370,8 @@ def bloom_index_write(
         F.explode(
             F.array(
                 *[
-                    _md5_pos_col(F.col(bloom_col), j, n_bits, salt)
-                    for j in range(n_hashes)
+                    _md5_pos_col(F.col(bloom_col), j)
+                    for j in range(_BLOOM_HASHES)
                 ]
             )
         ).alias("pos"),
@@ -385,10 +386,6 @@ def bloom_index_prune_stats(
     path: str,
     bloom_col: str,
     probe_value,
-    *,
-    n_bits: int = 4096,
-    n_hashes: int = 3,
-    salt: str = "bloomidx",
 ) -> dict:
     """Point-lookup through the persisted Bloom sidecar: compute the probe
     value's bit positions (driver-side, same md5 formula), find the
@@ -398,7 +395,7 @@ def bloom_index_prune_stats(
     ``_zbucket`` directory column).  Returns the pruning accounting a
     reader cares about; no false negatives, so ``n_rows_match`` equals
     the unindexed scan's answer exactly."""
-    probe_pos = sorted({_md5_pos(probe_value, j, n_bits, salt) for j in range(n_hashes)})
+    probe_pos = sorted({_md5_pos(probe_value, j) for j in range(_BLOOM_HASHES)})
     sidecar = spark.read.parquet(f"{path}/{_BLOOM_SIDECAR}")
     hit_rows = (
         sidecar.where(F.col("pos").isin(probe_pos))
@@ -487,7 +484,6 @@ def range_write_clustered(
     col: str,
     *,
     n_buckets: int = 16,
-    round_to: int = 6,
 ) -> list[float]:
     """1-D range-clustered layout — the plain ``ORDER BY`` table layout
     (the bread-and-butter complement to the multi-dim Z/Hilbert curves):
@@ -496,7 +492,7 @@ def range_write_clustered(
     intersect it and merge-style readers see sorted runs.
 
     Boundaries come from ONE exact-percentile aggregate (``percentile`` ≡
-    DuckDB ``quantile_cont``, rounded to ``round_to``) instead of
+    DuckDB ``quantile_cont``, rounded to 6 places) instead of
     ``repartitionByRange``'s reservoir sample: the row→file mapping is a
     PURE FUNCTION of the data, so an external checker can recompute the
     exact per-file statistics and pruning outcome (same trade as
@@ -521,7 +517,7 @@ def range_write_clustered(
     row = df.agg(
         F.transform(
             F.percentile(F.col(col), F.array(*[F.lit(p) for p in probs])),
-            lambda x: F.round(x, round_to),  # HALF_UP, same as the SQL oracle
+            lambda x: F.round(x, 6),  # HALF_UP, same as the SQL oracle
         ).alias("_qs")
     ).collect()[0]
     bounds = [float(v) for v in row["_qs"]]

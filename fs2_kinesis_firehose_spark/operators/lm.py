@@ -147,14 +147,11 @@ def score_cross_entropy(
     lm: BigramLM,
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    map_unk: bool = False,
-    round_to: int = 4,
 ) -> DataFrame:
     """Per-document bigram cross-entropy under ``lm`` (lower = more fluent).
 
     Output: (id_col, n_bigrams, oov_bigrams, cross_entropy) where
-    ``cross_entropy = -mean(logp)`` rounded to ``round_to`` decimals and
+    ``cross_entropy = -mean(logp)`` rounded to 4 decimals and
     ``oov_bigrams`` counts bigrams absent from the LM's count table (they
     score at the add-one floor).  Documents with < 2 tokens surface with
     ``n_bigrams = 0`` and NULL entropy.
@@ -164,12 +161,6 @@ def score_cross_entropy(
     broadcast size by construction (see ``train_bigram_lm``).
     """
     pairs = _doc_bigrams(df, text_col, id_col)
-    if map_unk:
-        # align scoring stream with a vocab-capped model: any token the LM's
-        # context table doesn't know becomes <unk> (broadcast joins, no
-        # literal arrays — same scale discipline as training)
-        pairs = _map_unk(pairs, lm.unigrams.select(F.col("w1").alias("w")))
-
     logp = F.log(F.coalesce(F.col("c12"), F.lit(0)) + F.lit(1)) - F.log(
         F.col("c1") + F.col("v")
     )
@@ -181,7 +172,7 @@ def score_cross_entropy(
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.count(F.when(F.col("c12").isNull(), F.lit(1))).alias("oov_bigrams"),
-            F.round(-F.sum(logp) / F.count(F.lit(1)), round_to).alias("cross_entropy"),
+            F.round(-F.sum(logp) / F.count(F.lit(1)), 4).alias("cross_entropy"),
         )
     )
     return (

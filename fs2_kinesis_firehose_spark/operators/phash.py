@@ -7,7 +7,7 @@ The reference has no media operators at all (its unit is an opaque byte
 record, `RecordOps.scala:26`); a 100-TB multimodal corpus needs image
 near-dup exactly where text needs MinHash.  Pipeline shape:
 
-1. ``image_dhash`` / ``image_ahash`` — decode (REAL PNG codec,
+1. ``image_dhash`` — decode (REAL PNG codec,
    ``operators/png.py`` — stdlib floor, no Pillow needed), block-mean
    downsample, threshold → ONE 64-bit hash per image.  Arrow-batched
    ``mapInPandas``, a narrow pass; the corpus bytes never shuffle.
@@ -43,7 +43,6 @@ __all__ = [
     "dhash_long",
     "ahash_long",
     "image_dhash",
-    "image_ahash",
     "hamming64",
     "phash_neardup_pairs",
 ]
@@ -86,34 +85,40 @@ def _gray(arr: np.ndarray) -> np.ndarray:
     return a.sum(axis=2)
 
 
-def dhash_long(arr: np.ndarray, hash_size: int = 8) -> int:
-    """Difference hash: block-mean the gray image to ``hash_size ×
-    (hash_size+1)``, bit(y,x) = mean(y,x) > mean(y,x+1) (cross-multiplied
-    — exact), packed row-major into one 64-bit long (hash_size=8).
+def dhash_long(arr: np.ndarray) -> int:
+    """Difference hash: block-mean the gray image to 8 × 9, bit(y,x) =
+    mean(y,x) > mean(y,x+1) (cross-multiplied — exact), packed row-major
+    into one 64-bit long.
     Invariant to uniform brightness shifts and any monotone per-pixel
     rescale that preserves horizontal neighbor order."""
     gray = _gray(arr)
-    sums, counts = _block_sums(gray, hash_size, hash_size + 1)
+    sums, counts = _block_sums(gray, 8, 9)
     left_s, right_s = sums[:, :-1], sums[:, 1:]
     left_n, right_n = counts[:, :-1], counts[:, 1:]
     bits = (left_s * right_n) > (right_s * left_n)
     return _pack_bits(bits)
 
 
-def ahash_long(arr: np.ndarray, hash_size: int = 8) -> int:
-    """Average hash: bit(y,x) = block mean > GLOBAL mean, cross-multiplied
-    (``sum_blk · n_total > sum_total · n_blk``), packed row-major."""
+def ahash_long(arr: np.ndarray) -> int:
+    """Average hash over the 8 × 8 block grid: bit(y,x) = block mean >
+    GLOBAL mean, cross-multiplied (``sum_blk · n_total > sum_total ·
+    n_blk``), packed row-major."""
     gray = _gray(arr)
-    sums, counts = _block_sums(gray, hash_size, hash_size)
+    sums, counts = _block_sums(gray, 8, 8)
     total_s, total_n = int(gray.sum()), int(gray.size)
     bits = (sums * total_n) > (total_s * counts)
     return _pack_bits(bits)
 
 
-def _hash_column(df: DataFrame, bytes_col: str, out_col: str, fn, hash_size: int) -> DataFrame:
-    """Shared decode→hash pass: Arrow-batched mapInPandas over the binary
-    column, REAL PNG decode, one int64 hash out; all other columns pass
-    through untouched."""
+def image_dhash(
+    df: DataFrame, bytes_col: str, *, out_col: str = "dhash", hash_size: int = 8
+) -> DataFrame:
+    """Append ``out_col``: the 64-bit dHash of the PNG bytes in
+    ``bytes_col`` (hash_size=8 → 8×9 block grid → 64 bits).  One
+    Arrow-batched mapInPandas pass over the binary column, REAL PNG decode,
+    one int64 hash out; all other columns pass through untouched."""
+    if hash_size * hash_size != 64:
+        raise ValueError("hash_size must be 8 (64-bit packed hash)")
     from fs2_kinesis_firehose_spark.operators.png import decode_png
 
     from pyspark.sql.types import LongType, StructField, StructType
@@ -134,30 +139,10 @@ def _hash_column(df: DataFrame, bytes_col: str, out_col: str, fn, hash_size: int
                         "filter NULLs out (or fill a placeholder) before "
                         "perceptual hashing"
                     )
-                hashes.append(int(fn(decode_png(bytes(b)), hash_size)))
+                hashes.append(int(dhash_long(decode_png(bytes(b)))))
             yield pdf.assign(**{out_col: pd.Series(hashes, dtype="int64", index=pdf.index)})
 
     return df.mapInPandas(run, out_schema)
-
-
-def image_dhash(
-    df: DataFrame, bytes_col: str, *, out_col: str = "dhash", hash_size: int = 8
-) -> DataFrame:
-    """Append ``out_col``: the 64-bit dHash of the PNG bytes in
-    ``bytes_col`` (hash_size=8 → 8×9 block grid → 64 bits)."""
-    if hash_size * hash_size != 64:
-        raise ValueError("hash_size must be 8 (64-bit packed hash)")
-    return _hash_column(df, bytes_col, out_col, dhash_long, hash_size)
-
-
-def image_ahash(
-    df: DataFrame, bytes_col: str, *, out_col: str = "ahash", hash_size: int = 8
-) -> DataFrame:
-    """Append ``out_col``: the 64-bit aHash of the PNG bytes in
-    ``bytes_col``."""
-    if hash_size * hash_size != 64:
-        raise ValueError("hash_size must be 8 (64-bit packed hash)")
-    return _hash_column(df, bytes_col, out_col, ahash_long, hash_size)
 
 
 def hamming64(a: Column, b: Column) -> Column:

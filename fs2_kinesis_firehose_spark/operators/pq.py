@@ -54,6 +54,10 @@ from pyspark.sql import functions as F
 from fs2_kinesis_firehose_spark.functions import vectors as V
 
 
+# decimals every ADC score and exact rescore distance is rounded to
+# before ranking (ties then break on the key); the SQL oracles restate it
+_DIST_DECIMALS = 6
+
 __all__ = [
     "pq_fit",
     "pq_encode",
@@ -89,7 +93,6 @@ def pq_fit(
     m: int = 8,
     k: int = 16,
     iterations: int = 2,
-    round_to: int = 9,
     init_vectors: list | None = None,
 ) -> dict:
     """Train the m per-subspace codebooks.  Returns
@@ -171,7 +174,7 @@ def pq_fit(
                 F.col("_val"),
             )
             .groupBy("_j", "_c", "_w")
-            .agg(F.round(F.avg("_val"), round_to).alias("_m"))
+            .agg(F.round(F.avg("_val"), 9).alias("_m"))
             .collect()  # bounded: m*k*sub rows (codebooks are metadata)
         )
         new: dict[tuple[int, int], dict[int, float]] = {}
@@ -366,7 +369,6 @@ def pq_topk(
     *,
     key_col: str = "vec_id",
     code_col: str = "pq_code",
-    round_to: int = 6,
     lut_mode: str = "literal",
 ) -> DataFrame:
     """ADC top-k: ``(key_col, adc_dist)`` ascending, deterministic
@@ -377,7 +379,7 @@ def pq_topk(
     scored = pq_adc_scores(df, model, query, code_col=code_col, lut_mode=lut_mode)
     return (
         scored.select(
-            key_col, F.round(F.col("adc_dist"), round_to).alias("adc_dist")
+            key_col, F.round(F.col("adc_dist"), _DIST_DECIMALS).alias("adc_dist")
         )
         .orderBy(F.asc("adc_dist"), F.asc(key_col))
         .limit(k)
@@ -394,7 +396,6 @@ def pq_rescored_topk(
     vec_col: str = "embedding",
     key_col: str = "vec_id",
     code_col: str = "pq_code",
-    round_to: int = 6,
     lut_mode: str = "literal",
 ) -> DataFrame:
     """The production PQ recipe: ADC selects ``candidates`` (≫ k) cheap
@@ -421,9 +422,9 @@ def pq_rescored_topk(
     Returns ``(key_col, l2_dist)``."""
     scored = pq_adc_scores(df, model, query, code_col=code_col, lut_mode=lut_mode)
     cand = _adc_shortlist(
-        scored, F.col("adc_dist"), candidates, vec_col, key_col, round_to
+        scored, F.col("adc_dist"), candidates, vec_col, key_col
     )
-    return _exact_l2_topk(cand, query, k, vec_col, key_col, round_to)
+    return _exact_l2_topk(cand, query, k, vec_col, key_col)
 
 
 def _adc_shortlist(
@@ -432,12 +433,11 @@ def _adc_shortlist(
     candidates: int,
     vec_col: str,
     key_col: str,
-    round_to: int,
 ) -> DataFrame:
     """The ``candidates`` rows of least rounded ADC ``score`` (ties to the
     smaller key) as ``(key_col, vec_col, _adc)``: one TakeOrderedAndProject."""
     return (
-        df.select(key_col, vec_col, F.round(score, round_to).alias("_adc"))
+        df.select(key_col, vec_col, F.round(score, _DIST_DECIMALS).alias("_adc"))
         .orderBy(F.asc("_adc"), F.asc(key_col))
         .limit(candidates)
     )
@@ -449,7 +449,6 @@ def _exact_l2_topk(
     k: int,
     vec_col: str,
     key_col: str,
-    round_to: int,
 ) -> DataFrame:
     """The rescore: exact L2² of each shortlisted vector to ``query``, top
     ``k`` as ``(key_col, l2_dist)``.  HOF-fold dots, bit-equal and over
@@ -461,7 +460,7 @@ def _exact_l2_topk(
         _seq_sq_norm(query)
     )
     return (
-        cand.select(key_col, F.round(l2, round_to).alias("l2_dist"))
+        cand.select(key_col, F.round(l2, _DIST_DECIMALS).alias("l2_dist"))
         .orderBy(F.asc("l2_dist"), F.asc(key_col))
         .limit(k)
     )
@@ -480,8 +479,6 @@ def ivf_pq_rescored_topk(
     key_col: str = "vec_id",
     code_col: str = "pq_code",
     cell_col: str = "ivf_cell",
-    round_to: int = 6,
-    lut_mode: str = "literal",
 ) -> DataFrame:
     """The full billion-vector ANN recipe (Jégou et al. 2011, the IVFADC
     query path): IVF coarse cells prune the corpus to the ``nprobe`` cells
@@ -520,8 +517,6 @@ def ivf_pq_rescored_topk(
         vec_col=vec_col,
         key_col=key_col,
         code_col=code_col,
-        round_to=round_to,
-        lut_mode=lut_mode,
     )
 
 
@@ -538,7 +533,6 @@ def ivf_pq_rescored_topk_multi(
     key_col: str = "vec_id",
     code_col: str = "pq_code",
     cell_col: str = "ivf_cell",
-    round_to: int = 6,
 ) -> DataFrame:
     """IVFADC for a SET of queries as ONE plan — the serving shape a
     micro-batch of query vectors needs (r11 verdict "What's wrong" #2:
@@ -608,9 +602,9 @@ def ivf_pq_rescored_topk_multi(
         .select(
             "_qid",
             key_col,
-            F.round(_lut_chain_sum(F.col("_lut"), code_col, m), round_to).alias(
-                "_adc"
-            ),
+            F.round(
+                _lut_chain_sum(F.col("_lut"), code_col, m), _DIST_DECIMALS
+            ).alias("_adc"),
         )
     )
     w_cand = Window.partitionBy("_qid").orderBy(F.asc("_adc"), F.asc(key_col))
@@ -629,7 +623,7 @@ def ivf_pq_rescored_topk_multi(
         pool.select(key_col, vec_col)
         .join(F.broadcast(cand), key_col)
         .join(F.broadcast(qvecs), "_qid")
-        .select("_qid", key_col, F.round(l2, round_to).alias("l2_dist"))
+        .select("_qid", key_col, F.round(l2, _DIST_DECIMALS).alias("l2_dist"))
     )
     w_k = Window.partitionBy("_qid").orderBy(F.asc("l2_dist"), F.asc(key_col))
     return (
@@ -671,7 +665,6 @@ def write_pq_index(
     *,
     cell_col: str | None = None,
     centroids=None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist a PQ (optionally IVF+PQ) index so queries stop refitting
     per run — the amortized-infrastructure shape of the reference itself
@@ -722,11 +715,11 @@ def write_pq_index(
         [dict(zip(("m", "k", "sub", "dim", "codebooks", "centroids"), row))],
         schema=_model_arrow_schema(),
     )
-    if not meta_io.write_meta_rows(f"{path}/model", table, mode=mode):
+    if not meta_io.write_meta_rows(f"{path}/model", table, mode="overwrite"):
         spark.createDataFrame([row], _MODEL_SCHEMA).coalesce(1).write.mode(
-            mode
+            "overwrite"
         ).parquet(f"{path}/model")
-    writer = codes.write.mode(mode)
+    writer = codes.write.mode("overwrite")
     if cell_col is not None:
         if cell_col not in codes.columns:
             raise ValueError(f"cell_col {cell_col!r} not in codes columns")
@@ -873,7 +866,6 @@ def ivf_pq_residual_rescored_topk(
     key_col: str = "vec_id",
     code_col: str = "pq_code",
     cell_col: str = "ivf_cell",
-    round_to: int = 6,
     lut_mode: str = "literal",
 ) -> DataFrame:
     """Residual IVFADC — the verbatim billion-vector recipe: probe the
@@ -928,7 +920,7 @@ def ivf_pq_residual_rescored_topk(
             _lut_chain_sum(F.col("_lut"), code_col, model["m"]) + F.col("_cconst")
         )
         probed = df.join(F.broadcast(lut_df), F.col(cell_col) == F.col("_lutcell"))
-        cand = _adc_shortlist(probed, score_b, candidates, vec_col, key_col, round_to)
+        cand = _adc_shortlist(probed, score_b, candidates, vec_col, key_col)
     else:
         score = None
         for c in cells:
@@ -949,5 +941,5 @@ def ivf_pq_residual_rescored_topk(
             )
 
         probed = df.filter(F.col(cell_col).isin(cells))
-        cand = _adc_shortlist(probed, score, candidates, vec_col, key_col, round_to)
-    return _exact_l2_topk(cand, query, k, vec_col, key_col, round_to)
+        cand = _adc_shortlist(probed, score, candidates, vec_col, key_col)
+    return _exact_l2_topk(cand, query, k, vec_col, key_col)

@@ -45,8 +45,8 @@ def brute_force_topk(
     return scored.orderBy(F.col("cos_sim").desc(), F.col(key_col).asc()).limit(k)
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.default_rng(42)
     return rng.standard_normal((n_planes, dim))
 
 
@@ -55,7 +55,6 @@ def random_hyperplane_lsh(
     dim: int,
     *,
     n_planes: int = 12,
-    seed: int = 42,
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Append an integer ``bucket`` = sign pattern under ``n_planes`` fixed
@@ -64,7 +63,7 @@ def random_hyperplane_lsh(
     The hyperplanes are literal arrays baked into the plan (constant-folded),
     so bucketing is a pure codegen projection — at write time, partitionBy/
     bucketBy on ``bucket`` makes ANN reads partition-pruned."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
         sign_bit = (V.dot(F.col(vec_col), V.literal_vector(list(p))) > 0).cast("long")
@@ -73,12 +72,12 @@ def random_hyperplane_lsh(
 
 
 def lsh_probe_buckets(
-    query_vec, dim: int, n_planes: int, seed: int, multiprobe_hamming: int
+    query_vec, dim: int, n_planes: int, multiprobe_hamming: int
 ) -> list[int]:
     """The LSH buckets a multi-probe query scans, ascending: the query's own
     bucket under ``random_hyperplane_lsh``'s planes, plus every bucket one
     bit flip away (``multiprobe_hamming`` >= 1) and two flips away (>= 2)."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     qv = np.asarray(query_vec, dtype=np.float64)
     qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) > 0))
     probes = {qbucket}
@@ -98,7 +97,6 @@ def ann_topk(
     k: int = 10,
     *,
     n_planes: int = 12,
-    seed: int = 42,
     multiprobe_hamming: int = 1,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
@@ -107,7 +105,7 @@ def ann_topk(
     buckets within ``multiprobe_hamming`` bit flips (multi-probe LSH —
     recovers recall lost to boundary effects without touching the rest of the
     corpus)."""
-    probes = lsh_probe_buckets(query_vec, dim, n_planes, seed, multiprobe_hamming)
+    probes = lsh_probe_buckets(query_vec, dim, n_planes, multiprobe_hamming)
     candidates = df_bucketed.filter(F.col("bucket").isin(*probes))
     return brute_force_topk(candidates, query_vec, k, vec_col, key_col)
 
@@ -120,15 +118,13 @@ def ivf_train_centroids(
     *,
     n_centroids: int = 16,
     sample_fraction: float | None = None,
-    max_sample_rows: int = 100_000,
-    iters: int = 5,
     seed: int = 42,
     vec_col: str = "embedding",
 ) -> np.ndarray:
     """Tiny Lloyd's k-means on a driver-side SAMPLE (centroids are metadata,
     not data — the corpus is never collected).
 
-    ``sample_fraction=None`` takes the ``max_sample_rows`` rows with the
+    ``sample_fraction=None`` takes the 100,000 rows with the
     smallest ``xxhash64(vec)`` — hash order is pseudo-random, so this is a
     uniform bottom-k sample in ONE TakeOrdered pass (the old path ran a
     full ``count()`` scan just to calibrate a fraction, then a second scan
@@ -139,20 +135,20 @@ def ivf_train_centroids(
         sample = (
             df.select(F.col(vec_col), F.xxhash64(F.col(vec_col)).alias("_h"))
             .orderBy("_h", vec_col)
-            .limit(max_sample_rows)  # TakeOrderedAndProject: one pass, k rows
+            .limit(100_000)  # TakeOrderedAndProject: one pass, k rows
             .toPandas()[vec_col]
         )
     else:
         sample = (
             df.select(vec_col)
             .sample(fraction=sample_fraction, seed=seed)
-            .limit(max_sample_rows)
+            .limit(100_000)
             .toPandas()[vec_col]
         )
     X = np.stack([np.asarray(v, dtype=np.float64) for v in sample])
     rng = np.random.default_rng(seed)
     centroids = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
-    for _ in range(iters):
+    for _ in range(5):  # Lloyd iterations
         d = ((X[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for c in range(len(centroids)):

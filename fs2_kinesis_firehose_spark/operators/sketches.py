@@ -51,7 +51,6 @@ __all__ = [
     "heavy_hitters",
     "count_min_table",
     "count_min_lookup",
-    "ams_sign",
     "ams_f2_sketch",
     "ams_f2_estimate",
 ]
@@ -68,22 +67,19 @@ def _compress(counters: dict, k: int) -> dict:
     return {item: w - t for item, w in counters.items() if w > t}
 
 
-def misra_gries_summaries(
-    df: DataFrame, item_col: str, k: int, *, compress_slack: int = 4
-) -> DataFrame:
+def misra_gries_summaries(df: DataFrame, item_col: str, k: int) -> DataFrame:
     """Per-partition Misra–Gries summaries → DataFrame(item, weight).
 
     ≤ k rows per input partition; each partition's summary undercounts any
     item by at most n_partition/(k+1).  NULL items are ignored (SQL-aggregate
-    convention).  ``compress_slack``: the dict is allowed to grow to
-    ``compress_slack·k`` between compressions so the O(k log k) compress
-    amortizes over Arrow batches.
+    convention).  The dict is allowed to grow to 4·k between compressions
+    so the O(k log k) compress amortizes over Arrow batches.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     item_field = df.schema[item_col]
     out_schema = f"item {item_field.dataType.simpleString()}, weight long"
-    high_water = max(compress_slack * k, k + 1)
+    high_water = max(4 * k, k + 1)
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict = {}
@@ -142,8 +138,6 @@ def heavy_hitters(
     *,
     k: int | None = None,
     totals: DataFrame | None = None,
-    min_count: int | None = None,
-    checkpoint_items: bool = True,
 ) -> DataFrame:
     """EXACT phi-heavy hitters: DataFrame(item, cnt) with
     ``cnt = exact count`` for every item whose count ≥ ceil(phi·n),
@@ -152,10 +146,7 @@ def heavy_hitters(
     Threshold precision: ``ceil(phi·n)`` is evaluated in DOUBLE arithmetic
     on the double ``phi`` actually passed — for a decimal like 0.07 whose
     double is infinitesimally above the decimal value, ``0.07·100`` is
-    7.000000000000001 and the cut becomes 8, not 7.  When the cut must be
-    decimal-exact, compute it yourself (e.g. ``math.ceil(Fraction(7, 100)
-    * n)``) and pass ``min_count`` to override the phi·n cut entirely
-    (phi then governs only the sketch's candidate-recall bound).
+    7.000000000000001 and the cut becomes 8, not 7.
 
     ``k`` (counter budget) defaults to ``4·ceil(1/phi)``; any ``k ≥
     ceil(1/phi)`` preserves the no-false-negative guarantee — larger k only
@@ -168,13 +159,11 @@ def heavy_hitters(
     derivation a third time — pass it here.  Caller-supplied totals MUST
     equal the stream's true count or the phi cut is wrong.
 
-    ``checkpoint_items``: the items projection feeds the sketch pass AND
-    the exact recount (and the count when ``totals`` is not given); when its
-    lineage is a derived pipeline (tokenize → window → explode), every
-    consumer would re-run it.  By default it is ``localCheckpoint(eager=
-    False)``-pinned (the repo idiom from graph.py/fingerprint.py) so the
-    derivation runs once; pass ``False`` when the projection is a plain
-    column scan cheaper to re-read than to spool to executor storage.
+    The items projection feeds the sketch pass AND the exact recount (and
+    the count when ``totals`` is not given); when its lineage is a derived
+    pipeline (tokenize → window → explode), every consumer would re-run
+    it, so it is ``localCheckpoint(eager=False)``-pinned (the repo idiom
+    from graph.py/fingerprint.py) and the derivation runs once.
     """
     if not (0.0 < phi <= 1.0):
         raise ValueError(f"phi must be in (0, 1], got {phi}")
@@ -186,9 +175,11 @@ def heavy_hitters(
             f"k={k} breaks the heavy-hitter guarantee for phi={phi}; need k >= {k_min}"
         )
 
-    items = df.select(item_col).where(F.col(item_col).isNotNull())
-    if checkpoint_items:
-        items = items.localCheckpoint(eager=False)
+    items = (
+        df.select(item_col)
+        .where(F.col(item_col).isNotNull())
+        .localCheckpoint(eager=False)
+    )
 
     # Pass 1: per-partition sketches → merge → global compress to ≤ k.
     merged = (
@@ -214,11 +205,7 @@ def heavy_hitters(
     # Pass 2: exact recount of the ≤ k candidates + the phi·n cut.
     if totals is None:
         totals = items.agg(F.count("*").alias("n"))
-    cut = (
-        F.lit(int(min_count))
-        if min_count is not None
-        else F.ceil(F.lit(phi) * F.col("n")).cast("long")
-    )
+    cut = F.ceil(F.lit(phi) * F.col("n")).cast("long")
     return (
         items.join(F.broadcast(candidates), item_col, "inner")
         .groupBy(item_col)
@@ -232,12 +219,17 @@ def heavy_hitters(
 # ---------------------------------------------------------------------------
 # Count-Min sketch (Cormode & Muthukrishnan, J. Algorithms 2005)
 # ---------------------------------------------------------------------------
-def _cm_hash(item, width: int, r: int, salt: str):
-    """Row-r CM column: first 32 bits of md5(item || salt || r) mod width —
+# salt of the Count-Min row hashes, shared by the sketch build and its
+# lookup; the SQL oracles (queries/sketch_q.py) restate it
+_CM_SALT = "cm"
+
+
+def _cm_hash(item, width: int, r: int):
+    """Row-r CM column: first 32 bits of md5(item || 'cm' || r) mod width —
     the repo's engine-portable hash (bit-identical in DuckDB), so the whole
     sketch is deterministic and cross-engine restatable."""
     c = F.col(item) if isinstance(item, str) else item
-    salted = F.concat(c.cast("string"), F.lit(f"{salt}{r}"))
+    salted = F.concat(c.cast("string"), F.lit(f"{_CM_SALT}{r}"))
     return T.md5_int(salted, 8).cast("long") % width
 
 
@@ -247,7 +239,6 @@ def count_min_table(
     *,
     width: int = 1 << 12,
     depth: int = 4,
-    salt: str = "cm",
 ) -> DataFrame:
     """Count-Min sketch AS A DATAFRAME: ``(row int, col long, cnt long)``
     holding the non-zero counters — the point-frequency companion to the
@@ -264,7 +255,7 @@ def count_min_table(
     """
     if width < 2 or depth < 1:
         raise ValueError(f"need width >= 2, depth >= 1; got {width}, {depth}")
-    hashes = F.array(*[_cm_hash(item_col, width, r, salt) for r in range(depth)])
+    hashes = F.array(*[_cm_hash(item_col, width, r) for r in range(depth)])
     return (
         df.where(F.col(item_col).isNotNull())
         .select(F.posexplode(hashes).alias("row", "col"))
@@ -280,20 +271,19 @@ def count_min_lookup(
     *,
     width: int = 1 << 12,
     depth: int = 4,
-    salt: str = "cm",
 ) -> DataFrame:
     """Point-frequency estimates for each probe key: ``(item_col, cm_est)``
     with ``cm_est = min over rows of counter[r][h_r(key)]`` — ≥ the true
     count always (one-sided), ≤ true + 2n/width per row w.h.p.
 
-    ``width``/``depth``/``salt`` must match the build.  Probes explode to
+    ``width``/``depth`` must match the build.  Probes explode to
     depth rows, broadcast-join the sketch table on (row, col), and take one
     min aggregate — probe-sized work, the corpus is never touched.
     """
     pos = probes.select(
         item_col,
         F.posexplode(
-            F.array(*[_cm_hash(item_col, width, r, salt) for r in range(depth)])
+            F.array(*[_cm_hash(item_col, width, r) for r in range(depth)])
         ).alias("row", "col"),
     )
     return (
@@ -306,33 +296,22 @@ def count_min_lookup(
 # ---------------------------------------------------------------------------
 # AMS (tug-of-war) second-moment sketch
 # ---------------------------------------------------------------------------
-def ams_sign(item_col: str, r: int, *, salt: str = "ams") -> F.Column:
-    """Deterministic ±1 sign for repetition ``r`` — bit ``r % 32`` of the
-    32-bit word ``conv(md5(item || '|salt' || r // 32)[1:8], 16, 10)``.
-    One md5 + one conv serve 32 repetitions; per-rep extraction is a long
-    shift+mask (codegen-cheap — a per-rep hex-char parse measured ~3x the
-    whole aggregate's cost).  Engine-portable: DuckDB restates the word as
-    ``CAST(CONCAT('0x', SUBSTRING(md5(..), 1, 8)) AS BIGINT)`` and the
-    identical shift/mask, making the sketch sums (exact integers)
-    bit-comparable cross-engine."""
-    block, pos = divmod(r, 32)
-    salted = F.concat(F.col(item_col).cast("string"), F.lit(f"|{salt}{block}"))
-    word = T.md5_int(salted, 8).cast("long")
-    return F.shiftright(word, pos).bitwiseAND(F.lit(1)) * 2 - 1
-
-
 def ams_f2_sketch(
     df: DataFrame,
     item_col: str,
     *,
     reps: int = 80,
-    salt: str = "ams",
 ) -> DataFrame:
     """AMS tug-of-war sketch (Alon–Matias–Szegedy, STOC 1996) of the second
     frequency moment F2 = Σ_k c_k² as ONE row of ``reps`` integer sums:
     ``s_r = Σ_rows sign_r(item)``.  Each ``s_r²`` is an unbiased estimator
     of F2 (Var ≤ 2·F2²); callers average within groups and take a median
     across groups (``ams_f2_estimate``) for the standard concentration.
+    ``sign_r`` is bit ``r % 32`` of the 32-bit word ``conv(md5(item ||
+    '|ams' || r // 32)[1:8], 16, 10)`` mapped to ±1: one md5 serves 32
+    repetitions, and DuckDB restates the word as ``CAST(CONCAT('0x',
+    SUBSTRING(md5(..), 1, 8)) AS BIGINT)`` with the identical shift/mask,
+    so the sums (exact integers) are bit-comparable cross-engine.
 
     F2 is the self-join size / collision mass of a key column — the
     skew statistic that decides salting and partition strategy at 100 TB,
@@ -356,7 +335,7 @@ def ams_f2_sketch(
     rows = df.where(F.col(item_col).isNotNull()).select(
         *[
             T.md5_int(
-                F.concat(F.col(item_col).cast("string"), F.lit(f"|{salt}{b}")), 8
+                F.concat(F.col(item_col).cast("string"), F.lit(f"|ams{b}")), 8
             )
             .cast("long")
             .alias(f"_w{b}")

@@ -23,14 +23,13 @@ def salted_join(
     *,
     salt_factor: int = 8,
     how: str = "inner",
-    salt_by: str | None = None,
 ) -> DataFrame:
     """Equi-join on ``key`` with the hot-key shuffle spread over
     ``salt_factor`` partitions per key.
 
-    ``salt_by``: columns-hash used to derive the left salt (defaults to all
-    left columns) — deterministic, so the same row always lands on the same
-    reducer (idempotent under task retry, unlike rand()-based salting).
+    The left salt is a hash of all left columns — deterministic, so the
+    same row always lands on the same reducer (idempotent under task
+    retry, unlike rand()-based salting).
 
     ``how`` is restricted to inner/left/left_semi: the right side is
     replicated ``salt_factor`` times, so right/full-outer would surface each
@@ -41,7 +40,7 @@ def salted_join(
             f"salted_join supports inner/left/left_semi joins only (right rows are "
             f"replicated {salt_factor}x, breaking right/full-outer semantics); got {how!r}"
         )
-    salt_src = F.xxhash64(*[F.col(c) for c in (left.columns if salt_by is None else [salt_by])])
+    salt_src = F.xxhash64(*[F.col(c) for c in left.columns])
     lsalted = left.withColumn("_salt", F.pmod(salt_src, F.lit(salt_factor)).cast("int"))
     rsalted = right.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1)))

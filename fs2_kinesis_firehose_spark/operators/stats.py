@@ -67,7 +67,6 @@ def key_skew_report(
     key_col: str,
     *,
     top_n: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """Shuffle-key skew diagnostic: the single-row report a planner (or an
     engineer) reads before deciding whether a join/groupBy key needs
@@ -104,8 +103,8 @@ def key_skew_report(
         "n_keys",
         "n_rows",
         "max_rows_per_key",
-        F.round(avg, round_to).alias("avg_rows_per_key"),
-        F.round(F.col("max_rows_per_key") / avg, round_to).alias("skew_ratio"),
+        F.round(avg, 6).alias("avg_rows_per_key"),
+        F.round(F.col("max_rows_per_key") / avg, 6).alias("skew_ratio"),
         "topn_rows",
-        F.round(F.col("topn_rows") / F.col("n_rows"), round_to).alias("topn_share"),
+        F.round(F.col("topn_rows") / F.col("n_rows"), 6).alias("topn_share"),
     )

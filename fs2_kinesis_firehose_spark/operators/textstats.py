@@ -286,7 +286,6 @@ def tfidf_keywords(
     key_col: str = "doc_id",
     *,
     top_k: int = 3,
-    round_to: int = 6,
 ) -> DataFrame:
     """Top-k keywords per document by smoothed TF-IDF:
     ``tf · ln((1 + N) / (1 + df))`` with raw term counts; rank = (score
@@ -312,7 +311,7 @@ def tfidf_keywords(
         F.round(
             F.col("tf")
             * F.log((1.0 + float(n_docs)) / (F.lit(1.0) + F.col("df"))),
-            round_to,
+            6,
         ).alias("tfidf"),
     )
     w = Window.partitionBy(key_col).orderBy(F.desc("tfidf"), F.asc("term"))

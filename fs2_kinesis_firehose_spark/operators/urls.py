@@ -14,13 +14,13 @@ Canonicalization rules (the RFC 3986 §6 normalizations that preserve
 semantics, plus the tracking-param strip every crawler pipeline applies):
 
 1. scheme and host lowercased;
-2. a leading ``www.`` stripped from the host (configurable);
+2. a leading ``www.`` stripped from the host;
 3. default ports dropped (``:80`` for http, ``:443`` for https); explicit
    non-default ports kept;
 4. path: duplicate slashes collapsed, ONE trailing slash stripped (except
    the bare root), empty path becomes ``/``;
 5. query: split on ``&``, tracking params dropped (key prefixes ``utm_``
-   and exact keys ``fbclid``/``gclid``/``msclkid`` by default), the rest
+   and exact keys ``fbclid``/``gclid``/``msclkid``), the rest
    SORTED lexicographically and rejoined — parameter order never changes
    resource identity in practice, and sorting makes equal resources
    string-equal;
@@ -29,7 +29,7 @@ semantics, plus the tracking-param strip every crawler pipeline applies):
 ``registered_domain`` is the eTLD+1 heuristic: the last two host labels,
 or three when the last two are a known multi-level public suffix
 (``co.uk``-style).  A full public-suffix list is a data file, not an
-algorithm change — the suffix set is a parameter.
+algorithm change — the suffix set is the ``MULTI_SUFFIXES`` constant.
 """
 
 from __future__ import annotations
@@ -37,11 +37,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["canonicalize_url", "registered_domain", "DEFAULT_MULTI_SUFFIXES"]
+__all__ = ["canonicalize_url", "registered_domain", "MULTI_SUFFIXES"]
 
 # the common two-level public suffixes; extend with the full PSL for
 # production crawls (pure data — the extraction expression is unchanged)
-DEFAULT_MULTI_SUFFIXES: tuple[str, ...] = (
+MULTI_SUFFIXES: tuple[str, ...] = (
     "co.uk",
     "org.uk",
     "ac.uk",
@@ -56,15 +56,11 @@ DEFAULT_MULTI_SUFFIXES: tuple[str, ...] = (
     "com.mx",
 )
 
-DEFAULT_TRACKING_PREFIXES: tuple[str, ...] = ("utm_",)
-DEFAULT_TRACKING_KEYS: tuple[str, ...] = ("fbclid", "gclid", "msclkid")
+TRACKING_PREFIXES: tuple[str, ...] = ("utm_",)
+TRACKING_KEYS: tuple[str, ...] = ("fbclid", "gclid", "msclkid")
 
 
-def registered_domain(
-    host: Column,
-    *,
-    multi_suffixes: tuple[str, ...] = DEFAULT_MULTI_SUFFIXES,
-) -> Column:
+def registered_domain(host: Column) -> Column:
     """eTLD+1 from an already-lowercased host column."""
     labels = F.split(host, r"\.")
     n = F.size(labels)
@@ -75,7 +71,7 @@ def registered_domain(
         ".", F.element_at(labels, -3), F.element_at(labels, -2), F.element_at(labels, -1)
     )
     return (
-        F.when((n >= 3) & last2.isin(*multi_suffixes), last3)
+        F.when((n >= 3) & last2.isin(*MULTI_SUFFIXES), last3)
         .when(n >= 2, last2)
         .otherwise(host)
     )
@@ -87,19 +83,15 @@ def canonicalize_url(
     *,
     out_col: str = "canon_url",
     domain_col: str | None = "registered_domain",
-    strip_www: bool = True,
-    tracking_prefixes: tuple[str, ...] = DEFAULT_TRACKING_PREFIXES,
-    tracking_keys: tuple[str, ...] = DEFAULT_TRACKING_KEYS,
-    multi_suffixes: tuple[str, ...] = DEFAULT_MULTI_SUFFIXES,
 ) -> DataFrame:
     """Append ``out_col`` (the canonical URL) and optionally ``domain_col``
     (the registered domain) — see the module docstring for the rules."""
     url = F.col(url_col)
     scheme = F.lower(F.regexp_extract(url, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
     authority = F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
-    host = F.lower(F.substring_index(authority, ":", 1))
-    if strip_www:
-        host = F.regexp_replace(host, r"^www\.", "")
+    host = F.regexp_replace(
+        F.lower(F.substring_index(authority, ":", 1)), r"^www\.", ""
+    )
     port = F.regexp_extract(authority, r":(\d+)$", 1)
     keep_port = (
         (port != "")
@@ -121,9 +113,9 @@ def canonicalize_url(
     def _is_tracking(p: Column) -> Column:
         key = F.substring_index(p, "=", 1)
         cond = F.lit(False)
-        for pref in tracking_prefixes:
+        for pref in TRACKING_PREFIXES:
             cond = cond | key.startswith(pref)
-        for k in tracking_keys:
+        for k in TRACKING_KEYS:
             cond = cond | (key == k)
         return cond
 
@@ -137,7 +129,5 @@ def canonicalize_url(
     canon = F.concat(scheme, F.lit("://"), host, port_part, path, query_part)
     out = df.withColumn(out_col, canon)
     if domain_col is not None:
-        out = out.withColumn(
-            domain_col, registered_domain(host, multi_suffixes=multi_suffixes)
-        )
+        out = out.withColumn(domain_col, registered_domain(host))
     return out

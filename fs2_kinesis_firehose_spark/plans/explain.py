@@ -22,15 +22,15 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def assert_plan_contains(df: DataFrame, *needles: str, mode: str = "formatted") -> str:
-    plan = explain_str(df, mode)
+def assert_plan_contains(df: DataFrame, *needles: str) -> str:
+    plan = explain_str(df)
     missing = [n for n in needles if n not in plan]
     assert not missing, f"plan lacks {missing}:\n{plan}"
     return plan
 
 
-def assert_plan_lacks(df: DataFrame, *needles: str, mode: str = "formatted") -> str:
-    plan = explain_str(df, mode)
+def assert_plan_lacks(df: DataFrame, *needles: str) -> str:
+    plan = explain_str(df)
     present = [n for n in needles if n in plan]
     assert not present, f"plan unexpectedly contains {present}:\n{plan}"
     return plan

@@ -31,16 +31,15 @@ def observed_write(
     df: DataFrame,
     path: str,
     *,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
     extra_metrics: dict[str, Column] | None = None,
 ) -> dict[str, Any]:
-    """Write ``df`` and return metrics computed BY THE WRITE JOB ITSELF
-    (no second scan): row count plus any caller-supplied aggregates."""
+    """Write ``df`` as parquet over ``path`` and return metrics computed BY
+    THE WRITE JOB ITSELF (no second scan): row count plus any
+    caller-supplied aggregates."""
     metrics: dict[str, Column] = {"n_rows": F.count(F.lit(1))}
     if extra_metrics:
         metrics.update(extra_metrics)
     cols = [m.alias(k) for k, m in metrics.items()]
     observed, obs = observe(df, f"write_{abs(hash(path)) % 10**8}", *cols)
-    observed.write.format(fmt).mode(mode).save(path)
+    observed.write.mode("overwrite").parquet(path)
     return dict(obs.get)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from fs2_kinesis_firehose_spark.operators import dedup as D
 from fs2_kinesis_firehose_spark.operators.graph import (
+    HITS_ROUND_TO,
     k_core,
     label_propagation,
     pagerank,
@@ -395,7 +396,7 @@ def ppr_seed_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unrolled_hits_sql(iterations: int, round_to: int = 9) -> str:
+def _unrolled_hits_sql(iterations: int) -> str:
     """CTE chain mirroring operators/graph.py:hits term-for-term: per
     iteration, authority raw = Σ hub over in-edges, max-normalize, ROUND;
     then hub raw = Σ authority over out-edges, max-normalize, ROUND."""
@@ -408,7 +409,7 @@ def _unrolled_hits_sql(iterations: int, round_to: int = 9) -> str:
     )""")
         ctes.append(f"am{i} AS (SELECT COALESCE(MAX(raw), 1.0) AS m FROM ar{i})")
         ctes.append(f"""a{i} AS (
-        SELECT v.node, ROUND(COALESCE(r.raw, 0.0) / am{i}.m, {round_to}) AS s
+        SELECT v.node, ROUND(COALESCE(r.raw, 0.0) / am{i}.m, {HITS_ROUND_TO}) AS s
         FROM nodes v LEFT JOIN ar{i} r ON v.node = r.node CROSS JOIN am{i}
     )""")
         ctes.append(f"""hr{i} AS (
@@ -417,7 +418,7 @@ def _unrolled_hits_sql(iterations: int, round_to: int = 9) -> str:
     )""")
         ctes.append(f"hm{i} AS (SELECT COALESCE(MAX(raw), 1.0) AS m FROM hr{i})")
         ctes.append(f"""h{i} AS (
-        SELECT v.node, ROUND(COALESCE(r.raw, 0.0) / hm{i}.m, {round_to}) AS s
+        SELECT v.node, ROUND(COALESCE(r.raw, 0.0) / hm{i}.m, {HITS_ROUND_TO}) AS s
         FROM nodes v LEFT JOIN hr{i} r ON v.node = r.node CROSS JOIN hm{i}
     )""")
         prev_h = f"h{i}"

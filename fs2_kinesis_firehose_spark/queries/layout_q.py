@@ -380,7 +380,7 @@ def bloom_index_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     bloom_index_write(
         events, str(out_dir), ["user_id", "value"], "event_id",
-        bits=16, n_buckets=16, n_bits=4096, n_hashes=3,
+        bits=16, n_buckets=16,
     )
     stats = bloom_index_prune_stats(spark, str(out_dir), "event_id", 421)
     return spark.createDataFrame(

@@ -361,9 +361,9 @@ def embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Similarity search
 # ---------------------------------------------------------------------------
-def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
+def _query_vector(spark: SparkSession, sf_dir: str) -> list[float]:
     emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == vec_id).select("embedding").first()
+    row = emb.filter(F.col("vec_id") == 0).select("embedding").first()
     return [float(x) for x in row[0]]
 
 
@@ -439,7 +439,7 @@ def binary_quant_rescored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set is "xor(bucket, query_bucket) has ≤2 bits", i.e. membership of the xor
 # in the static ≤2-bit mask list.  This makes the full ANN pipeline
 # (bucketing + probe pruning + exact re-rank) value-hash-checkable.
-_PLANES_SQL = [vector_sql(p) for p in S._hyperplanes(64, 6, seed=42)]
+_PLANES_SQL = [vector_sql(p) for p in S._hyperplanes(64, 6)]
 
 
 def _lsh_bucket(vec: str) -> str:
@@ -2450,21 +2450,24 @@ def curriculum_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trunc_recall_oracle(trunc: int = 16, n_queries: int = 8, k: int = 10) -> str:
+_TRUNC_DIM, _TRUNC_QUERIES, _TRUNC_K = 16, 8, 10
+
+
+def _trunc_recall_oracle() -> str:
     """Full-replay restatement of truncated_dim_recall_eval: both cosine
-    rankings (full 64-dim and the first-``trunc`` prefix slice), the
+    rankings (full 64-dim and the first-``_TRUNC_DIM`` prefix slice), the
     per-query top-k windows, and the recall join."""
     return f"""
     WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM b WHERE vec_id < {n_queries}),
+    q AS (SELECT vec_id AS query_id, v AS qv FROM b WHERE vec_id < {_TRUNC_QUERIES}),
     scored AS (
         SELECT q.query_id, b.vec_id,
                ROUND(list_inner_product(b.v, q.qv)
                      / (SQRT(list_inner_product(b.v, b.v))
                         * SQRT(list_inner_product(q.qv, q.qv))), 6) AS cf,
-               ROUND(list_inner_product(b.v[1:{trunc}], q.qv[1:{trunc}])
-                     / (SQRT(list_inner_product(b.v[1:{trunc}], b.v[1:{trunc}]))
-                        * SQRT(list_inner_product(q.qv[1:{trunc}], q.qv[1:{trunc}]))),
+               ROUND(list_inner_product(b.v[1:{_TRUNC_DIM}], q.qv[1:{_TRUNC_DIM}])
+                     / (SQRT(list_inner_product(b.v[1:{_TRUNC_DIM}], b.v[1:{_TRUNC_DIM}]))
+                        * SQRT(list_inner_product(q.qv[1:{_TRUNC_DIM}], q.qv[1:{_TRUNC_DIM}]))),
                      6) AS ct
         FROM b, q
     ),
@@ -2474,7 +2477,7 @@ def _trunc_recall_oracle(trunc: int = 16, n_queries: int = 8, k: int = 10) -> st
                    ROW_NUMBER() OVER (PARTITION BY query_id
                                       ORDER BY cf DESC, vec_id ASC) AS rn
             FROM scored
-        ) WHERE rn <= {k}
+        ) WHERE rn <= {_TRUNC_K}
     ),
     tr AS (
         SELECT query_id, vec_id FROM (
@@ -2482,7 +2485,7 @@ def _trunc_recall_oracle(trunc: int = 16, n_queries: int = 8, k: int = 10) -> st
                    ROW_NUMBER() OVER (PARTITION BY query_id
                                       ORDER BY ct DESC, vec_id ASC) AS rn
             FROM scored
-        ) WHERE rn <= {k}
+        ) WHERE rn <= {_TRUNC_K}
     ),
     common AS (
         SELECT e.query_id, COUNT(*) AS n_common
@@ -2490,7 +2493,7 @@ def _trunc_recall_oracle(trunc: int = 16, n_queries: int = 8, k: int = 10) -> st
         GROUP BY e.query_id
     )
     SELECT b2.query_id, COALESCE(c.n_common, 0) AS n_common,
-           ROUND(COALESCE(c.n_common, 0) / {float(k)!r}, 2) AS recall_at_k
+           ROUND(COALESCE(c.n_common, 0) / {float(_TRUNC_K)!r}, 2) AS recall_at_k
     FROM (SELECT DISTINCT query_id FROM exact) b2
     LEFT JOIN common c USING (query_id)
     """
@@ -2507,7 +2510,9 @@ def truncated_dim_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated dot is a strict prefix of the full multiply-add chain, so
     both scores come out of one codegen'd projection."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.truncated_dim_recall_eval(emb, dim=64, trunc_dim=16, n_queries=8, k=10)
+    return S.truncated_dim_recall_eval(
+        emb, dim=64, trunc_dim=_TRUNC_DIM, n_queries=_TRUNC_QUERIES, k=_TRUNC_K
+    )
 
 
 def _labeled_queries(n_queries: int) -> str:
@@ -2522,12 +2527,15 @@ def _labeled_queries(n_queries: int) -> str:
     )"""
 
 
-def _knn_label_oracle(n_queries: int = 16, k: int = 10) -> str:
+_KNN_QUERIES, _KNN_K = 16, 10
+
+
+def _knn_label_oracle() -> str:
     """Full-replay restatement of knn_label_eval: leave-one-out exact-cosine
     neighbor ranking, the k-NN vote, and the deterministic majority rule
     (count desc, label asc)."""
     return f"""
-    WITH {_labeled_queries(n_queries)},
+    WITH {_labeled_queries(_KNN_QUERIES)},
     scored AS (
         SELECT q.query_id, q.true_label, b.vec_id, b.label AS nl,
                ROUND(list_inner_product(b.v, q.qv)
@@ -2541,7 +2549,7 @@ def _knn_label_oracle(n_queries: int = 16, k: int = 10) -> str:
                    ROW_NUMBER() OVER (PARTITION BY query_id
                                       ORDER BY c DESC, vec_id ASC) AS rn
             FROM scored
-        ) WHERE rn <= {k}
+        ) WHERE rn <= {_KNN_K}
     ),
     votes AS (
         SELECT query_id, true_label, nl, COUNT(*) AS v
@@ -2568,10 +2576,13 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the trained quality classifier must beat.  Ties break to the smallest
     label; the oracle replays ranking, vote and tie-break end-to-end."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.knn_label_eval(emb, dim=64, n_queries=16, k=10)
+    return S.knn_label_eval(emb, dim=64, n_queries=_KNN_QUERIES, k=_KNN_K)
 
 
-def _cluster_balance_oracle(cap: int = 20, salt: str = "bal") -> str:
+_BAL_CAP, _BAL_SALT = 20, "bal"
+
+
+def _cluster_balance_oracle() -> str:
     """Restates seeded-centroid assignment (the proven _ivf_oracle idiom)
     + the md5-ordered per-cell cap."""
     return f"""
@@ -2585,15 +2596,15 @@ def _cluster_balance_oracle(cap: int = 20, salt: str = "bal") -> str:
                ROW_NUMBER() OVER (
                    PARTITION BY ivf_cell
                    ORDER BY md5(COALESCE('1' || CAST(vec_id AS VARCHAR), '0')
-                                || '{salt}'),
+                                || '{_BAL_SALT}'),
                             COALESCE('1' || CAST(vec_id AS VARCHAR), '0')
                ) AS rn
         FROM b
     )
     SELECT CAST(ivf_cell AS INT) AS ivf_cell,
            COUNT(*) AS n_vecs,
-           CAST(SUM(CASE WHEN rn <= {cap} THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           CAST(SUM(CASE WHEN rn <= {cap} THEN vec_id ELSE 0 END) AS BIGINT)
+           CAST(SUM(CASE WHEN rn <= {_BAL_CAP} THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+           CAST(SUM(CASE WHEN rn <= {_BAL_CAP} THEN vec_id ELSE 0 END) AS BIGINT)
                AS kept_id_sum
     FROM ranked
     GROUP BY ivf_cell
@@ -2620,7 +2631,7 @@ def cluster_balanced_sample_counts(spark: SparkSession, sf_dir: str) -> DataFram
     cents = S.seeded_centroids(64, 16, seed=7, scale=0.125)
     assigned = S.ivf_assign_blas(emb, cents).select("vec_id", "ivf_cell")
     flagged = group_cap_sample(
-        assigned, "ivf_cell", "vec_id", cap=20, salt="bal", keep_col="_keep"
+        assigned, "ivf_cell", "vec_id", cap=_BAL_CAP, salt=_BAL_SALT, keep_col="_keep"
     )
     return flagged.groupBy("ivf_cell").agg(
         F.count(F.lit(1)).alias("n_vecs"),
@@ -2793,11 +2804,14 @@ def quality_flag_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _contrastive_oracle(n_queries: int = 8) -> str:
+_CONTRASTIVE_QUERIES = 8
+
+
+def _contrastive_oracle() -> str:
     """Full replay of contrastive_pair_mining: cosine scoring, the per-
     (anchor, same-label?) best-neighbor windows, and the margin."""
     return f"""
-    WITH {_labeled_queries(n_queries)},
+    WITH {_labeled_queries(_CONTRASTIVE_QUERIES)},
     scored AS (
         SELECT q.query_id, q.true_label, b.vec_id,
                (b.label = q.true_label) AS same,
@@ -2832,7 +2846,7 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     two ranks over the same relation; oracle replays scoring, both
     windows and the margin."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.contrastive_pair_mining(emb, dim=64, n_queries=8)
+    return S.contrastive_pair_mining(emb, dim=64, n_queries=_CONTRASTIVE_QUERIES)
 
 
 @query(

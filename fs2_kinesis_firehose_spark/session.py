@@ -44,9 +44,14 @@ def _reread_zips_only_when_changed() -> None:
     before any data is touched.  The wrapper keeps, per importer, the
     archive's ``(st_mtime_ns, st_size)`` as of that importer's last read and
     calls the eager original only when the key is missing or differs, or
-    ``os.stat`` fails.  So the first invalidation per importer reads as
-    before, a rewritten archive is re-read, and ``FileFinder`` invalidation
-    is untouched.
+    ``os.stat`` fails.  The key of every zip importer already in
+    ``sys.path_importer_cache`` is recorded at install: this module is first
+    imported while a task unpickles its function, after that task's own
+    invalidation read every archive, so the next task skips the reads too.
+    An archive rewritten between that read and the install would be missed
+    until it changes again.  A rewritten archive is re-read, an importer
+    created later reads on its first invalidation as before, and
+    ``FileFinder`` invalidation is untouched.
 
     Acts only where ``pyspark.worker_util`` is loaded, which only Spark's
     Python worker entry points import (a driver is never patched), and only
@@ -60,16 +65,22 @@ def _reread_zips_only_when_changed() -> None:
     eager = zipimport.zipimporter.invalidate_caches
     read_as_of = weakref.WeakKeyDictionary()
 
-    def invalidate_caches(self) -> None:
+    def archive_key(importer) -> tuple[int, int] | None:
         try:
-            st = os.stat(self.archive)
-            key = (st.st_mtime_ns, st.st_size)
+            st = os.stat(importer.archive)
         except OSError:
-            key = None
+            return None
+        return st.st_mtime_ns, st.st_size
+
+    def invalidate_caches(self) -> None:
+        key = archive_key(self)
         if key is None or read_as_of.get(self) != key:
             eager(self)
             read_as_of[self] = key
 
+    for importer in list(sys.path_importer_cache.values()):
+        if isinstance(importer, zipimport.zipimporter):
+            read_as_of[importer] = archive_key(importer)
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 

@@ -16,19 +16,15 @@ def attribution_join(
     events: DataFrame,
     other: DataFrame,
     *,
-    trigger_type: str = "purchase",
-    touch_type: str = "click",
-    window: str = "10 minutes",
-    state_ttl: str = "30 minutes",
     how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream join: each ``trigger_type`` event matched to every
-    ``touch_type`` event of the SAME user within ``window`` BEFORE it (the
+    """Stream-stream join: each ``purchase`` event matched to every
+    ``click`` event of the SAME user within 10 minutes BEFORE it (the
     classic attribution shape).
 
-    Watermarks on both sides + the time-range predicate let the engine evict
-    buffered rows once they can no longer match — state is O(users × window),
-    not O(stream).  ``events`` and ``other`` must be two independent readers
+    30-minute watermarks on both sides + the time-range predicate let the
+    engine evict buffered rows once they can no longer match — state is
+    O(users × window), not O(stream).  ``events`` and ``other`` must be two independent readers
     of the stream (a streaming self-join needs two source instances).
 
     ``how="left_outer"`` is the attribution-WITH-ABSENCE shape: a trigger
@@ -40,27 +36,27 @@ def attribution_join(
     two-watermark contract the late-data query documents) — pinned in
     tests/test_streaming.py::test_stream_stream_left_outer_emits_null_on_timeout."""
     trig = (
-        events.filter(F.col("event_type") == trigger_type)
+        events.filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("t_user"),
             F.col("ts").alias("t_ts"),
             F.col("event_id").alias("trigger_id"),
         )
-        .withWatermark("t_ts", state_ttl)
+        .withWatermark("t_ts", "30 minutes")
     )
     touch = (
-        other.filter(F.col("event_type") == touch_type)
+        other.filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("c_ts"),
             F.col("event_id").alias("touch_id"),
         )
-        .withWatermark("c_ts", state_ttl)
+        .withWatermark("c_ts", "30 minutes")
     )
     return trig.join(
         touch,
         F.expr(
-            f"t_user = c_user AND c_ts >= t_ts - interval {window} AND c_ts <= t_ts"
+            "t_user = c_user AND c_ts >= t_ts - interval 10 minutes AND c_ts <= t_ts"
         ),
         how,
     ).select(

@@ -12,19 +12,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# how late an event may arrive and still be counted: every windowed
+# operator here drops state older than this behind the max event time
+WATERMARK = "30 minutes"
+
 
 def tumbling_counts(
     events: DataFrame,
     *,
-    window_len: str = "10 minutes",
-    watermark: str = "30 minutes",
     ts_col: str = "ts",
     key_col: str = "event_type",
 ) -> DataFrame:
-    """Per-window per-key counts + value sums with late-data watermark."""
+    """Per-10-minute-window per-key counts + value sums with late-data
+    watermark."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_len).alias("win"), F.col(key_col))
+        events.withWatermark(ts_col, WATERMARK)
+        .groupBy(F.window(ts_col, "10 minutes").alias("win"), F.col(key_col))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -41,15 +44,13 @@ def tumbling_counts(
 def sliding_value_stats(
     events: DataFrame,
     *,
-    window_len: str = "20 minutes",
-    slide: str = "10 minutes",
-    watermark: str = "30 minutes",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Sliding-window aggregate (each event lands in window_len/slide windows)."""
+    """Sliding-window aggregate: 20-minute windows sliding by 10 minutes, so
+    each event lands in two windows."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_len, slide).alias("win"))
+        events.withWatermark(ts_col, WATERMARK)
+        .groupBy(F.window(ts_col, "20 minutes", "10 minutes").alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # engine-portable exact average: values have 2 decimals, so
@@ -69,15 +70,14 @@ def sliding_value_stats(
 def session_counts(
     events: DataFrame,
     *,
-    gap: str = "5 minutes",
-    watermark: str = "30 minutes",
     ts_col: str = "ts",
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Session windows: a session extends while events arrive within ``gap``."""
+    """Session windows: a session extends while events arrive within 5
+    minutes of each other."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("sess"), F.col(key_col))
+        events.withWatermark(ts_col, WATERMARK)
+        .groupBy(F.session_window(ts_col, "5 minutes").alias("sess"), F.col(key_col))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col(key_col),
@@ -91,7 +91,7 @@ def stream_dedup(
     events: DataFrame,
     *,
     key_cols: list[str] | None = None,
-    watermark: str | None = "30 minutes",
+    watermark: str | None = WATERMARK,
     ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming exact-once filter on key columns.

@@ -2,14 +2,18 @@
 """Print one digest per registered query's optimized plan, for diffing trees.
 
 Builds every query in ``QUERIES`` (registration order) at the given scale and
-prints ``name  sha256`` of its optimized logical plan with the ``#<id>``
-expression ids stripped, so two checkouts that should plan alike can be
-compared with one ``diff``.  Queries whose construction runs a stream or an
-eager job are built, and so run, too.
+prints ``name  plan-sha256  oracle-sha256``: the digest of its optimized
+logical plan with the ``#<id>`` expression ids stripped, then the digest of
+its ``ORACLES`` text (``-`` for a query without one), so one ``diff`` checks
+that two checkouts plan alike and state the same oracles.  Queries whose
+construction runs a stream or an eager job are built, and so run, too.
 
-A query whose digest differs between two builds of one tree is marked
-``unstable``: the distinct-aggregate ``Expand`` of ``analyze_orders_stats``
-and ``domain_dedup_stats`` orders its columns differently from run to run.
+A query whose plan digest can differ between two builds of one tree is
+marked ``unstable``: the distinct-aggregate ``Expand`` of
+``analyze_orders_stats``, ``domain_dedup_stats`` and
+``normalized_dedup_stats`` orders its distinct groups by expression hashes,
+which carry expression ids, so the order follows how many ids the run
+allocated before it.
 
 Usage:
   python scripts/plan_digest.py SF_DIR > digest.txt   # in each checkout
@@ -27,13 +31,17 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from fs2_kinesis_firehose_spark.session import get_spark  # noqa: E402
 
-UNSTABLE = {"analyze_orders_stats", "domain_dedup_stats"}
+UNSTABLE = {"analyze_orders_stats", "domain_dedup_stats", "normalized_dedup_stats"}
 _EXPR_ID = re.compile(r"#\d+L?")
 
 
 def plan_digest(df) -> str:
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     return hashlib.sha256(_EXPR_ID.sub("", plan).encode()).hexdigest()
+
+
+def oracle_digest(sql: str | None) -> str:
+    return "-" if sql is None else hashlib.sha256(sql.encode()).hexdigest()
 
 
 def main(sf_dir: str) -> None:
@@ -49,7 +57,8 @@ def main(sf_dir: str) -> None:
     q.load_all()
     for name, fn in q.QUERIES.items():
         mark = "  unstable" if name in UNSTABLE else ""
-        print(f"{name}  {plan_digest(fn(spark, sf_dir))}{mark}", flush=True)
+        plan = plan_digest(fn(spark, sf_dir))
+        print(f"{name}  {plan}  {oracle_digest(q.ORACLES.get(name))}{mark}", flush=True)
 
 
 if __name__ == "__main__":

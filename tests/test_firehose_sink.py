@@ -4,7 +4,12 @@
 from __future__ import annotations
 
 import json
+import os
 import shutil
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -285,3 +290,81 @@ def test_unordered_acks_still_repartition(spark, tmp_path):
     assert put_tasks == 2
     assert {a.partition_id for a in acks} == set(range(4))  # source partitions
     assert len(read_spool(spool, "t")) == 1200
+
+
+# Runs in its own interpreter: ``local[4,2]`` lets a failed task run once
+# more, which the shared test session (plain ``local[N]``) never does.
+_REEXECUTION = """
+import collections, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from fs2_kinesis_firehose_spark.firehose.client import fake_client_factory, read_spool
+from fs2_kinesis_firehose_spark.firehose.settings import ProducerSettings, RetryPolicy
+from fs2_kinesis_firehose_spark.firehose.sink import produce_acks
+from fs2_kinesis_firehose_spark.operators.dedup import exact_dedup
+from fs2_kinesis_firehose_spark.sources.kinesis_spool_source import (
+    SCHEMA, register_kinesis_spool_source,
+)
+
+
+# fake clients whose task dies on its second put while it runs its first
+# attempt, so Spark runs the task again from its first record
+class FirstAttemptDies:
+    def __init__(self, spool_dir):
+        self.kwargs = {"spool_dir": spool_dir}
+
+    def __call__(self):
+        return FlakyClient(fake_client_factory(**self.kwargs)())
+
+
+class FlakyClient:
+    def __init__(self, inner):
+        self.inner = inner
+        self.calls = collections.Counter()
+
+    def put_record_batch(self, **request):
+        ctx = TaskContext.get()
+        self.calls[ctx.taskAttemptId()] += 1
+        if ctx.attemptNumber() == 0 and self.calls[ctx.taskAttemptId()] == 2:
+            raise ConnectionError("task dies mid-delivery")
+        return self.inner.put_record_batch(**request)
+
+
+spark = SparkSession.builder.master("local[4,2]").config("spark.ui.enabled", "false").getOrCreate()
+register_kinesis_spool_source(spark)
+n = 2000
+df = spark.range(0, n, 1, 4).selectExpr("CAST(lpad(string(id), 6, '0') AS BINARY) AS value")
+for parallelism, ordered in ((1, False), (4, True)):
+    spool = f"{sys.argv[1]}/p{parallelism}"
+    settings = ProducerSettings(
+        stream_name="t", parallelism=parallelism, retry=RetryPolicy(max_retries=0)
+    )
+    acks = produce_acks(df, settings, FirstAttemptDies(spool), ordered=ordered).collect()
+    assert sum(a.n_records for a in acks) == n, acks
+    if parallelism == 1:
+        assert len(acks) == -(-n // 500), acks
+    delivered = [p.decode() for p in read_spool(spool, "t")]
+    assert set(delivered) == {f"{i:06d}" for i in range(n)}
+    assert len(delivered) > n, "no task was re-executed"
+    back = spark.read.format("kinesis_spool").schema(SCHEMA).option("spoolDir", spool).load()
+    assert exact_dedup(back, text_col="value", key_col="seq").count() == n
+"""
+
+
+def test_task_reexecution_delivers_at_least_once(tmp_path):
+    """A put task that dies mid-delivery is run again by Spark from its
+    first record: the retried attempt re-puts what the dead one delivered,
+    so the spool holds every record and some twice (at-least-once), the
+    acks of the attempt that finished count each record once, and
+    ``exact_dedup`` over the spool read back gives the input again.  Both
+    plans: the one ``coalesce(1)`` task at parallelism 1, and the stamped
+    put tasks behind a shuffle at parallelism 4 with ordered acks."""
+    proc = subprocess.run(
+        [sys.executable, "-c", textwrap.dedent(_REEXECUTION), str(tmp_path)],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": str(Path(__file__).resolve().parents[1])},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]

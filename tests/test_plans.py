@@ -351,6 +351,94 @@ def test_package_holds_no_pasted_fragment():
     assert pasted == [], f"{len(pasted)} pasted runs, first lines: {pasted[:10]}"
 
 
+# A knob is a parameter with a default that no call in the repository
+# passes (by keyword, by position, or through ``*``/``**``): one value is
+# in use, so it is a constant.  Scanned: functions outside firehose/ and
+# sources/ (the reference's settings API and the settings that face a real
+# service) whose name is defined once in the package, so a call resolves by
+# name; the registered query builders (``@query``), which share names with
+# the operators they wrap and take no defaults, are left out of that count.
+# Column-name parameters tie an operator to its caller's schema and are not
+# knobs.  A survivor is named with its reason.
+_SETTINGS_DIRS = ("firehose", "sources")
+_COLUMN_PARAMS = {"src", "dst", "key1", "key2", "suffix"}
+_KNOB_SURVIVORS = {
+    # the fixture directory the oracle check reads: a data path, which
+    # stays settable per deployment
+    ("oracle.py", "compare_query", "sf_dir"),
+}
+
+
+def _is_query_builder(fn: ast.FunctionDef) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in fn.decorator_list
+    )
+
+
+def _package_knobs(root: Path) -> set[tuple[str, str, str]]:
+    pkg = root / "fs2_kinesis_firehose_spark"
+    defs = defaultdict(list)
+    for path in sorted(pkg.rglob("*.py")):
+        for parent in ast.walk(ast.parse(path.read_text())):
+            for fn in ast.iter_child_nodes(parent):
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
+                    _is_query_builder(fn)
+                ):
+                    defs[fn.name].append((path, fn, isinstance(parent, ast.ClassDef)))
+    scope = {}  # name -> (module, positional params, knob candidates)
+    for name, found in defs.items():
+        if len(found) != 1:
+            continue
+        path, fn, method = found[0]
+        module = path.relative_to(pkg).as_posix()
+        if module.split("/")[0] in _SETTINGS_DIRS:
+            continue
+        a = fn.args
+        pos = [x.arg for x in a.posonlyargs + a.args]
+        if method and pos[:1] in (["self"], ["cls"]):
+            pos = pos[1:]
+        defaulted = pos[len(pos) - len(a.defaults):] if a.defaults else []
+        defaulted += [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        knobs = {
+            p for p in defaulted
+            if not (p.endswith(("_col", "_cols")) or p in _COLUMN_PARAMS)
+        }
+        if knobs:
+            scope[name] = (module, pos, knobs)
+    passed = defaultdict(set)
+    sources = [*pkg.rglob("*.py"), *(root / "tests").rglob("*.py"), root / "bench.py",
+               *(root / "perfbench").rglob("*.py"), *(root / "scripts").rglob("*.py")]
+    for path in sources:
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            if name not in scope:
+                continue
+            _, pos, knobs = scope[name]
+            if any(isinstance(x, ast.Starred) for x in call.args) or any(
+                kw.arg is None for kw in call.keywords
+            ):
+                passed[name] |= knobs
+            else:
+                passed[name] |= set(pos[: len(call.args)])
+                passed[name] |= {kw.arg for kw in call.keywords}
+    return {
+        (module, name, knob)
+        for name, (module, _, knobs) in scope.items()
+        for knob in knobs - passed[name]
+    }
+
+
+def test_package_knobs_have_a_second_value():
+    """Every parameter the scan above finds is either passed a value by
+    some call or named as a survivor: an operator decision with one value
+    in use is written once, as a constant."""
+    knobs = _package_knobs(Path(q.__file__).resolve().parents[2])
+    assert sorted(knobs - _KNOB_SURVIVORS) == []
+
+
 def test_heavy_hitters_sketch_plan(spark, sf_smoke):
     """Misra–Gries pipeline: sketch pass is MapInPandas; candidate recount
     joins broadcast (never a shuffled corpus-side join on candidates)."""
