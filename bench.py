@@ -138,18 +138,9 @@ HEADLINE = [
     # round-6 addition: multi-tick SCD2 (five change cohorts, ONE batch,
     # keyed window chain compression + interval assembly)
     "scd2_multi_tick_accounting",
-    # round-6 addition: Q18 with the Bloom runtime filter composed in (the
-    # bitmap build + scan-side membership pass replace nothing — the win is
-    # fact rows dropping before the exchange; compare against
-    # tpch_q18_large_volume_customers above)
-    "tpch_q18_bloom_prefilter",
     # round-6 addition: Count-Min point frequencies (posexplode + one
     # aggregate sketch build, broadcast probe lookup)
     "count_min_bigram_estimates",
-    # round-6 addition: prefix-filter exact similarity join (rare-shingle
-    # prefix self-join + row-local verify; compare minhash_lsh_pairs and
-    # the inverted-index ngram_jaccard_pairs — three paths, one answer)
-    "prefix_jaccard_pairs",
     # round-6 addition: k-core peeling (adaptive rounds of degree agg +
     # fringe anti-joins; 143 of 2000 parts peel at k=80)
     "part_copurchase_kcore",

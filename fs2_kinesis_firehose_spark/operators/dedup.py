@@ -7,11 +7,11 @@ Five strategies, all designed around Spark's shuffle model:
                    exact-Jaccard verify → connected components → keep one per
                    cluster.  The self-join shuffles on (band, band_hash), so
                    candidate generation is O(sum of bucket²), never O(n²);
-- SimHash        — 64-bit bit-vote fingerprint, fully JVM-side: explode
-                   distinct tokens → xxhash64 → 64 codegen'd per-bit vote
-                   aggregates (same explode+aggregate shape as MinHash),
-                   banded into 4×16-bit keys for candidate pairs at
-                   Hamming ≤ ~3;
+- SimHash        — 60-bit bit-vote fingerprint, fully JVM-side: explode
+                   distinct tokens → portable md5 hash → 60 codegen'd
+                   per-bit vote aggregates (same explode+aggregate shape as
+                   MinHash), banded into 4×15-bit keys for the exact
+                   Hamming ≤ 3 pair set;
 - n-gram Jaccard — exact pairwise similarity via shingle-explode self-join
                    (the inverted-index pattern: only pairs sharing a shingle
                    are ever materialized);
@@ -564,88 +564,6 @@ def near_dedup_minhash(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-def simhash(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
-    """Append a ``simhash: bigint`` fingerprint column — fully JVM-side.
-
-    Per doc: hash every DISTINCT token to 64 bits (``xxhash64``, stable across
-    processes and partitionings), vote +1/-1 per bit position, sign of the
-    vote becomes the fingerprint bit.  Same explode+aggregate shape as
-    ``minhash_signatures``: explode distinct tokens → ONE shuffle on the key
-    computes all 64 per-bit vote sums as codegen'd aggregates (map-side
-    partial agg keeps the shuffle at 64 longs/doc).  No Python in the plan —
-    the previous pandas-UDF form looped per-token in Python (the one
-    row-at-a-time hot loop in the codebase); the bit-vote is a plain groupBy
-    aggregation.
-    """
-    toks = df.select(
-        F.col(key_col), F.explode(T.distinct_tokens(text_col)).alias("_tok")
-    ).select(key_col, F.xxhash64("_tok").alias("_th"))
-    vote_aggs = [
-        F.sum(
-            F.shiftrightunsigned(F.col("_th"), i).bitwiseAND(F.lit(1)) * 2 - 1
-        ).alias(f"_v{i}")
-        for i in range(64)
-    ]
-    voted = toks.groupBy(key_col).agg(*vote_aggs)
-    fp = F.lit(0).cast("long")
-    for i in range(64):
-        # post-aggregation column refs — 64 tiny exprs, no inline blowup
-        fp = fp.bitwiseOR(F.shiftleft((F.col(f"_v{i}") > 0).cast("long"), i))
-    fingerprints = voted.select(F.col(key_col), fp.alias("simhash"))
-    # left join + coalesce: zero-token docs (explode drops them) get fp=0,
-    # matching the all-votes-tie convention
-    return df.join(fingerprints, key_col, "left").withColumn(
-        "simhash", F.coalesce(F.col("simhash"), F.lit(0).cast("long"))
-    )
-
-
-def _simhash_band_pairs(
-    fps: DataFrame, key_col: str, bits: int, bands: int, *carried: str
-) -> DataFrame:
-    """Self-join of the ``simhash`` fingerprints on their ``bands`` equal-
-    width bands: one ``l``/``r`` row pair per (key1 < key2, band) that
-    agree on the band, each side carrying ``key_col`` and ``carried``.
-    One shuffle on (band, band_val), O(Σ bucket²), never all-pairs."""
-    width = bits // bands
-    banded = fps.select(
-        key_col,
-        *carried,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("band_val"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(key_col, *carried, "b.band", "b.band_val")
-    l, r = banded.alias("l"), banded.alias("r")
-    return l.join(
-        r,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.band_val") == F.col("r.band_val"))
-        & (F.col(f"l.{key_col}") < F.col(f"r.{key_col}")),
-    )
-
-
-def simhash_candidates(
-    df: DataFrame, key_col: str = "doc_id", *, bands: int = 4, text_col: str = "text"
-) -> DataFrame:
-    """Candidate pairs whose SimHash matches on ≥1 of ``bands`` 16-bit bands
-    (catches Hamming distance ≤ bands-1 guaranteed, more probabilistically)."""
-    with_sh = simhash(df, text_col, key_col) if "simhash" not in df.columns else df
-    return (
-        _simhash_band_pairs(with_sh, key_col, 64, bands)
-        .select(F.col(f"l.{key_col}").alias("key1"), F.col(f"r.{key_col}").alias("key2"))
-        .distinct()
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit fingerprints (bit_count of XOR)."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -654,15 +572,18 @@ def hamming64(a: Column, b: Column) -> Column:
 def simhash_portable(
     df: DataFrame, text_col: str = "text", key_col: str = "doc_id", *, bits: int = 60
 ) -> DataFrame:
-    """(key, simhash) — ENGINE-PORTABLE SimHash fingerprints.
+    """(key, simhash) — ENGINE-PORTABLE SimHash fingerprints, fully JVM-side.
 
-    Identical shape to ``simhash`` (explode distinct tokens → one shuffle with
-    per-bit vote aggregates, zero Python) but the per-token hash is the
-    engine-portable ``T.md5_int`` over ``bits/4`` hex chars (60 bits by
-    default, the widest it allows), so it is bit-identical in Spark and
-    DuckDB.  xxhash64 ``simhash`` stays the production path (~cheaper
-    hash); this variant exists so the ENTIRE candidate pipeline (fingerprint
-    → banding → Hamming verify) is reproducible by the SQL oracle."""
+    Per doc: hash every DISTINCT token with ``T.md5_int`` over ``bits/4``
+    hex chars (60 bits by default, the widest it allows), vote +1/-1 per bit
+    position, and the sign of the vote becomes the fingerprint bit.  Same
+    explode+aggregate shape as ``minhash_signatures``: explode distinct
+    tokens → ONE shuffle on the key computes all per-bit vote sums as
+    codegen'd aggregates, no Python in the plan.  The hash is bit-identical
+    in Spark and DuckDB, so the ENTIRE candidate pipeline (fingerprint →
+    banding → Hamming verify) is reproducible by the SQL oracle.  A doc with
+    no tokens (NULL or blank text) gets fingerprint 0, the all-votes-tie
+    convention."""
     toks = df.select(
         F.col(key_col), F.explode(T.distinct_tokens(text_col)).alias("_tok")
     ).select(
@@ -715,8 +636,34 @@ def simhash_neardup_pairs(
     # the band self-join; without materialization the self-join plan
     # evaluates it twice
     fps = simhash_portable(df, text_col, key_col, bits=bits).localCheckpoint(eager=False)
+    # one (band, band_val) row per fingerprint band; the self-join on it is
+    # one shuffle, O(Σ bucket²), never all-pairs
+    width = bits // bands
+    banded = fps.select(
+        key_col,
+        "simhash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.shiftrightunsigned(F.col("simhash"), b * width)
+                        .bitwiseAND(F.lit((1 << width) - 1))
+                        .alias("band_val"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("b"),
+    ).select(key_col, "simhash", "b.band", "b.band_val")
+    l, r = banded.alias("l"), banded.alias("r")
     return (
-        _simhash_band_pairs(fps, key_col, bits, bands, "simhash")
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.band_val") == F.col("r.band_val"))
+            & (F.col(f"l.{key_col}") < F.col(f"r.{key_col}")),
+        )
         .select(
             F.col(f"l.{key_col}").alias("key1"),
             F.col(f"r.{key_col}").alias("key2"),
@@ -1187,98 +1134,4 @@ def exact_substring_spans(
                 "coverage"
             ),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# prefix-filter exact similarity join (AllPairs / PPJoin family)
-# ---------------------------------------------------------------------------
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    *,
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """All pairs with shingle-set Jaccard >= threshold, EXACTLY, via prefix
-    filtering (Chaudhuri et al., ICDE 2006; Bayardo et al., WWW 2007 —
-    the AllPairs algorithm; PPJoin's base filter): same output contract as
-    ``ngram_jaccard_pairs``, different candidate generator.
-
-    Order every document's shingles by GLOBAL rarity (document frequency
-    ASC, shingle ASC — a total order both engines can restate); a document
-    of size s keeps only its first ``s - ceil(t*s) + 1`` shingles as its
-    PREFIX.  Guarantee: if J(A,B) >= t then |A∩B| >= ceil(t*|A|), and the
-    smallest common shingle w is preceded in A only by non-common shingles
-    (<= |A| - |A∩B| of them), so w sits inside A's prefix — and B's, by the
-    same argument.  Joining on prefix shingles therefore finds EVERY
-    qualifying pair; each candidate is then verified exactly against the
-    two full shingle sets (``array_intersect`` on row-local arrays).
-
-    Scale shape vs the inverted-index join: the self-join key set shrinks
-    from ALL shingles to the rare prefix shingles — under df-ascending
-    order the hot shingles (the k² skew buckets that dominate
-    ``ngram_jaccard_pairs`` at scale) fall OUT of short prefixes, and the
-    verify step is candidate-sized row-local array work, no shuffle.
-    Complements MinHash-LSH: exact (no recall loss), no banding tuning;
-    LSH still wins when even the prefix join is too dense.  One extra
-    aggregate (document frequencies) + one keyed window over the shingle
-    stream buys the pruning.
-    """
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from pyspark.sql.window import Window
-
-    shingled = T.word_ngram_rows(
-        df, text_col, key_col, shingle_n, distinct=True
-    ).localCheckpoint(eager=False)  # feeds dfreq, prefixes, and the verify sets
-    dfreq = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    wk = Window.partitionBy(key_col).orderBy(F.asc("df"), F.asc("shingle"))
-    ranked = (
-        shingled.join(dfreq, "shingle")
-        .withColumn("_pos", F.row_number().over(wk))
-        .withColumn("_sz", F.count(F.lit(1)).over(Window.partitionBy(key_col)))
-    )
-    # ceil in double arith can round UP past the true integer (0.7*10 ->
-    # 7.000000000000001 -> ceil 8) and silently SHORTEN the prefix below
-    # the guarantee; nudge down by an epsilon — a too-long prefix only adds
-    # candidates, which the exact verify removes
-    prefix_len = F.col("_sz") - F.ceil(
-        F.lit(threshold) * F.col("_sz") - F.lit(1e-9)
-    ) + F.lit(1)
-    prefix = ranked.where(F.col("_pos") <= prefix_len).select(key_col, "shingle")
-
-    l, r = prefix.alias("l"), prefix.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.shingle") == F.col("r.shingle"))
-            & (F.col(f"l.{key_col}") < F.col(f"r.{key_col}")),
-        )
-        .select(
-            F.col(f"l.{key_col}").alias("key1"), F.col(f"r.{key_col}").alias("key2")
-        )
-        .distinct()
-    )
-    sets = shingled.groupBy(key_col).agg(
-        F.collect_set("shingle").alias("_toks"), F.count(F.lit(1)).alias("_sz")
-    )
-    s1 = sets.select(
-        F.col(key_col).alias("key1"), F.col("_toks").alias("t1"), F.col("_sz").alias("sz1")
-    )
-    s2 = sets.select(
-        F.col(key_col).alias("key2"), F.col("_toks").alias("t2"), F.col("_sz").alias("sz2")
-    )
-    common = F.size(F.array_intersect(F.col("t1"), F.col("t2")))
-    # unrounded-ratio filter, rounded output — same contract as
-    # ngram_jaccard_pairs (and both oracles, which filter the raw ratio)
-    j_raw = common.cast("double") / (
-        F.col("sz1") + F.col("sz2") - common
-    ).cast("double")
-    return (
-        cand.join(s1, "key1")
-        .join(s2, "key2")
-        .filter(j_raw >= threshold)
-        .select("key1", "key2", F.round(j_raw, 6).alias("jaccard"))
     )

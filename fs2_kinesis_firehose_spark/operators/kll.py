@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["KLLSketch", "kll_sketch", "kll_quantiles"]
+__all__ = ["KLLSketch", "kll_sketch"]
 
 _CAP_DECAY = 2.0 / 3.0
 
@@ -215,7 +215,3 @@ def kll_sketch(df: DataFrame, col: str, *, k: int = 200) -> KLLSketch:
         out.merge(KLLSketch.from_level_rows(k, part["n"], part["rows"]))
     return out
 
-
-def kll_quantiles(sketch: KLLSketch, phis: Sequence[float]) -> list[float]:
-    """Convenience: the sketch's estimate for each phi."""
-    return [sketch.quantile(p) for p in phis]

@@ -10,9 +10,8 @@ queries (public: Morton 1966; Databricks/Iceberg/Hudi all expose it as
 Z-ORDER clustering).
 
 Everything here is pure Column arithmetic (codegen) plus one
-``repartitionByRange + sortWithinPartitions`` — the layout job is a single
-range shuffle of the data being written, which is the floor for ANY
-clustered write.
+``repartition`` on the file bucket — the layout job is a single shuffle of
+the data being written, which is the floor for ANY clustered write.
 """
 
 from __future__ import annotations
@@ -107,48 +106,6 @@ def morton_key(grid_cols: list[Column], bits: int = 16) -> Column:
     return key
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    *,
-    n_files: int = 16,
-    bounds: dict[str, tuple[float, float]] | None = None,
-) -> None:
-    """Write ``df`` as parquet clustered by the Z-order of ``cols``, each
-    column scaled to a 16-bit grid.
-
-    ``bounds`` gives (min, max) per column when the caller knows them (table
-    metadata, partition boundaries); otherwise ONE tiny one-row aggregate is
-    cross-joined in lazily — no separate driver action, no second scan of
-    the data (the aggregate runs inside the write job).
-
-    The write is ``repartitionByRange(z) + sortWithinPartitions(z)``: files
-    own disjoint Z-ranges, so each file's min/max box on every clustered
-    column is tight — readers filtering on ANY subset of ``cols`` prune
-    files via footer stats alone (see tests/test_layout.py for the measured
-    pruning factor vs an unclustered layout).
-    """
-    if bounds is not None:
-        grid = [
-            _scale_to_grid(F.col(c), F.lit(bounds[c][0]), F.lit(bounds[c][1]), 16)
-            for c in cols
-        ]
-        keyed = df
-    else:
-        keyed, grid = _gridded(df, cols, 16)
-    z = morton_key(grid, 16)
-    out_cols = df.columns
-    (
-        keyed.withColumn("_z", z)
-        .repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .select(*out_cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def zorder_write_bucketed(
     df: DataFrame,
     path: str,
@@ -159,15 +116,17 @@ def zorder_write_bucketed(
 ) -> None:
     """Write ``df`` clustered by FIXED Z-grid buckets: file = the top
     ``log2(n_buckets)`` bits of the Morton address (bounds from one broadcast
-    min/max aggregate, same as ``zorder_write``).
+    min/max aggregate, lazy: it runs inside the write job, no second scan).
 
-    vs ``zorder_write``'s ``repartitionByRange``: range partitioning balances
-    file SIZES via reservoir sampling, which is the right production default
-    but makes the file boundaries sample-dependent; fixed grid buckets make
-    the row→file mapping a PURE FUNCTION of the data, so an external checker
-    (the driver's DuckDB oracle) can recompute the exact per-file statistics
-    and the exact pruning outcome.  Same single-shuffle cost; skew tolerance
-    is what's traded away."""
+    vs a ``repartitionByRange`` on the Z-address: range partitioning
+    balances file SIZES via reservoir sampling but makes the file boundaries
+    sample-dependent; fixed grid buckets make the row→file mapping a PURE
+    FUNCTION of the data, so an external checker (the driver's DuckDB
+    oracle) can recompute the exact per-file statistics and the exact
+    pruning outcome.  Same single-shuffle cost; skew tolerance is what's
+    traded away.  Readers filtering on ANY subset of ``cols`` prune files
+    via footer stats alone (tests/test_layout.py measures the pruning
+    factor against an unclustered layout)."""
     _write_buckets(_zbucketed(df, cols, bits, n_buckets), n_buckets, "_zbucket", path)
 
 
@@ -175,8 +134,8 @@ def file_stats(path: str, cols: list[str]) -> list[dict]:
     """Per-file [min, max] footer statistics for ``cols`` — the exact
     information a pruning reader uses.  Driver-side pyarrow metadata read
     (footers only, no data pages).  Walks partition subdirectories, so it
-    covers both flat ``zorder_write`` output and ``zorder_write_bucketed``'s
-    ``_zbucket=N/`` layout."""
+    covers both flat output and the bucketed writers' ``_zbucket=N/``
+    layout."""
     import os
 
     import pyarrow.parquet as pq

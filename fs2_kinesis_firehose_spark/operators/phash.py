@@ -1,7 +1,7 @@
-"""Image perceptual-hash near-duplicate detection (dHash / aHash) — the
-standard multimodal-corpus dedup step (the image-side sibling of the text
-family's 8 candidate paths; cf. the public imagehash library's dHash/aHash
-definitions, and Krawetz's "kind of like that" dHash write-up).
+"""Image perceptual-hash near-duplicate detection (dHash) — the standard
+multimodal-corpus dedup step (the image-side sibling of the text family's
+candidate paths; cf. the public imagehash library's dHash definition, and
+Krawetz's "kind of like that" dHash write-up).
 
 The reference has no media operators at all (its unit is an opaque byte
 record, `RecordOps.scala:26`); a 100-TB multimodal corpus needs image
@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "dhash_long",
-    "ahash_long",
     "image_dhash",
     "hamming64",
     "phash_neardup_pairs",
@@ -99,26 +98,11 @@ def dhash_long(arr: np.ndarray) -> int:
     return _pack_bits(bits)
 
 
-def ahash_long(arr: np.ndarray) -> int:
-    """Average hash over the 8 × 8 block grid: bit(y,x) = block mean >
-    GLOBAL mean, cross-multiplied (``sum_blk · n_total > sum_total ·
-    n_blk``), packed row-major."""
-    gray = _gray(arr)
-    sums, counts = _block_sums(gray, 8, 8)
-    total_s, total_n = int(gray.sum()), int(gray.size)
-    bits = (sums * total_n) > (total_s * counts)
-    return _pack_bits(bits)
-
-
-def image_dhash(
-    df: DataFrame, bytes_col: str, *, out_col: str = "dhash", hash_size: int = 8
-) -> DataFrame:
+def image_dhash(df: DataFrame, bytes_col: str, *, out_col: str = "dhash") -> DataFrame:
     """Append ``out_col``: the 64-bit dHash of the PNG bytes in
-    ``bytes_col`` (hash_size=8 → 8×9 block grid → 64 bits).  One
-    Arrow-batched mapInPandas pass over the binary column, REAL PNG decode,
-    one int64 hash out; all other columns pass through untouched."""
-    if hash_size * hash_size != 64:
-        raise ValueError("hash_size must be 8 (64-bit packed hash)")
+    ``bytes_col`` (8×9 block grid → 64 bits).  One Arrow-batched
+    mapInPandas pass over the binary column, REAL PNG decode, one int64
+    hash out; all other columns pass through untouched."""
     from fs2_kinesis_firehose_spark.operators.png import decode_png
 
     from pyspark.sql.types import LongType, StructField, StructType

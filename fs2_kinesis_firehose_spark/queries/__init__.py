@@ -57,10 +57,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # Queries deliberately kept OUTSIDE the driver window even though they have
 # no green driver row: each name here must carry a justification.  The window
 # test treats these as reviewed exceptions rather than silent evictions.
-# EMPTY as of r13: the one historical entry (simhash_candidates, xxhash64
-# production-hash variant subsumed by the oracle-checked
-# simhash_neardup_pairs) was retired from the registry entirely — the
-# operator stays pytest-only (tests/test_dedup.py), per the r12 verdict.
+# EMPTY: the one historical entry, an xxhash64 SimHash twin of the
+# oracle-checked simhash_neardup_pairs, was retired from the registry and
+# its operator deleted; every registered query is window-eligible.
 WINDOW_EXEMPT: dict[str, str] = {}
 
 _WINDOW_PRIORITY: list[str] = [
@@ -114,7 +113,6 @@ _WINDOW_PRIORITY: list[str] = [
     "part_copurchase_triangles",
     "pca_embedding_variance",
     "ppr_seed_sources",
-    "prefix_jaccard_pairs",
     "pricing_summary",
     "repeated_chunk_stats",
     "salted_join_priority_revenue",

@@ -90,28 +90,6 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "prefix_jaccard_pairs",
-    # IDENTICAL oracle to ngram_jaccard_pairs: prefix filtering is a
-    # candidate-generation change with an exactness proof (the smallest
-    # common shingle of any qualifying pair sits in BOTH prefixes under the
-    # df-ascending total order), so the pair set must match bit-for-bit.
-    oracle=_JACCARD_ORACLE,
-)
-def prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact J>=0.7 near-dup pairs via PREFIX FILTERING (AllPairs/PPJoin,
-    operators/dedup.py:prefix_filter_jaccard_pairs): the self-join runs
-    only on each doc's rare-shingle prefix (df-ascending order), so the
-    hot-shingle k-squared buckets that dominate the inverted-index join at
-    scale never form; candidates verify against row-local shingle arrays.
-    Third exact-similarity path next to the inverted-index join and
-    MinHash-LSH — all three driver-proven to the same oracle."""
-    docs = load_table(spark, sf_dir, "documents")
-    return D.prefix_filter_jaccard_pairs(
-        docs, "text", "doc_id", shingle_n=3, threshold=0.7
-    )
-
-
-@query(
     "ngram_jaccard_filtered",
     oracle=f"""
     WITH sh AS ({SHINGLES}),
@@ -234,15 +212,6 @@ def near_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The xxhash64 production-fingerprint SimHash path (D.simhash +
-# D.simhash_candidates + hamming verify) is deliberately NOT a registered
-# query: xxhash64 is not DuckDB-expressible, so a registry slot could only
-# ever record a no-oracle row (r3 verdict; exemption retired in r13 per the
-# r12 verdict "Next round" #4).  Its semantics are pytest-verified
-# (tests/test_dedup.py::test_simhash_candidates_hamming) and the identical
-# pipeline on portable md5 fingerprints is the oracle-checked
-# ``simhash_neardup_pairs`` below.
-
 # Portable-SimHash oracle: DuckDB recomputes the IDENTICAL md5-based
 # fingerprints (hex→bigint, per-bit votes, sign bits) and then the exhaustive
 # O(n²) Hamming join; the Spark side prunes via 4×15-bit banding, which is
@@ -278,9 +247,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs, oracle-checked END-TO-END: md5-based 60-bit
     fingerprints are bit-identical across engines, and banding (4×15 bits)
     has guaranteed recall 1.0 for the Hamming ≤ 3 contract (pigeonhole), so
-    the banded+verified Spark output equals DuckDB's exhaustive Hamming join
-    — the xxhash64 ``simhash_candidates`` path stays as the cheaper
-    production variant (rows-only check)."""
+    the banded+verified Spark output equals DuckDB's exhaustive Hamming join."""
     docs = load_table(spark, sf_dir, "documents")
     return D.simhash_neardup_pairs(docs, "text", "doc_id", bits=60, bands=4, max_hamming=3)
 

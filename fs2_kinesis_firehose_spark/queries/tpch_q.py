@@ -288,7 +288,9 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_Q18_ORACLE = """
+@query(
+    "tpch_q18_large_volume_customers",
+    oracle="""
     SELECT c_custkey, o_orderkey,
            strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
            ROUND(o_totalprice, 2) AS totalprice,
@@ -302,23 +304,20 @@ _Q18_ORACLE = """
     GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
     ORDER BY totalprice DESC, o_orderkey ASC
     LIMIT 20
-    """
-
-
-def _q18_big_orders(l: DataFrame) -> DataFrame:
-    """Order keys whose lineitems total more than 250 units."""
-    return (
+    """,
+)
+def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q18 canonical: orders whose total quantity exceeds a threshold — the
+    IN-over-aggregated-subquery surface (planned as a semi join against the
+    grouped lineitem, one extra aggregate, no correlated re-execution)."""
+    l = load_table(spark, sf_dir, "lineitem")
+    # order keys whose lineitems total more than 250 units
+    big = (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("q"))
         .filter(F.col("q") > 250)
         .select("l_orderkey")
     )
-
-
-def _q18_top20(spark: SparkSession, sf_dir: str, l: DataFrame, big: DataFrame) -> DataFrame:
-    """Q18 past the key set: the ``l`` rows of the ``big`` orders (semi
-    join), joined to orders and customers, per-order quantity, top 20 by
-    price."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return (
@@ -337,48 +336,6 @@ def _q18_top20(spark: SparkSession, sf_dir: str, l: DataFrame, big: DataFrame) -
         .orderBy(F.desc("totalprice"), F.asc("o_orderkey"))
         .limit(20)
     )
-
-
-@query(
-    "tpch_q18_large_volume_customers",
-    oracle=_Q18_ORACLE,
-)
-def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q18 canonical: orders whose total quantity exceeds a threshold — the
-    IN-over-aggregated-subquery surface (planned as a semi join against the
-    grouped lineitem, one extra aggregate, no correlated re-execution)."""
-    l = load_table(spark, sf_dir, "lineitem")
-    return _q18_top20(spark, sf_dir, l, _q18_big_orders(l))
-
-
-@query(
-    "tpch_q18_bloom_prefilter",
-    # IDENTICAL result contract to tpch_q18_large_volume_customers (same
-    # oracle): the Bloom prefilter admits every true key (no false
-    # negatives) and the exact semi join removes false positives, so the
-    # runtime filter changes the PLAN, never the answer.  The plan pin in
-    # tests/test_plans.py asserts the membership filter drops fact rows
-    # scan-side, before the first exchange.
-    oracle=_Q18_ORACLE,
-)
-def tpch_q18_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q18 with the Bloom runtime filter (operators/bloom.py) composed into
-    a TPC-H shape: the qualifying-orderkey set (big-quantity orders) is
-    folded into a bitmap and the lineitem fact scan is prefiltered by one
-    Arrow membership pass BEFORE the exact semi join — at 100 TB the
-    bitmap ships in ~1 MB where the key set would be GBs, and the fact
-    rows drop at the scan instead of crossing the exchange.  Same answer
-    as the canonical tpch_q18_large_volume_customers, by construction."""
-    from fs2_kinesis_firehose_spark.operators import bloom as B
-
-    l = load_table(spark, sf_dir, "lineitem")
-    # the qualifying-key aggregate feeds BOTH the bitmap build (an eager
-    # job) and the exact semi join — pin it so the lineitem scan+groupBy
-    # runs once, not twice
-    big = _q18_big_orders(l).localCheckpoint(eager=False)
-    bm = B.bloom_build(big, "l_orderkey", n_bits=1 << 18, n_hashes=5)
-    pre = B.bloom_prefilter(l, "l_orderkey", bm, n_bits=1 << 18, n_hashes=5)
-    return _q18_top20(spark, sf_dir, pre, big)
 
 
 @query(

@@ -27,9 +27,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 # exemptions that survive rotation (per-name justification lives in
-# queries/__init__.py); EMPTY as of r13 — simhash_candidates was retired
-# from the registry (pytest-only operator), so every registered query is
-# window-eligible
+# queries/__init__.py); EMPTY — every registered query is window-eligible
 PERMANENT_EXEMPT: set[str] = set()
 
 

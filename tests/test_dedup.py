@@ -173,10 +173,10 @@ def test_near_dedup_minhash_end_to_end(spark):
 
 def test_simhash_stability_and_similarity(spark):
     df = _docs_with_dupes(spark)
-    sh = {r.doc_id: r.simhash for r in D.simhash(df).collect()}
+    sh = {r.doc_id: r.simhash for r in D.simhash_portable(df).collect()}
     assert sh[1] == sh[2]  # identical text → identical fingerprint
     df2 = _docs_with_dupes(spark)
-    sh2 = {r.doc_id: r.simhash for r in D.simhash(df2).collect()}
+    sh2 = {r.doc_id: r.simhash for r in D.simhash_portable(df2).collect()}
     assert sh == sh2  # deterministic across runs/processes
     # near-dup differs in few bits; unrelated docs differ in many
     def ham(a, b):
@@ -189,7 +189,7 @@ def test_simhash_plan_is_jvm_only(spark):
     """SimHash must compile to pure codegen aggregates — no Python eval node
     (the pandas-UDF form burned a Python loop per token)."""
     df = _docs_with_dupes(spark)
-    plan = D.simhash(df)._jdf.queryExecution().executedPlan().toString()
+    plan = D.simhash_portable(df)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
 
 
@@ -197,17 +197,9 @@ def test_simhash_null_text_and_custom_column(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, None)], "doc_id long, body string"
     )
-    sh = {r.doc_id: r.simhash for r in D.simhash(df, text_col="body").collect()}
+    sh = {r.doc_id: r.simhash for r in D.simhash_portable(df, text_col="body").collect()}
     assert sh[2] == 0  # null text → no tokens → all-ties fingerprint
     assert sh[1] != 0
-
-
-def test_simhash_candidates_hamming(spark):
-    df = _docs_with_dupes(spark)
-    with_sh = D.simhash(df)
-    cands = D.simhash_candidates(with_sh, bands=4)
-    pairs = {(r.key1, r.key2) for r in cands.collect()}
-    assert (1, 2) in pairs
 
 
 def test_embedding_neardup_gemm_matches_exact(spark, sf_smoke):
@@ -296,53 +288,6 @@ def test_contamination_benchmark_needs_no_key_column(spark):
     # "beta gamma nope" matches nothing)
     got = {r["doc_id"]: r["n_overlap"] for r in contamination_overlap(corpus, bench).collect()}
     assert got == {1: 1}
-
-
-# --- prefix-filter exact similarity join (AllPairs/PPJoin) ------------------
-
-
-def test_prefix_filter_equals_inverted_index_join(spark, sf_smoke):
-    """The prefix-filter join promises the IDENTICAL exact pair set as the
-    inverted-index join — same semantics, cheaper candidate generation."""
-    docs = load_table(spark, sf_smoke, "documents")
-    a = {
-        (r.key1, r.key2, r.jaccard)
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.7).collect()
-    }
-    b = {
-        (r.key1, r.key2, r.jaccard)
-        for r in D.prefix_filter_jaccard_pairs(docs, threshold=0.7).collect()
-    }
-    assert a, "fixture should contain planted near-duplicates"
-    assert a == b
-
-
-def test_prefix_filter_hand_case_and_thresholds(spark):
-    df = _docs_with_dupes(spark)
-    for t in (0.5, 0.7, 0.9):
-        a = {
-            (r.key1, r.key2, r.jaccard)
-            for r in D.ngram_jaccard_pairs(df, threshold=t).collect()
-        }
-        b = {
-            (r.key1, r.key2, r.jaccard)
-            for r in D.prefix_filter_jaccard_pairs(df, threshold=t).collect()
-        }
-        assert a == b
-    # exact dup pair must always be present with J = 1.0
-    pairs = {
-        (r.key1, r.key2): r.jaccard
-        for r in D.prefix_filter_jaccard_pairs(df, threshold=0.9).collect()
-    }
-    assert pairs[(1, 2)] == 1.0
-
-
-def test_prefix_filter_validation(spark):
-    import pytest
-
-    df = _docs_with_dupes(spark)
-    with pytest.raises(ValueError):
-        D.prefix_filter_jaccard_pairs(df, threshold=0.0)
 
 
 def test_containment_catches_quote_inclusion_jaccard_misses(spark):

@@ -14,6 +14,7 @@ reviewed artifact:
 
 from __future__ import annotations
 
+import importlib.util
 import json
 from pathlib import Path
 
@@ -57,3 +58,13 @@ def test_priority_list_has_no_stale_names():
     names = set(_names())
     stale = [n for n in q._WINDOW_PRIORITY if n not in names]
     assert not stale, f"_WINDOW_PRIORITY references unregistered queries: {stale}"
+
+
+def test_bench_headline_names_are_registered():
+    spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    names = set(_names())
+    stale = [n for n in bench.HEADLINE if n not in names and n not in bench.EXTRA_BENCH]
+    assert not stale, f"bench.HEADLINE references unregistered queries: {stale}"
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE)), "bench.HEADLINE repeats a name"

@@ -37,7 +37,7 @@ def test_zorder_write_prunes_multidim_box(spark, sf_oracle):
     n_files = 16
     with tempfile.TemporaryDirectory() as tmp:
         zpath, rpath = f"{tmp}/zorder", f"{tmp}/random"
-        L.zorder_write(orders, zpath, ["o_custkey", "o_day"], n_files=n_files)
+        L.zorder_write_bucketed(orders, zpath, ["o_custkey", "o_day"], n_buckets=n_files)
         orders.repartition(n_files).write.parquet(rpath)
 
         cols = ["o_custkey", "o_day"]
@@ -61,19 +61,6 @@ def test_zorder_write_prunes_multidim_box(spark, sf_oracle):
 
         # and the data still round-trips completely
         assert spark.read.parquet(zpath).count() == orders.count()
-
-
-def test_zorder_explicit_bounds_skip_extra_aggregate(spark, sf_oracle):
-    orders = load_table(spark, sf_oracle, "orders")
-    with tempfile.TemporaryDirectory() as tmp:
-        L.zorder_write(
-            orders,
-            f"{tmp}/z",
-            ["o_custkey", "o_totalprice"],
-            n_files=4,
-            bounds={"o_custkey": (0, 20000), "o_totalprice": (0.0, 600000.0)},
-        )
-        assert spark.read.parquet(f"{tmp}/z").count() == orders.count()
 
 
 # --- Hilbert curve ------------------------------------------------------------

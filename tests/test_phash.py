@@ -48,23 +48,6 @@ def test_dhash_noise_robust_yet_discriminative():
     assert d_far > 12
 
 
-def test_ahash_mirrors_definition():
-    rng = np.random.default_rng(7)
-    a = _img(rng, 16, 16)  # 2x2 blocks exactly
-    gray = a.astype(np.int64).sum(axis=2)
-    got = PH.ahash_long(a)
-    total_s, total_n = gray.sum(), gray.size
-    want = 0
-    for y in range(8):
-        for x in range(8):
-            blk = gray[2 * y : 2 * y + 2, 2 * x : 2 * x + 2]
-            if blk.sum() * total_n > total_s * blk.size:
-                want |= 1 << (y * 8 + x)
-    if want >= 1 << 63:
-        want -= 1 << 64
-    assert got == want
-
-
 def test_dhash_uneven_blocks_exact():
     """H/W not divisible by the grid: cross-multiplied means keep the
     comparison exact (no float mean anywhere)."""
@@ -140,5 +123,3 @@ def test_neardup_validation(spark):
         PH.phash_neardup_pairs(df, "h", "img_id", max_hamming=4, bands=4)
     with pytest.raises(ValueError, match="divide 64"):
         PH.phash_neardup_pairs(df, "h", "img_id", bands=5)
-    with pytest.raises(ValueError, match="hash_size"):
-        PH.image_dhash(df.selectExpr("CAST(NULL AS BINARY) AS png"), "png", hash_size=4)

@@ -64,10 +64,6 @@ def test_sized_state_partitions_derivation(spark):
 
 
 def test_sized_state_partitions_override(spark):
-    # (the non-integer "auto" shuffle-partitions fallback in
-    # sized_state_partitions stays as defensive code only: Spark 4.1's
-    # conf.set validates the value as an int, so it cannot be simulated
-    # through a real session here)
     events = R._source_bytes(table_path(SF, "events"))
     with _conf(spark, OVERRIDE, "13"):
         assert R.sized_state_partitions(spark, events) == 13

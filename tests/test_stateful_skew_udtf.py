@@ -8,8 +8,11 @@ import time
 
 from pyspark.sql import functions as F
 
-from fs2_kinesis_firehose_spark.operators.ann_index import ann_index_topk, write_ann_index
-from fs2_kinesis_firehose_spark.operators.similarity import brute_force_topk
+from fs2_kinesis_firehose_spark.operators.similarity import (
+    ann_topk,
+    brute_force_topk,
+    random_hyperplane_lsh,
+)
 from fs2_kinesis_firehose_spark.operators.skew import salted_join
 from fs2_kinesis_firehose_spark.operators.udtf_ops import NgramExploder, register_udtfs
 from fs2_kinesis_firehose_spark.plans import explain_str
@@ -85,9 +88,12 @@ def test_udtf_direct_and_lateral(spark):
 def test_ann_index_partition_pruning(spark, sf_smoke, tmp_path):
     emb = load_table(spark, sf_smoke, "embeddings")
     path = str(tmp_path / "annidx")
-    write_ann_index(emb, path, dim=64, n_planes=6)
+    # the on-disk index: the corpus written partitioned by its LSH bucket
+    random_hyperplane_lsh(emb, 64, n_planes=6).write.partitionBy("bucket").parquet(path)
     qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    topk = ann_index_topk(spark, path, qv, dim=64, k=5, n_planes=6)
+    topk = ann_topk(
+        spark.read.parquet(path), qv, 64, k=5, n_planes=6, multiprobe_hamming=2
+    )
     got = [r.vec_id for r in topk.collect()]
     assert got[0] == 0 and len(got) == 5
     # the bucket IN-filter must prune partitions at the scan
